@@ -19,8 +19,8 @@ Two build strategies, both shaped for the 10^12-row design point:
     uniformly-loaded hash range. Each shard stores ``hash << shard_bits``
     (the shard id carries the top bits — lossless, and quotients stay
     uniform within each shard's table). Shards checkpoint to a parquet
-    table with lineage metadata, and builds resume by skipping shards
-    already present.
+    table with lineage metadata, committed from the driver in one atomic
+    file rename, and builds resume by skipping shards already present.
 
     Four exchange strategies (``exchange=``), because the expensive step
     at scale is *moving the hashes to their shard builder*:
@@ -67,11 +67,13 @@ Two build strategies, both shaped for the 10^12-row design point:
         selects 'storage' above ``ARROW_MAX_ROWS_PER_SHARD`` — the arrow
         path's single-fat-row bound — and 'arrow' below it.
 
-    Payloads can be written as *sidecar files* (``payload_dir``): each
-    shard task writes its serialized filter to content-addressed storage
-    executor-side and the table row carries the path — at the 10^12
-    design point a shard payload is ~1 GB, which belongs in object
-    storage, not in a parquet binary cell (and not in the Arrow channel).
+    Payloads can be written as *sidecar files* (``payload_dir``; for a
+    checkpointed build the default is ``<checkpoint_path>/_payloads/``):
+    each shard task writes its serialized filter to content-addressed
+    storage executor-side and the table row carries the path — at the
+    10^12 design point a shard payload is ~1 GB, which belongs in shared
+    storage, not in a parquet binary cell (and not in the Arrow channel
+    or the driver).
 
 Hashing is JVM-side (``F.xxhash64``, whole-stage codegen) for the default
 hash; murmur64a/fnv1a fall back to a vectorized Arrow pandas UDF. No
@@ -251,12 +253,7 @@ def build_qf(
     # result is byte-identical to the partial-merge path. The estimate
     # errs only upward (pre-filter footer counts; expanding plans are
     # excluded), so a large input can never sneak into the collect.
-    est = None
-    if hasattr(hashed, "toArrow"):
-        from .sources import approx_row_count
-
-        est = approx_row_count(hashed, fallback_count=False)
-    if est is not None and est <= SMALL_BUILD_COLLECT_ROWS:
+    if _small_enough_to_collect(hashed):
         a = hashed.toArrow().column(HASH_COL).to_numpy(
             zero_copy_only=False)
         hv = np.asarray(a, dtype=np.int64).view(np.uint64)
@@ -264,8 +261,28 @@ def build_qf(
             hv = hv.copy()
         hv.sort()
         return QF.from_hashes(hv, None, config)
+    return _build_from_partials(hashed, config, tree_fanout,
+                                driver_merge_limit)
 
-    partials_df = _partial_hashes(hashed, config)
+
+def _small_enough_to_collect(hashed: DataFrame) -> bool:
+    """True when an action-free row estimate bounds ``hashed`` at
+    ``SMALL_BUILD_COLLECT_ROWS``; an unknown estimate is not small."""
+    if not hasattr(hashed, "toArrow"):  # pragma: no cover - pyspark < 4
+        return False
+    from .sources import approx_row_count
+
+    est = approx_row_count(hashed, fallback_count=False)
+    return est is not None and est <= SMALL_BUILD_COLLECT_ROWS
+
+
+def _build_from_partials(hashed: DataFrame, config: QFConfig,
+                         tree_fanout: int = 64, driver_merge_limit: int = 64,
+                         count_col: str | None = None) -> QF:
+    """The bounded-driver build: per-partition partial aggregates
+    (``_partial_hashes``), tree-merged executor-side down to
+    ``driver_merge_limit`` blobs, merged and built on the driver."""
+    partials_df = _partial_hashes(hashed, config, count_col)
     n_parts = hashed.rdd.getNumPartitions()
     if n_parts > driver_merge_limit:
         partials_df = tree_merge(partials_df, config, fanout=tree_fanout,
@@ -293,16 +310,21 @@ def build_qf_from_counts(
     """Build one merged CQF from a PRE-AGGREGATED ``(key, count)``
     DataFrame — the fast shape when the caller already has a
     ``groupBy(key).count()`` in hand (e.g. it also needs the distinct
-    keys for probing): hashing stays JVM-side and exactly one Arrow
-    collect moves ~16 B per distinct key, with no Python worker stage.
-    Byte-identical to ``build_qf`` over the un-aggregated multiset
-    (counts for hash-colliding keys sum, exactly as the multiset path
-    aggregates them). Same driver-RAM contract as ``build_qf``: the
-    distinct keys must fit driver memory."""
+    keys for probing): hashing stays JVM-side and, when an action-free
+    estimate bounds the input at ``SMALL_BUILD_COLLECT_ROWS`` rows, one
+    Arrow collect moves ~16 B per distinct key, with no Python worker
+    stage. Above that bound, or when the estimate is unknown, it builds
+    through ``build_qf``'s partial path, which sums the count column per
+    partition. Byte-identical to ``build_qf`` over the un-aggregated
+    multiset (counts for hash-colliding keys sum, exactly as the
+    multiset path aggregates them). Same driver-RAM contract as
+    ``build_qf``: the distinct keys must fit driver memory."""
     config = config or QFConfig(hash_name=DEFAULT_HASH, counter_bits=32)
     keys = df.select(col, count_col).where(F.col(col).isNotNull())
     hashed = with_hash(keys, col, config.hash_name).select(
         HASH_COL, F.col(count_col).cast("long").alias("_qf_n"))
+    if not _small_enough_to_collect(hashed):
+        return _build_from_partials(hashed, config, count_col="_qf_n")
     tbl = hashed.toArrow()
     hv = np.asarray(
         tbl.column(HASH_COL).to_numpy(zero_copy_only=False),
@@ -310,24 +332,31 @@ def build_qf_from_counts(
     counts = np.asarray(
         tbl.column("_qf_n").to_numpy(zero_copy_only=False),
         dtype=np.int64).view(np.uint64)
-    if not hv.flags.writeable:
-        hv = hv.copy()
-    order = np.argsort(hv, kind="stable")
-    return QF.from_hashes(hv[order], counts[order], config)
+    return QF.from_hashes(hv, counts, config)
 
 
-def _partial_hashes(hashed: DataFrame, config: QFConfig) -> DataFrame:
+def _partial_hashes(hashed: DataFrame, config: QFConfig,
+                    count_col: str | None = None) -> DataFrame:
     """mapInPandas stage: per input partition, aggregate hash counts
     locally (numpy sort-unique — the map-side combine) and emit one
-    compact partial-aggregate row."""
+    compact partial-aggregate row. With ``count_col``, each row counts
+    that many occurrences instead of one."""
     with_counts = config.counter_bits > 0
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [_u64(b[HASH_COL]) for b in batches if len(b)]
-        if not chunks:
+        batches = [b for b in batches if len(b)]
+        if not batches:
             return
-        hv = np.concatenate(chunks)
-        if with_counts:
+        hv = np.concatenate([_u64(b[HASH_COL]) for b in batches])
+        if with_counts and count_col is not None:
+            n = np.concatenate([_u64(b[count_col]) for b in batches])
+            order = np.argsort(hv)
+            hv = hv[order]
+            first = np.flatnonzero(np.r_[True, hv[1:] != hv[:-1]])
+            uniq = hv[first]
+            cbytes = np.add.reduceat(n[order], first).astype(
+                "<u8").tobytes()
+        elif with_counts:
             uniq, counts = np.unique(hv, return_counts=True)
             cbytes = counts.astype("<u8").tobytes()
         else:
@@ -584,11 +613,21 @@ def build_sharded_qf(
     lineage...)``. See the module docstring for the four ``exchange``
     strategies and the sidecar-payload contract.
 
-    With ``checkpoint_path`` set: ``resume=True`` skips shards already
-    present and appends only the missing ones; ``resume=False``
-    overwrites the checkpoint (never appends duplicates — the failure
-    mode where a stale row silently answers probes cannot occur, and
-    reads additionally keep only the newest row per shard).
+    With ``checkpoint_path`` set, the build runs as ONE Spark query that
+    returns the shard lineage rows to the driver (filter bytes never
+    do: without ``payload_dir`` the payloads are written as sidecars
+    under ``<checkpoint_path>/_payloads/``, which table readers skip).
+    The driver commits those rows (``sources.commit_rows``): for a path,
+    one parquet file renamed into place, so readers never see an empty
+    or half-written table; for a catalog identifier (which needs
+    ``payload_dir``), ``writeTo``. ``resume=True`` skips shards already
+    present, appends only the missing ones, and returns
+    ``latest_shards`` over the existing rows plus the new ones;
+    ``resume=False`` overwrites the checkpoint (deleting the previous
+    data files and unreferenced ``_payloads/`` sidecars after the
+    rename) and returns the new rows as a local DataFrame. Readers keep
+    only the newest row per shard, so an interrupted overwrite still
+    answers from the new rows.
     """
     if pre_agg is not None:  # deprecated alias from the round-1 API
         alias = {"local": "combine", "salted": "salted"}.get(pre_agg)
@@ -602,16 +641,24 @@ def build_sharded_qf(
     hashed = with_hash(_keys_nonnull(df, col), col,
                        config.hash_name).select(HASH_COL)
 
+    default_payloads = bool(checkpoint_path) and not payload_dir
+    if default_payloads:
+        payload_dir = _checkpoint_payload_dir(spark, checkpoint_path)
     done: set[int] = set()
+    existing = None
     if checkpoint_path and resume:
-        try:
-            from .sources import read_table
+        from pyspark.errors import AnalysisException
 
-            existing = read_table(spark, checkpoint_path)
+        from .sources import read_table
+
+        try:
+            # merge_schema: a resumed directory may mix files written by
+            # different library versions (see _align_resume_schema)
+            existing = read_table(spark, checkpoint_path, merge_schema=True)
             done = {int(r.shard) for r in
                     existing.select("shard").distinct().collect()}
-        except Exception:
-            done = set()
+        except AnalysisException:  # no table yet: build every shard
+            existing = None
 
     if exchange == "auto":
         # pick the physical exchange from the data: heavy key duplication
@@ -648,6 +695,7 @@ def build_sharded_qf(
                         if rows_per_shard > ARROW_MAX_ROWS_PER_SHARD
                         else "arrow")
 
+    spill_cleanup = None
     if exchange == "arrow":
         shards_df = _exchange_arrow(hashed, sb, config, done, payload_dir)
     elif exchange == "storage":
@@ -661,58 +709,82 @@ def build_sharded_qf(
     else:
         raise ValueError(f"unknown exchange mode {exchange!r}")
 
-    if checkpoint_path:
-        from .sources import read_table, write_checkpoint
-
-        if resume:
-            shards_df = _align_resume_schema(
-                spark, shards_df, checkpoint_path)
-        write_checkpoint(shards_df, checkpoint_path,
-                         mode="append" if resume else "overwrite")
-        if exchange == "storage" and spill_cleanup:
-            import shutil
-
-            shutil.rmtree(spill_cleanup, ignore_errors=True)
-        # merge_schema: a resumed directory may mix files written by
-        # different library versions (see _align_resume_schema)
-        return latest_shards(
-            read_table(spark, checkpoint_path, merge_schema=resume))
-    return shards_df
-
-
-def _align_resume_schema(spark, shards_df: DataFrame,
-                         checkpoint_path: str) -> DataFrame:
-    """Align a resumed build's shard rows to the existing checkpoint's
-    schema before appending. A checkpoint written by an older library
-    version lacks newer lineage columns (e.g. pre-0.3.0 has no
-    ``build_secs``): appending a wider schema into a parquet directory
-    leaves readers without mergeSchema picking one footer's schema
-    arbitrarily (build_secs silently missing or null), and an Iceberg
-    append fails outright on the mismatch. Mirrors the streaming path's
-    unionByName(allowMissingColumns) contract: legacy-only columns are
-    null-filled on the new rows, new-only columns are kept (the reader
-    side uses mergeSchema via ``latest_shards`` callers reading the
-    whole directory — see test_round4_fixes)."""
-    try:
-        from .sources import read_table
-
-        existing = read_table(spark, checkpoint_path)
-    except Exception:
-        return shards_df  # first write: nothing to align to
-    if existing.columns == shards_df.columns:
+    if not checkpoint_path:
         return shards_df
-    # null-fill columns the existing table has and we don't, and order
-    # ours to match; columns only WE have are appended at the end (a
-    # parquet append tolerates them; readers merge schemas)
-    exist_fields = {f.name: f.dataType for f in existing.schema.fields}
-    ours = set(shards_df.columns)
-    sel = [
-        (F.col(name) if name in ours
-         else F.lit(None).cast(dtype).alias(name))
-        for name, dtype in exist_fields.items()
-    ]
-    sel += [F.col(c) for c in shards_df.columns if c not in exist_fields]
-    return shards_df.select(*sel)
+    out = _commit_shards(
+        spark, shards_df, checkpoint_path,
+        "append" if resume else "overwrite", existing,
+        gc_dir=payload_dir if default_payloads and not resume else None)
+    if spill_cleanup:
+        import shutil
+
+        shutil.rmtree(spill_cleanup, ignore_errors=True)
+    return out
+
+
+def _checkpoint_payload_dir(spark, checkpoint_path: str) -> str:
+    """``<checkpoint_path>/_payloads``: where a checkpointed build
+    without ``payload_dir`` writes its sidecars, so that committing the
+    lineage rows never moves filter bytes through the driver."""
+    from .sources import PAYLOADS_DIR, table_dir
+
+    path = table_dir(spark, checkpoint_path)
+    if path is None:
+        raise ValueError(
+            "a catalog-table checkpoint has no directory for payload "
+            "sidecars; pass payload_dir")
+    payload_dir = os.path.join(path, PAYLOADS_DIR)
+    os.makedirs(payload_dir, exist_ok=True)
+    return payload_dir
+
+
+def _commit_shards(spark, shards_df: DataFrame, checkpoint_path: str,
+                   mode: str, existing: DataFrame | None = None,
+                   gc_dir: str | None = None) -> DataFrame:
+    """Run the shard build as one query, commit its lineage rows to the
+    checkpoint (``mode`` 'append' or 'overwrite') and return the shard
+    table: the new rows, or ``latest_shards`` over ``existing`` (the
+    table read before a resumed build) plus the new rows. After an
+    overwrite, sidecars in ``gc_dir`` that no new row references (the
+    previous table's payloads) are deleted."""
+    from .sources import commit_rows
+
+    rows = shards_df.toArrow()
+    if existing is not None:
+        rows = _align_resume_schema(rows, existing.schema)
+    if existing is None or rows.num_rows:
+        commit_rows(spark, rows, checkpoint_path, mode=mode)
+    if gc_dir:
+        keep = {os.path.basename(p)
+                for p in rows.column("payload_path").to_pylist() if p}
+        for name in os.listdir(gc_dir):
+            if name not in keep:
+                os.remove(os.path.join(gc_dir, name))
+    new = spark.createDataFrame(rows)
+    if existing is None:
+        return new
+    return latest_shards(existing.unionByName(new, allowMissingColumns=True))
+
+
+def _align_resume_schema(rows, existing_schema):
+    """Align a resumed build's Arrow lineage rows to the existing
+    checkpoint's (Spark) schema before appending. A checkpoint written by
+    an older library version lacks newer lineage columns (pre-0.3.0 has
+    no ``build_secs``) and may carry columns this version dropped. Readers
+    without mergeSchema pick one footer's schema, and an Iceberg append
+    fails on a mismatch, so legacy-only columns are null-filled on the
+    new rows, in the existing order; new-only columns are kept at the
+    end."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    names = existing_schema.names
+    for f in existing_schema.fields:
+        if f.name not in rows.column_names:
+            rows = rows.append_column(
+                f.name, pa.nulls(rows.num_rows, to_arrow_type(f.dataType)))
+    return rows.select(
+        names + [c for c in rows.column_names if c not in names])
 
 
 def latest_shards(shards_df: DataFrame) -> DataFrame:
@@ -756,9 +828,19 @@ def merge_shard_tables(
     per-shard q_bits may differ (a snapshot that saw more keys in a
     shard simply merged at a larger q). Stale duplicate rows per shard
     are resolved by ``latest_shards`` per input first.
+
+    With ``checkpoint_path`` set, the merge commits like a
+    ``resume=False`` build: one query returns the lineage rows, the
+    driver commits them as an overwrite (``sources.commit_rows``), and
+    the new rows come back as a local DataFrame. Without
+    ``payload_dir`` the merged payloads go to sidecars under
+    ``<checkpoint_path>/_payloads/``.
     """
     if not tables:
         raise ValueError("merge_shard_tables needs at least one table")
+    default_payloads = bool(checkpoint_path) and not payload_dir
+    if default_payloads:
+        payload_dir = _checkpoint_payload_dir(spark, checkpoint_path)
     allr = latest_shards(tables[0])
     for t in tables[1:]:
         allr = allr.unionByName(latest_shards(t),
@@ -785,10 +867,9 @@ def merge_shard_tables(
 
     out = allr.groupBy("shard").applyInPandas(_merge_group, _SHARD_SCHEMA)
     if checkpoint_path:
-        from .sources import read_table, write_checkpoint
-
-        write_checkpoint(out, checkpoint_path, mode="overwrite")
-        return latest_shards(read_table(spark, checkpoint_path))
+        return _commit_shards(
+            spark, out, checkpoint_path, "overwrite",
+            gc_dir=payload_dir if default_payloads else None)
     return out
 
 
@@ -1031,7 +1112,7 @@ def _rows_to_blob(with_counts: bool):
 
     def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
         hv = _u64(pdf["local_hash"])
-        order = np.argsort(hv, kind="stable")
+        order = np.argsort(hv)  # hashes unique per shard (groupBy hash)
         hv = hv[order]
         if with_counts:
             cnt = pdf["cnt"].to_numpy(dtype=np.int64).view(np.uint64)[order]

@@ -11,9 +11,16 @@ lakehouse is a config change, not a code change.
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Sidecar payload directory inside a path-addressed shard table; the
+# leading underscore hides it from Spark's and pyarrow's table readers.
+PAYLOADS_DIR = "_payloads"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -57,21 +64,18 @@ def read_table(spark: SparkSession, location: str, fmt: str = "auto",
     raise ValueError(f"unknown format {fmt!r}")
 
 
+def _is_catalog_table(spark: SparkSession, location: str) -> bool:
+    return iceberg_available(spark) and "/" not in location
+
+
 def write_checkpoint(df: DataFrame, location: str, fmt: str = "auto",
                      mode: str = "append") -> None:
-    """Write the shard-checkpoint table. Iceberg gives the production
-    properties (atomic commits, snapshot isolation for concurrent
-    resumers, time travel over build lineage); parquet is the sandbox
-    equivalent.
-
-    ``mode='append'`` is for resumed builds (only missing shards are in
-    ``df``); ``mode='overwrite'`` replaces the table — a fresh build
-    (resume=False) never appends near-duplicate shard rows, and readers
-    additionally resolve any duplicates to the newest ``build_ts``
-    (``build.latest_shards``)."""
+    """Write a checkpoint table through Spark: an Iceberg catalog
+    identifier (atomic commits, snapshot isolation, time travel) or a
+    parquet path. Shard tables commit through ``commit_rows`` instead."""
     spark = df.sparkSession
     if fmt == "auto":
-        fmt = "iceberg" if (iceberg_available(spark) and "/" not in location) else "parquet"
+        fmt = "iceberg" if _is_catalog_table(spark, location) else "parquet"
     if fmt == "iceberg":
         if mode == "overwrite":
             df.writeTo(location).createOrReplace()
@@ -79,6 +83,67 @@ def write_checkpoint(df: DataFrame, location: str, fmt: str = "auto",
             df.writeTo(location).append()
         return
     df.write.mode(mode).parquet(location)
+
+
+def table_dir(spark: SparkSession, location: str) -> str | None:
+    """The local directory of a path-addressed table, or None for a
+    catalog identifier. Paths must be POSIX (a shared mount on a
+    cluster): sidecar payloads are written there with plain file IO."""
+    if _is_catalog_table(spark, location):
+        return None
+    if location.startswith("file:"):
+        return "/" + location[len("file:"):].lstrip("/")
+    if "://" in location:
+        raise ValueError(
+            f"table path {location!r} is not a POSIX path; use a local or "
+            "mounted directory, or a catalog identifier")
+    return location
+
+
+def commit_rows(spark: SparkSession, rows, location: str,
+                mode: str = "append") -> None:
+    """Commit a small Arrow table of rows (a shard table's lineage rows)
+    to the table at ``location``; ``mode`` is 'append' or 'overwrite'.
+
+    A path gets ONE parquet file, written under a hidden temp name and
+    renamed into place, so readers see all of the new rows or none of
+    them (the commit style of Delta Lake, VLDB 2020, without the log).
+    An append adds that file; an overwrite then deletes what the
+    directory held before, except the ``_payloads/`` sidecars. A crash
+    between the rename and the delete leaves old and new rows side by
+    side, never an empty table: shard-table readers keep the newest row
+    per shard (``build.latest_shards``). A catalog identifier commits
+    through ``writeTo``, the catalog's own atomic commit."""
+    path = table_dir(spark, location)
+    if path is None:
+        df = spark.createDataFrame(rows)
+        if mode == "overwrite":
+            df.writeTo(location).createOrReplace()
+        else:
+            df.writeTo(location).append()
+        return
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    previous = ([e for e in os.listdir(path) if e != PAYLOADS_DIR]
+                if mode == "overwrite" else [])
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(rows, f)
+        f.flush()
+        os.fsync(f.fileno())  # durable before the rename publishes it
+    os.replace(tmp, os.path.join(path, name))
+    _remove_entries(path, previous)
+
+
+def _remove_entries(path: str, entries) -> None:
+    for entry in entries:
+        p = os.path.join(path, entry)
+        if os.path.isdir(p) and not os.path.islink(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
 
 
 def approx_row_count(df: DataFrame, sample_files: int = 64,

@@ -81,8 +81,11 @@ def quality_filter(df: DataFrame, col: str = "text",
     at scale is a full shuffle of the document payload just to attach
     two numbers each row can compute for itself (guide §2.4/§8: decide
     with small values, never move the heavy rows for it — here no rows
-    need to move at all). Same rows out; the filter is pure codegen and
-    sits directly on the scan."""
+    need to move at all). The filter is pure codegen and sits directly
+    on the scan. It keeps each passing row once, which differs from the
+    joined form in two cases: a passing row with a NULL ``doc_id`` is
+    kept (the join dropped it), and ``k`` rows sharing a ``doc_id``
+    come out as at most ``k`` rows (the join emitted up to ``k*k``)."""
     toks = _TOKS.format(col=col)
     stop = _sql_quote_list(LANG_STOPWORDS["en"])
     n_tokens = F.expr(f"size({toks})")

@@ -39,6 +39,33 @@ def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits):
     assert int(fa.sum()) == 0
 
 
+@pytest.mark.parametrize("counter_bits", [0, 8])
+def test_insert_into_readonly_filter_raises_not_crashes(tmp_path,
+                                                        counter_bits):
+    """Inserting into a memory-mapped read-only filter must raise numpy's
+    ValueError; the compiled kernel writes through raw pointers and would
+    kill the process. Run in a subprocess so a crash fails the test
+    instead of the test session."""
+    path = str(tmp_path / "f.qf")
+    save(QF.from_keys([f"k{i}" for i in range(500)],
+                      config=QFConfig(counter_bits=counter_bits)), path)
+    code = (
+        "import numpy as np\n"
+        "from qfspark.disk import open_readonly\n"
+        f"ro = open_readonly({path!r})\n"
+        "try:\n"
+        "    ro.insert_hashes(np.arange(1, 50, dtype=np.uint64))\n"
+        "except ValueError as e:\n"
+        "    print('raised', e)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    proc = subprocess.run([sys.executable, "-c", code], env=env,
+                          capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.startswith("raised"), proc.stdout
+
+
 def test_header_peek(tmp_path):
     qf = QF.from_keys(["a", "b"], config=QFConfig(counter_bits=9, hash_name="xxhash64"))
     path = str(tmp_path / "h.qf")

@@ -303,16 +303,19 @@ def test_resume_append_aligns_to_legacy_checkpoint_schema(spark,
     build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
                      exchange="arrow", checkpoint_path=ckpt)
     # rewrite the checkpoint WITHOUT build_secs, simulating pre-0.3.0
-    legacy = spark.read.parquet(ckpt).drop("build_secs").toPandas()
+    # (explicit schema: the sidecar build's all-null payload column
+    # would otherwise be inferred from pandas as VOID, not BINARY)
+    legacy_df = spark.read.parquet(ckpt).drop("build_secs")
+    legacy = legacy_df.toPandas()
     import shutil
 
     shutil.rmtree(ckpt)
-    spark.createDataFrame(legacy).write.parquet(ckpt)
+    spark.createDataFrame(legacy, legacy_df.schema).write.parquet(ckpt)
     # resume: two shards "missing" -> appended by a 0.3.0+ build
     spark.read.parquet(ckpt).count()
     done_rows = legacy[legacy["shard"] < 2]
     shutil.rmtree(ckpt)
-    spark.createDataFrame(done_rows).write.parquet(ckpt)
+    spark.createDataFrame(done_rows, legacy_df.schema).write.parquet(ckpt)
     out = build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
                            exchange="arrow", checkpoint_path=ckpt,
                            resume=True)

@@ -4,6 +4,7 @@ for speed must produce byte-identical filters to the path it replaces
 equality is the strongest and simplest oracle)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from qfspark import QF, QFConfig
@@ -54,6 +55,38 @@ def test_build_from_counts_matches_multiset_build(spark):
     from_counts = build_qf_from_counts(agg, "url", "n", config=cfg)
     db, cb = _aligned_bytes(direct, from_counts)
     assert db == cb
+
+
+@pytest.mark.parametrize("counter_bits", [0, 16])
+def test_build_from_counts_partial_path_matches_collect(spark, monkeypatch,
+                                                        tmp_path,
+                                                        counter_bits):
+    """Above SMALL_BUILD_COLLECT_ROWS build_qf_from_counts builds through
+    the partial path, summing the count column per partition; the filter
+    is byte-identical to the collect path's."""
+    import qfspark.build as B
+
+    calls = []
+    partial = B._partial_hashes
+
+    def counting_partial(*args, **kwargs):
+        calls.append(args)
+        return partial(*args, **kwargs)
+
+    monkeypatch.setattr(B, "_partial_hashes", counting_partial)
+    # parquet-backed counts: footers give the action-free estimate
+    crawl = synthesize_crawl(spark, SF_DIR)
+    crawl.groupBy("url").agg(F.count(F.lit(1)).alias("n")) \
+        .write.parquet(str(tmp_path / "counts"))
+    agg = spark.read.parquet(str(tmp_path / "counts"))
+    cfg = QFConfig(counter_bits=counter_bits, hash_name="xxhash64")
+    fast = build_qf_from_counts(agg, "url", "n", config=cfg)
+    assert not calls  # small input: the collect path
+    monkeypatch.setattr(B, "SMALL_BUILD_COLLECT_ROWS", 0)
+    slow = build_qf_from_counts(agg, "url", "n", config=cfg)
+    assert calls
+    fb, sb = _aligned_bytes(fast, slow)
+    assert fb == sb
 
 
 def test_build_from_counts_drops_null_keys(spark):
