@@ -5,6 +5,11 @@ DuckDB at sf0.01, compare row count, column names, and an
 order-insensitive value digest.
 
 Usage: python scripts/check_correctness.py [sf_dir] [--only name1,name2]
+                                          [--json out.json]
+
+--json writes, per query, the match flags plus both digests
+(`spark_digest`, `oracle_digest`), so two trees can be compared digest for
+digest rather than only on the match flag.
 """
 
 import hashlib
@@ -89,7 +94,8 @@ def main():
             print(f"{name:28s} rows={len(sdf):8d}  (no oracle: rows-only check)")
             record[name] = {"rows_match": None, "schema_match": None,
                             "hash_match": None, "spark_rows": len(sdf),
-                            "oracle_rows": None, "err": None}
+                            "oracle_rows": None, "spark_digest": digest(sdf),
+                            "oracle_digest": None, "err": None}
             continue
         odf = con.sql(oracles[name]).df()
         ok_rows = len(sdf) == len(odf)
@@ -101,7 +107,8 @@ def main():
             failures += 1
         record[name] = {"rows_match": ok_rows, "schema_match": ok_cols,
                         "hash_match": ok_hash, "spark_rows": len(sdf),
-                        "oracle_rows": len(odf), "err": None}
+                        "oracle_rows": len(odf), "spark_digest": ds,
+                        "oracle_digest": do, "err": None}
         print(
             f"{name:28s} {status} rows {len(sdf)}/{len(odf)} "
             f"cols={'=' if ok_cols else sorted(sdf.columns)} hash={'=' if ok_hash else (ds[:12] + '!=' + do[:12])}"
