@@ -223,6 +223,15 @@ def main():
     p11c = plan_of(sketches.kmv_sketch(wp, "url", 256))
     check("KMV bottom-k is TakeOrdered", p11c,
           r"TakeOrderedAndProject")
+    # bottom-k and priority samples: the global top-k is per-partition
+    # top-k plus a k-sized driver merge, never a window over one
+    # partition or a full sort
+    p11i = plan_of(sketches.bottomk_sketch(docs, "text", "n_chars", 256))
+    check("bottom-k sample is TakeOrdered", p11i,
+          r"TakeOrderedAndProject")
+    p11j = plan_of(sketches.priority_sample(docs, "doc_id", "n_chars", 64))
+    check("priority sample is TakeOrdered", p11j,
+          r"TakeOrderedAndProject")
 
     # 11h. sessionization (round 6): native SessionWindow aggregate
     # with MAP-SIDE partial session merging — the shuffle carries

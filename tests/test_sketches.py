@@ -1093,3 +1093,157 @@ def test_priority_sample_by_per_group_subset_sums(spark):
         got[r.g] = got.get(r.g, 0) + r.est_weight
     for g, t in true.items():
         assert abs(got[g] - t) / t < 3 / (k ** 0.5), (g, got[g], t)
+
+
+# ---------------------------------------------------------------------------
+# ungrouped sketches on empty input and on all-NULL keys: the rows and
+# schema every public ungrouped function returns when nothing survives
+# its NULL filter (an empty table, or the one-row global answer)
+# ---------------------------------------------------------------------------
+
+_BLANK_SCHEMA = "key string, v double, w double, g string"
+
+
+@pytest.fixture(params=["empty", "all_null"])
+def blank(request, spark):
+    rows = [] if request.param == "empty" else [(None, None, None, "a")] * 5
+    return spark.createDataFrame(rows, _BLANK_SCHEMA)
+
+
+def _full(spark):
+    return spark.createDataFrame(
+        [(f"x{i}", float(i), float(i + 1), "a") for i in range(10)],
+        _BLANK_SCHEMA)
+
+
+def _rows(df):
+    return df.schema.simpleString(), [tuple(r) for r in df.collect()]
+
+
+def test_blank_hll(spark, blank):
+    regs = "struct<bucket:int,rho_max:int>"
+    assert _rows(hll_registers(blank, "key", 4)) == (regs, [])
+    assert _rows(hll_merge(hll_registers(blank, "key", 4),
+                           hll_registers(blank, "key", 4))) == (regs, [])
+    # the estimate row exists even with no registers: every bucket empty
+    assert _rows(hll_cardinality(blank, "key", 4)) == (
+        "struct<m:int,nonempty_buckets:int,zero_buckets:int,"
+        "sum_scaled:bigint,estimate:double>",
+        [(16, 0, 16, 16 << 57, 0.0)])
+    assert _rows(sketches.hll_set_ops(blank, blank, "key", 4)) == (
+        "struct<est_a:double,est_b:double,est_union:double,"
+        "est_intersection:double>", [(0.0, 0.0, 0.0, 0.0)])
+
+
+def test_blank_countmin(spark, blank):
+    table = "struct<row:int,col_idx:int,cnt:bigint>"
+    cm = countmin_table(blank, "key", 2, 8)
+    assert _rows(cm) == (table, [])
+    assert _rows(countmin_merge(cm, cm)) == (table, [])
+    assert _rows(countmin_query(cm, blank, "key", 2, 8)) == (
+        "struct<key:string,cm_count:bigint>", [])
+    # probes against an empty table read 0
+    probed = countmin_query(cm, _full(spark), "key", 2, 8).collect()
+    assert len(probed) == 10 and all(r.cm_count == 0 for r in probed)
+
+
+def test_blank_bottomk(spark, blank):
+    sample = "struct<h:bigint,key:string,value:double>"
+    assert _rows(bottomk_sketch(blank, "key", "v", 4)) == (sample, [])
+    assert _rows(bottomk_sketch(blank, "key", "v", 4, distinct=True)) \
+        == (sample, [])
+    full = bottomk_sketch(_full(spark), "key", "v", 4)
+    assert sorted(bottomk_merge(
+        bottomk_sketch(blank, "key", "v", 4), full, 4).collect()) \
+        == sorted(full.collect())
+
+
+def test_blank_priority(spark, blank):
+    sample = "struct<key:string,w:double,priority:double>"
+    sk = sketches.priority_sample(blank, "key", "w", 4)
+    assert _rows(sk) == (sample, [])
+    assert _rows(sketches.priority_estimates(sk, 4)) == (
+        "struct<key:string,w:double,est_weight:double>", [])
+    full = sketches.priority_sample(_full(spark), "key", "w", 4)
+    assert sorted(sketches.priority_sample_merge(sk, full, 4).collect()) \
+        == sorted(full.collect())
+
+
+def test_blank_kmv(spark, blank):
+    sk = sketches.kmv_sketch(blank, "key", 4)
+    assert _rows(sk) == ("struct<h:bigint>", [])
+    assert _rows(sketches.kmv_merge(sk, sk, 4)) == ("struct<h:bigint>", [])
+    cols = ("struct<est_a:double,est_b:double,est_union:double,"
+            "jaccard:double,est_intersection:double,est_a_minus_b:double,"
+            "est_b_minus_a:double>")
+    schema, [ab] = _rows(sketches.kmv_set_ops(blank, _full(spark),
+                                              "key", 4))
+    assert schema == cols
+    est_a, est_b, est_u, jac, inter, a_b, b_a = ab
+    assert (est_a, jac, inter, a_b) == (0.0, 0.0, 0.0, 0.0)
+    assert est_b == est_u == b_a > 0
+    schema, [ba] = _rows(sketches.kmv_set_ops(_full(spark), blank,
+                                              "key", 4))
+    assert ba == (est_b, 0.0, est_b, 0.0, 0.0, est_b, 0.0)
+
+
+def test_blank_mg(spark, blank):
+    summary = "struct<item:string,est:bigint,err:bigint>"
+    assert _rows(sketches.mg_partials(blank, "key", 4)) == (summary, [])
+    sk = sketches.mg_summary(blank, "key", 4)
+    # sentinel-only summary: no items, zero error budget
+    assert _rows(sk) == (summary, [(None, 0, 0)])
+    assert _rows(sketches.mg_merge(sk, sk, 4)) == (summary, [(None, 0, 0)])
+    assert _rows(sketches.mg_estimates(sk)) == (
+        "struct<item:string,est:bigint>", [])
+    assert _rows(sketches.mg_error(sk)) == ("struct<err:bigint>", [(0,)])
+    assert _rows(sketches.mg_bound_check(blank, "key", 4)) == (
+        "struct<item:string,ok:boolean>", [])
+
+
+def test_blank_quantile_sketches(spark, blank):
+    levels = "struct<level:int,value:double>"
+    parts = sketches.kll_partials(blank, "v", 8)
+    assert _rows(parts) == (levels, [])
+    assert _rows(sketches.kll_compact_partials(parts, 8)) == (levels, [])
+    kll = kll_build(blank, "v", 8)
+    assert kll.n == 0 and kll.k == 8
+    td = tdigest_build(blank, "v", 20)
+    assert td.means == [] and td.compression == 20
+
+
+def test_blank_rate_sample(spark, blank):
+    assert _rows(sketches.rate_sample(blank, "key", 0.5)) == (
+        "struct<key:string,v:double,w:double,g:string>", [])
+
+
+def test_blank_duckdb_twins(spark, blank, tmp_path):
+    import duckdb
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "blank.parquet")
+    pq.write_table(pa.Table.from_pylist(
+        [r.asDict() for r in blank.collect()],
+        schema=pa.schema([("key", pa.string()), ("v", pa.float64()),
+                          ("w", pa.float64()), ("g", pa.string())])), p)
+    src = f"read_parquet('{p}')"
+    con = duckdb.connect()
+
+    def q(sql):
+        rel = con.sql(sql)
+        return rel.columns, rel.fetchall()
+
+    assert q(sketches.duckdb_hll_sql("key", 4, src)) == (
+        ["m", "nonempty_buckets", "zero_buckets", "sum_scaled",
+         "estimate"], [(16, 0, 16, 16 << 57, 0.0)])
+    assert q(sketches.duckdb_countmin_sql("key", 2, 8, src)) == (
+        ["key", "cm_count"], [])
+    assert q(sketches.duckdb_bottomk_quantiles_sql(
+        "key", "v", 4, [0.5], src)) == (["q", "est_value"], [(0.5, None)])
+    assert q(sketches.duckdb_priority_sample_sql("key", "w", 4, src)) == (
+        ["key", "w", "est_weight"], [])
+    assert q(sketches.duckdb_mg_heavy_sql("key", 4, src)) == (
+        ["item", "ok"], [])
+
