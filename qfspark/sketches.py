@@ -57,6 +57,23 @@ Design rules shared with the CQF:
    on both engines. Quantile estimates use explicit lower-interpolation
    rank arithmetic instead of engine-specific percentile interpolation.
 
+Grouped-sketch contract. Every family has ONE implementation, the
+grouped ``X_by(..., by, ...)``; the ungrouped ``X(...)`` is a thin wrapper
+calling it with ``by=[]`` (the DuckDB twins likewise):
+
+* ``by`` is a list of column names (a bare string is one column);
+  ``by=[]`` is the global group — a keyless ``groupBy()`` aggregate,
+  one-row answers even on empty input where the ungrouped form has
+  always returned one (the HLL estimate row, the MG sentinel).
+* Group columns are cast to string in the output (HLL and bottom-k keep
+  the column type, so a windowed stream's timestamp keys round-trip).
+* Rows with a NULL group key are excluded, as are rows with a NULL
+  sketched value.
+* Top-k selections run per group as a window rank, and globally as
+  TakeOrdered (per-partition top-k + a k-sized driver merge); the
+  driver-side KLL / t-digest builds pre-merge partials in ``fan`` groups
+  either way.
+
 The Python-kernel sketches (t-digest, KLL) are not SQL-expressible; their
 correctness gate is the published error bound itself: the entry queries
 emit per-quantile ``ok`` booleans (rank error <= bound) whose oracle is
@@ -70,9 +87,11 @@ for web-scale training pipelines). No reference file corresponds to it.
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .textops import duckdb_hash60, spark_hash60
 
@@ -104,6 +123,97 @@ def sketch_hash(expr: str, scheme: str = "hash60") -> str:
 
 
 # ===========================================================================
+# grouping helpers (shared by every family; ``by=[]`` is the global group)
+# ===========================================================================
+
+def _norm_by(by) -> list[str]:
+    return [by] if isinstance(by, str) else list(by)
+
+
+def _not_null(*cols: str):
+    """Predicate: every named column is non-NULL."""
+    return functools.reduce(operator.and_,
+                            [F.col(c).isNotNull() for c in cols])
+
+
+def _str_cols(by: list[str]) -> list:
+    """The group columns cast to string (the grouped-sketch key type)."""
+    return [F.col(c).cast("string").alias(c) for c in by]
+
+
+def _schema(by: list[str], tail: str) -> str:
+    """DDL schema of a pandas-UDF output: string group columns + tail."""
+    return "".join(f"`{c}` string, " for c in by) + tail
+
+
+def _join_by(left: DataFrame, right: DataFrame, by: list[str],
+             how: str = "inner") -> DataFrame:
+    """Equi-join on the group columns. With no group columns the tiny
+    (at most one-row) ``right`` joins every ``left`` row; a left join
+    keeps ``left`` whole when ``right`` is empty."""
+    return left.join(right, by or None, how)
+
+
+def _top_rows(df: DataFrame, by: list[str], n: int, *order) -> DataFrame:
+    """The first ``n`` rows of every ``by`` group in ``order``. Global
+    (``by=[]``): orderBy().limit() — TakeOrdered, never a full sort or
+    a window over one partition. Grouped: row_number over a window
+    partitioned by the group columns (one shuffle keyed by them)."""
+    if not by:
+        return df.orderBy(*order).limit(n)
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= n).drop("_rn"))
+
+
+def _nth_row(df: DataFrame, by: list[str], n: int, *order) -> DataFrame:
+    """The ``n``-th row (1-based) of every ``by`` group in ``order``;
+    a group with fewer rows has none. Global: an offset order-limit
+    (TakeOrdered), as in ``_top_rows``."""
+    if not by:
+        return df.orderBy(*order).offset(n - 1).limit(1)
+    w = Window.partitionBy(*by).orderBy(*order)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == n).drop("_rn"))
+
+
+def _pd_groups(pdf, by: list[str]):
+    """(key tuple, frame) per group of a pandas batch; the whole batch
+    under ``()`` when ``by`` is empty."""
+    if not by:
+        yield (), pdf
+        return
+    for key, grp in pdf.groupby(by, sort=False):
+        yield (key if isinstance(key, tuple) else (key,)), grp
+
+
+def _sql_keys(by: list[str], alias: str = "") -> str:
+    """Group columns as a leading select-list fragment ('' if global)."""
+    return "".join(f"{alias}{c}, " for c in by)
+
+
+def _sql_str_keys(by: list[str]) -> str:
+    """``_sql_keys`` with each group column cast to VARCHAR."""
+    return "".join(f"CAST({c} AS VARCHAR) AS {c}, " for c in by)
+
+
+def _sql_not_null(*cols: str) -> str:
+    return " AND ".join(f"{c} IS NOT NULL" for c in cols)
+
+
+def _sql_group_by(by: list[str]) -> str:
+    return f"GROUP BY {', '.join(by)}" if by else ""
+
+
+def _sql_partition(by: list[str]) -> str:
+    return f"PARTITION BY {', '.join(by)}" if by else ""
+
+
+def _sql_using(by: list[str]) -> str:
+    return f"USING ({', '.join(by)})" if by else "ON TRUE"
+
+
+# ===========================================================================
 # HyperLogLog
 # ===========================================================================
 
@@ -131,51 +241,25 @@ def hll_registers(df: DataFrame, col: str, p: int = 12,
     Merge: union register tables and re-run ``hll_merge`` (groupBy max)
     — associative, and equal to building over the concatenated input.
     """
-    if not (4 <= p <= 18):
-        raise ValueError(f"p must be in [4, 18], got {p}")
-    m = 1 << p
-    w_bits = HASH_BITS - p
-    h = sketch_hash(col, hash_scheme)
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(F.expr(h).alias("_h"))
-        .select(
-            F.expr(f"CAST(pmod(_h, {m}) AS INT)").alias("bucket"),
-            F.expr(f"shiftrightunsigned(_h, {p})").alias("_w"),
-        )
-        .select(
-            "bucket",
-            F.expr(
-                f"CAST(CASE WHEN _w = 0 THEN {w_bits + 1} "
-                f"ELSE {w_bits} - length(bin(_w)) + 1 END AS INT)"
-            ).alias("rho"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho_max"))
-    )
+    return hll_registers_by(df, col, [], p, hash_scheme)
 
 
 def hll_merge(*register_dfs: DataFrame) -> DataFrame:
     """Merge register tables: register-wise max. Associative and
     commutative; merging partials over any split of the input equals the
     registers of the whole input, row for row."""
-    it = iter(register_dfs)
-    out = next(it)
-    for d in it:
-        out = out.unionByName(d)
-    return out.groupBy("bucket").agg(F.max("rho_max").alias("rho_max"))
+    return hll_merge_by([], *register_dfs)
 
 
 def hll_merge_by(by, *register_dfs: DataFrame) -> DataFrame:
     """Merge grouped register tables (``hll_registers_by``): per-group
     register-wise max. Same merge == rebuild row-identity as
     ``hll_merge``, independently per group."""
-    by = [by] if isinstance(by, str) else list(by)
     it = iter(register_dfs)
     out = next(it)
     for d in it:
         out = out.unionByName(d)
-    return out.groupBy(*by, "bucket").agg(
+    return out.groupBy(*_norm_by(by), "bucket").agg(
         F.max("rho_max").alias("rho_max"))
 
 
@@ -190,34 +274,8 @@ def hll_estimate(register_df: DataFrame, p: int) -> DataFrame:
     engine-portability trap a double sum would hit). The raw estimate is
     then alpha * m^2 * 2^K / S — one double division of exact integers —
     with the standard linear-counting correction for the small range."""
-    m = 1 << p
-    k_max = (HASH_BITS - p) + 1
-    numer = _hll_alpha(m) * m * m * (2.0 ** k_max)
-    agg = register_df.agg(
-        F.count(F.lit(1)).cast("int").alias("nonempty_buckets"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {k_max} - rho_max)"))
-        .cast("long").alias("_s_nonempty"),
-    )
-    return agg.select(
-        F.lit(m).cast("int").alias("m"),
-        F.coalesce("nonempty_buckets", F.lit(0)).alias("nonempty_buckets"),
-        (F.lit(m) - F.coalesce("nonempty_buckets", F.lit(0)))
-        .cast("int").alias("zero_buckets"),
-        (F.coalesce("_s_nonempty", F.lit(0))
-         + (F.lit(m) - F.coalesce("nonempty_buckets", F.lit(0)))
-         * F.lit(1 << k_max)).cast("long").alias("sum_scaled"),
-    ).select(
-        "m", "nonempty_buckets", "zero_buckets", "sum_scaled",
-        F.round(
-            F.when(
-                (F.lit(numer) / F.col("sum_scaled") <= 2.5 * m)
-                & (F.col("zero_buckets") > 0),
-                F.lit(float(m)) * F.log(F.lit(float(m))
-                                        / F.col("zero_buckets")),
-            ).otherwise(F.lit(numer) / F.col("sum_scaled")),
-            1,
-        ).alias("estimate"),
-    )
+    return hll_estimate_by(register_df, [], p).select(
+        F.lit(1 << p).cast("int").alias("m"), "*")
 
 
 def hll_cardinality(df: DataFrame, col: str, p: int = 12,
@@ -234,14 +292,16 @@ def hll_registers_by(df: DataFrame, col: str, by: list[str],
     (per-language / per-domain distinct counts) a 10^12-row pipeline
     wants instead of one job per group. Same single map-side-partial
     groupBy, now keyed (by..., bucket); merge is groupBy-max over the
-    same keys."""
-    if not by:
-        raise ValueError("by must name at least one grouping column")
+    same keys. Group columns keep their type (a windowed stream's
+    timestamp keys round-trip); NULL group keys are excluded."""
+    if not (4 <= p <= 18):
+        raise ValueError(f"p must be in [4, 18], got {p}")
+    by = _norm_by(by)
     m = 1 << p
     w_bits = HASH_BITS - p
     h = sketch_hash(col, hash_scheme)
     return (
-        df.where(F.col(col).isNotNull())
+        df.where(_not_null(col, *by))
         .select(*by, F.expr(h).alias("_h"))
         .select(
             *by,
@@ -263,14 +323,17 @@ def hll_registers_by(df: DataFrame, col: str, by: list[str],
 def hll_estimate_by(register_df: DataFrame, by: list[str],
                     p: int) -> DataFrame:
     """(by..., estimate) per group — identical exact-int64 arithmetic
-    to ``hll_estimate``, applied per grouping key."""
+    to ``hll_estimate``, applied per grouping key. Global (``by=[]``):
+    one row even with no registers (every bucket empty, estimate 0)."""
+    by = _norm_by(by)
     m = 1 << p
     k_max = (HASH_BITS - p) + 1
     numer = _hll_alpha(m) * m * m * (2.0 ** k_max)
     agg = register_df.groupBy(*by).agg(
         F.count(F.lit(1)).cast("int").alias("_ne"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {k_max} - rho_max)"))
-        .cast("long").alias("_s"),
+        F.coalesce(
+            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {k_max} - rho_max)")),
+            F.lit(0)).cast("long").alias("_s"),
     ).select(
         *by,
         F.col("_ne").alias("nonempty_buckets"),
@@ -303,38 +366,39 @@ def hll_cardinality_by(df: DataFrame, col: str, by: list[str],
 def duckdb_hll_by_sql(col: str, by: list[str], p: int,
                       source: str) -> str:
     """Oracle twin of ``hll_cardinality_by``."""
+    by = _norm_by(by)
     m = 1 << p
     w_bits = HASH_BITS - p
     k_max = w_bits + 1
     numer = repr(_hll_alpha(m) * m * m * (2.0 ** k_max))
     h = duckdb_hash60(col)
-    bys = ", ".join(by)
+    keys = _sql_keys(by)
     return f"""
         WITH hashed AS (
-            SELECT {bys}, {h} AS h FROM {source}
-            WHERE {col} IS NOT NULL
+            SELECT {keys}{h} AS h FROM {source}
+            WHERE {_sql_not_null(col, *by)}
         ),
         rho AS (
-            SELECT {bys}, CAST(h % {m} AS INT) AS bucket,
+            SELECT {keys}CAST(h % {m} AS INT) AS bucket,
                    CAST(CASE WHEN (h >> {p}) = 0 THEN {w_bits + 1}
                         ELSE {w_bits} - length(bin(h >> {p})) + 1
                         END AS INT) AS rho
             FROM hashed
         ),
         regs AS (
-            SELECT {bys}, bucket, MAX(rho) AS rho_max
-            FROM rho GROUP BY {bys}, bucket
+            SELECT {keys}bucket, MAX(rho) AS rho_max
+            FROM rho GROUP BY {keys}bucket
         ),
         agg AS (
-            SELECT {bys},
+            SELECT {keys}
                    CAST(COUNT(*) AS INT) AS nonempty_buckets,
                    CAST({m} - COUNT(*) AS INT) AS zero_buckets,
-                   CAST(SUM(1::BIGINT << ({k_max} - rho_max))
+                   CAST(COALESCE(SUM(1::BIGINT << ({k_max} - rho_max)), 0)
                         + ({m} - COUNT(*)) * (1::BIGINT << {k_max})
                         AS BIGINT) AS sum_scaled
-            FROM regs GROUP BY {bys}
+            FROM regs {_sql_group_by(by)}
         )
-        SELECT {bys}, nonempty_buckets, zero_buckets, sum_scaled,
+        SELECT {keys}nonempty_buckets, zero_buckets, sum_scaled,
                round(CASE WHEN {numer} / sum_scaled <= {2.5 * m}
                           AND zero_buckets > 0
                      THEN {float(m)} * ln({float(m)} / zero_buckets)
@@ -408,46 +472,8 @@ def duckdb_hll_sql(col: str, p: int, source: str) -> str:
     (exact-integer harmonic sum, one double division, same linear-count
     correction), so the estimate VALUE is the oracle-checked quantity.
     ``source`` is a table name or a parenthesized subquery."""
-    m = 1 << p
-    w_bits = HASH_BITS - p
-    k_max = w_bits + 1
-    numer = repr(_hll_alpha(m) * m * m * (2.0 ** k_max))
-    h = duckdb_hash60(col)
-    return f"""
-        WITH hashed AS (
-            SELECT {h} AS h FROM {source} WHERE {col} IS NOT NULL
-        ),
-        rho AS (
-            SELECT CAST(h % {m} AS INT) AS bucket,
-                   CAST(CASE WHEN (h >> {p}) = 0 THEN {w_bits + 1}
-                        ELSE {w_bits} - length(bin(h >> {p})) + 1
-                        END AS INT) AS rho
-            FROM hashed
-        ),
-        regs AS (
-            SELECT bucket, MAX(rho) AS rho_max FROM rho GROUP BY bucket
-        ),
-        agg AS (
-            SELECT CAST(COUNT(*) AS INT) AS nonempty_buckets,
-                   CAST(COALESCE(SUM(1::BIGINT << ({k_max} - rho_max)), 0)
-                        AS BIGINT) AS s_nonempty
-            FROM regs
-        ),
-        ing AS (
-            SELECT {m}::INT AS m, nonempty_buckets,
-                   CAST({m} - nonempty_buckets AS INT) AS zero_buckets,
-                   CAST(s_nonempty
-                        + ({m} - nonempty_buckets) * (1::BIGINT << {k_max})
-                        AS BIGINT) AS sum_scaled
-            FROM agg
-        )
-        SELECT m, nonempty_buckets, zero_buckets, sum_scaled,
-               round(CASE WHEN {numer} / sum_scaled <= {2.5 * m}
-                          AND zero_buckets > 0
-                     THEN {float(m)} * ln({float(m)} / zero_buckets)
-                     ELSE {numer} / sum_scaled END, 1) AS estimate
-        FROM ing
-    """
+    return (f"SELECT {1 << p}::INT AS m, * "
+            f"FROM ({duckdb_hll_by_sql(col, [], p, source)})")
 
 
 # ===========================================================================
@@ -464,29 +490,12 @@ def countmin_table(df: DataFrame, col: str, depth: int = 4,
     map-side.
 
     Merge: union tables + ``countmin_merge`` (groupBy sum) — exact."""
-    h = sketch_hash(f"concat(i, ':', {col})", hash_scheme)
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(
-            F.col(col),
-            F.explode(F.expr(f"sequence(0, {depth - 1})")).alias("i"),
-        )
-        .select(
-            F.col("i").cast("int").alias("row"),
-            F.expr(f"CAST(pmod({h}, {width}) AS INT)").alias("col_idx"),
-        )
-        .groupBy("row", "col_idx")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return countmin_table_by(df, col, [], depth, width, hash_scheme)
 
 
 def countmin_merge(*tables: DataFrame) -> DataFrame:
     """Merge counter tables: cell-wise sum. Exact-associative."""
-    it = iter(tables)
-    out = next(it)
-    for d in it:
-        out = out.unionByName(d)
-    return out.groupBy("row", "col_idx").agg(F.sum("cnt").alias("cnt"))
+    return countmin_merge_by([], *tables)
 
 
 def countmin_query(cm_df: DataFrame, probes: DataFrame, col: str,
@@ -498,24 +507,8 @@ def countmin_query(cm_df: DataFrame, probes: DataFrame, col: str,
     estimate >= true count always; overestimate by more than
     2N/width with probability <= (1/2)^depth (Cormode & Muthukrishnan
     2005)."""
-    h = sketch_hash(f"concat(i, ':', {col})", hash_scheme)
-    exploded = (
-        probes.select(col).where(F.col(col).isNotNull()).distinct()
-        .select(
-            F.col(col),
-            F.explode(F.expr(f"sequence(0, {depth - 1})")).alias("i"),
-        )
-        .select(
-            F.col(col),
-            F.col("i").cast("int").alias("row"),
-            F.expr(f"CAST(pmod({h}, {width}) AS INT)").alias("col_idx"),
-        )
-    )
-    return (
-        exploded.join(F.broadcast(cm_df), ["row", "col_idx"], "left")
-        .groupBy(col)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("cm_count"))
-    )
+    return countmin_query_by(cm_df, probes, col, [], depth, width,
+                             hash_scheme)
 
 
 def countmin_table_by(df: DataFrame, col: str, by, depth: int = 4,
@@ -531,13 +524,10 @@ def countmin_table_by(df: DataFrame, col: str, by, depth: int = 4,
     ``countmin_merge_by`` — cell-wise sum per group, exact."""
     by = _norm_by(by)
     h = sketch_hash(f"concat(i, ':', {col})", hash_scheme)
-    pred = F.col(col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
     return (
-        df.where(pred)
+        df.where(_not_null(col, *by))
         .select(
-            *[F.col(c).cast("string").alias(c) for c in by],
+            *_str_cols(by),
             F.col(col),
             F.explode(F.expr(f"sequence(0, {depth - 1})")).alias("i"),
         )
@@ -581,13 +571,9 @@ def countmin_query_by(cm_df: DataFrame, probes: DataFrame, col: str,
     materialized whole anywhere."""
     by = _norm_by(by)
     h = sketch_hash(f"concat(i, ':', {col})", hash_scheme)
-    pred = F.col(col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
     exploded = (
-        probes.select(*[F.col(c).cast("string").alias(c) for c in by],
-                      col)
-        .where(pred).distinct()
+        probes.select(*_str_cols(by), col)
+        .where(_not_null(col, *by)).distinct()
         .select(
             *by, F.col(col),
             F.explode(F.expr(f"sequence(0, {depth - 1})")).alias("i"),
@@ -614,13 +600,11 @@ def duckdb_countmin_by_sql(col: str, by, depth: int, width: int,
     by = _norm_by(by)
     h_build = duckdb_hash60(f"(i || ':' || {col})")
     probe_source = probe_source or source
-    bys = ", ".join(f"CAST({c} AS VARCHAR) AS {c}" for c in by)
-    bnames = ", ".join(by)
-    notnull = " AND ".join([f"{col} IS NOT NULL"]
-                           + [f"{c} IS NOT NULL" for c in by])
+    bys = _sql_str_keys(by)
+    notnull = _sql_not_null(col, *by)
     return f"""
         WITH cm AS (
-            SELECT {bys}, CAST(i AS INT) AS row,
+            SELECT {bys}CAST(i AS INT) AS row,
                    CAST({h_build} % {width} AS INT) AS col_idx,
                    COUNT(*) AS cnt
             FROM {source}, unnest(range(0, {depth})) AS t(i)
@@ -628,17 +612,17 @@ def duckdb_countmin_by_sql(col: str, by, depth: int, width: int,
             GROUP BY ALL
         ),
         probes AS (
-            SELECT DISTINCT {bys}, {col} FROM {probe_source}
+            SELECT DISTINCT {bys}{col} FROM {probe_source}
             WHERE {notnull}
         ),
         expl AS (
-            SELECT {bnames}, {col}, CAST(i AS INT) AS row,
+            SELECT {_sql_keys(by)}{col}, CAST(i AS INT) AS row,
                    CAST({h_build} % {width} AS INT) AS col_idx
             FROM probes, unnest(range(0, {depth})) AS t(i)
         )
-        SELECT e.{bnames.replace(', ', ', e.')}, e.{col},
+        SELECT {_sql_keys(by, 'e.')}e.{col},
                MIN(COALESCE(cm.cnt, 0)) AS cm_count
-        FROM expl e LEFT JOIN cm USING ({bnames}, row, col_idx)
+        FROM expl e LEFT JOIN cm USING ({_sql_keys(by)}row, col_idx)
         GROUP BY ALL
     """
 
@@ -647,30 +631,8 @@ def duckdb_countmin_sql(col: str, depth: int, width: int,
                         source: str, probe_source: str | None = None) -> str:
     """DuckDB twin of countmin_table + countmin_query over the same
     probes (defaults to the distinct keys of ``source``)."""
-    h_build = duckdb_hash60(f"(i || ':' || {col})")
-    probe_source = probe_source or source
-    return f"""
-        WITH cm AS (
-            SELECT CAST(i AS INT) AS row,
-                   CAST({h_build} % {width} AS INT) AS col_idx,
-                   COUNT(*) AS cnt
-            FROM {source}, unnest(range(0, {depth})) AS t(i)
-            WHERE {col} IS NOT NULL
-            GROUP BY 1, 2
-        ),
-        probes AS (
-            SELECT DISTINCT {col} FROM {probe_source}
-            WHERE {col} IS NOT NULL
-        ),
-        expl AS (
-            SELECT {col}, CAST(i AS INT) AS row,
-                   CAST({h_build} % {width} AS INT) AS col_idx
-            FROM probes, unnest(range(0, {depth})) AS t(i)
-        )
-        SELECT e.{col}, MIN(COALESCE(cm.cnt, 0)) AS cm_count
-        FROM expl e LEFT JOIN cm USING (row, col_idx)
-        GROUP BY e.{col}
-    """
+    return duckdb_countmin_by_sql(col, [], depth, width, source,
+                                  probe_source)
 
 
 # ===========================================================================
@@ -896,21 +858,15 @@ def bottomk_sketch(df: DataFrame, key_col: str, value_col: str,
     concatenated bottom-k's (``bottomk_merge``) — exactly, not
     approximately (for ``distinct=True``, merge inputs built with
     ``distinct=True`` on disjoint key sets, or re-dedup after)."""
-    base = (
-        df.where(F.col(key_col).isNotNull())
-        .select(
-            F.expr(sketch_hash(key_col, hash_scheme)).alias("h"),
-            F.col(key_col).alias("key"),
-            F.col(value_col).alias("value"),
-        )
-    )
     if distinct:
-        base = base.groupBy("h", "key").agg(F.min("value").alias("value"))
-    return base.orderBy("h", "key", "value").limit(k)
+        # one row per key, carrying the key's minimum value
+        df = df.groupBy(key_col).agg(F.min(value_col).alias("_min_value"))
+        value_col = "_min_value"
+    return bottomk_sketch_by(df, key_col, value_col, [], k, hash_scheme)
 
 
 def bottomk_merge(a: DataFrame, b: DataFrame, k: int = 512) -> DataFrame:
-    return a.unionByName(b).orderBy("h", "key", "value").limit(k)
+    return bottomk_merge_by(a, b, [], k)
 
 
 def bottomk_quantiles(sketch_df: DataFrame, qs: list[float]) -> DataFrame:
@@ -920,39 +876,13 @@ def bottomk_quantiles(sketch_df: DataFrame, qs: list[float]) -> DataFrame:
     (engine-native percentile functions interpolate differently).
     Rank error of a uniform k-sample: stddev sqrt(q(1-q)/k) <= 0.5/sqrt(k)
     (sampling theory), so |rank(est) - q| <= ~2/sqrt(k) at 4 sigma."""
-    # CAST each literal: Spark parses bare decimal literals as DECIMAL,
-    # not DOUBLE, which changes the output type (and the rank arithmetic)
-    qlit = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in qs)
-    return (
-        sketch_df.agg(
-            F.expr("sort_array(collect_list(CAST(value AS DOUBLE)))")
-            .alias("vals"))
-        .select(F.explode(F.expr(f"array({qlit})")).alias("q"), "vals")
-        .select(
-            "q",
-            F.expr(
-                "vals[CAST(floor(q * (size(vals) - 1)) AS INT)]"
-            ).alias("est_value"),
-        )
-    )
+    return bottomk_quantiles_by(sketch_df, [], qs)
 
 
 def duckdb_bottomk_quantiles_sql(key_col: str, value_col: str, k: int,
                                  qs: list[float], source: str) -> str:
-    h = duckdb_hash60(key_col)
-    qlit = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in qs)
-    return f"""
-        WITH sk AS (
-            SELECT {h} AS h, {key_col} AS key,
-                   CAST({value_col} AS DOUBLE) AS value
-            FROM {source} WHERE {key_col} IS NOT NULL
-            ORDER BY h, key, value LIMIT {k}
-        ),
-        vals AS (SELECT list_sort(list(value)) AS vals FROM sk)
-        SELECT q, vals[CAST(floor(q * (len(vals) - 1)) AS INT) + 1]
-                   AS est_value
-        FROM vals, unnest([{qlit}]) AS t(q)
-    """
+    return duckdb_bottomk_quantiles_by_sql(key_col, value_col, [], k, qs,
+                                           source)
 
 
 # ===========================================================================
@@ -992,26 +922,14 @@ def priority_sample(df: DataFrame, key_col: str, weight_col: str,
     perfectly correlated — the sample is still a deterministic
     weight-sensitive sample, but subset-sum estimates over such
     inputs carry no unbiasedness guarantee."""
-    h = sketch_hash("key", hash_scheme)
-    u = f"(CAST({h} AS DOUBLE) + 1.0) / {float(1 << HASH_BITS)!r}"
-    return (
-        df.where(F.col(key_col).isNotNull()
-                 & F.col(weight_col).isNotNull()
-                 & (F.col(weight_col) > 0))
-        .select(F.col(key_col).cast("string").alias("key"),
-                F.col(weight_col).cast("double").alias("w"))
-        .withColumn("priority", F.expr(f"w / ({u})"))
-        .orderBy(F.desc("priority"), "key")
-        .limit(k + 1)
-    )
+    return priority_sample_by(df, key_col, weight_col, [], k, hash_scheme)
 
 
 def priority_sample_merge(a: DataFrame, b: DataFrame,
                           k: int = 256) -> DataFrame:
     """Merge two priority sketches built with the same k: exact (the
     global top-(k+1) lives in the union of per-part top-(k+1)s)."""
-    return (a.unionByName(b)
-            .orderBy(F.desc("priority"), "key").limit(k + 1))
+    return priority_sample_merge_by(a, b, [], k)
 
 
 def priority_estimates(sketch_df: DataFrame, k: int = 256) -> DataFrame:
@@ -1020,21 +938,7 @@ def priority_estimates(sketch_df: DataFrame, k: int = 256) -> DataFrame:
     <= k keys — then every weight is exact). sum(est_weight) over the
     sampled keys matching ANY predicate is an unbiased estimate of
     that subset's true weight sum."""
-    # materialize the tiny (k+1)-row sketch once: the sample and tau
-    # subtrees would otherwise each re-run its TakeOrdered lineage
-    # over the corpus (kmv_set_ops pattern)
-    sketch_df = sketch_df.localCheckpoint(eager=True)
-    ranked = sketch_df.orderBy(F.desc("priority"), "key")
-    tau = (ranked.offset(k).limit(1)
-           .agg(F.coalesce(F.max("priority"), F.lit(0.0)).alias("_tau")))
-    return (
-        ranked.limit(k).crossJoin(tau)
-        .select(
-            "key", "w",
-            F.round(F.greatest(F.col("w"), F.col("_tau")), 6)
-            .alias("est_weight"),
-        )
-    )
+    return priority_estimates_by(sketch_df, [], k)
 
 
 def priority_sample_by(df: DataFrame, key_col: str, weight_col: str,
@@ -1047,60 +951,41 @@ def priority_sample_by(df: DataFrame, key_col: str, weight_col: str,
     string; NULL group keys excluded (same contract as the other
     grouped sketches). Merge: union + re-apply
     (``priority_sample_merge_by``) — exact."""
-    from pyspark.sql import Window
-
     by = _norm_by(by)
-    if not by:
-        raise ValueError("by must name at least one grouping column")
     h = sketch_hash("key", hash_scheme)
     u = f"(CAST({h} AS DOUBLE) + 1.0) / {float(1 << HASH_BITS)!r}"
-    pred = (F.col(key_col).isNotNull() & F.col(weight_col).isNotNull()
-            & (F.col(weight_col) > 0))
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    w = Window.partitionBy(*by).orderBy(F.desc("priority"), "key")
-    return (
-        df.where(pred)
-        .select(*[F.col(c).cast("string").alias(c) for c in by],
+    scored = (
+        df.where(_not_null(key_col, weight_col, *by)
+                 & (F.col(weight_col) > 0))
+        .select(*_str_cols(by),
                 F.col(key_col).cast("string").alias("key"),
                 F.col(weight_col).cast("double").alias("w"))
         .withColumn("priority", F.expr(f"w / ({u})"))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k + 1)
-        .drop("_rn")
     )
+    return _top_rows(scored, by, k + 1, F.desc("priority"), "key")
 
 
 def priority_sample_merge_by(a: DataFrame, b: DataFrame, by,
                              k: int = 256) -> DataFrame:
     """Merge grouped priority sketches: exact, per group."""
-    from pyspark.sql import Window
-
-    by = _norm_by(by)
-    w = Window.partitionBy(*by).orderBy(F.desc("priority"), "key")
-    return (a.unionByName(b)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k + 1)
-            .drop("_rn"))
+    return _top_rows(a.unionByName(b), _norm_by(by), k + 1,
+                     F.desc("priority"), "key")
 
 
 def priority_estimates_by(sketch_df: DataFrame, by,
                           k: int = 256) -> DataFrame:
     """(by..., key, w, est_weight) per group: per-group tau = the
     group's (k+1)-th priority (0 when the group had <= k rows)."""
-    from pyspark.sql import Window
-
     by = _norm_by(by)
-    # one evaluation of the windowed-sample lineage (see
-    # priority_estimates)
+    # materialize the tiny (k+1)-rows-per-group sketch once: the sample
+    # and tau subtrees would otherwise each re-run its TakeOrdered /
+    # windowed lineage over the corpus (kmv_set_ops pattern)
     sketch_df = sketch_df.localCheckpoint(eager=True)
-    w = Window.partitionBy(*by).orderBy(F.desc("priority"), "key")
-    ranked = sketch_df.withColumn("_rn", F.row_number().over(w))
-    tau = (ranked.where(F.col("_rn") == k + 1)
-           .select(*by, F.col("priority").alias("_tau")))
+    order = (F.desc("priority"), "key")
+    tau = _nth_row(sketch_df, by, k + 1, *order).select(
+        *by, F.col("priority").alias("_tau"))
     return (
-        ranked.where(F.col("_rn") <= k)
-        .join(tau, by, "left")
+        _join_by(_top_rows(sketch_df, by, k, *order), tau, by, "left")
         .select(
             *by, "key", "w",
             F.round(F.greatest(
@@ -1114,32 +999,8 @@ def duckdb_priority_sample_sql(key_col: str, weight_col: str, k: int,
                                source: str) -> str:
     """Oracle twin of priority_sample + priority_estimates: the
     identical sample and estimates, value-exact."""
-    h = duckdb_hash60("key")
-    u = f"(CAST({h} AS DOUBLE) + 1.0) / {float(1 << HASH_BITS)!r}"
-    return f"""
-        WITH scored AS (
-            SELECT key, w, w / ({u}) AS priority FROM (
-                SELECT CAST({key_col} AS VARCHAR) AS key,
-                       CAST({weight_col} AS DOUBLE) AS w
-                FROM {source}
-                WHERE {key_col} IS NOT NULL AND {weight_col} IS NOT NULL
-                  AND {weight_col} > 0
-            )
-        ),
-        sk AS (
-            SELECT * FROM scored ORDER BY priority DESC, key
-            LIMIT {k + 1}
-        ),
-        tau AS (
-            SELECT COALESCE(MAX(priority), 0.0) AS tau FROM (
-                SELECT priority FROM sk ORDER BY priority DESC, key
-                OFFSET {k} LIMIT 1
-            )
-        )
-        SELECT key, w, round(GREATEST(w, tau), 6) AS est_weight
-        FROM (SELECT * FROM sk ORDER BY priority DESC, key LIMIT {k}),
-             tau
-    """
+    return duckdb_priority_sample_by_sql(key_col, weight_col, [], k,
+                                         source)
 
 
 def duckdb_priority_sample_by_sql(key_col: str, weight_col: str, by,
@@ -1148,33 +1009,31 @@ def duckdb_priority_sample_by_sql(key_col: str, weight_col: str, by,
     by = _norm_by(by)
     h = duckdb_hash60("key")
     u = f"(CAST({h} AS DOUBLE) + 1.0) / {float(1 << HASH_BITS)!r}"
-    bys = ", ".join(f"CAST({c} AS VARCHAR) AS {c}" for c in by)
-    bnames = ", ".join(by)
-    notnull = " AND ".join(
-        [f"{key_col} IS NOT NULL", f"{weight_col} IS NOT NULL",
-         f"{weight_col} > 0"] + [f"{c} IS NOT NULL" for c in by])
+    keys = _sql_keys(by)
     return f"""
         WITH scored AS (
-            SELECT {bnames}, key, w, w / ({u}) AS priority FROM (
-                SELECT {bys}, CAST({key_col} AS VARCHAR) AS key,
+            SELECT {keys}key, w, w / ({u}) AS priority FROM (
+                SELECT {_sql_str_keys(by)}CAST({key_col} AS VARCHAR) AS key,
                        CAST({weight_col} AS DOUBLE) AS w
-                FROM {source} WHERE {notnull}
+                FROM {source}
+                WHERE {_sql_not_null(key_col, weight_col, *by)}
+                  AND {weight_col} > 0
             )
         ),
         ranked AS (
             SELECT *, row_number() OVER (
-                PARTITION BY {bnames}
+                {_sql_partition(by)}
                 ORDER BY priority DESC, key) AS rn
             FROM scored
         ),
         tau AS (
-            SELECT {bnames}, priority AS tau FROM ranked
+            SELECT {keys}priority AS tau FROM ranked
             WHERE rn = {k + 1}
         )
-        SELECT r.{', r.'.join(by)}, r.key, r.w,
+        SELECT {_sql_keys(by, 'r.')}r.key, r.w,
                round(GREATEST(r.w, COALESCE(t.tau, 0.0)), 6)
                    AS est_weight
-        FROM ranked r LEFT JOIN tau t USING ({bnames})
+        FROM ranked r LEFT JOIN tau t {_sql_using(by)}
         WHERE r.rn <= {k}
     """
 
@@ -1325,40 +1184,8 @@ def tdigest_build(df: DataFrame, value_col: str,
     own associative merge, so every tree shape honours the k-size
     invariant the rank bound rides on (merge-tree independence is
     pinned in tests/test_sketches.py)."""
-    import pandas as pd
-
-    comp = compression
-
-    def _partial(batches):
-        import numpy as np
-
-        # numpy chunk concatenation (8 B/value, one contiguous buffer)
-        # feeding the batch from_values — no per-value Python list
-        chunks = []
-        for b in batches:
-            a = b[value_col].dropna().to_numpy(dtype="float64")
-            if a.size:
-                chunks.append(a)
-        if chunks:
-            d = TDigest.from_values(np.concatenate(chunks), comp)
-            yield pd.DataFrame({"mean": d.means, "weight": d.weights})
-
-    partials = df.select(value_col).mapInPandas(
-        _partial, "mean double, weight double")
-    if df.rdd.getNumPartitions() > fan:
-        def _merge_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            d = TDigest.from_rows(
-                zip(pdf["mean"], pdf["weight"]), comp)
-            return pd.DataFrame({"mean": d.means, "weight": d.weights})
-
-        partials = (
-            partials.withColumn("_g", F.spark_partition_id() % fan)
-            .groupBy("_g")
-            .applyInPandas(_merge_group, "mean double, weight double")
-        )
-    rows = partials.collect()
-    return TDigest.from_rows([(r["mean"], r["weight"]) for r in rows],
-                             comp)
+    return _tdigest_collect(df, value_col, [], compression, fan).get(
+        (), TDigest(compression))
 
 
 # ===========================================================================
@@ -1473,22 +1300,7 @@ def kll_partials(df: DataFrame, value_col: str, k: int = 256) -> DataFrame:
     """Per-partition KLL compactor rows (level, value) — the mergeable
     partial-state form (union of partial tables IS the KLL merge; a
     compaction pass restores the size bound). NULL values excluded."""
-    import pandas as pd
-
-    kk = k
-
-    def _partial(batches):
-        sk = KLLSketch(kk)
-        for b in batches:
-            sk.extend(b[value_col].dropna().to_numpy(dtype="float64"))
-        rows = [(h, v) for h, buf in enumerate(sk.levels) for v in buf]
-        if rows:
-            yield pd.DataFrame(
-                {"level": [r[0] for r in rows],
-                 "value": [r[1] for r in rows]})
-
-    return df.select(value_col).mapInPandas(
-        _partial, "level int, value double")
+    return kll_partials_by(df, value_col, [], k)
 
 
 def kll_compact_partials(df: DataFrame, k: int = 256) -> DataFrame:
@@ -1496,18 +1308,7 @@ def kll_compact_partials(df: DataFrame, k: int = 256) -> DataFrame:
     rebuild-and-re-emit (union-then-compress IS the KLL merge). The
     streaming maintenance path runs this per micro-batch so state
     stays bounded regardless of stream length."""
-    import pandas as pd
-
-    kk = k
-
-    def _compact(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
-        rows = [(h, v) for h, buf in enumerate(sk.levels) for v in buf]
-        return pd.DataFrame({"level": [r[0] for r in rows],
-                             "value": [r[1] for r in rows]})
-
-    return (df.withColumn("_g", F.lit(1)).groupBy("_g")
-            .applyInPandas(_compact, "level int, value double"))
+    return kll_compact_partials_by(df, [], k)
 
 
 def kll_build(df: DataFrame, value_col: str, k: int = 256,
@@ -1521,26 +1322,10 @@ def kll_build(df: DataFrame, value_col: str, k: int = 256,
     the driver collects at most fan * O(k log) rows regardless of
     partition count. Merge-tree independence within the documented
     merged bound is pinned in tests/test_sketches.py."""
-    import pandas as pd
+    return _kll_collect(df, value_col, [], k, fan).get((), KLLSketch(k))
 
-    kk = k
-    partials = kll_partials(df, value_col, k)
-    if df.rdd.getNumPartitions() > fan:
-        def _merge_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
-            rows = [(h, v) for h, buf in enumerate(sk.levels)
-                    for v in buf]
-            return pd.DataFrame({"level": [r[0] for r in rows],
-                                 "value": [r[1] for r in rows]})
 
-        partials = (
-            partials.withColumn("_g", F.spark_partition_id() % fan)
-            .groupBy("_g")
-            .applyInPandas(_merge_group, "level int, value double")
-        )
-    rows = partials.collect()
-    return _kll_from_level_rows([r["level"] for r in rows],
-                                [r["value"] for r in rows], k)
+_FAN = 64  # pre-merge fan-in of the grouped quantile paths (``fan``)
 
 
 # ---------------------------------------------------------------------------
@@ -1578,6 +1363,23 @@ def _kll_from_level_rows(level_arr, value_arr, k: int) -> KLLSketch:
     return out
 
 
+def _premerge(partials: DataFrame, by: list[str], nparts: int, fan: int,
+              compact) -> DataFrame:
+    """Bound the final merge of a KLL / t-digest partial table: with
+    more than ``fan`` input partitions, first merge the partials within
+    (by..., spark_partition_id % fan) groups — a shuffle of the TINY
+    partial table only — so each group's final merge folds at most
+    ``fan`` partial sketches whatever the partition count. ``compact``
+    is the family's per-group compaction (the sketch's own associative
+    merge) called as ``compact(table, group_columns)``."""
+    if nparts <= fan:
+        return partials
+    return compact(
+        partials.withColumn(
+            "_fan", (F.spark_partition_id() % fan).cast("string")),
+        by + ["_fan"]).drop("_fan")
+
+
 def kll_partials_by(df: DataFrame, value_col: str, by,
                     k: int = 256) -> DataFrame:
     """Per-partition grouped KLL compactor rows (by..., level, value):
@@ -1596,8 +1398,7 @@ def kll_partials_by(df: DataFrame, value_col: str, by,
     def _partial(batches):
         sks: dict[tuple, KLLSketch] = {}
         for b in batches:
-            for key, grp in b.groupby(by, sort=False):
-                kt = key if isinstance(key, tuple) else (key,)
+            for kt, grp in _pd_groups(b, by):
                 sk = sks.get(kt)
                 if sk is None:
                     sks[kt] = sk = KLLSketch(kk)
@@ -1613,14 +1414,28 @@ def kll_partials_by(df: DataFrame, value_col: str, by,
                 out[c] = kv
             yield out[by + ["level", "value"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", level int, value double"
-    pred = F.col(value_col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    sel = [F.col(c).cast("string").alias(c) for c in by]
+    sel = _str_cols(by)
     sel.append(F.col(value_col).cast("double").alias("_v"))
-    return df.where(pred).select(*sel).mapInPandas(_partial, schema)
+    return df.where(_not_null(value_col, *by)).select(*sel).mapInPandas(
+        _partial, _schema(by, "level int, value double"))
+
+
+def _kll_collect(df: DataFrame, value_col: str, by: list[str], k: int,
+                 fan: int) -> dict[tuple, KLLSketch]:
+    """{group-tuple: KLLSketch} on the driver: partials, the ``fan``
+    pre-merge, one collect, one fold per group."""
+    partials = _premerge(
+        kll_partials_by(df, value_col, by, k), by,
+        df.rdd.getNumPartitions(), fan,
+        lambda t, keys: kll_compact_partials_by(t, keys, k))
+    acc: dict[tuple, tuple[list, list]] = {}
+    for r in partials.collect():
+        g = tuple(r[c] for c in by)
+        lv = acc.setdefault(g, ([], []))
+        lv[0].append(r["level"])
+        lv[1].append(r["value"])
+    return {g: _kll_from_level_rows(ls, vs, k)
+            for g, (ls, vs) in acc.items()}
 
 
 def kll_build_by(df: DataFrame, value_col: str, by,
@@ -1630,16 +1445,7 @@ def kll_build_by(df: DataFrame, value_col: str, by,
     ranks, serialization). Driver work/memory is O(groups * k * log);
     for the common read-off-the-quantiles path use the fully
     distributed ``kll_quantiles_by``, whose merge runs on executors."""
-    by = _norm_by(by)
-    rows = kll_partials_by(df, value_col, by, k).collect()
-    acc: dict[tuple, tuple[list, list]] = {}
-    for r in rows:
-        g = tuple(r[c] for c in by)
-        lv = acc.setdefault(g, ([], []))
-        lv[0].append(r["level"])
-        lv[1].append(r["value"])
-    return {g: _kll_from_level_rows(ls, vs, k)
-            for g, (ls, vs) in acc.items()}
+    return _kll_collect(df, value_col, _norm_by(by), k, _FAN)
 
 
 def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
@@ -1654,7 +1460,10 @@ def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
 
     import pandas as pd
 
-    partials = kll_partials_by(df, value_col, by, k)
+    partials = _premerge(
+        kll_partials_by(df, value_col, by, k), by,
+        df.rdd.getNumPartitions(), _FAN,
+        lambda t, keys: kll_compact_partials_by(t, keys, k))
 
     def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
@@ -1664,9 +1473,8 @@ def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
             out[c] = pdf[c].iloc[0]
         return out[by + ["q", "est"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", q double, est double"
-    return partials.groupBy(*by).applyInPandas(_merge, schema)
+    return partials.groupBy(*by).applyInPandas(
+        _merge, _schema(by, "q double, est double"))
 
 
 def kll_merge_partials_by(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1696,9 +1504,8 @@ def kll_compact_partials_by(df: DataFrame, by, k: int = 256) -> DataFrame:
             out[c] = pdf[c].iloc[0]
         return out[by + ["level", "value"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", level int, value double"
-    return df.groupBy(*by).applyInPandas(_compact, schema)
+    return df.groupBy(*by).applyInPandas(
+        _compact, _schema(by, "level int, value double"))
 
 
 # ---------------------------------------------------------------------------
@@ -1748,8 +1555,7 @@ def tdigest_partials_by(df: DataFrame, value_col: str, by,
             sizes[kt] = 0
 
         for b in batches:
-            for key, grp in b.groupby(by, sort=False):
-                kt = key if isinstance(key, tuple) else (key,)
+            for kt, grp in _pd_groups(b, by):
                 a = grp["_v"].to_numpy(dtype="float64")
                 if not a.size:
                     continue
@@ -1768,14 +1574,26 @@ def tdigest_partials_by(df: DataFrame, value_col: str, by,
                 out[c] = kv
             yield out[by + ["mean", "weight"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", mean double, weight double"
-    pred = F.col(value_col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    sel = [F.col(c).cast("string").alias(c) for c in by]
+    sel = _str_cols(by)
     sel.append(F.col(value_col).cast("double").alias("_v"))
-    return df.where(pred).select(*sel).mapInPandas(_partial, schema)
+    return df.where(_not_null(value_col, *by)).select(*sel).mapInPandas(
+        _partial, _schema(by, "mean double, weight double"))
+
+
+def _tdigest_collect(df: DataFrame, value_col: str, by: list[str],
+                     compression: int, fan: int) -> dict[tuple, TDigest]:
+    """{group-tuple: TDigest} on the driver: partials, the ``fan``
+    pre-merge, one collect, one fold per group."""
+    partials = _premerge(
+        tdigest_partials_by(df, value_col, by, compression), by,
+        df.rdd.getNumPartitions(), fan,
+        lambda t, keys: tdigest_compact_partials_by(t, keys, compression))
+    acc: dict[tuple, list] = {}
+    for r in partials.collect():
+        acc.setdefault(tuple(r[c] for c in by), []).append(
+            (r["mean"], r["weight"]))
+    return {g: TDigest.from_rows(pairs, compression)
+            for g, pairs in acc.items()}
 
 
 def tdigest_build_by(df: DataFrame, value_col: str, by,
@@ -1785,14 +1603,7 @@ def tdigest_build_by(df: DataFrame, value_col: str, by,
     work/memory is O(groups * compression); for the read-off-the-
     quantiles path use the fully distributed ``tdigest_quantiles_by``,
     whose merge runs on executors."""
-    by = _norm_by(by)
-    rows = tdigest_partials_by(df, value_col, by, compression).collect()
-    acc: dict[tuple, list] = {}
-    for r in rows:
-        acc.setdefault(tuple(r[c] for c in by), []).append(
-            (r["mean"], r["weight"]))
-    return {g: TDigest.from_rows(pairs, compression)
-            for g, pairs in acc.items()}
+    return _tdigest_collect(df, value_col, _norm_by(by), compression, _FAN)
 
 
 def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
@@ -1808,7 +1619,10 @@ def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
 
     import pandas as pd
 
-    partials = tdigest_partials_by(df, value_col, by, compression)
+    partials = _premerge(
+        tdigest_partials_by(df, value_col, by, compression), by,
+        df.rdd.getNumPartitions(), _FAN,
+        lambda t, keys: tdigest_compact_partials_by(t, keys, compression))
 
     def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         d = TDigest.from_rows(zip(pdf["mean"], pdf["weight"]), comp)
@@ -1818,9 +1632,8 @@ def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
             out[c] = pdf[c].iloc[0]
         return out[by + ["q", "est"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", q double, est double"
-    return partials.groupBy(*by).applyInPandas(_merge, schema)
+    return partials.groupBy(*by).applyInPandas(
+        _merge, _schema(by, "q double, est double"))
 
 
 def tdigest_merge_partials_by(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1848,9 +1661,8 @@ def tdigest_compact_partials_by(df: DataFrame, by,
             out[c] = pdf[c].iloc[0]
         return out[by + ["mean", "weight"]]
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", mean double, weight double"
-    return df.groupBy(*by).applyInPandas(_compact, schema)
+    return df.groupBy(*by).applyInPandas(
+        _compact, _schema(by, "mean double, weight double"))
 
 
 # ===========================================================================
@@ -1869,49 +1681,16 @@ def quantile_bound_check(df: DataFrame, value_col: str,
 
     Rank error is measured in rank space (fraction of values between the
     estimate and the exact quantile), the metric both papers bound:
-    t-digest ~ eps proportional to q(1-q)/compression; KLL ~ O(1/k)."""
-    spark = df.sparkSession
-    if kind == "tdigest":
-        sk = tdigest_build(df, value_col, compression)
-        est = {q: sk.quantile(q) for q in qs}
-        if bound is None:
-            # conservative engineering bound for the k1 merging digest:
-            # observed max rank error is well under 6/compression at the
-            # median and shrinks toward the tails
-            bound = 6.0 / compression
-    elif kind == "kll":
-        sk = kll_build(df, value_col, k)
-        est = {q: sk.quantile(q) for q in qs}
-        if bound is None:
-            # published order: eps = O(1/k) up to log factors; the
-            # constant below is property-tested in tests/test_sketches.py
-            bound = 12.0 / k
-    else:
-        raise ValueError(f"unknown sketch kind {kind!r}")
-
-    # Exact rank interval of each estimate, computed DISTRIBUTIVELY: per
-    # q, two conditional counts (value < est == bisect_left rank;
-    # value <= est == bisect_right rank) in ONE aggregate pass — O(|qs|)
-    # values ever reach the driver. A tied value occupies a rank
-    # INTERVAL [left, right]; the error is the distance from q to that
-    # interval (a heavy tie at the true quantile would otherwise read as
-    # a huge false error). The pre-0.4.0 checker collected the whole
-    # value column to the driver, a scale trap at 10^12 rows.
-    vdf = df.select(F.col(value_col).alias("_v")).dropna()
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, q in enumerate(qs):
-        e = F.lit(float(est[q]))
-        aggs.append(F.sum((F.col("_v") < e).cast("long")).alias(f"_lt{i}"))
-        aggs.append(F.sum((F.col("_v") <= e).cast("long")).alias(f"_le{i}"))
-    r = vdf.agg(*aggs).collect()[0]
-    n = r["_n"]
-    rows = []
-    for i, q in enumerate(qs):
-        lo = r[f"_lt{i}"] / n
-        hi = r[f"_le{i}"] / n
-        err = max(0.0, lo - q, q - hi)
-        rows.append((float(q), bool(err <= bound)))
-    return spark.createDataFrame(rows, "q double, ok boolean")
+    t-digest ~ eps proportional to q(1-q)/compression; KLL ~ O(1/k).
+    The global group of ``quantile_bound_check_by``; no rows when no
+    value is non-NULL."""
+    if kind == "tdigest" and bound is None:
+        # conservative engineering bound for the k1 merging digest:
+        # observed max rank error is well under 6/compression at the
+        # median and shrinks toward the tails
+        bound = 6.0 / compression
+    return quantile_bound_check_by(df, value_col, [], qs, k, bound, kind,
+                                   compression)
 
 
 def duckdb_quantile_bound_sql(qs: list[float]) -> str:
@@ -1942,7 +1721,7 @@ def quantile_bound_check_by(df: DataFrame, value_col: str, by,
     grouped conditional aggregate — rank_lt = |v < est| (bisect_left),
     rank_le = |v <= est| (bisect_right); the error is the distance
     from q to [rank_lt, rank_le]/n_g. No per-group sort, no value ever
-    reaches the driver (same scale argument as the global checker)."""
+    reaches the driver (``by=[]`` is the global checker)."""
     by = _norm_by(by)
     if kind == "kll":
         if bound is None:
@@ -1955,13 +1734,10 @@ def quantile_bound_check_by(df: DataFrame, value_col: str, by,
         est = tdigest_quantiles_by(df, value_col, by, qs, compression)
     else:
         raise ValueError(f"unknown sketch kind {kind!r}")
-    pred = F.col(value_col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    vals = df.where(pred).select(
-        *[F.col(c).cast("string").alias(c) for c in by],
-        F.col(value_col).cast("double").alias("_v"))
-    fan = vals.join(F.broadcast(est), by)  # x|qs| row fan-out, map-side
+    vals = df.where(_not_null(value_col, *by)).select(
+        *_str_cols(by), F.col(value_col).cast("double").alias("_v"))
+    # x|qs| row fan-out, map-side
+    fan = _join_by(vals, F.broadcast(est), by)
     agg = fan.groupBy(*by, "q").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum((F.col("_v") < F.col("est")).cast("long")).alias("_lt"),
@@ -1982,13 +1758,11 @@ def duckdb_quantile_bound_by_sql(by, qs: list[float], source: str,
     """Oracle twin of ``quantile_bound_check_by``: every group present
     in ``source`` (non-null group keys and value) x every q, TRUE."""
     by = _norm_by(by)
-    bys = ", ".join(f"CAST({c} AS VARCHAR) AS {c}" for c in by)
     qlit = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in qs)
-    notnull = " AND ".join([f"{value_col} IS NOT NULL"]
-                           + [f"{c} IS NOT NULL" for c in by])
     return f"""
-        SELECT g.*, t.q, TRUE AS ok
-        FROM (SELECT DISTINCT {bys} FROM {source} WHERE {notnull}) g
+        SELECT {_sql_keys(by, 'g.')}t.q, TRUE AS ok
+        FROM (SELECT DISTINCT {_sql_str_keys(by)}1 AS _one FROM {source}
+              WHERE {_sql_not_null(value_col, *by)}) g
         CROSS JOIN (SELECT q FROM unnest([{qlit}]) AS u(q)) t
     """
 
@@ -2009,7 +1783,7 @@ def duckdb_quantile_bound_by_sql(by, qs: list[float], source: str,
 # enters (Agarwal et al. 2012, "Mergeable Summaries").
 #
 # Scale shape: the only data-sized pass is one mapInPandas emitting
-# <= k+1 rows per partition (pandas value_counts — vectorized, no
+# <= k+1 rows per partition (pandas groupby counts — vectorized, no
 # per-row Python); everything after operates on <= k*partitions + 1
 # rows, and the final threshold select is an order-limit (TakeOrdered),
 # never a full sort. Unlike the other SQL-expressible sketches the
@@ -2020,39 +1794,6 @@ def duckdb_quantile_bound_by_sql(by, qs: list[float], source: str,
 # t-digest/KLL/ANN-recall pattern).
 
 
-def _mg_finalize(unioned: DataFrame, k: int) -> DataFrame:
-    """Sum per-item estimates, prune to the k largest by subtracting the
-    (k+1)-th largest count, and fold that subtraction into the sentinel
-    row's error budget. ``unioned`` rows follow the summary schema."""
-    summed = (
-        unioned.where(F.col("item").isNotNull())
-        .groupBy("item").agg(F.sum("est").cast("long").alias("est"))
-    )
-    base_err = unioned.agg(
-        F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("_e"))
-    # (k+1)-th largest summed estimate (0 when <= k distinct items):
-    # order-limit over the tiny summed table, not a global sort
-    t_val = (
-        summed.orderBy(F.desc("est"), "item").offset(k).limit(1)
-        .agg(F.coalesce(F.max("est"), F.lit(0)).cast("long").alias("_t"))
-    )
-    kept = (
-        summed.crossJoin(t_val)  # one-row broadcast
-        .where(F.col("est") > F.col("_t"))
-        .select(
-            "item",
-            (F.col("est") - F.col("_t")).cast("long").alias("est"),
-            F.lit(0).cast("long").alias("err"),
-        )
-    )
-    sentinel = base_err.crossJoin(t_val).select(
-        F.lit(None).cast("string").alias("item"),
-        F.lit(0).cast("long").alias("est"),
-        (F.col("_e") + F.col("_t")).cast("long").alias("err"),
-    )
-    return kept.unionByName(sentinel)
-
-
 def mg_partials(df: DataFrame, col: str, k: int = 256,
                 weight_col: str | None = None) -> DataFrame:
     """The data-sized half of ``mg_summary``: per-partition Misra-Gries
@@ -2060,62 +1801,7 @@ def mg_partials(df: DataFrame, col: str, k: int = 256,
     per partition. Exposed separately so the plan (MapInPandas, no
     row-Python) stays auditable — ``mg_summary`` checkpoints this
     result, which hides the pass from its final plan."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-
-    import pandas as pd
-
-    def _prune(counts: "pd.Series") -> tuple["pd.Series", int]:
-        """Subtract the (k+1)-th largest from every counter and drop
-        the non-positives; returns (pruned, t). Removes >= (k+1)*t of
-        counter mass — the accounting the n/(k+1) bound rides on."""
-        if len(counts) <= k:
-            return counts, 0
-        t = int(counts.sort_values(ascending=False).iloc[k])
-        counts = counts - t
-        return counts[counts > 0], t
-
-    def _partial(batches):
-        # prune after EVERY Arrow batch, not once at the end: the
-        # running state stays O(k + batch-distinct) — a partition with
-        # 10^8 distinct keys must never materialize them all (the
-        # documented <= k+1 rows-leave-each-partition scale shape)
-        counts = None
-        t_total = 0
-        for b in batches:
-            if weight_col is None:
-                vc = b["item"].dropna().value_counts()
-            else:
-                # drop null weights too: a null weight would become NaN
-                # in the groupby sum and fail the int64 cast opaquely
-                sub = b.dropna(subset=["item", "w"])
-                if (sub["w"] < 0).any():
-                    raise ValueError(
-                        "mg_summary weights must be non-negative")
-                vc = sub.groupby("item")["w"].sum()
-            counts = vc if counts is None else counts.add(vc, fill_value=0)
-            counts, t = _prune(counts.astype("int64"))
-            t_total += t
-        if counts is None or (counts.empty and t_total == 0):
-            return
-        out = pd.DataFrame({
-            "item": counts.index.astype(str),
-            "est": counts.to_numpy(),
-        })
-        out["err"] = 0
-        yield pd.concat([
-            out,
-            pd.DataFrame({"item": [None], "est": [0], "err": [t_total]}),
-        ])
-
-    cols = [F.col(col).cast("string").alias("item")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias("w"))
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(*cols)
-        .mapInPandas(_partial, "item string, est long, err long")
-    )
+    return mg_partials_by(df, col, [], k, weight_col)
 
 
 def mg_summary(df: DataFrame, col: str, k: int = 256,
@@ -2132,13 +1818,7 @@ def mg_summary(df: DataFrame, col: str, k: int = 256,
     W/(k+1) for W total weight. The prune accounting is identical —
     subtracting t from >= k+1 weighted counters removes >= (k+1)*t of
     the W mass that entered."""
-    # materialize the tiny partial table exactly once: _mg_finalize
-    # references it from several subtrees, and est/err must come from
-    # the SAME Misra-Gries run (partitioning or task retry could
-    # otherwise produce different prune amounts per subtree)
-    partials = mg_partials(df, col, k, weight_col).localCheckpoint(
-        eager=True)
-    return _mg_finalize(partials, k)
+    return mg_summary_by(df, col, [], k, weight_col)
 
 
 def mg_merge(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
@@ -2146,7 +1826,7 @@ def mg_merge(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
     prune back to k. Error budgets add (then gain the prune's
     subtraction), and the combined summary still satisfies
     err <= (n_a + n_b)/(k+1)."""
-    return _mg_finalize(a.unionByName(b), k)
+    return mg_merge_by(a, b, [], k)
 
 
 def mg_estimates(summary: DataFrame) -> DataFrame:
@@ -2167,43 +1847,13 @@ def mg_bound_check(df: DataFrame, col: str, k: int = 256) -> DataFrame:
     bound? The DuckDB oracle (``duckdb_mg_heavy_sql``) recomputes the
     heavy set exactly and emits constant TRUE, so any guarantee
     violation turns the gate red."""
-    sk = mg_summary(df, col, k)
-    exact = (
-        df.where(F.col(col).isNotNull())
-        .select(F.col(col).cast("string").alias("item"))
-        .groupBy("item").agg(F.count(F.lit(1)).alias("true_cnt"))
-    )
-    n_df = exact.agg(F.sum("true_cnt").cast("long").alias("_n"))
-    heavy = (
-        exact.crossJoin(n_df)
-        .where(F.col("true_cnt") * (k + 1) > F.col("_n"))
-    )
-    return (
-        heavy.join(F.broadcast(mg_estimates(sk)), "item", "left")
-        .crossJoin(mg_error(sk))
-        .select(
-            "item",
-            (
-                F.col("est").isNotNull()
-                & (F.col("est") <= F.col("true_cnt"))
-                & (F.col("true_cnt") <= F.col("est") + F.col("err"))
-                & (F.col("err") * (k + 1) <= F.col("_n"))
-            ).alias("ok"),
-        )
-    )
+    return mg_bound_check_by(df, col, [], k)
 
 
 def duckdb_mg_heavy_sql(col: str, k: int, source: str) -> str:
     """Oracle twin of ``mg_bound_check``: the exact heavy set with
     constant TRUE."""
-    return f"""
-        WITH e AS (
-            SELECT CAST({col} AS VARCHAR) AS item, COUNT(*) AS c
-            FROM {source} WHERE {col} IS NOT NULL GROUP BY 1
-        ),
-        n AS (SELECT SUM(c) AS n FROM e)
-        SELECT item, TRUE AS ok FROM e, n WHERE c * {k + 1} > n
-    """
+    return duckdb_mg_heavy_by_sql(col, [], k, source)
 
 
 # ---------------------------------------------------------------------------
@@ -2220,10 +1870,6 @@ def duckdb_mg_heavy_sql(col: str, k: int, source: str) -> str:
 # scan of the corpus.
 
 
-def _norm_by(by) -> list[str]:
-    return [by] if isinstance(by, str) else list(by)
-
-
 def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
                    weight_col: str | None = None) -> DataFrame:
     """Per-partition grouped Misra-Gries summaries: <= k data rows plus
@@ -2238,7 +1884,10 @@ def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
 
     import pandas as pd
 
-    glev = list(range(len(by)))  # group levels of the (by..., item) index
+    # with no group columns a constant stand-in level keeps the counter
+    # index a MultiIndex, so droplevel(-1) always has a level to keep
+    keys = by or ["_mg_all"]
+    glev = list(range(len(keys)))  # group levels of the (keys, item) index
 
     def _prune_by(counts: "pd.Series"):
         """Per group: subtract the (k+1)-th largest count from every
@@ -2257,25 +1906,33 @@ def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
         return pruned[pruned > 0], t
 
     def _partial(batches):
+        # prune after EVERY Arrow batch, not once at the end: the
+        # running state stays O(k + batch-distinct) per group — a
+        # partition with 10^8 distinct keys must never materialize them
+        # all (the documented <= k+1 rows-per-group scale shape)
         counts = None
         t_tot = None
         for b in batches:
+            if not by:
+                b = b.assign(_mg_all=0)
             if weight_col is None:
                 sub = b.dropna(subset=["item"])
-                vc = sub.groupby(by + ["item"]).size()
+                vc = sub.groupby(keys + ["item"]).size()
             else:
+                # drop null weights too: a null weight would become NaN
+                # in the groupby sum and fail the int64 cast opaquely
                 sub = b.dropna(subset=["item", "w"])
                 if (sub["w"] < 0).any():
                     raise ValueError(
                         "mg_summary weights must be non-negative")
-                vc = sub.groupby(by + ["item"])["w"].sum()
+                vc = sub.groupby(keys + ["item"])["w"].sum()
             counts = vc if counts is None else counts.add(vc, fill_value=0)
             counts, t = _prune_by(counts.astype("int64"))
             t_tot = t if t_tot is None else t_tot.add(t, fill_value=0)
         if counts is None:
             return
         out = counts.reset_index()
-        out.columns = by + ["item", "est"]
+        out.columns = keys + ["item", "est"]
         out["err"] = 0
         grp = counts.index.droplevel(-1).unique()
         if t_tot is not None and len(t_tot):
@@ -2283,45 +1940,39 @@ def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
         sent = pd.Series(0, index=grp, dtype="int64") if t_tot is None \
             else t_tot.reindex(grp).fillna(0).astype("int64")
         sent = sent.reset_index()
-        sent.columns = by + ["err"]
+        sent.columns = keys + ["err"]
         sent["item"] = None
         sent["est"] = 0
         if len(out) or len(sent):
-            yield pd.concat([out, sent[by + ["item", "est", "err"]]])
+            yield pd.concat([out[by + ["item", "est", "err"]],
+                             sent[by + ["item", "est", "err"]]])
 
-    schema = ", ".join(f"`{c}` string" for c in by) \
-        + ", item string, est long, err long"
-    sel = [F.col(c).cast("string").alias(c) for c in by]
+    sel = _str_cols(by)
     sel.append(F.col(col).cast("string").alias("item"))
     if weight_col is not None:
         sel.append(F.col(weight_col).cast("long").alias("w"))
-    pred = F.col(col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    return df.where(pred).select(*sel).mapInPandas(_partial, schema)
+    return df.where(_not_null(col, *by)).select(*sel).mapInPandas(
+        _partial, _schema(by, "item string, est long, err long"))
 
 
 def _mg_finalize_by(unioned: DataFrame, by: list[str],
                     k: int) -> DataFrame:
-    """Grouped twin of ``_mg_finalize``: per-group sum, per-group
-    (k+1)-th-largest subtraction (window rank over the tiny partial
-    table), per-group sentinel."""
-    from pyspark.sql import Window
-
+    """Sum per-item estimates, prune each group to its k largest by
+    subtracting the group's (k+1)-th largest count, and fold that
+    subtraction into the group's sentinel error budget. ``unioned``
+    rows follow the summary schema. The (k+1)-th largest comes from
+    the tiny summed table: an order-limit globally (TakeOrdered, not a
+    global sort), a window rank per group otherwise."""
     summed = (
         unioned.where(F.col("item").isNotNull())
         .groupBy(*by, "item").agg(F.sum("est").cast("long").alias("est"))
     )
     errs = unioned.groupBy(*by).agg(
         F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("_e"))
-    w = Window.partitionBy(*by).orderBy(F.desc("est"), "item")
-    t_val = (
-        summed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == k + 1)
-        .select(*by, F.col("est").alias("_t"))
-    )
+    t_val = _nth_row(summed, by, k + 1, F.desc("est"), "item").select(
+        *by, F.col("est").alias("_t"))
     kept = (
-        summed.join(t_val, by, "left")
+        _join_by(summed, t_val, by, "left")
         .withColumn("_t", F.coalesce(F.col("_t"), F.lit(0)))
         .where(F.col("est") > F.col("_t"))
         .select(
@@ -2331,7 +1982,7 @@ def _mg_finalize_by(unioned: DataFrame, by: list[str],
         )
     )
     sentinel = (
-        errs.join(t_val, by, "left")
+        _join_by(errs, t_val, by, "left")
         .select(
             *by, F.lit(None).cast("string").alias("item"),
             F.lit(0).cast("long").alias("est"),
@@ -2349,6 +2000,10 @@ def mg_summary_by(df: DataFrame, col: str, by, k: int = 256,
     sketch (top users per language, top shingles per domain) in ONE
     pass over the data — schema (by..., item, est, err) with one NULL-
     item err sentinel per group."""
+    # materialize the tiny partial table exactly once: _mg_finalize_by
+    # references it from several subtrees, and est/err must come from
+    # the SAME Misra-Gries run (partitioning or task retry could
+    # otherwise produce different prune amounts per subtree)
     partials = mg_partials_by(df, col, by, k, weight_col).localCheckpoint(
         eager=True)
     return _mg_finalize_by(partials, _norm_by(by), k)
@@ -2367,27 +2022,23 @@ def mg_bound_check_by(df: DataFrame, col: str, by,
     the exact per-group heavy set with constant TRUE."""
     by = _norm_by(by)
     sk = mg_summary_by(df, col, by, k)
-    pred = F.col(col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
     exact = (
-        df.where(pred)
-        .select(*[F.col(c).cast("string").alias(c) for c in by],
-                F.col(col).cast("string").alias("item"))
+        df.where(_not_null(col, *by))
+        .select(*_str_cols(by), F.col(col).cast("string").alias("item"))
         .groupBy(*by, "item").agg(F.count(F.lit(1)).alias("true_cnt"))
     )
     n_df = exact.groupBy(*by).agg(
         F.sum("true_cnt").cast("long").alias("_n"))
     heavy = (
-        exact.join(n_df, by)
+        _join_by(exact, n_df, by)
         .where(F.col("true_cnt") * (k + 1) > F.col("_n"))
     )
     ests = sk.where(F.col("item").isNotNull()).select(*by, "item", "est")
     errs = sk.groupBy(*by).agg(
         F.coalesce(F.sum("err"), F.lit(0)).cast("long").alias("_err"))
     return (
-        heavy.join(F.broadcast(ests), by + ["item"], "left")
-        .join(F.broadcast(errs), by, "left")
+        _join_by(heavy.join(F.broadcast(ests), by + ["item"], "left"),
+                 F.broadcast(errs), by, "left")
         .select(
             *by, "item",
             (
@@ -2404,19 +2055,15 @@ def duckdb_mg_heavy_by_sql(col: str, by, k: int, source: str) -> str:
     """Oracle twin of ``mg_bound_check_by``: the exact per-group heavy
     set with constant TRUE."""
     by = _norm_by(by)
-    bys = ", ".join(f"CAST({c} AS VARCHAR) AS {c}" for c in by)
-    bnames = ", ".join(by)
-    notnull = " AND ".join([f"{col} IS NOT NULL"]
-                           + [f"{c} IS NOT NULL" for c in by])
     return f"""
         WITH e AS (
-            SELECT {bys}, CAST({col} AS VARCHAR) AS item,
+            SELECT {_sql_str_keys(by)}CAST({col} AS VARCHAR) AS item,
                    COUNT(*) AS c
-            FROM {source} WHERE {notnull} GROUP BY ALL
+            FROM {source} WHERE {_sql_not_null(col, *by)} GROUP BY ALL
         ),
-        n AS (SELECT {bnames}, SUM(c) AS n FROM e GROUP BY ALL)
-        SELECT e.{', e.'.join(by)}, e.item, TRUE AS ok
-        FROM e JOIN n USING ({bnames}) WHERE e.c * {k + 1} > n.n
+        n AS (SELECT {_sql_keys(by)}SUM(c) AS n FROM e GROUP BY ALL)
+        SELECT {_sql_keys(by, 'e.')}e.item, TRUE AS ok
+        FROM e JOIN n {_sql_using(by)} WHERE e.c * {k + 1} > n.n
     """
 
 
@@ -2521,31 +2168,11 @@ def kmv_sketch(df: DataFrame, col: str, k: int = 256,
 
     Merge = bottom-k of the union of sketches — exact, so merge ==
     rebuild row-identically like the other SQL-expressible sketches."""
-    h = sketch_hash(col, hash_scheme)
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(F.expr(h).alias("h")).distinct()
-        .orderBy("h").limit(k)
-    )
+    return kmv_sketch_by(df, col, [], k, hash_scheme)
 
 
 def kmv_merge(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
-    return a.unionByName(b).distinct().orderBy("h").limit(k)
-
-
-def _kmv_est(sketch: DataFrame, k: int, out: str) -> DataFrame:
-    """One row (<out>): (k-1)/h_k scaled to the hash range, or the
-    exact distinct count when the sketch holds fewer than k hashes."""
-    return sketch.agg(
-        F.count(F.lit(1)).alias("_n"), F.max("h").alias("_hk")
-    ).select(
-        F.round(
-            F.when(F.col("_n") < k, F.col("_n").cast("double"))
-            .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_RANGE)
-                       / F.col("_hk")),
-            1,
-        ).alias(out)
-    )
+    return kmv_merge_by(a, b, [], k)
 
 
 #: registry of KMV set-ops sketch materializations. Strong references
@@ -2610,114 +2237,13 @@ def kmv_set_ops(a_df: DataFrame, b_df: DataFrame, col: str,
     same device (fraction of the union sample in exactly one side —
     the theta-sketch A-not-B estimator). All seven values
     deterministic; DuckDB reproduces them bit-for-bit."""
-    # materialize each k-row sketch once: every sketch feeds 3-4 plan
-    # subtrees (estimate, merge, semi-joins) and must not re-run its
-    # full-data distinct + top-k per consumer. Registry-tracked eager
-    # persists (not localCheckpoints): bounded lifetime, and eviction
-    # recomputes deterministically from lineage instead of killing the
-    # plan
-    sa = _materialize_sketch(kmv_sketch(a_df, col, k, hash_scheme))
-    sb = _materialize_sketch(kmv_sketch(b_df, col, k, hash_scheme))
-    # membership flags + ONE aggregate over the union sample replace the
-    # old four separate semi/anti-join branches (match / a_only / b_only
-    # / msize were four jobs over the same k rows) — and `merged` now
-    # has a single consumer, so its eager materialization goes too
-    merged = kmv_merge(sa, sb, k)
-    flags = (
-        merged
-        .join(sa.withColumn("_ina", F.lit(1)), "h", "left")
-        .join(sb.withColumn("_inb", F.lit(1)), "h", "left")
-    )
-    ina = F.col("_ina").isNotNull()
-    inb = F.col("_inb").isNotNull()
-    stats = flags.agg(
-        F.count(F.lit(1)).alias("_ms"),
-        F.max("h").alias("_hk"),
-        F.coalesce(F.sum((ina & inb).cast("long")), F.lit(0)).alias("_m"),
-        F.coalesce(F.sum((ina & ~inb).cast("long")), F.lit(0)).alias("_ao"),
-        F.coalesce(F.sum((~ina & inb).cast("long")), F.lit(0)).alias("_bo"),
-    ).withColumn(
-        "est_union",
-        F.round(
-            F.when(F.col("_ms") < k, F.col("_ms").cast("double"))
-            .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_RANGE)
-                       / F.col("_hk")),
-            1,
-        ),
-    )
-
-    def _frac_est(cnt: str, out: str):
-        return F.round(
-            F.round(F.col(cnt) / F.col("_ms"), 6) * F.col("est_union"), 1
-        ).alias(out)
-
-    return (
-        _kmv_est(sa, k, "est_a")
-        .crossJoin(_kmv_est(sb, k, "est_b"))
-        .crossJoin(stats)
-        .select(
-            "est_a", "est_b", "est_union",
-            F.round(F.col("_m") / F.col("_ms"), 6).alias("jaccard"),
-            _frac_est("_m", "est_intersection"),
-            _frac_est("_ao", "est_a_minus_b"),
-            _frac_est("_bo", "est_b_minus_a"),
-        )
-    )
+    return kmv_set_ops_by(a_df, b_df, col, [], k, hash_scheme)
 
 
 def duckdb_kmv_set_ops_sql(col: str, k: int, source_a: str,
                            source_b: str) -> str:
     """Oracle twin of ``kmv_set_ops``."""
-    h = duckdb_hash60(col)
-    rng = repr(_KMV_RANGE)
-
-    def est(cte: str, out: str) -> str:
-        return f"""(
-            SELECT round(CASE WHEN COUNT(*) < {k}
-                         THEN CAST(COUNT(*) AS DOUBLE)
-                         ELSE {float(k - 1)!r} * {rng} / MAX(h) END, 1)
-                       AS {out}
-            FROM {cte})"""
-
-    return f"""
-        WITH sa AS (
-            SELECT DISTINCT {h} AS h FROM {source_a}
-            WHERE {col} IS NOT NULL ORDER BY h LIMIT {k}
-        ),
-        sb AS (
-            SELECT DISTINCT {h} AS h FROM {source_b}
-            WHERE {col} IS NOT NULL ORDER BY h LIMIT {k}
-        ),
-        merged AS (
-            SELECT h FROM (SELECT h FROM sa UNION SELECT h FROM sb)
-            ORDER BY h LIMIT {k}
-        ),
-        mstats AS (
-            SELECT COUNT(*) AS ms,
-                   SUM(CASE WHEN h IN (SELECT h FROM sa)
-                            AND h IN (SELECT h FROM sb)
-                       THEN 1 ELSE 0 END) AS m,
-                   SUM(CASE WHEN h IN (SELECT h FROM sa)
-                            AND h NOT IN (SELECT h FROM sb)
-                       THEN 1 ELSE 0 END) AS ao,
-                   SUM(CASE WHEN h IN (SELECT h FROM sb)
-                            AND h NOT IN (SELECT h FROM sa)
-                       THEN 1 ELSE 0 END) AS bo
-            FROM merged
-        )
-        SELECT ea.est_a, eb.est_b, eu.est_union,
-               round(m / CAST(ms AS DOUBLE), 6) AS jaccard,
-               round(round(m / CAST(ms AS DOUBLE), 6) * eu.est_union, 1)
-                   AS est_intersection,
-               round(round(ao / CAST(ms AS DOUBLE), 6) * eu.est_union, 1)
-                   AS est_a_minus_b,
-               round(round(bo / CAST(ms AS DOUBLE), 6) * eu.est_union, 1)
-                   AS est_b_minus_a
-        FROM {est('sa', 'est_a')} ea,
-             {est('sb', 'est_b')} eb,
-             {est('merged', 'est_union')} eu,
-             mstats
-    """
+    return duckdb_kmv_set_ops_by_sql(col, [], k, source_a, source_b)
 
 
 # ===========================================================================
@@ -2730,41 +2256,29 @@ def bottomk_sketch_by(df: DataFrame, key_col: str, value_col: str,
     """(by..., h, key, value) per-group bottom-k sample: the k
     hash-smallest keys of EVERY ``by`` combination in one pass (window
     row_number per group — one shuffle keyed by the group columns; the
-    grouped analogue of ``bottomk_sketch``'s TakeOrdered). Merge:
+    grouped analogue of ``bottomk_sketch``'s TakeOrdered). Group
+    columns keep their type; NULL group keys are excluded. Merge:
     union + re-apply (min-k per group, exact)."""
-    from pyspark.sql import Window
-
-    if not by:
-        raise ValueError("by must name at least one grouping column")
-    # total order (h, key, value): same tie rule as bottomk_sketch
-    w = Window.partitionBy(*by).orderBy("h", "key", "value")
-    return (
-        df.where(F.col(key_col).isNotNull())
+    by = _norm_by(by)
+    rows = (
+        df.where(_not_null(key_col, *by))
         .select(
             *by,
             F.expr(sketch_hash(key_col, hash_scheme)).alias("h"),
             F.col(key_col).alias("key"),
             F.col(value_col).alias("value"),
         )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
     )
+    # total order (h, key, value): same tie rule as bottomk_sketch
+    return _top_rows(rows, by, k, "h", "key", "value")
 
 
 def bottomk_merge_by(a: DataFrame, b: DataFrame, by: list[str],
                      k: int = 512) -> DataFrame:
     """Merge grouped bottom-k sketches: union + re-apply the per-group
     min-k (exact, like ``bottomk_merge``)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*by).orderBy("h", "key", "value")
-    return (
-        a.unionByName(b)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_rows(a.unionByName(b), _norm_by(by), k,
+                     "h", "key", "value")
 
 
 def bottomk_quantiles_by(sketch_df: DataFrame, by: list[str],
@@ -2772,6 +2286,9 @@ def bottomk_quantiles_by(sketch_df: DataFrame, by: list[str],
     """(by..., q, est_value) per-group quantile estimates with the same
     explicit lower-interpolation rank arithmetic as
     ``bottomk_quantiles``."""
+    by = _norm_by(by)
+    # CAST each literal: Spark parses bare decimal literals as DECIMAL,
+    # not DOUBLE, which changes the output type (and the rank arithmetic)
     qlit = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in qs)
     return (
         sketch_df.groupBy(*by)
@@ -2790,25 +2307,26 @@ def bottomk_quantiles_by(sketch_df: DataFrame, by: list[str],
 def duckdb_bottomk_quantiles_by_sql(key_col: str, value_col: str,
                                     by: list[str], k: int,
                                     qs: list[float], source: str) -> str:
+    by = _norm_by(by)
     h = duckdb_hash60(key_col)
-    bys = ", ".join(by)
+    keys = _sql_keys(by)
     qlit = ", ".join(f"CAST({float(q)!r} AS DOUBLE)" for q in qs)
     return f"""
         WITH ranked AS (
-            SELECT {bys}, {h} AS h, {key_col} AS key,
+            SELECT {keys}{h} AS h, {key_col} AS key,
                    CAST({value_col} AS DOUBLE) AS value,
-                   row_number() OVER (PARTITION BY {bys}
+                   row_number() OVER ({_sql_partition(by)}
                                       ORDER BY {h}, {key_col},
                                                CAST({value_col} AS DOUBLE))
                        AS rn
-            FROM {source} WHERE {key_col} IS NOT NULL
+            FROM {source} WHERE {_sql_not_null(key_col, *by)}
         ),
         sk AS (SELECT * FROM ranked WHERE rn <= {k}),
         vals AS (
-            SELECT {bys}, list_sort(list(value)) AS vals
-            FROM sk GROUP BY {bys}
+            SELECT {keys}list_sort(list(value)) AS vals
+            FROM sk {_sql_group_by(by)}
         )
-        SELECT {bys}, q,
+        SELECT {keys}q,
                vals[CAST(floor(q * (len(vals) - 1)) AS INT) + 1]
                    AS est_value
         FROM vals, unnest([{qlit}]) AS t(q)
@@ -2826,46 +2344,27 @@ def kmv_sketch_by(df: DataFrame, col: str, by, k: int = 256,
     group — one shuffle keyed by the group columns). Group columns cast
     to string, NULL group keys excluded (grouped-sketch contract).
     Merge: ``kmv_merge_by`` — per-group bottom-k of the union, exact."""
-    from pyspark.sql import Window
-
     by = _norm_by(by)
-    if not by:
-        raise ValueError("by must name at least one grouping column")
     h = sketch_hash(col, hash_scheme)
-    pred = F.col(col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    w = Window.partitionBy(*by).orderBy("h")
-    return (
-        df.where(pred)
-        .select(*[F.col(c).cast("string").alias(c) for c in by],
-                F.expr(h).alias("h"))
+    hashes = (
+        df.where(_not_null(col, *by))
+        .select(*_str_cols(by), F.expr(h).alias("h"))
         .distinct()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
     )
+    return _top_rows(hashes, by, k, "h")
 
 
 def kmv_merge_by(a: DataFrame, b: DataFrame, by, k: int = 256) -> DataFrame:
     """Merge grouped KMV sketches built with the same (by, k): per-group
     bottom-k of the distinct union — exact (merge == rebuild)."""
-    from pyspark.sql import Window
-
-    by = _norm_by(by)
-    w = Window.partitionBy(*by).orderBy("h")
-    return (
-        a.unionByName(b).distinct()
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_rows(a.unionByName(b).distinct(), _norm_by(by), k, "h")
 
 
 def _kmv_est_by(sketch: DataFrame, by: list[str], k: int,
                 out: str) -> DataFrame:
-    """(by..., <out>): per-group (k-1)/h_k estimate, exact count when
-    the group's sketch holds fewer than k hashes."""
+    """(by..., <out>): per-group (k-1)/h_k scaled to the hash range, or
+    the exact distinct count when the group's sketch holds fewer than k
+    hashes."""
     return (
         sketch.groupBy(*by)
         .agg(F.count(F.lit(1)).alias("_n"), F.max("h").alias("_hk"))
@@ -2940,10 +2439,9 @@ def kmv_set_ops_by(a_df: DataFrame, b_df: DataFrame, col: str, by,
             * F.col("est_union"), 1
         ).alias(out)
 
+    est_a = _join_by(stats, _kmv_est_by(sa, by, k, "est_a"), by, "left")
     return (
-        stats
-        .join(_kmv_est_by(sa, by, k, "est_a"), by, "left")
-        .join(_kmv_est_by(sb, by, k, "est_b"), by, "left")
+        _join_by(est_a, _kmv_est_by(sb, by, k, "est_b"), by, "left")
         .select(
             *by,
             F.coalesce(F.col("est_a"), F.lit(0.0)).alias("est_a"),
@@ -2964,72 +2462,63 @@ def duckdb_kmv_set_ops_by_sql(col: str, by, k: int, source_a: str,
     by = _norm_by(by)
     h = duckdb_hash60(col)
     rng = repr(_KMV_RANGE)
-    bys_cast = ", ".join(f"CAST({c} AS VARCHAR) AS {c}" for c in by)
-    bnames = ", ".join(by)
-    notnull = " AND ".join([f"{col} IS NOT NULL"]
-                           + [f"{c} IS NOT NULL" for c in by])
+    keys = _sql_keys(by)
 
     def sk(src: str, name: str) -> str:
         return f"""{name} AS (
-            SELECT {bnames}, h FROM (
-                SELECT {bnames}, h,
-                       row_number() OVER (PARTITION BY {bnames}
+            SELECT {keys}h FROM (
+                SELECT {keys}h,
+                       row_number() OVER ({_sql_partition(by)}
                                           ORDER BY h) AS rn
-                FROM (SELECT DISTINCT {bys_cast}, {h} AS h
-                      FROM {src} WHERE {notnull})
+                FROM (SELECT DISTINCT {_sql_str_keys(by)}{h} AS h
+                      FROM {src} WHERE {_sql_not_null(col, *by)})
             ) WHERE rn <= {k}
         )"""
 
     def est(cte: str, name: str, out: str) -> str:
         return f"""{name} AS (
-            SELECT {bnames},
+            SELECT {keys}
                    round(CASE WHEN COUNT(*) < {k}
                          THEN CAST(COUNT(*) AS DOUBLE)
                          ELSE {float(k - 1)!r} * {rng} / MAX(h) END, 1)
                        AS {out}
-            FROM {cte} GROUP BY {bnames}
+            FROM {cte} {_sql_group_by(by)}
         )"""
 
     def frac(cnt: str, out: str) -> str:
         return (f"round(round(COALESCE({cnt}, 0) / CAST(ms AS DOUBLE), 6)"
                 f" * eu.est_union, 1) AS {out}")
 
-    on = " AND ".join(f"x.{c} = m.{c}" for c in by)
+    on = " AND ".join([f"x.{c} = m.{c}" for c in by] + ["x.h = m.h"])
     return f"""
         WITH {sk(source_a, 'sa')},
         {sk(source_b, 'sb')},
         merged AS (
-            SELECT {bnames}, h FROM (
-                SELECT {bnames}, h,
-                       row_number() OVER (PARTITION BY {bnames}
+            SELECT {keys}h FROM (
+                SELECT {keys}h,
+                       row_number() OVER ({_sql_partition(by)}
                                           ORDER BY h) AS rn
-                FROM (SELECT {bnames}, h FROM sa
-                      UNION SELECT {bnames}, h FROM sb)
+                FROM (SELECT {keys}h FROM sa
+                      UNION SELECT {keys}h FROM sb)
             ) WHERE rn <= {k}
         ),
         {est('sa', 'ea', 'est_a')},
         {est('sb', 'eb', 'est_b')},
         {est('merged', 'eu', 'est_union')},
         mstats AS (
-            SELECT m.{', m.'.join(by)}, COUNT(*) AS ms,
-                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sa x
-                                         WHERE {on} AND x.h = m.h)
-                            AND EXISTS (SELECT 1 FROM sb x
-                                        WHERE {on} AND x.h = m.h)
+            SELECT {_sql_keys(by, 'm.')}COUNT(*) AS ms,
+                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sa x WHERE {on})
+                            AND EXISTS (SELECT 1 FROM sb x WHERE {on})
                        THEN 1 ELSE 0 END) AS mm,
-                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sa x
-                                         WHERE {on} AND x.h = m.h)
-                            AND NOT EXISTS (SELECT 1 FROM sb x
-                                            WHERE {on} AND x.h = m.h)
+                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sa x WHERE {on})
+                            AND NOT EXISTS (SELECT 1 FROM sb x WHERE {on})
                        THEN 1 ELSE 0 END) AS ao,
-                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sb x
-                                         WHERE {on} AND x.h = m.h)
-                            AND NOT EXISTS (SELECT 1 FROM sa x
-                                            WHERE {on} AND x.h = m.h)
+                   SUM(CASE WHEN EXISTS (SELECT 1 FROM sb x WHERE {on})
+                            AND NOT EXISTS (SELECT 1 FROM sa x WHERE {on})
                        THEN 1 ELSE 0 END) AS bo
             FROM merged m GROUP BY ALL
         )
-        SELECT mst.{', mst.'.join(by)},
+        SELECT {_sql_keys(by, 'mst.')}
                COALESCE(ea.est_a, 0.0) AS est_a,
                COALESCE(eb.est_b, 0.0) AS est_b,
                eu.est_union,
@@ -3038,9 +2527,9 @@ def duckdb_kmv_set_ops_by_sql(col: str, by, k: int, source_a: str,
                {frac('ao', 'est_a_minus_b')},
                {frac('bo', 'est_b_minus_a')}
         FROM mstats mst
-        JOIN eu USING ({bnames})
-        LEFT JOIN ea USING ({bnames})
-        LEFT JOIN eb USING ({bnames})
+        JOIN eu {_sql_using(by)}
+        LEFT JOIN ea {_sql_using(by)}
+        LEFT JOIN eb {_sql_using(by)}
     """
 
 
@@ -3057,11 +2546,7 @@ def rate_sample(df: DataFrame, key_col: str, rate: float,
     pipeline dial a corpus down without resampling churn), and exactly
     reproducible in DuckDB. Pure codegen filter: pushes to the scan,
     no shuffle, no RNG. All columns pass through; NULL keys excluded."""
-    if not (0.0 <= rate <= 1.0):
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    h = sketch_hash(key_col, hash_scheme)
-    cut = int(rate * (1 << HASH_BITS))
-    return df.where(F.col(key_col).isNotNull() & (F.expr(h) < F.lit(cut)))
+    return rate_sample_by(df, key_col, [], {}, rate, hash_scheme)
 
 
 def rate_sample_by(df: DataFrame, key_col: str, by, rates,
@@ -3084,17 +2569,13 @@ def rate_sample_by(df: DataFrame, key_col: str, by, rates,
       the rate table can itself be computed in-pipeline (e.g. target
       counts / observed counts)."""
     by = _norm_by(by)
-    if not by:
-        raise ValueError("by must name at least one grouping column")
     if not (0.0 <= default_rate <= 1.0):
         raise ValueError(f"rate must be in [0, 1], got {default_rate}")
+    h = sketch_hash(key_col, hash_scheme)
+    pred = _not_null(key_col, *by)
     if isinstance(rates, DataFrame):
         if "rate" not in rates.columns:
             raise ValueError("rates DataFrame needs a 'rate' column")
-        h = sketch_hash(key_col, hash_scheme)
-        pred = F.col(key_col).isNotNull()
-        for c in by:
-            pred = pred & F.col(c).isNotNull()
         # collision-proof temp names: the caller's frame may already
         # carry columns named _cut/_rate
         cutc, ratec = "_cut", "_rate"
@@ -3108,15 +2589,14 @@ def rate_sample_by(df: DataFrame, key_col: str, by, rates,
         # an arbitrary survivor and duplicate group rows in the rates
         # table would otherwise duplicate DATA rows through the join)
         rt = (rates.select(
-                  *[F.col(c).cast("string").alias(c) for c in by],
+                  *_str_cols(by),
                   F.least(F.greatest(F.col("rate").cast("double"),
                                      F.lit(0.0)),
                           F.lit(1.0)).alias(ratec))
               .groupBy(*by).agg(F.max(ratec).alias(ratec)))
         joined = (
-            df.where(pred)
-            .withColumn(cutc, F.expr(h))
-            .join(F.broadcast(rt), by, "left")
+            _join_by(df.where(pred).withColumn(cutc, F.expr(h)),
+                     F.broadcast(rt), by, "left")
             .withColumn(ratec, F.coalesce(
                 F.col(ratec), F.lit(float(default_rate))))
         )
@@ -3125,42 +2605,38 @@ def rate_sample_by(df: DataFrame, key_col: str, by, rates,
                            * F.lit(float(1 << HASH_BITS)))
             .cast("bigint")).drop(cutc, ratec)
         return out
-    for r in list(rates.values()) + [default_rate]:
+    for r in rates.values():
         if not (0.0 <= r <= 1.0):
             raise ValueError(f"rate must be in [0, 1], got {r}")
-    h = sketch_hash(key_col, hash_scheme)
-
-    def esc(v) -> str:
-        return "'" + str(v).replace("'", "''") + "'"
-
     key_expr = (f"CAST({by[0]} AS STRING)" if len(by) == 1 else
                 "concat_ws(chr(31), " +
                 ", ".join(f"CAST({c} AS STRING)" for c in by) + ")")
+    return df.where(pred & (F.expr(h) < F.expr(
+        _rate_cut(key_expr, rates, default_rate))))
+
+
+def _rate_cut(key_expr: str, rates: dict, default_rate: float) -> str:
+    """SQL expression (Spark and DuckDB alike) for a row's hash cut-off:
+    a CASE over the group key for the listed rates, the default rate's
+    cut-off otherwise. Group values become quote-doubled literals."""
+    def esc(v) -> str:
+        return "'" + str(v).replace("'", "''") + "'"
+
+    default = f"CAST({int(default_rate * (1 << HASH_BITS))} AS BIGINT)"
+    if not rates:
+        return default
     whens = " ".join(
         f"WHEN {esc(g)} THEN CAST({int(r * (1 << HASH_BITS))} AS BIGINT)"
         for g, r in sorted(rates.items(), key=lambda kv: str(kv[0])))
-    cut = (f"CASE {key_expr} {whens} ELSE "
-           f"CAST({int(default_rate * (1 << HASH_BITS))} AS BIGINT) END")
-    pred = F.col(key_col).isNotNull()
-    for c in by:
-        pred = pred & F.col(c).isNotNull()
-    return df.where(pred & (F.expr(h) < F.expr(cut)))
+    return f"CASE {key_expr} {whens} ELSE {default} END"
 
 
 def duckdb_rate_sample_by_sql(key_col: str, by, rates: dict,
                               default_rate: float, source: str,
                               select: str = "*") -> str:
     """Oracle twin of ``rate_sample_by`` (single-column ``by``)."""
-    from .textops import duckdb_hash60
-
     by = _norm_by(by)
-    h = duckdb_hash60(key_col)
-    whens = " ".join(
-        f"WHEN '{g}' THEN CAST({int(r * (1 << HASH_BITS))} AS BIGINT)"
-        for g, r in sorted(rates.items(), key=lambda kv: str(kv[0])))
-    cut = (f"CASE CAST({by[0]} AS VARCHAR) {whens} ELSE "
-           f"CAST({int(default_rate * (1 << HASH_BITS))} AS BIGINT) END")
-    notnull = " AND ".join([f"{key_col} IS NOT NULL"]
-                           + [f"{c} IS NOT NULL" for c in by])
+    cut = _rate_cut(f"CAST({by[0]} AS VARCHAR)", rates, default_rate)
     return (f"SELECT {select} FROM {source} "
-            f"WHERE {notnull} AND {h} < {cut}")
+            f"WHERE {_sql_not_null(key_col, *by)} "
+            f"AND {duckdb_hash60(key_col)} < {cut}")

@@ -1247,3 +1247,96 @@ def test_blank_duckdb_twins(spark, blank, tmp_path):
     assert q(sketches.duckdb_mg_heavy_sql("key", 4, src)) == (
         ["item", "ok"], [])
 
+
+
+# ---------------------------------------------------------------------------
+# grouped builders take a bare column name for ``by``
+# ---------------------------------------------------------------------------
+
+def _lang_df(spark):
+    return spark.range(600).selectExpr(
+        "CASE pmod(id, 3) WHEN 0 THEN 'en' WHEN 1 THEN 'de' "
+        "ELSE 'fr' END AS lang",
+        "concat('k', pmod(id, 250)) AS key",
+        "CAST(pmod(id * 48271, 997) AS DOUBLE) AS v",
+        "CAST(id + 1 AS DOUBLE) AS w",
+        "concat('h', pmod(id, 4)) AS hot")
+
+
+_GROUPED = {
+    "hll_registers_by": lambda df, by: sketches.hll_registers_by(
+        df, "key", by, p=6),
+    "hll_merge_by": lambda df, by: sketches.hll_merge_by(
+        by, sketches.hll_registers_by(df, "key", ["lang"], p=6)),
+    "hll_estimate_by": lambda df, by: sketches.hll_estimate_by(
+        sketches.hll_registers_by(df, "key", ["lang"], p=6), by, 6),
+    "hll_cardinality_by": lambda df, by: sketches.hll_cardinality_by(
+        df, "key", by, p=6),
+    "countmin_table_by": lambda df, by: sketches.countmin_table_by(
+        df, "key", by, 2, 64),
+    "countmin_query_by": lambda df, by: sketches.countmin_query_by(
+        sketches.countmin_table_by(df, "key", ["lang"], 2, 64), df,
+        "key", by, 2, 64),
+    "bottomk_sketch_by": lambda df, by: sketches.bottomk_sketch_by(
+        df, "key", "v", by, 16),
+    "bottomk_merge_by": lambda df, by: sketches.bottomk_merge_by(
+        sketches.bottomk_sketch_by(df, "key", "v", ["lang"], 16),
+        sketches.bottomk_sketch_by(df, "key", "w", ["lang"], 16), by, 16),
+    "bottomk_quantiles_by": lambda df, by: sketches.bottomk_quantiles_by(
+        sketches.bottomk_sketch_by(df, "key", "v", ["lang"], 16), by,
+        [0.5]),
+    "priority_sample_by": lambda df, by: sketches.priority_sample_by(
+        df, "key", "w", by, 8),
+    "priority_estimates_by": lambda df, by: sketches.priority_estimates_by(
+        sketches.priority_sample_by(df, "key", "w", ["lang"], 8), by, 8),
+    "kmv_sketch_by": lambda df, by: sketches.kmv_sketch_by(
+        df, "key", by, 16),
+    "kmv_set_ops_by": lambda df, by: sketches.kmv_set_ops_by(
+        df, df.where("v > 400"), "key", by, 16),
+    "mg_summary_by": lambda df, by: sketches.mg_summary_by(
+        df, "hot", by, 4),
+    "mg_bound_check_by": lambda df, by: sketches.mg_bound_check_by(
+        df, "hot", by, 4),
+    "kll_partials_by": lambda df, by: sketches.kll_partials_by(
+        df, "v", by, 8),
+    "kll_quantiles_by": lambda df, by: sketches.kll_quantiles_by(
+        df, "v", by, [0.5], 8),
+    "tdigest_partials_by": lambda df, by: sketches.tdigest_partials_by(
+        df, "v", by, 20),
+    "tdigest_quantiles_by": lambda df, by: sketches.tdigest_quantiles_by(
+        df, "v", by, [0.5], 20),
+    "quantile_bound_check_by": lambda df, by:
+        sketches.quantile_bound_check_by(df, "v", by, [0.5], 8),
+    "rate_sample_by": lambda df, by: sketches.rate_sample_by(
+        df, "key", by, {"en": 0.5}, default_rate=0.2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED))
+def test_grouped_builder_accepts_str_by(spark, name):
+    df = _lang_df(spark).repartition(1)
+    build = _GROUPED[name]
+    got = sorted(map(tuple, build(df, "lang").collect()), key=repr)
+    want = sorted(map(tuple, build(df, ["lang"]).collect()), key=repr)
+    assert got == want and got
+
+
+def test_rate_sample_by_escapes_quotes_in_duckdb_twin(spark, tmp_path):
+    """A group value containing a single quote must reach the DuckDB
+    twin as a string literal (quotes doubled, like the Spark CASE)."""
+    import duckdb
+
+    df = spark.range(400).selectExpr(
+        "concat('k', id) AS key",
+        "CASE pmod(id, 2) WHEN 0 THEN 'o''brien' ELSE 'x' END AS grp")
+    p = str(tmp_path / "quoted.parquet")
+    df.toPandas().to_parquet(p)
+    rates = {"o'brien": 1.0}
+    got = sorted(r.key for r in sketches.rate_sample_by(
+        df, "key", "grp", rates, default_rate=0.0).collect())
+    con = duckdb.connect()
+    want = sorted(r[0] for r in con.sql(
+        sketches.duckdb_rate_sample_by_sql(
+            "key", "grp", rates, 0.0, f"read_parquet('{p}')",
+            select="key")).fetchall())
+    assert got == want and len(got) == 200
