@@ -16,8 +16,9 @@ Strictly an accelerator, never a requirement:
   library default and the streaming-state configuration); bit-packed
   filters keep the numpy path.
 * Compilation is attempted once per process; ANY failure (no compiler,
-  read-only tempdir, load error) silently selects the numpy path, which
-  remains byte-identical (the differential suites run both).
+  no safe cache dir, load error) silently selects the numpy path, which
+  remains byte-identical (the differential suites run both). The
+  reason is kept in ``load_error``.
 * ``QFSPARK_NO_CKERNEL=1`` disables it outright (used by the parity
   tests to pin the numpy path, and the escape hatch for exotic
   toolchains).
@@ -25,7 +26,12 @@ Strictly an accelerator, never a requirement:
 The compiled object is cached under the user cache dir keyed by the md5
 of the C source, so each source revision compiles at most once per
 machine; the write is build-to-temp + atomic rename, safe under
-concurrent executors.
+concurrent executors. The cache dir (``$XDG_CACHE_HOME/qfspark``, else
+``~/.cache/qfspark``) is created 0700; an existing one must be owned by
+the current user and not writable by group or other (an owned 0755 dir
+is tightened to 0700), and only a cached object owned by the user is
+loaded. There is no shared-tempdir fallback: code another local user
+could plant is never loaded into the process.
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import stat
 import subprocess
 import tempfile
 
@@ -249,17 +256,35 @@ long qf_bulk_fill(uint64_t *filt, uint64_t *storage, long size,
 
 _lib = None
 _tried = False
+#: why the kernel is unavailable (the exception text), None if loaded
+load_error: str | None = None
+
+
+def _check_owned(path: str, kind: str) -> os.stat_result:
+    """lstat ``path``: it must be a ``kind`` ('dir' or 'file'; not a
+    symlink) owned by the current uid, else PermissionError."""
+    st = os.lstat(path)
+    is_kind = stat.S_ISDIR if kind == "dir" else stat.S_ISREG
+    if not is_kind(st.st_mode) or st.st_uid != os.getuid():
+        raise PermissionError(
+            f"{path} is not a {kind} owned by uid {os.getuid()}")
+    return st
 
 
 def _cache_dir() -> str:
+    """The per-user kernel cache dir (see the module docstring); raises
+    OSError when it cannot be made or is not safe to load from."""
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache")
     d = os.path.join(base, "qfspark")
-    try:
-        os.makedirs(d, exist_ok=True)
-        return d
-    except OSError:
-        return tempfile.gettempdir()
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    mode = stat.S_IMODE(_check_owned(d, "dir").st_mode)
+    if mode & 0o022:
+        # another user may already have planted an object here
+        raise PermissionError(f"{d} is writable by group or other")
+    if mode & 0o077:
+        os.chmod(d, 0o700)
+    return d
 
 
 def _compile_and_load() -> ctypes.CDLL:
@@ -279,6 +304,8 @@ def _compile_and_load() -> ctypes.CDLL:
             # atomic publish: concurrent processes race benignly (same
             # bytes; rename over an existing file is atomic on POSIX)
             os.replace(tmp_so, so_path)
+    if stat.S_IMODE(_check_owned(so_path, "file").st_mode) & 0o022:
+        raise PermissionError(f"{so_path} is writable by group or other")
     lib = ctypes.CDLL(so_path)
     fn = lib.qf_insert_batch
     fn.restype = ctypes.c_long
@@ -313,18 +340,22 @@ def _compile_and_load() -> ctypes.CDLL:
 
 def get_kernel():
     """The loaded kernel library, or None when unavailable/disabled.
-    Tried once per process; every failure mode degrades to None."""
-    global _lib, _tried
+    Tried once per process; every failure mode degrades to None, with
+    the reason in ``load_error``."""
+    global _lib, _tried, load_error
     if _tried:
         return _lib
     _tried = True
     if os.environ.get("QFSPARK_NO_CKERNEL"):
         _lib = None
+        load_error = "disabled by QFSPARK_NO_CKERNEL"
         return _lib
     try:
         _lib = _compile_and_load()
-    except Exception:
+        load_error = None
+    except Exception as e:
         _lib = None
+        load_error = f"{type(e).__name__}: {e}"
     return _lib
 
 
