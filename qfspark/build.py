@@ -22,7 +22,7 @@ Two build strategies, both shaped for the 10^12-row design point:
     table with lineage metadata, committed from the driver in one atomic
     file rename, and builds resume by skipping shards already present.
 
-    Four exchange strategies (``exchange=``), because the expensive step
+    Three exchange strategies (``exchange=``), because the expensive step
     at scale is *moving the hashes to their shard builder*:
 
     ``'arrow'`` (default) — hashes stay JVM-side through routing AND
@@ -56,10 +56,6 @@ Two build strategies, both shaped for the 10^12-row design point:
         Maximum map-side combining: the right choice when the duplicate
         ratio is high (the blob exchange shrinks by the dup factor,
         which 'arrow'/'storage' do not).
-
-    ``'salted'`` — explicit two-stage salted ``groupBy(hash, salt)``
-        row-level aggregation; demonstrates hot-key skew handling with
-        plain relational operators.
 
     ``'auto'`` — measures the input instead of guessing: a high duplicate
         ratio (probed on a bounded prefix) selects 'combine'; otherwise
@@ -606,11 +602,10 @@ def build_sharded_qf(
     exchange: str = "arrow",
     payload_dir: str | None = None,
     spill_dir: str | None = None,
-    pre_agg: str | None = None,
 ) -> DataFrame:
     """Build (or resume building) a sharded CQF; returns the shard-table
     DataFrame ``(shard, entries, q_bits, payload, payload_path,
-    lineage...)``. See the module docstring for the four ``exchange``
+    lineage...)``. See the module docstring for the three ``exchange``
     strategies and the sidecar-payload contract.
 
     With ``checkpoint_path`` set, the build runs as ONE Spark query that
@@ -629,11 +624,6 @@ def build_sharded_qf(
     only the newest row per shard, so an interrupted overwrite still
     answers from the new rows.
     """
-    if pre_agg is not None:  # deprecated alias from the round-1 API
-        alias = {"local": "combine", "salted": "salted"}.get(pre_agg)
-        if alias is None:
-            raise ValueError(f"unknown pre_agg mode {pre_agg!r}")
-        exchange = alias
     config = config or QFConfig(hash_name=DEFAULT_HASH, counter_bits=32)
     spark = df.sparkSession
     sb = shard_bits
@@ -704,8 +694,6 @@ def build_sharded_qf(
             spill_dir, checkpoint_path)
     elif exchange == "combine":
         shards_df = _exchange_combine(hashed, sb, config, done, payload_dir)
-    elif exchange == "salted":
-        shards_df = _exchange_salted(hashed, sb, config, done, payload_dir)
     else:
         raise ValueError(f"unknown exchange mode {exchange!r}")
 
@@ -1014,40 +1002,9 @@ def _exchange_combine(hashed: DataFrame, sb: int, config: QFConfig,
     )
 
 
-# -- exchange: 'salted' (explicit two-stage row-level aggregation) ----------
-
-def _exchange_salted(hashed: DataFrame, sb: int, config: QFConfig,
-                     done: set, payload_dir: str | None) -> DataFrame:
-    salted = hashed.withColumn(
-        "salt", F.pmod(F.monotonically_increasing_id(), F.lit(64))
-    )
-    agg = (
-        salted.groupBy(HASH_COL, "salt")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(HASH_COL)
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    routed = agg.select(
-        (F.shiftrightunsigned(F.col(HASH_COL), 64 - sb) if sb
-         else F.lit(0)).cast("long").alias("shard"),
-        (F.shiftleft(F.col(HASH_COL), sb) if sb
-         else F.col(HASH_COL)).alias("local_hash"),
-        F.col("cnt"),
-    )
-    if done:
-        routed = routed.filter(~F.col("shard").isin(list(done)))
-    partials = routed.groupBy("shard").applyInPandas(
-        _rows_to_blob(config.counter_bits > 0),
-        schema="shard long, hashes binary, counts binary",
-    )
-    return partials.groupBy("shard").applyInPandas(
-        _merge_and_build(config, sb, payload_dir), schema=_SHARD_SCHEMA
-    )
-
-
 def _merge_and_build(config: QFConfig, shard_bits: int,
                      payload_dir: str | None):
-    """applyInPandas reducer shared by 'combine'/'salted': merge a
+    """applyInPandas reducer of the 'combine' exchange: merge a
     shard's sorted blobs and bulk-build its filter."""
     cfg = config
 
@@ -1102,30 +1059,6 @@ def _local_shard_blobs(shard_bits: int, with_counts: bool):
                 counts[lo:hi].astype("<u8").tobytes() if with_counts else b""
             )
         yield pd.DataFrame({"shard": out_shard, "hashes": out_h, "counts": out_c})
-
-    return _fn
-
-
-def _rows_to_blob(with_counts: bool):
-    """applyInPandas adapter for the salted row-level path: convert a
-    shard's (local_hash, cnt) rows into one sorted blob row."""
-
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        hv = _u64(pdf["local_hash"])
-        order = np.argsort(hv)  # hashes unique per shard (groupBy hash)
-        hv = hv[order]
-        if with_counts:
-            cnt = pdf["cnt"].to_numpy(dtype=np.int64).view(np.uint64)[order]
-            cbytes = cnt.astype("<u8").tobytes()
-        else:
-            cbytes = b""
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "hashes": [hv.astype("<u8").tobytes()],
-                "counts": [cbytes],
-            }
-        )
 
     return _fn
 

@@ -1,4 +1,4 @@
-"""The four sharded-build exchange strategies are interchangeable:
+"""The three sharded-build exchange strategies are interchangeable:
 identical canonical shard payloads, identical lookups — because the
 canonical layout is a pure function of the (hash, count) multiset, the
 data-movement strategy cannot affect the artifact. Plus the sidecar
@@ -21,7 +21,7 @@ from qfspark.build import (
 from qfspark.lookup import annotate, annotate_via_shard_table
 from qfspark.sizing import QFConfig
 
-EXCHANGES = ["arrow", "storage", "combine", "salted"]
+EXCHANGES = ["arrow", "storage", "combine"]
 
 
 @pytest.fixture(scope="module")
@@ -33,6 +33,13 @@ def keys_df(spark):
 
 def _payloads(df):
     return {int(r.shard): shard_payload_bytes(r) for r in df.collect()}
+
+
+def test_only_the_three_exchanges_and_auto_are_accepted(keys_df):
+    with pytest.raises(ValueError, match="unknown exchange mode"):
+        build_sharded_qf(keys_df, "key", exchange="salted")
+    with pytest.raises(TypeError):
+        build_sharded_qf(keys_df, "key", pre_agg="local")
 
 
 def test_exchanges_byte_identical(spark, keys_df, tmp_path):
