@@ -1363,21 +1363,23 @@ def _kll_from_level_rows(level_arr, value_arr, k: int) -> KLLSketch:
     return out
 
 
-def _premerge(partials: DataFrame, by: list[str], nparts: int, fan: int,
-              compact) -> DataFrame:
-    """Bound the final merge of a KLL / t-digest partial table: with
-    more than ``fan`` input partitions, first merge the partials within
+def _premerge(partials: DataFrame, by: list[str], fan: int, compact,
+              size: int) -> DataFrame:
+    """Bound the final merge of a KLL / t-digest partial table (one
+    partial sketch per group per input partition): with more than
+    ``fan`` partitions, first merge the partials within
     (by..., spark_partition_id % fan) groups — a shuffle of the TINY
     partial table only — so each group's final merge folds at most
     ``fan`` partial sketches whatever the partition count. ``compact``
     is the family's per-group compaction (the sketch's own associative
-    merge) called as ``compact(table, group_columns)``."""
-    if nparts <= fan:
+    merge), ``kll_compact_partials_by`` or
+    ``tdigest_compact_partials_by``, with sketch size ``size``."""
+    if partials.rdd.getNumPartitions() <= fan:
         return partials
     return compact(
         partials.withColumn(
             "_fan", (F.spark_partition_id() % fan).cast("string")),
-        by + ["_fan"]).drop("_fan")
+        by + ["_fan"], size).drop("_fan")
 
 
 def kll_partials_by(df: DataFrame, value_col: str, by,
@@ -1424,10 +1426,8 @@ def _kll_collect(df: DataFrame, value_col: str, by: list[str], k: int,
                  fan: int) -> dict[tuple, KLLSketch]:
     """{group-tuple: KLLSketch} on the driver: partials, the ``fan``
     pre-merge, one collect, one fold per group."""
-    partials = _premerge(
-        kll_partials_by(df, value_col, by, k), by,
-        df.rdd.getNumPartitions(), fan,
-        lambda t, keys: kll_compact_partials_by(t, keys, k))
+    partials = _premerge(kll_partials_by(df, value_col, by, k), by, fan,
+                         kll_compact_partials_by, k)
     acc: dict[tuple, tuple[list, list]] = {}
     for r in partials.collect():
         g = tuple(r[c] for c in by)
@@ -1460,10 +1460,8 @@ def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
 
     import pandas as pd
 
-    partials = _premerge(
-        kll_partials_by(df, value_col, by, k), by,
-        df.rdd.getNumPartitions(), _FAN,
-        lambda t, keys: kll_compact_partials_by(t, keys, k))
+    partials = _premerge(kll_partials_by(df, value_col, by, k), by, _FAN,
+                         kll_compact_partials_by, k)
 
     def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
@@ -1585,9 +1583,8 @@ def _tdigest_collect(df: DataFrame, value_col: str, by: list[str],
     """{group-tuple: TDigest} on the driver: partials, the ``fan``
     pre-merge, one collect, one fold per group."""
     partials = _premerge(
-        tdigest_partials_by(df, value_col, by, compression), by,
-        df.rdd.getNumPartitions(), fan,
-        lambda t, keys: tdigest_compact_partials_by(t, keys, compression))
+        tdigest_partials_by(df, value_col, by, compression), by, fan,
+        tdigest_compact_partials_by, compression)
     acc: dict[tuple, list] = {}
     for r in partials.collect():
         acc.setdefault(tuple(r[c] for c in by), []).append(
@@ -1620,9 +1617,8 @@ def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
     import pandas as pd
 
     partials = _premerge(
-        tdigest_partials_by(df, value_col, by, compression), by,
-        df.rdd.getNumPartitions(), _FAN,
-        lambda t, keys: tdigest_compact_partials_by(t, keys, compression))
+        tdigest_partials_by(df, value_col, by, compression), by, _FAN,
+        tdigest_compact_partials_by, compression)
 
     def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
         d = TDigest.from_rows(zip(pdf["mean"], pdf["weight"]), comp)
