@@ -57,9 +57,10 @@ Design rules shared with the CQF:
    on both engines. Quantile estimates use explicit lower-interpolation
    rank arithmetic instead of engine-specific percentile interpolation.
 
-Grouped-sketch contract. Every family has ONE implementation, the
-grouped ``X_by(..., by, ...)``; the ungrouped ``X(...)`` is a thin wrapper
-calling it with ``by=[]`` (the DuckDB twins likewise):
+Grouped-sketch contract. Every family with a grouped form has ONE
+implementation, the grouped ``X_by(..., by, ...)``; the ungrouped
+``X(...)`` is a thin wrapper calling it with ``by=[]`` (the DuckDB twins
+likewise):
 
 * ``by`` is a list of column names (a bare string is one column);
   ``by=[]`` is the global group — a keyless ``groupBy()`` aggregate,
@@ -70,9 +71,10 @@ calling it with ``by=[]`` (the DuckDB twins likewise):
 * Rows with a NULL group key are excluded, as are rows with a NULL
   sketched value.
 * Top-k selections run per group as a window rank, and globally as
-  TakeOrdered (per-partition top-k + a k-sized driver merge); the
-  driver-side KLL / t-digest builds pre-merge partials in ``fan`` groups
-  either way.
+  TakeOrdered (per-partition top-k + a k-sized driver merge). KLL /
+  t-digest partials from more than ``fan`` input partitions are
+  pre-merged in ``fan`` groups either way (``kll_build`` /
+  ``tdigest_build`` take ``fan``; the other paths use ``_FAN``).
 
 The Python-kernel sketches (t-digest, KLL) are not SQL-expressible; their
 correctness gate is the published error bound itself: the entry queries
