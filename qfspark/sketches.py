@@ -2358,23 +2358,24 @@ def kmv_merge_by(a: DataFrame, b: DataFrame, by, k: int = 256) -> DataFrame:
     return _top_rows(a.unionByName(b).distinct(), _norm_by(by), k, "h")
 
 
+def _kmv_estimate(n: str, hk: str, k: int):
+    """Distinct-count estimate of a KMV sample of ``n`` hashes with
+    largest hash ``hk``: (k-1)/h_k scaled to the hash range, or the
+    exact count when the sample holds fewer than k hashes."""
+    return F.round(
+        F.when(F.col(n) < k, F.col(n).cast("double"))
+        .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_RANGE) / F.col(hk)),
+        1,
+    )
+
+
 def _kmv_est_by(sketch: DataFrame, by: list[str], k: int,
                 out: str) -> DataFrame:
-    """(by..., <out>): per-group (k-1)/h_k scaled to the hash range, or
-    the exact distinct count when the group's sketch holds fewer than k
-    hashes."""
+    """(by..., <out>): the per-group ``_kmv_estimate``."""
     return (
         sketch.groupBy(*by)
         .agg(F.count(F.lit(1)).alias("_n"), F.max("h").alias("_hk"))
-        .select(
-            *by,
-            F.round(
-                F.when(F.col("_n") < k, F.col("_n").cast("double"))
-                .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_RANGE)
-                           / F.col("_hk")),
-                1,
-            ).alias(out),
-        )
+        .select(*by, _kmv_estimate("_n", "_hk", k).alias(out))
     )
 
 
@@ -2421,15 +2422,7 @@ def kmv_set_ops_by(a_df: DataFrame, b_df: DataFrame, col: str, by,
         F.coalesce(F.sum((ina & inb).cast("long")), F.lit(0)).alias("_m"),
         F.coalesce(F.sum((ina & ~inb).cast("long")), F.lit(0)).alias("_ao"),
         F.coalesce(F.sum((~ina & inb).cast("long")), F.lit(0)).alias("_bo"),
-    ).withColumn(
-        "est_union",
-        F.round(
-            F.when(F.col("_ms") < k, F.col("_ms").cast("double"))
-            .otherwise(F.lit(float(k - 1)) * F.lit(_KMV_RANGE)
-                       / F.col("_hk")),
-            1,
-        ),
-    )
+    ).withColumn("est_union", _kmv_estimate("_ms", "_hk", k))
 
     def _frac_est(cnt: str, out: str):
         return F.round(
