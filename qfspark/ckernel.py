@@ -262,7 +262,8 @@ load_error: str | None = None
 
 def _check_owned(path: str, kind: str) -> os.stat_result:
     """lstat ``path``: it must be a ``kind`` ('dir' or 'file'; not a
-    symlink) owned by the current uid, else PermissionError."""
+    symlink) owned by the current uid, else PermissionError. (A file's
+    own mode bits do not matter: only its 0700 directory leads to it.)"""
     st = os.lstat(path)
     is_kind = stat.S_ISDIR if kind == "dir" else stat.S_ISREG
     if not is_kind(st.st_mode) or st.st_uid != os.getuid():
@@ -304,8 +305,7 @@ def _compile_and_load() -> ctypes.CDLL:
             # atomic publish: concurrent processes race benignly (same
             # bytes; rename over an existing file is atomic on POSIX)
             os.replace(tmp_so, so_path)
-    if stat.S_IMODE(_check_owned(so_path, "file").st_mode) & 0o022:
-        raise PermissionError(f"{so_path} is writable by group or other")
+    _check_owned(so_path, "file")
     lib = ctypes.CDLL(so_path)
     fn = lib.qf_insert_batch
     fn.restype = ctypes.c_long
