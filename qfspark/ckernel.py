@@ -1,27 +1,26 @@
 """Optional compiled scalar-insert kernel for the incremental batch path.
 
 ``QF.insert_hashes`` — the applyInPandasWithState streaming-dedup hot
-path — is dispatch-bound in pure numpy at small batches: the round-7
-bit-packed vectorization bottomed out at ~2.4 us/insert for 200-row
-batches (~50 numpy dispatches of ~1 us each per chunk, profiled with
-cProfile — the arithmetic itself is nanoseconds). A scalar C loop has
-no dispatch at all, so this module compiles the EXACT
-``_insert_hash_nogrow`` algorithm (a line-by-line port; same slot meta
-bits, same duplicate/ripple/findStart control flow) to a shared object
-with the system C compiler at first use and drives it through ctypes.
+path — inserts one key at a time with a sequential ripple shift; in
+Python that costs microseconds per key, in C a fraction of one. So
+this module compiles the EXACT ``_insert_hash_nogrow`` algorithm (a
+line-by-line port; same slot meta bits, same duplicate/ripple/findStart
+control flow) to a shared object with the system C compiler at first
+use and drives it through ctypes.
 
 Strictly an accelerator, never a requirement:
 
 * It only applies to UNPACKED vectors (one uint64 word per slot — the
   library default and the streaming-state configuration); bit-packed
-  filters keep the numpy path.
+  filters take the scalar insert (``QF._insert_hash_nogrow`` in a loop).
 * Compilation is attempted once per process; ANY failure (no compiler,
-  no safe cache dir, load error) silently selects the numpy path, which
-  remains byte-identical (the differential suites run both). The
-  reason is kept in ``load_error``.
-* ``QFSPARK_NO_CKERNEL=1`` disables it outright (used by the parity
-  tests to pin the numpy path, and the escape hatch for exotic
-  toolchains).
+  no safe cache dir, load error) selects the scalar insert, which
+  remains byte-identical (the differential suites run both) but costs
+  ~15-40x more per key. The reason is kept in ``load_error`` and logged
+  once at WARNING on the ``qfspark.ckernel`` logger.
+* ``QFSPARK_NO_CKERNEL=1`` disables it outright, without a warning
+  (used by the parity tests to pin the scalar insert, and the escape
+  hatch for exotic toolchains).
 
 The compiled object is cached under the user cache dir keyed by the md5
 of the C source, so each source revision compiles at most once per
@@ -38,6 +37,7 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import stat
 import subprocess
@@ -254,6 +254,7 @@ long qf_bulk_fill(uint64_t *filt, uint64_t *storage, long size,
 }
 """
 
+_log = logging.getLogger(__name__)
 _lib = None
 _tried = False
 #: why the kernel is unavailable (the exception text), None if loaded
@@ -356,6 +357,8 @@ def get_kernel():
     except Exception as e:
         _lib = None
         load_error = f"{type(e).__name__}: {e}"
+        _log.warning("compiled insert kernel unavailable, using the "
+                     "scalar insert: %s", load_error)
     return _lib
 
 

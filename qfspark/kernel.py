@@ -27,7 +27,9 @@ resolve circular wraparound. This gives a fully vectorized bulk build,
 probe, decode, and an associative lossless merge. The scalar incremental
 insert is kept as a slow path for API parity and as a differential oracle
 in tests (bulk build and incremental insert must produce byte-identical
-filters).
+filters). The batched incremental insert (``insert_hashes``) runs the
+same sequential algorithm either compiled (``qfspark.ckernel``) or as a
+loop over that scalar insert when the C kernel does not apply.
 
 Deviation from the reference (documented): the reference's insert has an
 edge case where a *new* run's insertion point is compared against the
@@ -43,7 +45,7 @@ import numpy as np
 
 from .hashing import hash_bytes
 from .sizing import MAX_LOADING_FACTOR, MIN_Q_BITS, QFConfig, q_bits_for
-from .vector import PackedVector, UnpackedVector, make_vector
+from .vector import UnpackedVector, make_vector
 
 U64 = np.uint64
 
@@ -51,76 +53,6 @@ _OCC = 1  # is_occupied
 _CONT = 2  # is_continuation
 _SHIFT = 4  # is_shifted
 _META = 7
-
-# ---------------------------------------------------------------------------
-# bit-parallel helpers for the batched incremental insert: each row's
-# window metadata packs into ONE uint64 per bit-kind (bit j = window
-# column j), so the insert algorithm's walks run as 1D uint64 bit
-# arithmetic instead of 2D boolean column scans.
-# ---------------------------------------------------------------------------
-
-_PC16 = None  # lazy 16-bit popcount lookup (64 KiB, built once)
-
-
-def _pc16_table() -> np.ndarray:
-    global _PC16
-    if _PC16 is None:
-        _PC16 = np.unpackbits(
-            np.arange(1 << 16, dtype=np.uint16).view(np.uint8)
-            .reshape(-1, 2), axis=1).sum(axis=1).astype(np.uint8)
-    return _PC16
-
-
-def _popcount48(x: np.ndarray) -> np.ndarray:
-    """Per-element popcount of uint64 values known to fit 48 bits
-    (the window width): three 16-bit table lookups."""
-    t = _pc16_table()
-    m = U64(0xFFFF)
-    return (t[x & m] + t[(x >> U64(16)) & m] + t[(x >> U64(32)) & m])
-
-
-def _highbit_pos(x: np.ndarray) -> np.ndarray:
-    """Position of the highest set bit (0 where x == 0). Exact via
-    float64 log2 only while x stays well under 2^40 (above that the
-    ulp of the result can round log2(2^k - 1) up to k); callers pass
-    left-half masks of at most _WIN_BACK + 1 <= 17 bits."""
-    return np.log2(
-        np.maximum(x, U64(1)).astype(np.float64)).astype(np.int64)
-
-
-def _lowbit_pos(x: np.ndarray) -> np.ndarray:
-    """Position of the lowest set bit (0 where x == 0): isolate with
-    x & -x (a single power of two — float64-exact at any width).
-    The two's-complement wrap is silent for ARRAY uint64 arithmetic
-    (numpy only warns on scalar overflow), so no errstate guard —
-    the guard's seterr/geterr pair alone cost ~9 us per call."""
-    low = x & (~x + U64(1))
-    return np.log2(
-        np.maximum(low, U64(1)).astype(np.float64)).astype(np.int64)
-
-
-def _pack_window_masks(W: np.ndarray, win: int):
-    """(m_occ, m_cont, m_shift, m_used) uint64 masks for a rows x win
-    uint64 slot-value window — ONE packbits call over a 4-lane boolean
-    buffer; bit j of each mask is window column j. Requires win <= 64."""
-    occ = (W & U64(_OCC)) != 0
-    cont = (W & U64(_CONT)) != 0
-    shift = (W & U64(_SHIFT)) != 0
-    bb = np.zeros((W.shape[0], 256), dtype=np.uint8)
-    bb[:, 0:win] = occ
-    bb[:, 64:64 + win] = cont
-    bb[:, 128:128 + win] = shift
-    bb[:, 192:192 + win] = occ | cont | shift
-    words = np.packbits(bb, axis=1, bitorder="little").view(U64)
-    return words[:, 0], words[:, 1], words[:, 2], words[:, 3]
-
-
-def _pack_bool_rows(b: np.ndarray) -> np.ndarray:
-    """Pack a rows x C boolean array (C <= 64) into one uint64 mask per
-    row, bit j = column j."""
-    buf = np.zeros((b.shape[0], 64), dtype=np.uint8)
-    buf[:, : b.shape[1]] = b
-    return np.packbits(buf, axis=1, bitorder="little").view(U64).ravel()
 
 
 def _sort_with_counts(hashes: np.ndarray, counts: np.ndarray | None):
@@ -610,15 +542,6 @@ class QF:
         self._index = None
         return self._insert_hash_nogrow(hv, value, add)
 
-    #: window gathered per occupied-home element for the block-ripple
-    #: batch insert: _WIN_BACK covers the cluster-start backward walk,
-    #: _WIN_FWD the run walk + ripple to the first empty slot. Clusters
-    #: outgrowing the window fall back to the scalar path (rare below
-    #: the max loading factor; sized so the windows stay cheap to
-    #: materialize — they dominate the fast path's cost).
-    _WIN_BACK = 16
-    _WIN_FWD = 32
-
     def insert_hashes(self, hv: np.ndarray, value: int = 0,
                       add: bool = False) -> np.ndarray:
         """Batched incremental insert of raw hashes — the hot path of
@@ -628,28 +551,19 @@ class QF:
         included — the layout is CANONICAL in the entry multiset, so
         insertion order cannot change the bytes; differential-tested).
 
-        Block-ripple fast path: empty-home elements become pure
-        vectorized claims (one scatter_or — a claim never shifts
-        anything); for occupied-home elements ONE vectorized 2D
-        gather pulls a small window around each home slot and the
-        insert algorithm runs VECTORIZED ACROSS ALL ELEMENTS AT ONCE
-        against the materialized windows (``_emulate_insert_batch``:
-        the cluster/run/sorted-position walks become cumsum + argmax
-        column scans, the ripple one masked shifted-copy — ~50 fixed
-        numpy ops per chunk, no per-element Python), then all
-        modified slots write back in ONE vectorized scatter.
-        Elements whose affected regions ([cluster floor, first empty
-        slot]) interact — same island, overlapping ripples, window
-        overflow, or a table-wraparound window — are demoted to the
-        classic scalar path, which runs AFTER the vector write-back
-        against live state (so demotion is always safe, never a
-        correctness trade). Measured ~1.6-2.5x under the per-key
-        scalar loop at batch 200 and ~3-4x at batch 2000 (the fixed
-        numpy dispatch amortizes with batch size; cache misses paid
-        per window, not per walk step;
-        scripts/profile_stream_insert.py). A genuinely batch-scale
-        rebuild is still ``from_hashes``/``merge_many``, which wins
-        once the batch is a meaningful fraction of the state.
+        Two paths, both inserting one key at a time with the
+        sequential ripple shift of the reference (qf.go:319-405): the
+        compiled C kernel (``qfspark.ckernel``) on unpacked, writable
+        vectors with ``value >= 0``, and otherwise the scalar
+        ``_insert_hash_nogrow`` loop, which is also the differential
+        oracle. The scalar path costs far more per insert: on a 4-core
+        host with a 1M-key state, ~4-8 us/insert (unpacked) and ~10-18
+        us/insert (bit-packed) against ~0.15-0.3 us/insert for the C
+        kernel (scripts/profile_stream_insert.py). It serves bit-packed or
+        read-only vectors, hosts without a C compiler and
+        ``QFSPARK_NO_CKERNEL=1``. A genuinely batch-scale rebuild is
+        still ``from_hashes``/``merge_many``, which wins once the batch
+        is a meaningful fraction of the state.
 
         Returns the 'was already present' booleans aligned to the
         input order."""
@@ -666,15 +580,13 @@ class QF:
         # relies on it
         order = np.argsort(hv, kind="stable")
         sh = hv[order]
-        # ROUND 7: compiled scalar kernel (qfspark.ckernel) when the
-        # vectors are unpacked word arrays — the exact same algorithm
-        # with zero numpy dispatch, ~5-10x under the vectorized
-        # emulation at batch 200 (which remains the fallback and the
-        # differential twin; byte-identity pinned in
+        # compiled scalar kernel (qfspark.ckernel) when the vectors are
+        # unpacked word arrays — the exact same algorithm as the scalar
+        # loop with no Python per key (byte-identity pinned in
         # tests/test_round7_fixes.py).
         # the C kernel writes through raw pointers: a read-only memmap
         # (disk.open_readonly) would SIGSEGV it, so such filters take the
-        # numpy path, whose first write raises ValueError instead
+        # scalar insert, whose first write raises ValueError instead
         clib = None
         if (isinstance(self.filter, UnpackedVector)
                 and self.filter.words.flags.writeable
@@ -709,370 +621,11 @@ class QF:
                 self.entries += new
                 out[order[done:done + len(chunk)]] = flags
             else:
-                out[order[done:done + len(chunk)]] = \
-                    self._insert_hashes_chunk(chunk, value, add)
+                ins = self._insert_hash_nogrow
+                out[order[done:done + len(chunk)]] = [
+                    ins(h, value, add) for h in chunk.tolist()]
             done += len(chunk)
         return out
-
-    def _insert_hashes_chunk(self, sh: np.ndarray, value: int,
-                             add: bool) -> np.ndarray:
-        """Insert one growth-safe chunk of ASCENDING hashes; returns
-        per-element 'already present' flags in chunk order.
-
-        Three tiers: empty-home elements become pure vectorized CLAIMS
-        (one scatter_or, no window needed — a claim never shifts
-        anything); occupied-home elements gather a small window each
-        (one 2D gather) and run the insert algorithm VECTORIZED ACROSS
-        ALL ROWS AT ONCE against the materialized windows (round-6:
-        ~50 fixed numpy ops per chunk replace the round-5 per-row
-        Python emulation — the data-dependent walks become cumsum /
-        argmax column scans, the ripple one masked shifted-copy);
-        elements whose affected regions interact with a kept element's
-        region — or overflow/wrap the window — run the classic scalar
-        path LAST, against live post-vector state (always safe; the
-        canonical layout makes the final bytes order-independent)."""
-        n = len(sh)
-        out = np.zeros(n, dtype=bool)
-        size = self.size
-        back, fwd = self._WIN_BACK, self._WIN_FWD
-        win = back + fwd
-        dq = (sh >> U64(self.r_bits)).astype(np.int64)
-        cmask = self.counter_mask
-        has_storage = self.storage is not None
-
-        if win >= size:
-            # tiny filter: windows would wrap — all-scalar
-            scalar_ix = range(n)
-            present_scalar: list = []
-        else:
-            dr = (sh & self.r_mask).astype(np.int64)
-            home = self.filter.gather(dq)
-            empty_home = (home & U64(_META)) == 0
-            wrap = (dq < back) | (dq + fwd > size)
-            claim_rows = np.flatnonzero(empty_home)
-            occ_rows = np.flatnonzero(~empty_home & ~wrap)
-            scalar_list = list(np.flatnonzero(~empty_home & wrap))
-
-            # regions: a claim touches exactly its home slot; an
-            # occupied-home insert touches (cluster-floor, first empty
-            # >= home] — cluster-floor = the last empty slot <= home
-            # (the backward cluster walk can never reach an empty
-            # slot), first-empty = where the ripple lands.
-            # ROUND 7: the window's per-slot meta bits are bit-PACKED
-            # into one uint64 mask per (row, bit-kind) — bit j of a
-            # mask is window column j — so the cluster-floor /
-            # first-empty scans here and every walk inside the
-            # emulation run as 1D uint64 bit arithmetic instead of
-            # 2D boolean column scans (each 2D op cost ~3-6 us of
-            # dispatch at batch sizes; the masks make most of them
-            # ~1 us 1D ops).
-            wvals = svals = masks = e_col = None
-            if occ_rows.size:
-                offs = np.arange(win, dtype=np.int64) - back
-                widx = dq[occ_rows, None] + offs[None, :]
-                wvals = self.filter.gather(widx.ravel()).reshape(
-                    occ_rows.size, win)
-                svals = (self.storage.gather(widx.ravel())
-                         .reshape(occ_rows.size, win)
-                         if has_storage else None)
-                masks = _pack_window_masks(wvals, win)
-                m_used = masks[3]
-                one = U64(1)
-                low_b1 = U64((1 << (back + 1)) - 1)
-                empty_m = ~m_used & U64((1 << win) - 1)
-                left_empty = empty_m & low_b1
-                right_empty = empty_m >> U64(back)
-                ok = (left_empty != 0) & (right_empty != 0)
-                s_col = _highbit_pos(left_empty)
-                e_rel = _lowbit_pos(right_empty)
-                e_col = back + e_rel
-                if not ok.all():
-                    scalar_list.extend(occ_rows[~ok].tolist())
-                    occ_rows = occ_rows[ok]
-                    wsel = np.flatnonzero(ok)
-                    s_col, e_col, e_rel = s_col[ok], e_col[ok], e_rel[ok]
-                else:
-                    wsel = np.arange(occ_rows.size)
-
-            # conflict sweep over ALL candidate regions in start order
-            # (vectorized, CONSERVATIVE: a row whose region start
-            # overlaps the running max of every earlier region end is
-            # demoted — a superset of the exact last-KEPT-end sweep's
-            # demotions, so kept regions remain pairwise disjoint and
-            # demotion stays safe: the scalar pass runs after the
-            # vector write-back, so a kept row's computation never
-            # depends on a demoted one). Equal-start ties keep the
-            # ascending-hash-first row, preserving duplicate-flag
-            # order.
-            n_claim = claim_rows.size
-            n_occ = occ_rows.size if wvals is not None else 0
-            if n_claim + n_occ:
-                if n_occ:
-                    starts = np.concatenate(
-                        [dq[claim_rows], dq[occ_rows] + (s_col - back)])
-                    ends = np.concatenate(
-                        [dq[claim_rows], dq[occ_rows] + (e_col - back)])
-                    rowix = np.concatenate([claim_rows, occ_rows])
-                else:
-                    starts = ends = dq[claim_rows]
-                    rowix = claim_rows
-                order = np.lexsort((rowix, starts))
-                st, en = starts[order], ends[order]
-                keep = np.empty(order.size, dtype=bool)
-                keep[0] = True
-                if order.size > 1:
-                    keep[1:] = st[1:] > np.maximum.accumulate(en)[:-1]
-                kept = np.zeros(order.size, dtype=bool)
-                kept[order] = keep
-                if not keep.all():
-                    scalar_list.extend(rowix[~kept].tolist())
-                kept_claims = claim_rows[kept[:n_claim]]
-                occ_kept = kept[n_claim:]
-            else:
-                kept_claims = claim_rows
-                occ_kept = np.zeros(0, dtype=bool)
-
-            new_entries = 0
-            # tier 1: vectorized claims (target slots empty -> OR is
-            # assignment; the storage slot of a never-used slot is 0)
-            if kept_claims.size:
-                ck = kept_claims
-                self.filter.scatter_or(
-                    dq[ck],
-                    U64(_OCC) | (dr[ck].astype(U64) << U64(3)))
-                if has_storage:
-                    cv = min(value, cmask)
-                    if cv:
-                        self.storage.scatter_or(
-                            dq[ck], np.full(ck.size, cv, dtype=U64))
-                new_entries += kept_claims.size
-
-            # tier 2: one vectorized emulation across every kept
-            # occupied-home row
-            if occ_kept.any():
-                krows = occ_rows[occ_kept]          # chunk rows
-                kw = wsel[occ_kept]                 # window rows
-                present, failed, nn, fw, fs = self._emulate_insert_batch(
-                    wvals[kw],
-                    svals[kw] if has_storage else None,
-                    tuple(m[kw] for m in masks),
-                    (sh[krows] & self.r_mask),
-                    e_rel[occ_kept], value, add)
-                new_entries += nn
-                if failed.any():
-                    scalar_list.extend(krows[failed].tolist())
-                if present.any():
-                    out[krows[present]] = True
-                wrow, wcol, wv = fw
-                if wrow.size:
-                    base = dq[krows] - back
-                    self.filter.scatter(base[wrow] + wcol, wv)
-                if fs is not None:
-                    srow, scol, sv = fs
-                    if srow.size:
-                        base = dq[krows] - back
-                        self.storage.scatter(base[srow] + scol, sv)
-            self.entries += new_entries
-            scalar_list.sort()
-            scalar_ix = scalar_list
-            present_scalar = []
-
-        ins = self._insert_hash_nogrow
-        shl = None
-        for i in scalar_ix:
-            if shl is None:
-                shl = sh.tolist()
-            if ins(shl[i], value, add):
-                present_scalar.append(i)
-        if present_scalar:
-            out[present_scalar] = True
-        return out
-
-    def _emulate_insert_batch(self, W, S, masks, dr_r, e_rel, value, add):
-        """The exact ``_insert_hash_nogrow`` algorithm run VECTORIZED
-        across every kept occupied-home row's materialized window at
-        once (W: rows x win uint64, home slot at column ``_WIN_BACK``;
-        ``masks`` = the (occ, cont, shift, used) bit-packed window
-        masks from ``_pack_window_masks``, bit j = window column j;
-        ``e_rel`` = first empty column >= home, relative to home).
-
-        ROUND 7: the three data-dependent walks run as 1D uint64 BIT
-        ARITHMETIC on the packed masks — backward cluster walk:
-        highest shift-clear bit + two popcounts over the (stop, home]
-        bit range; forward run_start walk: k-th set non-CONT bit
-        (clear-lowest-bit loop, k is tiny); in-run sorted position:
-        lowest set bit of a stop mask. Only the remainder comparison
-        and the ripple's shifted-copy remain 2D. This replaces ~45
-        2D boolean ops (each ~3-6 us of numpy dispatch per call)
-        with ~1 us 1D ops; results are bit-identical
-        (differential-tested against the sequential scalar insert).
-
-        Rows whose walk would leave the window report ``failed`` and
-        write NOTHING (the caller demotes them to the scalar path
-        against live state). Caller guarantees homes are non-empty
-        and kept regions pairwise disjoint, so write-back cells never
-        collide across rows.
-
-        Returns (present, failed, n_new, (wrow, wcol, wval),
-        (srow, scol, sval) | None) with columns relative to the
-        window (caller maps to absolute slots)."""
-        B = self._WIN_BACK
-        R, win = W.shape
-        nright = win - B                    # right half: home at col 0
-        cmask = self.counter_mask
-        has_storage = S is not None
-        rows = np.arange(R)
-        OCCu, CONTu, SHIFTu = U64(_OCC), U64(_CONT), U64(_SHIFT)
-        one = U64(1)
-        m_occ, m_cont, m_shift, m_used = masks
-        low_b1 = U64((1 << (B + 1)) - 1)        # bits 0..B (left half)
-        rmask = U64((1 << nright) - 1)          # right-half bit range
-
-        Wr = W[:, B:]
-        dr_u = dr_r.astype(U64, copy=False)
-        drs = dr_u << U64(3)
-
-        home = Wr[:, 0]
-        extending = ((m_occ >> U64(B)) & one) != 0
-        nonext = ~extending
-
-        # ---- stage 1: run_start (findStart, qf.go:422-444) ----
-        # The scalar path claims the OCC bit at home FIRST (the walk
-        # reads the claimed value), so the occupancy count includes it.
-        need_walk = ((m_shift >> U64(B)) & one) != 0
-        left_sc = ~m_shift & low_b1             # shift-clear cols 0..B
-        found_sc = left_sc != 0
-        stop = _highbit_pos(left_sc)            # 0 for all-shifted rows
-        occl = (m_occ & low_b1) | (nonext.astype(U64) << U64(B))
-        ncl = ~m_cont & low_b1                  # non-CONT cols 0..B
-        # runs - complete over the walked range (stop, B]: popcounts
-        # over one per-row bit-range mask. The three popcounts run as
-        # ONE table pass over a concatenated array (one numpy dispatch
-        # set instead of three).
-        rng = low_b1 & ~((one << (stop.astype(U64) + one)) - one)
-        ncr = (~m_cont >> U64(B)) & rmask & ~one  # right non-CONT, no home
-        pc3 = _popcount48(
-            np.concatenate([occl & rng, ncl & rng, ncr])
-        ).astype(np.int64)
-        d = pc3[:R] - pc3[R:2 * R]
-        nc_at_stop = ((ncl >> stop.astype(U64)) & one).astype(np.int64)
-        need = np.where(need_walk, 1 + d - nc_at_stop, 0)
-        failed = need_walk & ((need > pc3[2 * R:]) | ~found_sc)
-        # rs = position of the need-th set bit of ncr: clear the
-        # need-1 lowest set bits (need is small — the run count of one
-        # cluster), then take the lowest remaining
-        k = np.maximum(need, 1) - 1
-        m = ncr.copy()
-        while True:
-            act = k > 0
-            if not act.any():
-                break
-            m[act] &= m[act] - one
-            k[act] -= 1
-        rs = np.where(need > 0, _lowbit_pos(m), 0)  # right-half column
-
-        # ---- stage 2: sorted position within the run ----
-        # rem >= dr collapses to Wr >= dr<<3 (remainder above the 3
-        # meta bits; equality at rem == dr regardless of meta) — the
-        # one remaining 2D comparison, packed to a bit mask
-        ge_mask = _pack_bool_rows(Wr >= drs[:, None])
-        rs_u = rs.astype(U64)
-        ge_rs = ~((one << rs_u) - one)              # bits >= rs
-        gt_rs = ~((one << (rs_u + one)) - one)      # bits >  rs
-        empty_r = (~m_used >> U64(B)) & rmask
-        ncontr_full = (~m_cont >> U64(B)) & rmask
-        crit = ((empty_r | ge_mask) & ge_rs) | (ncontr_full & gt_rs)
-        slot = np.where(extending, _lowbit_pos(crit), rs)
-
-        cur = Wr[rows, slot]
-        dup = (extending & ((cur & U64(_META)) != 0)
-               & ((cur >> U64(3)) == dr_u)
-               & ((slot == rs) | ((cur & CONTu) != 0)) & ~failed)
-        present = dup
-        rip = ~failed & ~dup
-
-        # ---- stage 3: ripple-shift [slot, first-empty] ----
-        # end = e_rel: the first empty column >= home; no empties in
-        # [home, slot) (the stage-2 stop mask halts on one), so it is
-        # also the first empty >= slot — and the region check already
-        # guaranteed it lies inside the window. Shifted cells compose
-        # from the raw predecessor word: CONT and remainder travel
-        # together in (old & ~(OCC|SHIFT)); OCC stays per-slot; SHIFT
-        # is always set past the insertion point.
-        newWr = (Wr & OCCu) | SHIFTu
-        newWr[:, 1:] |= Wr[:, :-1] & U64(
-            0xFFFFFFFFFFFFFFFF ^ (_OCC | _SHIFT))
-        # the run_start slot of an extending row hands its CONT bit
-        # on regardless of its old value (it becomes the run's second
-        # element)
-        fix = extending & (rs + 1 < nright)
-        if fix.any():
-            fr = np.flatnonzero(fix)
-            newWr[fr, rs[fr] + 1] |= CONTu
-        # the insertion cell itself
-        occ_at = (cur & OCCu) | np.where(
-            nonext & (slot == 0), OCCu, U64(0))
-        newWr[rows, slot] = (
-            occ_at
-            | np.where(slot != rs, CONTu, U64(0))
-            | np.where(slot != 0, SHIFTu, U64(0))
-            | drs)
-
-        # write-back (row, col) pairs for rippling rows over
-        # [slot, e_rel]: segment arithmetic instead of a 2D mask +
-        # nonzero sweep
-        ri = np.flatnonzero(rip)
-        seg = np.maximum(e_rel[ri] - slot[ri] + 1, 0)
-        tot = int(seg.sum())
-        if ri.size:
-            starts = np.empty(ri.size, dtype=np.int64)
-            starts[0] = 0
-            np.cumsum(seg[:-1], out=starts[1:])
-            within = np.arange(tot, dtype=np.int64)
-            within -= np.repeat(starts, seg)
-            rrow = np.repeat(ri, seg)
-            rcol = np.repeat(slot[ri], seg) + within
-        else:
-            rrow = rcol = np.zeros(0, dtype=np.int64)
-        wrow, wcol = rrow, rcol
-        wv = newWr[wrow, wcol]
-        # bare OCC claim at home for non-extending rows whose ripple
-        # starts past it
-        claim_extra = nonext & ~failed & (slot > 0)
-        if claim_extra.any():
-            crows = np.flatnonzero(claim_extra)
-            wrow = np.concatenate([wrow, crows])
-            wcol = np.concatenate([wcol, np.zeros(crows.size,
-                                                  dtype=wcol.dtype)])
-            wv = np.concatenate([wv, home[crows] | OCCu])
-        wcol = wcol + B
-
-        fs = None
-        if has_storage:
-            cv = U64(min(value, cmask))
-            Sr = S[:, B:]
-            newSr = np.empty_like(Sr)
-            newSr[:, 1:] = Sr[:, :-1]
-            newSr[:, 0] = 0
-            newSr[rows, slot] = cv
-            srow, scol = rrow, rcol
-            sv = newSr[srow, scol]
-            drows = np.flatnonzero(dup)
-            if drows.size:
-                dslot = slot[drows]
-                if add:
-                    old = Sr[drows, dslot]
-                    cm = U64(cmask)
-                    sat = old >= cm - cv
-                    dv = np.where(sat, cm, old + cv)
-                else:
-                    dv = np.full(drows.size, cv, dtype=U64)
-                srow = np.concatenate([srow, drows])
-                scol = np.concatenate([scol, dslot])
-                sv = np.concatenate([sv, dv])
-            fs = (srow, scol + B, sv)
-
-        return present, failed, int(rip.sum()), (wrow, wcol, wv), fs
 
     def _read(self, slot: int) -> int:
         return self.filter.get(slot)

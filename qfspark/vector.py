@@ -90,32 +90,6 @@ class PackedVector:
         ``ufunc.at`` path (which also validates widths)."""
         self.scatter_or(ix, vals)
 
-    def scatter(self, ix: np.ndarray, vals: np.ndarray) -> None:
-        """Vectorized ASSIGNMENT at **distinct** indices (clear the
-        field, then OR the value in) — the batched ``set``. Distinctness
-        is required for the clear/or pair to be race-free under
-        ``ufunc.at``'s sequential application; adjacent fields sharing a
-        word are fine (each clear touches only its own field's bits)."""
-        vals = vals.astype(U64, copy=False)
-        if bool(np.any(vals > self.mask)):
-            raise OverflowError(
-                f"value wider than {self.bits} bits in packed scatter"
-            )
-        ix = ix.astype(np.int64, copy=False)
-        bitstart = ix * self.bits
-        word = bitstart >> 6
-        off = (bitstart & 63).astype(U64)
-        with np.errstate(over="ignore"):
-            np.bitwise_and.at(self.words, word, ~(self.mask << off))
-            np.bitwise_or.at(self.words, word, vals << off)
-            spill = np.flatnonzero((off.astype(np.int64) + self.bits) > 64)
-            if spill.size:
-                hi_shift = U64(64) - off[spill]
-                np.bitwise_and.at(self.words, word[spill] + 1,
-                                  ~(self.mask >> hi_shift))
-                np.bitwise_or.at(self.words, word[spill] + 1,
-                                 vals[spill] >> hi_shift)
-
     # -- scalar (slow path for incremental insert) ------------------------
     def get(self, ix: int) -> int:
         bitstart = ix * self.bits
@@ -202,15 +176,6 @@ class UnpackedVector:
         field width (no overflow pass — internal callers construct them
         in-range)."""
         self.words[ix] |= vals.astype(U64, copy=False)
-
-    def scatter(self, ix: np.ndarray, vals: np.ndarray) -> None:
-        """Vectorized assignment at **distinct** indices."""
-        vals = vals.astype(U64, copy=False)
-        if bool(np.any(vals > self.mask)):
-            raise OverflowError(
-                f"value wider than {self.bits} bits in unpacked scatter"
-            )
-        self.words[ix.astype(np.int64, copy=False)] = vals
 
     def get(self, ix: int) -> int:
         return int(self.words[ix])

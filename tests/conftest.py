@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 
@@ -20,3 +22,18 @@ def spark():
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_001 = "/root/testdata/sf0.01"
+
+
+@contextlib.contextmanager
+def no_ckernel():
+    """Run the body with the compiled insert kernel disabled, so
+    ``QF.insert_hashes`` takes the scalar insert and the bulk fill its
+    numpy twin; the previous kernel state is restored after."""
+    import qfspark.ckernel as ck
+
+    prev_tried, prev_lib = ck._tried, ck._lib
+    ck._tried, ck._lib = True, None
+    try:
+        yield
+    finally:
+        ck._tried, ck._lib = prev_tried, prev_lib

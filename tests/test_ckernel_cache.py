@@ -44,8 +44,9 @@ def _plant(dirpath, marker):
                     os.path.join(dirpath, SO_NAME), src], check=True)
 
 
-def _get_kernel(cache_home, tmpdir):
-    """(loaded, load_error) from get_kernel() in a fresh interpreter."""
+def _run_get_kernel(cache_home, tmpdir):
+    """(loaded, load_error, stderr) from get_kernel() in a fresh
+    interpreter."""
     env = dict(os.environ, XDG_CACHE_HOME=str(cache_home),
                TMPDIR=str(tmpdir), PYTHONPATH=REPO)
     env.pop("QFSPARK_NO_CKERNEL", None)
@@ -54,7 +55,13 @@ def _get_kernel(cache_home, tmpdir):
             "print(json.dumps([lib is not None, c.load_error]))")
     out = subprocess.run([sys.executable, "-c", code], env=env,
                          capture_output=True, text=True, check=True)
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    loaded, err = json.loads(out.stdout.strip().splitlines()[-1])
+    return loaded, err, out.stderr
+
+
+def _get_kernel(cache_home, tmpdir):
+    """(loaded, load_error) from get_kernel() in a fresh interpreter."""
+    return list(_run_get_kernel(cache_home, tmpdir)[:2])
 
 
 def test_uncreatable_cache_dir_loads_nothing_from_tempdir(tmp_path):
@@ -63,9 +70,11 @@ def test_uncreatable_cache_dir_loads_nothing_from_tempdir(tmp_path):
     _plant(str(tmpdir), str(marker))
     blocker = tmp_path / "not_a_dir"
     blocker.write_text("")  # a file: the cache dir under it can't exist
-    loaded, err = _get_kernel(blocker / "sub", tmpdir)
+    loaded, err, stderr = _run_get_kernel(blocker / "sub", tmpdir)
     assert not marker.exists()
     assert not loaded and err
+    # the silent-fallback reason is logged once, at WARNING
+    assert stderr.count(err) == 1
 
 
 def test_planted_tempdir_object_is_never_loaded(tmp_path):

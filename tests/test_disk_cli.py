@@ -39,16 +39,21 @@ def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits):
     assert int(fa.sum()) == 0
 
 
-@pytest.mark.parametrize("counter_bits", [0, 8])
+@pytest.mark.parametrize("counter_bits,bit_packed",
+                         [(0, False), (8, False), (0, True), (8, True)],
+                         ids=["0", "8", "0-packed", "8-packed"])
 def test_insert_into_readonly_filter_raises_not_crashes(tmp_path,
-                                                        counter_bits):
+                                                        counter_bits,
+                                                        bit_packed):
     """Inserting into a memory-mapped read-only filter must raise numpy's
     ValueError; the compiled kernel writes through raw pointers and would
-    kill the process. Run in a subprocess so a crash fails the test
+    kill the process, so such filters (and bit-packed ones) take the
+    scalar insert. Run in a subprocess so a crash fails the test
     instead of the test session."""
     path = str(tmp_path / "f.qf")
     save(QF.from_keys([f"k{i}" for i in range(500)],
-                      config=QFConfig(counter_bits=counter_bits)), path)
+                      config=QFConfig(counter_bits=counter_bits,
+                                      bit_packed=bit_packed)), path)
     code = (
         "import numpy as np\n"
         "from qfspark.disk import open_readonly\n"

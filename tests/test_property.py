@@ -108,11 +108,11 @@ def test_serde_roundtrip(hashes, counter_bits, packed):
        add=st.booleans(), value=st.integers(0, 40))
 def test_batched_insert_equals_sequential(hashes, q_bits, counter_bits,
                                           packed, split, add, value):
-    """The round-5 block-ripple batch insert must be byte- and
-    flag-identical to the sequential per-element insert for arbitrary
-    hash multisets in a tiny quotient space (forcing runs, clusters,
-    wraparound windows, duplicate keys, and demotion collisions) —
-    over a pre-populated state, growth included."""
+    """The batch insert (C kernel on unpacked filters, the scalar
+    insert loop on bit-packed ones) must be byte- and flag-identical to
+    the sequential per-element insert for arbitrary hash multisets in a
+    tiny quotient space (forcing runs, clusters, table wraparound and
+    duplicate keys) — over a pre-populated state, growth included."""
     hv = _clustered(hashes, q_bits)
     k = min(split, len(hv))
     state, batch = hv[:k], hv[k:]

@@ -1,20 +1,24 @@
-"""Round-5 kernel tests: the block-ripple batched insert
-(QF.insert_hashes rewrite) and the vectors' assignment scatter.
+"""Batched-insert tests (QF.insert_hashes).
 
-The batched path has three tiers (vectorized claims, windowed
-emulation, scalar fallback); every test here is differential against
-the per-element scalar insert in ascending hash order — the final
-bytes must be identical (canonical layout) and the 'already present'
-flags must match element-for-element.
+``insert_hashes`` has two paths: the compiled C kernel and, when that
+does not apply, a loop over the scalar ``_insert_hash_nogrow`` per
+growth-safe chunk. Every test here runs both (the second with the
+kernel disabled) and is differential against the per-element scalar
+insert in ascending hash order — the final bytes must be identical
+(canonical layout) and the 'already present' flags must match
+element-for-element.
 """
 from __future__ import annotations
+
+import contextlib
 
 import numpy as np
 import pytest
 
 from qfspark.kernel import QF
 from qfspark.sizing import QFConfig
-from qfspark.vector import PackedVector, UnpackedVector
+
+from .conftest import no_ckernel
 
 
 def _rand64(rng, n):
@@ -25,15 +29,17 @@ def _rand64(rng, n):
 def _differential(state, batch, cfg, value=1, add=False):
     counts = (np.ones(len(state), dtype=np.uint64)
               if cfg.counter_bits else None)
-    qa = QF.from_hashes(state, counts, cfg)
     qb = QF.from_hashes(state, counts, cfg)
-    fa = qa.insert_hashes(batch, value=value, add=add)
     fb = np.zeros(len(batch), dtype=bool)
     for i in np.argsort(batch, kind="stable").tolist():
         fb[i] = qb.insert_hash(int(batch[i]), value=value, add=add)
-    assert qa.to_bytes() == qb.to_bytes()
-    assert np.array_equal(fa, fb)
-    assert qa.q_bits == qb.q_bits
+    for kernel in (contextlib.nullcontext, no_ckernel):
+        with kernel():
+            qa = QF.from_hashes(state, counts, cfg)
+            fa = qa.insert_hashes(batch, value=value, add=add)
+        assert qa.to_bytes() == qb.to_bytes()
+        assert np.array_equal(fa, fb)
+        assert qa.q_bits == qb.q_bits
 
 
 @pytest.mark.parametrize("cb,bp", [(0, True), (8, True), (8, False),
@@ -46,7 +52,7 @@ def test_insert_hashes_block_ripple_differential(cb, bp):
         batch = _rand64(rng, batch_n)
         if n_state and batch_n >= 4:
             # existing keys + internal duplicates exercise the
-            # duplicate-counter and demotion paths
+            # duplicate-counter paths
             batch[:batch_n // 4] = rng.choice(state, batch_n // 4)
             batch[batch_n // 4:batch_n // 2] = rng.choice(
                 batch[batch_n // 2:], batch_n // 4)
@@ -66,8 +72,8 @@ def test_insert_hashes_growth_parity():
 
 
 def test_insert_hashes_wraparound_windows():
-    """Quotients at the table edges take the wrap-demoted scalar path;
-    bytes still identical."""
+    """Quotients at the table edges: runs and ripples wrap around the
+    table end; bytes still identical."""
     rng = np.random.RandomState(8)
     cfg = QFConfig(counter_bits=8, expected_entries=4096)
     probe = QF.from_hashes(np.zeros(0, dtype=np.uint64), None, cfg)
@@ -92,15 +98,15 @@ def test_insert_hashes_counter_saturation():
 
 
 def test_insert_hashes_tiny_filter_all_scalar():
-    """Windows wider than the table: the all-scalar branch."""
+    """A table of a few slots, grown by one batch."""
     rng = np.random.RandomState(10)
     _differential(np.zeros(0, dtype=np.uint64), _rand64(rng, 20),
                   QFConfig(counter_bits=4, expected_entries=8), value=1)
 
 
 def test_insert_hashes_dense_collisions():
-    """Many batch elements landing in the same few islands — the
-    demotion sweep's stress case (most rows fall back to scalar)."""
+    """Many batch elements landing in the same few quotients: long
+    clusters, long ripples and many shifted runs."""
     rng = np.random.RandomState(11)
     cfg = QFConfig(counter_bits=8, expected_entries=4096)
     probe = QF.from_hashes(np.zeros(0, dtype=np.uint64), None, cfg)
@@ -111,37 +117,3 @@ def test_insert_hashes_dense_collisions():
     batch = (qs << np.uint64(r_bits)) | rems
     _differential(np.zeros(0, dtype=np.uint64), batch, cfg,
                   value=1, add=True)
-
-
-# ---------------------------------------------------------------------------
-# vector assignment scatter
-# ---------------------------------------------------------------------------
-
-@pytest.mark.parametrize("cls", [PackedVector, UnpackedVector])
-@pytest.mark.parametrize("bits", [1, 3, 7, 17, 33, 63, 64])
-def test_scatter_assigns_over_nonzero(cls, bits):
-    rng = np.random.RandomState(bits)
-    size = 200
-    v = cls(bits, size)
-    mask = int(v.mask)
-    first = rng.randint(0, 2 ** 63, size).astype(np.uint64) \
-        & np.uint64(mask)
-    v.scatter_or(np.arange(size), first)
-    ix = np.unique(rng.randint(0, size, 80)).astype(np.int64)
-    vals = rng.randint(0, 2 ** 63, len(ix)).astype(np.uint64) \
-        & np.uint64(mask)
-    v.scatter(ix, vals)  # assignment over NON-zero targets
-    got = v.gather(np.arange(size))
-    want = first.copy()
-    want[ix] = vals
-    assert np.array_equal(got, want)
-    # neighbours sharing a word are untouched
-    for i in range(size):
-        assert v.get(i) == int(want[i])
-
-
-@pytest.mark.parametrize("cls", [PackedVector, UnpackedVector])
-def test_scatter_overflow_raises(cls):
-    v = cls(4, 16)
-    with pytest.raises(OverflowError):
-        v.scatter(np.array([0]), np.array([16], dtype=np.uint64))
