@@ -561,8 +561,9 @@ def main() -> None:
     spark.stop()
 
     # streaming-state incremental insert (pure kernel, no JVM): median
-    # us/insert of the round-5 block-ripple batch path at 1M-state —
-    # the per-micro-batch cost of applyInPandasWithState dedup
+    # us/insert of the batch insert path (the C kernel where it loads,
+    # else the scalar insert loop) at 1M-state — the per-micro-batch
+    # cost of applyInPandasWithState dedup
     stream_insert = {}
     try:
         import numpy as np
@@ -586,10 +587,9 @@ def main() -> None:
             t0 = time.perf_counter()
             qf.insert_hashes(b, value=1)
             ts.append(time.perf_counter() - t0)
-        # batch 2000: the round-6 fully-vectorized window emulation is
-        # ~50 fixed numpy dispatches per chunk, so per-insert cost
-        # drops with batch size — record the amortized regime a real
-        # micro-batch (thousands of rows per state group) runs in,
+        # batch 2000: the fixed per-call cost (argsort, chunking, the
+        # ctypes call) amortizes with batch size — record the regime a
+        # real micro-batch (thousands of rows per state group) runs in,
         # alongside the batch-200 series kept for round-over-round
         # comparability
         ts2k = []

@@ -4,24 +4,17 @@
 grows — the property that makes applyInPandasWithState dedup O(batch)
 per micro-batch in steady state rather than O(state).
 
-Representative numbers on this box (round 6, fully-vectorized
-block-ripple path; median over 29 batches, which this box's ±2-4x
-noise makes mandatory — single-batch timings are meaningless):
-~1.9-2.7 us/insert at batch 200 and ~1.0-1.3 us/insert at batch
-2000 across 1e5-4e6 state, vs the per-key insert_hash loop's
-~2.7-4.8 — a ~1.6-4x win that GROWS with batch size (the cost is
-~50 fixed numpy ops per chunk, amortized across the whole batch)
-and with state (cache misses on the random home-slot probes are
-paid once per window, not once per walk step). The fast path:
-empty-home inserts become one vectorized scatter_or claim;
-occupied-home inserts gather a 48-slot window each in one 2D gather
-and run the insert algorithm vectorized ACROSS ALL ROWS AT ONCE
-(cumsum/argmax column scans for the walks, one masked shifted-copy
-for the ripple — no per-element Python at all); interacting regions
-fall back to the scalar path against live state
-(differential-tested parity, growth included). Remaining floor at
-batch 200: ~0.2-0.3 us/insert of gather/scatter cache misses plus
-~60 numpy dispatch overheads (~1-2 us each) spread over the batch.
+Numbers on a 4-core x86 host (median over 29 batches; identical
+runs there vary +-2-4x, so single-batch timings are meaningless), with
+the compiled insert kernel (qfspark.ckernel): ~0.2-0.35 us/insert at
+batch 200 and ~0.15-0.2 us/insert at batch 2000 across 1e5-4e6 state,
+against ~3.7-6 us/insert for the per-key insert_hash loop. With
+QFSPARK_NO_CKERNEL=1 (or no C compiler) insert_hashes itself runs that
+scalar loop: ~3.3-4.2 us/insert at batch 200 and ~4-5 at batch 2000 —
+no batch amortization, and ~12-35x the compiled kernel. Bit-packed
+filters always take the scalar loop and cost about twice as much
+again (~10-17 us/insert at 1e6 state).
+
 The decode+rebuild path costs ~0.14 s per million state rows, which
 is why the streaming branch switches to rebuild once batch*16 >=
 state.
