@@ -306,12 +306,14 @@ def build_qf_from_counts(
     """Build one merged CQF from a PRE-AGGREGATED ``(key, count)``
     DataFrame — the fast shape when the caller already has a
     ``groupBy(key).count()`` in hand (e.g. it also needs the distinct
-    keys for probing): hashing stays JVM-side and, when an action-free
-    estimate bounds the input at ``SMALL_BUILD_COLLECT_ROWS`` rows, one
-    Arrow collect moves ~16 B per distinct key, with no Python worker
-    stage. Above that bound, or when the estimate is unknown, it builds
-    through ``build_qf``'s partial path, which sums the count column per
-    partition. Byte-identical to ``build_qf`` over the un-aggregated
+    keys for probing): hashing stays JVM-side and, when the input has
+    at most ``SMALL_BUILD_COLLECT_ROWS`` rows, one Arrow collect moves
+    ~16 B per distinct key, with no Python worker stage. An action-free
+    estimate decides that; when there is none (a persisted ``groupBy``
+    has none), the collect is bounded at one row past the threshold and
+    kept if it fits. Above the bound it builds through ``build_qf``'s
+    partial path, which sums the count column per partition.
+    Byte-identical to ``build_qf`` over the un-aggregated
     multiset (counts for hash-colliding keys sum, exactly as the
     multiset path aggregates them). Same driver-RAM contract as
     ``build_qf``: the distinct keys must fit driver memory."""
@@ -319,9 +321,19 @@ def build_qf_from_counts(
     keys = df.select(col, count_col).where(F.col(col).isNotNull())
     hashed = with_hash(keys, col, config.hash_name).select(
         HASH_COL, F.col(count_col).cast("long").alias("_qf_n"))
-    if not _small_enough_to_collect(hashed):
+    tbl = None
+    if hasattr(hashed, "toArrow"):
+        from .sources import approx_row_count
+
+        est = approx_row_count(hashed, fallback_count=False)
+        if est is None:
+            tbl = hashed.limit(SMALL_BUILD_COLLECT_ROWS + 1).toArrow()
+            if tbl.num_rows > SMALL_BUILD_COLLECT_ROWS:
+                tbl = None
+        elif est <= SMALL_BUILD_COLLECT_ROWS:
+            tbl = hashed.toArrow()
+    if tbl is None:
         return _build_from_partials(hashed, config, count_col="_qf_n")
-    tbl = hashed.toArrow()
     hv = np.asarray(
         tbl.column(HASH_COL).to_numpy(zero_copy_only=False),
         dtype=np.int64).view(np.uint64)
@@ -1066,8 +1078,8 @@ def _local_shard_blobs(shard_bits: int, with_counts: bool):
 def load_sharded_qf(shards_df_or_rows) -> ShardedQF:
     """Materialize a ShardedQF from the shard table (DataFrame or
     collected rows). Duplicate shard rows (from appended re-builds) are
-    resolved to the newest build_ts. Each shard's filter gets its probe
-    index built."""
+    resolved to the newest build_ts. Probes walk each shard's filter in
+    place (``QF.lookup_hashes``); no index is built."""
     rows = (
         shards_df_or_rows.collect()
         if isinstance(shards_df_or_rows, DataFrame)

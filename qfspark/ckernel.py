@@ -1,4 +1,4 @@
-"""Optional compiled scalar-insert kernel for the incremental batch path.
+"""Optional compiled kernels: the scalar insert and the walk probe.
 
 ``QF.insert_hashes`` — the applyInPandasWithState streaming-dedup hot
 path — inserts one key at a time with a sequential ripple shift; in
@@ -6,21 +6,31 @@ Python that costs microseconds per key, in C a fraction of one. So
 this module compiles the EXACT ``_insert_hash_nogrow`` algorithm (a
 line-by-line port; same slot meta bits, same duplicate/ripple/findStart
 control flow) to a shared object with the system C compiler at first
-use and drives it through ctypes.
+use and drives it through ctypes. The same object carries the bulk
+fill (a port of ``QF._bulk_fill``) and the walk probe behind
+``QF.lookup_hashes`` (a port of ``QF._probe_walk``, reference
+lookupByHash/findStart): every broadcast lookup, shard-table probe and
+stream-state probe walks the filter in place, so executors hold only
+the filter, no decoded index.
 
 Strictly an accelerator, never a requirement:
 
 * It only applies to UNPACKED vectors (one uint64 word per slot — the
   library default and the streaming-state configuration); bit-packed
-  filters take the scalar insert (``QF._insert_hash_nogrow`` in a loop).
+  filters take the scalar insert (``QF._insert_hash_nogrow`` in a loop)
+  and the numpy walk probe (``QF._probe_walk``). The probe only reads
+  the words, so read-only memmaps (``disk.open_readonly``) take it; the
+  insert writes, so they do not.
 * Compilation is attempted once per process; ANY failure (no compiler,
-  no safe cache dir, load error) selects the scalar insert, which
-  remains byte-identical (the differential suites run both) but costs
-  ~15-40x more per key. The reason is kept in ``load_error`` and logged
-  once at WARNING on the ``qfspark.ckernel`` logger.
+  no safe cache dir, load error) selects the scalar insert and the
+  numpy walk probe. Both stay answer- and byte-identical (the
+  differential suites run both paths) but cost more per key: ~15-40x
+  for the insert, ~7-30x for the probe. The reason is kept in
+  ``load_error`` and logged once at WARNING on the ``qfspark.ckernel``
+  logger.
 * ``QFSPARK_NO_CKERNEL=1`` disables it outright, without a warning
-  (used by the parity tests to pin the scalar insert, and the escape
-  hatch for exotic toolchains).
+  (used by the parity tests to pin the scalar insert and the numpy
+  walk, and the escape hatch for exotic toolchains).
 
 The compiled object is cached under the user cache dir keyed by the md5
 of the C source, so each source revision compiles at most once per
@@ -165,6 +175,64 @@ long qf_insert_batch(uint64_t *filt, uint64_t *storage,
         }
     }
     return new_entries;
+}
+
+/* Exact port of qfspark.kernel.QF._probe_walk (reference
+   lookupByHash/findStart, qf.go:422-500) over UNPACKED slot/storage
+   word arrays, one probe at a time. Reads only (the words may be a
+   read-only memmap). found_out[i] = 1 and counts_out[i] = the stored
+   counter (0 without storage) when hashes[i] is present; both 0
+   otherwise. */
+void qf_probe_batch(const uint64_t *filt, const uint64_t *storage,
+                    long size, int r_bits, uint64_t r_mask,
+                    const uint64_t *hashes, long n,
+                    uint8_t *found_out, uint64_t *counts_out)
+{
+    long mask = size - 1;
+    for (long e = 0; e < n; e++) {
+        uint64_t hv = hashes[e];
+        long dq = (long)(hv >> r_bits);
+        uint64_t dr = hv & r_mask;
+        found_out[e] = 0;
+        counts_out[e] = 0;
+        /* unoccupied home bucket -> miss */
+        if (!(filt[dq] & OCC))
+            continue;
+
+        /* findStart: count runs left to the cluster start, then walk
+           right until our run starts */
+        long runs = 1, complete = 0;
+        long i = dq;
+        for (;;) {
+            uint64_t s = filt[i];
+            if (!(s & CONT)) complete++;
+            if (!(s & SHIFT)) break;
+            if (s & OCC) runs++;
+            i = (i - 1) & mask;
+        }
+        long slot = dq;
+        while (runs > complete) {
+            slot = (slot + 1) & mask;
+            if (!(filt[slot] & CONT)) complete++;
+        }
+
+        /* scan the remainder-sorted run */
+        for (int first = 1;; first = 0) {
+            uint64_t s = filt[slot];
+            if (!first && !(s & CONT))
+                break;
+            uint64_t r = s >> 3;
+            if (r == dr) {
+                found_out[e] = 1;
+                if (storage)
+                    counts_out[e] = storage[slot];
+                break;
+            }
+            if (r > dr)
+                break;
+            slot = (slot + 1) & mask;
+        }
+    }
 }
 
 #include <stdlib.h>
@@ -336,6 +404,19 @@ def _compile_and_load() -> ctypes.CDLL:
         ctypes.POINTER(ctypes.c_uint64),  # counts (or NULL)
         ctypes.c_long,                    # n
     ]
+    pb = lib.qf_probe_batch
+    pb.restype = None
+    pb.argtypes = [
+        ctypes.POINTER(ctypes.c_uint64),  # filt (read only)
+        ctypes.POINTER(ctypes.c_uint64),  # storage (or NULL; read only)
+        ctypes.c_long,                    # size
+        ctypes.c_int,                     # r_bits
+        ctypes.c_uint64,                  # r_mask
+        ctypes.POINTER(ctypes.c_uint64),  # hashes
+        ctypes.c_long,                    # n
+        ctypes.POINTER(ctypes.c_uint8),   # found_out
+        ctypes.POINTER(ctypes.c_uint64),  # counts_out
+    ]
     return lib
 
 
@@ -357,8 +438,8 @@ def get_kernel():
     except Exception as e:
         _lib = None
         load_error = f"{type(e).__name__}: {e}"
-        _log.warning("compiled insert kernel unavailable, using the "
-                     "scalar insert: %s", load_error)
+        _log.warning("compiled kernel unavailable, using the scalar "
+                     "insert and the numpy walk probe: %s", load_error)
     return _lib
 
 
@@ -406,3 +487,32 @@ def bulk_fill(lib, filt_words: np.ndarray,
         counts.ctypes.data_as(_U64P) if counts is not None else None,
         len(hv),
     ))
+
+
+def probe_batch(lib, filt_words: np.ndarray,
+                storage_words: np.ndarray | None,
+                size: int, r_bits: int, r_mask: int,
+                hashes: np.ndarray) -> tuple:
+    """Probe a batch through the C walk; the word arrays are only read,
+    so a read-only memmap is safe. Returns (found: bool ndarray,
+    counts: uint64 ndarray), aligned to ``hashes``."""
+    # the kernel indexes size words through raw pointers: refuse any
+    # array it could read past the end of
+    for words in (filt_words, storage_words):
+        if words is not None and (words.dtype.itemsize != 8
+                                  or not words.flags.c_contiguous
+                                  or len(words) != size):
+            raise ValueError(f"word array does not match {size} slots")
+    hashes = np.ascontiguousarray(hashes, dtype=np.uint64)
+    n = len(hashes)
+    found = np.empty(n, dtype=np.uint8)
+    counts = np.empty(n, dtype=np.uint64)
+    lib.qf_probe_batch(
+        filt_words.ctypes.data_as(_U64P),
+        storage_words.ctypes.data_as(_U64P)
+        if storage_words is not None else None,
+        size, r_bits, r_mask & 0xFFFFFFFFFFFFFFFF,
+        hashes.ctypes.data_as(_U64P), n,
+        found.ctypes.data_as(_U8P), counts.ctypes.data_as(_U64P),
+    )
+    return found.view(bool), counts

@@ -2,8 +2,8 @@
 
 ``save(qf, path)`` writes the native serialization to a file;
 ``open_readonly(path)`` memory-maps the word arrays instead of reading
-them: opening costs one header read, and a probe in ``walk`` mode touches
-only the pages holding the slots it visits — the reference's
+them: opening costs one header read, and a probe (the default walk)
+touches only the pages holding the slots it visits — the reference's
 pay-per-probe ReadAt behavior (disk.go:31-72, packed.go:168-219), with
 the OS page cache in place of its manual reads.
 
@@ -47,7 +47,7 @@ def save(qf: QF, path: str) -> int:
 def open_any(path: str, hash_name: str = "murmur64a") -> QF:
     """Open a filter file in either the native format or the go-qfext
     wire format — BOTH memory-mapped, zero-load (header read only; pages
-    fault in per probe in ``walk`` mode). The Go format carries no hash
+    fault in per probe). The Go format carries no hash
     identifier, so ``hash_name`` applies to it (the reference itself
     assumes murmur, disk.go:69-70)."""
     with open(path, "rb") as f:
@@ -96,10 +96,12 @@ def _mmap_vector(path: str, off: int, cls, bits: int, size: int):
 
 def open_readonly(path: str) -> QF:
     """Open a native-format filter without loading it: word arrays are
-    memory-mapped read-only. Lookups work as usual; use
-    ``lookup_hashes(..., mode='walk')`` to keep the pay-per-probe
-    property (``'index'`` mode decodes the whole filter once, which
-    faults in every page — the equivalent of a full load)."""
+    memory-mapped read-only. Lookups walk the mapped slots in place
+    (the compiled walk for unpacked filters, the numpy walk for
+    bit-packed ones or without a C compiler), so each probe faults in
+    only the pages it visits: pay-per-probe. Only ``mode='index'``
+    decodes the whole filter, faulting in every page — the equivalent
+    of a full load."""
     with open(path, "rb") as f:
         head = f.read(struct.calcsize("<4sHBBBBHQ"))
         magic, version, flags, q_bits, counter_bits, hlen, _, entries = (

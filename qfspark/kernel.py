@@ -370,12 +370,11 @@ class QF:
     # probe
     # ------------------------------------------------------------------
     def build_index(self) -> None:
-        """Cache a direct-addressed probe index: the decoded sorted hash
-        array plus per-quotient offsets (bucket -> slice of the sorted
-        hashes). Probes become O(1): one offset gather + avg ~load
-        candidate comparisons, no binary search. Extra RAM: 8 bytes per
-        entry + 8 bytes per bucket (about the filter's own footprint) —
-        the fast broadcast-lookup path."""
+        """Cache a decoded probe index: the sorted hash array plus
+        per-quotient offsets, 8 bytes per entry + 8 bytes per bucket on
+        top of the filter. No library path uses it; it stays for the
+        benchmark replay's index figure, the only caller of
+        ``mode='index'``."""
         hv, counts = self.decode(sort=True)
         q = (hv >> U64(self.r_bits)).astype(np.int64)
         bucket_counts = np.bincount(q, minlength=self.size)
@@ -383,20 +382,43 @@ class QF:
         np.cumsum(bucket_counts, out=offsets[1:])
         self._index = (hv, counts, offsets)
 
-    def lookup_hashes(self, hashes: np.ndarray, mode: str = "auto"):
+    def lookup_hashes(self, hashes: np.ndarray, mode: str = "walk"):
         """Batch probe. Returns ``(found bool[n], counts uint64[n])``.
 
-        mode='index': searchsorted against the decoded hash array (cached).
-        mode='walk':  true slot-walk probe, no auxiliary memory
-                      (reference algorithm lookupByHash/findStart,
-                      qf.go:422-500, vectorized across the batch).
+        mode='walk' (the default) walks the slots in place, holding no
+        memory beyond the filter (reference lookupByHash/findStart,
+        qf.go:422-500). It runs the compiled walk
+        (``qfspark.ckernel.probe_batch``, tens of ns per key) when the
+        filter and its storage are unpacked word arrays, read-only
+        memmaps included, and the kernel is loaded. Otherwise it runs
+        the numpy ``_probe_walk``, vectorized across the batch: the
+        differential oracle, and the path for bit-packed filters, hosts
+        without a C compiler and ``QFSPARK_NO_CKERNEL=1``, at about
+        0.3-2 us per key.
+        mode='index' probes the decoded index, which must be built first
+        (the method above); only the benchmark replay asks for it.
         """
+        if self.filter.words is None:
+            raise ValueError("probe of a closed filter")
         hashes = np.asarray(hashes, dtype=U64)
-        if mode == "auto":
-            mode = "index" if (self._index is not None or self.entries == 0) else "walk"
+        if mode == "walk":
+            if (isinstance(self.filter, UnpackedVector)
+                    and (self.storage is None
+                         or isinstance(self.storage, UnpackedVector))):
+                from . import ckernel
+
+                clib = ckernel.get_kernel()
+                if clib is not None:
+                    return ckernel.probe_batch(
+                        clib, self.filter.words,
+                        self.storage.words
+                        if self.storage is not None else None,
+                        self.size, self.r_bits, int(self.r_mask), hashes)
+            return self._probe_walk(hashes)
         if mode == "index":
             if self._index is None:
-                self.build_index()
+                raise ValueError("mode='index' needs the decoded index "
+                                 "built first")
             hv, counts, offsets = self._index
             n = len(hashes)
             out_counts = np.zeros(n, dtype=U64)
@@ -421,8 +443,6 @@ class QF:
                 pos[rest] += 1
                 active = rest[pos[rest] < end[rest]]
             return found, out_counts
-        if mode == "walk":
-            return self._probe_walk(hashes)
         raise ValueError(f"unknown probe mode {mode!r}")
 
     def _probe_walk(self, hashes: np.ndarray):

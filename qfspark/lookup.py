@@ -6,10 +6,13 @@ set; here it is a broadcast of the serialized filter plus a vectorized
 Arrow pandas UDF probe — constant memory per executor, no shuffle of the
 probed table, no join.
 
-The deserialized filter (with its probe index) is cached per executor
-process keyed by a content digest (LRU-bounded), so repeated lookups
-against the same filter pay the deserialize + index cost once and the
-Arrow batches pay only the numpy probe cost.
+The deserialized filter is cached per executor process keyed by a
+content digest (LRU-bounded), so repeated lookups against the same
+filter pay the deserialize cost once. Each Arrow batch then walks the
+filter in place (``QF.lookup_hashes``: the compiled walk, tens of ns
+per key; the numpy walk, ~0.3-2 us per key, without a C compiler or
+for bit-packed filters), so an executor holds only the filter, with no
+decoded index beside it.
 """
 
 from __future__ import annotations
@@ -94,16 +97,10 @@ def _serialize_filter(qf) -> tuple:
 
 def _deserialize_filter(payload: tuple):
     if payload[0] == "qf":
-        qf = qf_from_bytes(payload[1])
-        qf.build_index()
-        return qf
+        return qf_from_bytes(payload[1])
     _, shard_bits, blobs = payload
-    shards = {}
-    for s, b in blobs.items():
-        f = qf_from_bytes(b)
-        f.build_index()
-        shards[s] = f
-    return ShardedQF(shard_bits, shards)
+    return ShardedQF(shard_bits,
+                     {s: qf_from_bytes(b) for s, b in blobs.items()})
 
 
 def annotate(

@@ -26,9 +26,10 @@ SF_DIR_001 = "/root/testdata/sf0.01"
 
 @contextlib.contextmanager
 def no_ckernel():
-    """Run the body with the compiled insert kernel disabled, so
-    ``QF.insert_hashes`` takes the scalar insert and the bulk fill its
-    numpy twin; the previous kernel state is restored after."""
+    """Run the body with the compiled kernel disabled, so
+    ``QF.insert_hashes`` takes the scalar insert, the bulk fill its
+    numpy twin and ``QF.lookup_hashes`` the numpy walk; the previous
+    kernel state is restored after."""
     import qfspark.ckernel as ck
 
     prev_tried, prev_lib = ck._tried, ck._lib

@@ -14,11 +14,16 @@ from qfspark.disk import open_readonly, read_header_from_path, save
 from qfspark.hashing import murmur64a
 
 from .corpus import TEST_STRINGS
+from .test_kernel import _assert_paths_agree
 
 
 @pytest.mark.parametrize("bit_packed", [False, True])
-@pytest.mark.parametrize("counter_bits", [0, 15])
-def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits):
+@pytest.mark.parametrize("counter_bits", [0, 8, 15, 32])
+def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits,
+                                    monkeypatch):
+    """A read-only memmap answers like the in-memory filter on every
+    probe path: the compiled walk (unpacked only), the numpy walk and
+    the decoded index."""
     cfg = QFConfig(counter_bits=counter_bits, bit_packed=bit_packed,
                    expected_entries=300)
     qf = QF.from_keys(TEST_STRINGS, config=cfg)
@@ -26,17 +31,65 @@ def test_open_readonly_same_lookups(tmp_path, bit_packed, counter_bits):
     save(qf, path)
 
     ro = open_readonly(path)
+    assert isinstance(ro.filter.words, np.memmap)
+    assert not ro.filter.words.flags.writeable
     assert ro.entries == qf.entries
     assert ro.config.hash_name == qf.config.hash_name
-    hashes = murmur64a(TEST_STRINGS)
-    f_mem, c_mem = qf.lookup_hashes(hashes, mode="walk")
-    f_ro, c_ro = ro.lookup_hashes(hashes, mode="walk")
+    hashes = np.concatenate([
+        murmur64a(TEST_STRINGS),
+        murmur64a([f"zzz-{i}" for i in range(100)])])
+    f_mem, c_mem = qf.lookup_hashes(hashes)
+    f_ro, c_ro = _assert_paths_agree(ro, hashes, monkeypatch)
     assert np.array_equal(f_mem, f_ro)
     assert np.array_equal(c_mem, c_ro)
-    assert bool(f_ro.all())
+    assert bool(f_ro[:len(TEST_STRINGS)].all())
     # absent keys miss through the memmap too
-    fa, _ = ro.lookup_hashes(murmur64a([f"zzz-{i}" for i in range(100)]), mode="walk")
-    assert int(fa.sum()) == 0
+    assert int(f_ro[len(TEST_STRINGS):].sum()) == 0
+
+
+@pytest.mark.parametrize("counter_bits,bit_packed",
+                         [(0, False), (8, False), (0, True), (8, True)],
+                         ids=["0", "8", "0-packed", "8-packed"])
+def test_probe_closed_filter_raises_not_crashes(tmp_path, counter_bits,
+                                                bit_packed):
+    """Probing a read-only memmap works on the compiled walk; probing it
+    after ``close()`` (its word arrays are gone) must raise ValueError
+    and never hand the kernel a dangling pointer. Run in a subprocess so
+    a crash fails the test instead of the test session."""
+    path = str(tmp_path / "f.qf")
+    save(QF.from_keys([f"k{i}" for i in range(500)],
+                      config=QFConfig(counter_bits=counter_bits,
+                                      bit_packed=bit_packed)), path)
+    # nor is the kernel handed a word array shorter than the table
+    short_words = "" if bit_packed else (
+        "from qfspark import ckernel\n"
+        "try:\n"
+        "    ckernel.probe_batch(ckernel.get_kernel(), ro.filter.words[:-1],\n"
+        "                        None, ro.size, ro.r_bits, int(ro.r_mask), hv)\n"
+        "    raise SystemExit('short word array accepted')\n"
+        "except ValueError:\n"
+        "    pass\n"
+    )
+    code = (
+        "from qfspark.disk import open_readonly\n"
+        "from qfspark.hashing import murmur64a\n"
+        f"ro = open_readonly({path!r})\n"
+        "hv = murmur64a([f'k{i}' for i in range(500)])\n"
+        "f, _ = ro.lookup_hashes(hv)\n"
+        "assert f.all()\n"
+        + short_words +
+        "ro.close()\n"
+        "try:\n"
+        "    ro.lookup_hashes(hv)\n"
+        "except ValueError as e:\n"
+        "    print('raised', e)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    proc = subprocess.run([sys.executable, "-c", code], env=env,
+                          capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.startswith("raised"), proc.stdout
 
 
 @pytest.mark.parametrize("counter_bits,bit_packed",

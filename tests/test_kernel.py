@@ -17,6 +17,7 @@ import pytest
 from qfspark import QF, QFConfig
 from qfspark.hashing import murmur64a
 
+from .conftest import no_ckernel
 from .corpus import TEST_STRINGS
 from .reference_impls import murmur64a_scalar
 
@@ -135,33 +136,97 @@ def test_decode_differential_vs_independent_hashes():
     assert got == want
 
 
-@pytest.mark.parametrize("mode", ["index", "walk"])
-def test_probe_modes_agree_and_no_false_negatives(mode):
-    rng = random.Random(99)
-    keys = [f"key-{i}" for i in range(5000)]
-    qf = QF.from_keys(keys, config=QFConfig(expected_entries=5000))
-    f, _ = qf.lookup_hashes(murmur64a(keys), mode=mode)
-    assert bool(f.all()), "false negative!"
-    absent = [f"absent-{i}" for i in range(5000)]
-    fa, _ = qf.lookup_hashes(murmur64a(absent), mode=mode)
+def _assert_paths_agree(qf: QF, probes: np.ndarray, monkeypatch) -> tuple:
+    """The default walk (compiled where it applies), the numpy walk with
+    the kernel disabled and the decoded index give identical answers,
+    and the compiled walk runs exactly when the vectors are unpacked and
+    the kernel is loaded. Returns the agreed ``(found, counts)``."""
+    import qfspark.ckernel as ck
+
+    calls = []
+    real = ck.probe_batch
+    monkeypatch.setattr(ck, "probe_batch",
+                        lambda *a: calls.append(1) or real(*a))
+    walk = qf.lookup_hashes(probes)
+    assert bool(calls) == (not qf.config.bit_packed
+                           and ck.get_kernel() is not None)
+    with no_ckernel():
+        f, c = qf.lookup_hashes(probes)
+    qf.build_index()
+    for name, (fx, cx) in (("walk", walk),
+                           ("index", qf.lookup_hashes(probes, mode="index"))):
+        assert np.array_equal(fx, f), name
+        assert np.array_equal(cx, c), name
+    return f, c
+
+
+@pytest.mark.parametrize("mode,counter_bits,bit_packed,n_keys", [
+    pytest.param("index", 0, False, 5000, id="index"),
+    pytest.param("walk", 0, False, 5000, id="walk"),
+    pytest.param("walk", 8, False, 5000, id="walk-cb8"),
+    pytest.param("walk", 32, False, 5000, id="walk-cb32"),
+    pytest.param("walk", 8, True, 5000, id="walk-cb8-packed"),
+    pytest.param("walk", 32, True, 5000, id="walk-cb32-packed"),
+    pytest.param("walk", 8, False, 0, id="walk-empty"),
+    pytest.param("walk", 8, True, 0, id="walk-empty-packed"),
+])
+def test_probe_modes_agree_and_no_false_negatives(mode, counter_bits,
+                                                  bit_packed, n_keys,
+                                                  monkeypatch):
+    keys = ([f"key-{i}" for i in range(n_keys)] + ["key-0"] * 3
+            if n_keys else [])
+    cfg = QFConfig(counter_bits=counter_bits, bit_packed=bit_packed,
+                   expected_entries=5000)
+    qf = QF.from_keys(keys, config=cfg)
+    hv = murmur64a([f"key-{i}" for i in range(5000)])
+    absent = murmur64a([f"absent-{i}" for i in range(5000)])
+    probes = np.concatenate([hv, absent])
+    f, c = _assert_paths_agree(qf, probes, monkeypatch)
+    fm, cm = qf.lookup_hashes(probes, mode=mode)
+    assert np.array_equal(fm, f) and np.array_equal(cm, c)
+    assert bool(f[:n_keys].all()), "false negative!"
     # with q=13, r=51: expected FP ~ 5000 * 2^-51 ~ 0
-    assert int(fa.sum()) == 0
+    assert int(f[n_keys:].sum()) == 0
+    if counter_bits and n_keys:
+        assert int(c[0]) == 4 and bool((c[1:n_keys] == 1).all())
 
 
-def test_probe_walk_equals_index_on_adversarial_layout():
+def test_probe_walk_equals_index_on_adversarial_layout(monkeypatch):
+    """Huge clusters (a tiny quotient space), one of which wraps past
+    the table end, at counter widths 0, 8, 12 and 32; and adjacent runs
+    holding equal remainders, so a walk that leaves its own run answers
+    wrongly. Every probe path answers alike, and exactly (the filter
+    keeps the full 64-bit hash)."""
     rng = random.Random(5)
     hashes = []
     for _ in range(2500):
         q = rng.randrange(0, 64)  # tiny quotient space -> huge clusters
         hashes.append((q << 58) | rng.getrandbits(58))
+    # a hot bucket at the last quotient: its run wraps to slot 0 on
+    for _ in range(40):
+        hashes.append((4095 << 52) | rng.getrandbits(52))
     hashes = np.array(hashes, dtype=U64)
-    qf = QF.from_hashes(hashes, None, QFConfig(counter_bits=12, q_bits=12))
-    probes = np.concatenate([hashes, np.array([rng.getrandbits(64) for _ in range(2000)], dtype=U64)])
-    f1, c1 = qf.lookup_hashes(probes, mode="walk")
-    f2, c2 = qf.lookup_hashes(probes, mode="index")
-    assert np.array_equal(f1, f2)
-    assert np.array_equal(c1, c2)
-    assert bool(f1[: len(hashes)].all())
+    probes = np.concatenate([hashes, np.array(
+        [rng.getrandbits(64) for _ in range(2000)], dtype=U64)])
+    for counter_bits in (0, 8, 12, 32):
+        qf = QF.from_hashes(hashes, None,
+                            QFConfig(counter_bits=counter_bits, q_bits=12))
+        assert qf.q_bits == 12
+        assert int(qf.filter.words[0]) & _SHIFT, "no wraparound cluster"
+        f, _ = _assert_paths_agree(qf, probes, monkeypatch)
+        assert np.array_equal(f, np.isin(probes, hashes))
+
+    # runs 200..259 alternate remainders {2, 4} and {6, 8}: probing
+    # remainder 6 in a {2, 4} run must stop at the run's end, not find
+    # the 6 of the next run
+    runs = {q: (2, 4) if q % 2 == 0 else (6, 8) for q in range(200, 260)}
+    hashes = np.array([(q << 52) | r for q, rs in runs.items() for r in rs],
+                      dtype=U64)
+    probes = np.array([(q << 52) | r for q in runs for r in range(10)],
+                      dtype=U64)
+    qf = QF.from_hashes(hashes, None, QFConfig(counter_bits=8, q_bits=12))
+    f, _ = _assert_paths_agree(qf, probes, monkeypatch)
+    assert np.array_equal(f, np.isin(probes, hashes))
 
 
 def test_external_storage_exact_values():

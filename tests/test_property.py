@@ -71,6 +71,7 @@ def test_decode_lossless_and_probes_complete(hashes, q_bits):
     dh, dc = qf.decode(sort=True)
     assert np.array_equal(dh, uniq)
     assert np.array_equal(dc, np.minimum(counts, 255).astype(U64))
+    qf.build_index()
     for mode in ("index", "walk"):
         f, c = qf.lookup_hashes(uniq, mode=mode)
         assert bool(f.all()) if len(uniq) else True

@@ -90,6 +90,38 @@ def test_build_from_counts_partial_path_matches_collect(spark, monkeypatch,
     assert fb == sb
 
 
+@pytest.mark.parametrize("counter_bits", [0, 16])
+def test_build_from_counts_unknown_estimate_bounded_collect(spark,
+                                                            monkeypatch,
+                                                            counter_bits):
+    """With no row estimate (as for a persisted groupBy),
+    build_qf_from_counts collects at most SMALL_BUILD_COLLECT_ROWS + 1
+    rows: it builds from them when they fit and takes the partial path
+    when they do not. Both sides of the threshold are byte-identical to
+    build_qf over the raw multiset."""
+    import qfspark.build as B
+    import qfspark.sources as S
+
+    crawl = synthesize_crawl(spark, SF_DIR)
+    cfg = QFConfig(counter_bits=counter_bits, hash_name="xxhash64")
+    direct = build_qf(crawl, "url", config=cfg)
+    agg = crawl.groupBy("url").agg(F.count(F.lit(1)).alias("n"))
+    n_rows = agg.count()
+
+    calls = []
+    partial = B._partial_hashes
+    monkeypatch.setattr(B, "_partial_hashes",
+                        lambda *a, **k: calls.append(1) or partial(*a, **k))
+    monkeypatch.setattr(S, "approx_row_count", lambda *a, **k: None)
+    for threshold, via_partials in ((n_rows, False), (n_rows - 1, True)):
+        calls.clear()
+        monkeypatch.setattr(B, "SMALL_BUILD_COLLECT_ROWS", threshold)
+        got = build_qf_from_counts(agg, "url", "n", config=cfg)
+        assert bool(calls) == via_partials, threshold
+        db, gb = _aligned_bytes(direct, got)
+        assert db == gb, threshold
+
+
 def test_build_from_counts_drops_null_keys(spark):
     df = spark.createDataFrame(
         [("a", 2), (None, 5), ("b", 1)], "k string, n long")
