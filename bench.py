@@ -42,7 +42,7 @@ sort-heavy workers — see BENCH/BASELINE.md):
  - Python workers warmed with a noop mapInPandas before the timed build
 
 The scaling job is the 'arrow'-exchange sharded build (the fastest and
-best-scaling of the four exchange strategies measured head-to-head; see
+best-scaling of the exchange strategies measured head-to-head; see
 BENCH/BASELINE.md): JVM-side hash + route + collect_list fat rows, ONE
 zero-copy Arrow crossing per shard, numpy unique + canonical bulk build +
 payload sidecar write. Per-row data never streams through the

@@ -22,7 +22,7 @@ Two build strategies, both shaped for the 10^12-row design point:
     table with lineage metadata, committed from the driver in one atomic
     file rename, and builds resume by skipping shards already present.
 
-    Three exchange strategies (``exchange=``), because the expensive step
+    Two exchange strategies (``exchange=``), because the expensive step
     at scale is *moving the hashes to their shard builder*:
 
     ``'arrow'`` (default) — hashes stay JVM-side through routing AND
@@ -30,13 +30,12 @@ Two build strategies, both shaped for the 10^12-row design point:
         codegen partial aggregation, so the shuffle moves a few fat
         array rows per (task, shard) instead of per-key rows, and the
         JVM->Python Arrow channel is crossed exactly once, as one fat
-        zero-copy list column per shard. Profiling on this class of
-        hardware shows the per-row Arrow channel is the #1 scaling
-        bottleneck of any mapInPandas combiner — this path removes it.
-        Scale bound: one shard's pre-unique rows form ONE JVM array row
-        (~8 B x raw occurrences), so size ``shard_bits`` to keep raw
-        rows per shard under ~10^8 (or use 'storage', which has no
-        single-row bound, for very large or duplicate-heavy shards).
+        zero-copy list column per shard. The per-row Arrow channel is
+        what bounds any design that feeds raw rows to a Python stage;
+        this path never does. Scale bound: one shard's pre-unique rows
+        form ONE JVM array row (~8 B x raw occurrences), so size
+        ``shard_bits`` to keep raw rows per shard under ~10^8 (or use
+        'storage', which has no single-row bound).
 
     ``'storage'`` — the exchange happens through the filesystem instead
         of the Python channel: a pure-JVM stage writes the routed hash
@@ -45,23 +44,21 @@ Two build strategies, both shaped for the 10^12-row design point:
         partition DIRECTLY with pyarrow (multi-threaded columnar read,
         never touching the JVM<->Python socket), builds, and writes the
         payload sidecar. On a real cluster the spill dir is the same
-        distributed storage the checkpoint uses; the intermediate is
-        itself checkpointable lineage (stage-level resume). This is the
-        best-scaling path measured, and the default for the scaling
-        benchmark.
+        distributed storage the checkpoint uses. It is the path with no
+        per-row or per-shard size bound, and it is slower than 'arrow'
+        (2.3x at 6M rows on a 4-core box), so use it only past the arrow
+        bound. A ``spill_dir`` passed in stays the caller's to delete;
+        without one the spill goes next to the checkpoint (deleted after
+        the commit) or, uncheckpointed, to a temp dir deleted at
+        interpreter exit (the returned DataFrame reads it lazily).
 
-    ``'combine'`` — the classic mapInPandas partition-local combiner:
-        per input partition, numpy sort-unique collapses duplicates
-        BEFORE any exchange and ships compact (hashes, counts) blobs.
-        Maximum map-side combining: the right choice when the duplicate
-        ratio is high (the blob exchange shrinks by the dup factor,
-        which 'arrow'/'storage' do not).
-
-    ``'auto'`` — measures the input instead of guessing: a high duplicate
-        ratio (probed on a bounded prefix) selects 'combine'; otherwise
-        the expected raw rows per shard (exact input count / 2^shard_bits)
-        selects 'storage' above ``ARROW_MAX_ROWS_PER_SHARD`` — the arrow
-        path's single-fat-row bound — and 'arrow' below it.
+    ``'auto'`` — 'storage' when the expected raw rows per shard
+        (``approx_row_count`` / 2^shard_bits) exceed
+        ``ARROW_MAX_ROWS_PER_SHARD``, the arrow path's single-fat-row
+        bound, else 'arrow'. It runs no Spark job when the plan has a
+        row estimate (plan statistics, parquet footers); a plan without
+        one (in-memory rows, row-expanding joins/explodes) is counted
+        once.
 
     Payloads can be written as *sidecar files* (``payload_dir``; for a
     checkpointed build the default is ``<checkpoint_path>/_payloads/``):
@@ -82,8 +79,11 @@ disagree with every other engine's byte-hash of an absent value).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
+import tempfile
 import time
 from typing import Iterator
 
@@ -593,6 +593,20 @@ def _finish_shard(qf: QF, shard: int, n_rows: int, cfg: QFConfig,
     }
 
 
+def _build_shard(hv: np.ndarray, shard: int, cfg: QFConfig, shard_bits: int,
+                 payload_dir: str | None, t0: float) -> dict:
+    """Per-shard tail of both exchanges: build from a shard's raw local
+    hashes and finish the lineage row. The in-place sort feeds
+    from_hashes' diff-based dedup — no index arrays, no np.unique
+    inverse/bincount — so less memory traffic, which is what bounds
+    2^sb concurrent shard builders (this stage is bandwidth-saturated)."""
+    if not hv.flags.writeable:
+        hv = hv.copy()
+    hv.sort()
+    return _finish_shard(QF.from_hashes(hv, None, cfg), shard, len(hv), cfg,
+                         shard_bits, payload_dir, t0=t0)
+
+
 def _routed(hashed: DataFrame, shard_bits: int) -> DataFrame:
     """(shard, local_hash) routing columns: shard = top bits, local =
     hash << shard_bits (lossless; quotients stay uniform per shard)."""
@@ -617,8 +631,9 @@ def build_sharded_qf(
 ) -> DataFrame:
     """Build (or resume building) a sharded CQF; returns the shard-table
     DataFrame ``(shard, entries, q_bits, payload, payload_path,
-    lineage...)``. See the module docstring for the three ``exchange``
-    strategies and the sidecar-payload contract.
+    lineage...)``. See the module docstring for the two ``exchange``
+    strategies, ``'auto'``, and the sidecar-payload and ``spill_dir``
+    contracts.
 
     With ``checkpoint_path`` set, the build runs as ONE Spark query that
     returns the shard lineage rows to the driver (filter bytes never
@@ -663,39 +678,12 @@ def build_sharded_qf(
             existing = None
 
     if exchange == "auto":
-        # pick the physical exchange from the data: heavy key duplication
-        # means the partition-local combiner ('combine') shrinks the
-        # exchange by the dup factor BEFORE any data moves (and keeps the
-        # JVM-side fat-row aggregation buffers small); near-unique keys
-        # mean 'arrow' wins (one zero-copy channel crossing per shard) —
-        # UNLESS the expected raw rows per shard exceed the arrow path's
-        # single-fat-row bound (each shard's pre-unique hashes form ONE
-        # collect_list row; see the module docstring), in which case
-        # 'storage' takes over: its spill-through-parquet exchange has no
-        # per-row or per-shard size bound at all.
-        # Dup ratio probed on a bounded prefix — a heuristic, not an
-        # exact census; rows/shard uses a scan-free estimate
-        # (approx_row_count), which falls back to an exact count when
-        # the plan contains row-expanding nodes (Generate/Join) that
-        # would make parquet-footer counts an underestimate — the
-        # direction that could flip this guard to 'arrow' on an input
-        # whose true rows/shard exceed the arrow path's fat-row bound.
-        probe = hashed.limit(200_000)
-        n_probe = probe.count()
-        n_distinct = probe.distinct().count()
-        dup_ratio = n_probe / max(n_distinct, 1)
-        if dup_ratio >= 4:
-            exchange = "combine"
-        else:
-            # scan-free estimate (plan stats / parquet footers): the
-            # guard only needs order-of-magnitude rows/shard, and the
-            # exact count would cost one extra full pass per build
-            from .sources import approx_row_count
+        # action-free when the plan has an estimate; see module docstring
+        from .sources import approx_row_count
 
-            rows_per_shard = approx_row_count(hashed) / (1 << sb)
-            exchange = ("storage"
-                        if rows_per_shard > ARROW_MAX_ROWS_PER_SHARD
-                        else "arrow")
+        rows_per_shard = approx_row_count(hashed) / (1 << sb)
+        exchange = ("storage" if rows_per_shard > ARROW_MAX_ROWS_PER_SHARD
+                    else "arrow")
 
     spill_cleanup = None
     if exchange == "arrow":
@@ -704,8 +692,6 @@ def build_sharded_qf(
         shards_df, spill_cleanup = _exchange_storage(
             spark, hashed, sb, config, done, payload_dir,
             spill_dir, checkpoint_path)
-    elif exchange == "combine":
-        shards_df = _exchange_combine(hashed, sb, config, done, payload_dir)
     else:
         raise ValueError(f"unknown exchange mode {exchange!r}")
 
@@ -716,8 +702,6 @@ def build_sharded_qf(
         "append" if resume else "overwrite", existing,
         gc_dir=payload_dir if default_payloads and not resume else None)
     if spill_cleanup:
-        import shutil
-
         shutil.rmtree(spill_cleanup, ignore_errors=True)
     return out
 
@@ -896,14 +880,7 @@ def _exchange_arrow(hashed: DataFrame, sb: int, config: QFConfig,
                 for c in tbl.column("hv").chunks]
         hv = (np.concatenate(arrs) if len(arrs) > 1 else arrs[0]).astype(
             np.int64, copy=False).view(np.uint64)
-        # in-place sort + from_hashes' diff-based dedup (see the storage
-        # exchange): cheaper than np.unique under 2^sb-way concurrency
-        if not hv.flags.writeable:
-            hv = hv.copy()
-        hv.sort()
-        qf = QF.from_hashes(hv, None, cfg)
-        row = _finish_shard(qf, int(shard), len(hv), cfg, sb, payload_dir,
-                            t0=t0)
+        row = _build_shard(hv, int(shard), cfg, sb, payload_dir, t0)
         return pa.Table.from_pylist([row], schema=pa_schema)
 
     return fat.groupBy("shard").applyInArrow(_build_fat, _SHARD_SCHEMA)
@@ -929,9 +906,9 @@ def _exchange_storage(spark: SparkSession, hashed: DataFrame, sb: int,
                       spill_dir: str | None, checkpoint_path: str | None):
     """Stage 1 (pure JVM): write routed hashes as parquet partitioned by
     shard. Stage 2: one task per shard reads its partition directly with
-    pyarrow and builds. Returns (shards_df, spill_path_to_cleanup)."""
-    import tempfile
-
+    pyarrow and builds. Returns (shards_df, spill_path_to_cleanup): the
+    path is set only for the checkpoint-side spill, which the caller
+    deletes after the commit."""
     cleanup = None
     if spill_dir is None:
         if checkpoint_path:
@@ -941,7 +918,9 @@ def _exchange_storage(spark: SparkSession, hashed: DataFrame, sb: int,
             base = "/dev/shm" if os.path.isdir("/dev/shm") else None
             spill_dir = tempfile.mkdtemp(prefix="qf_spill_", dir=base)
             # no checkpoint => the returned DataFrame is lazy over the
-            # spill; the caller owns cleanup (or passes spill_dir)
+            # spill, so it can only go when the interpreter does; a
+            # caller-supplied spill_dir stays the caller's to delete
+            atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
     spill = os.path.join(spill_dir, "hashes")
 
     routed = _routed(hashed, sb)
@@ -982,97 +961,11 @@ def _exchange_storage(spark: SparkSession, hashed: DataFrame, sb: int,
                 tbl = pq.read_table(d, columns=["lh"], use_threads=False)
                 hv = tbl.column("lh").to_numpy(zero_copy_only=False).astype(
                     np.int64, copy=False).view(np.uint64)
-                if len(hv) == 0:
-                    continue
-                # in-place sort + from_hashes' diff-based dedup: no
-                # index arrays, no np.unique inverse/bincount — less
-                # memory traffic, which is what bounds 2^sb concurrent
-                # shard builders (this stage is bandwidth-saturated)
-                if not hv.flags.writeable:
-                    hv = hv.copy()
-                hv.sort()
-                qf = QF.from_hashes(hv, None, cfg)
-                yield pd.DataFrame(
-                    [_finish_shard(qf, int(s), len(hv), cfg, sb,
-                                   payload_dir, t0=t0)])
+                if len(hv):
+                    yield pd.DataFrame([_build_shard(
+                        hv, int(s), cfg, sb, payload_dir, t0)])
 
     return ids_df.mapInPandas(_build_from_spill, _SHARD_SCHEMA), cleanup
-
-
-# -- exchange: 'combine' (partition-local numpy combiner blobs) -------------
-
-def _exchange_combine(hashed: DataFrame, sb: int, config: QFConfig,
-                      done: set, payload_dir: str | None) -> DataFrame:
-    partials = hashed.mapInPandas(
-        _local_shard_blobs(sb, config.counter_bits > 0),
-        schema="shard long, hashes binary, counts binary",
-    )
-    if done:
-        partials = partials.filter(~F.col("shard").isin(list(done)))
-    return partials.groupBy("shard").applyInPandas(
-        _merge_and_build(config, sb, payload_dir), schema=_SHARD_SCHEMA
-    )
-
-
-def _merge_and_build(config: QFConfig, shard_bits: int,
-                     payload_dir: str | None):
-    """applyInPandas reducer of the 'combine' exchange: merge a
-    shard's sorted blobs and bulk-build its filter."""
-    cfg = config
-
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        hv, counts = _merge_hash_blobs(
-            list(zip(pdf["hashes"], pdf["counts"])), cfg.counter_bits
-        )
-        qf = QF.from_hashes(hv, counts, cfg, assume_unique=True)
-        n_rows = (
-            int(counts.astype(np.int64).sum()) if counts is not None else len(hv)
-        )
-        return pd.DataFrame(
-            [_finish_shard(qf, int(pdf["shard"].iloc[0]), n_rows, cfg,
-                           shard_bits, payload_dir, t0=t0)]
-        )
-
-    return _fn
-
-
-def _local_shard_blobs(shard_bits: int, with_counts: bool):
-    """mapInPandas combiner: per input partition, sort+unique all hashes
-    (sorting the full hash sorts by (shard, local) at once) and emit one
-    (shard, hashes, counts) blob per shard present in the partition.
-    Blob hashes are the shard-local form ``hash << shard_bits``, sorted."""
-
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = [_u64(b[HASH_COL]) for b in batches if len(b)]
-        if not chunks:
-            return
-        hv = np.concatenate(chunks)
-        if with_counts:
-            uniq, counts = np.unique(hv, return_counts=True)
-        else:
-            uniq, counts = np.unique(hv), None
-        sb = np.uint64(shard_bits)
-        if shard_bits:
-            shards = (uniq >> (np.uint64(64) - sb)).astype(np.int64)
-            local = uniq << sb
-            # uniq is sorted, so shards are sorted: slice at boundaries
-            shard_ids, starts = np.unique(shards, return_index=True)
-            ends = np.append(starts[1:], len(uniq))
-        else:
-            local = uniq
-            shard_ids = np.array([0])
-            starts, ends = np.array([0]), np.array([len(uniq)])
-        out_shard, out_h, out_c = [], [], []
-        for s, lo, hi in zip(shard_ids.tolist(), starts.tolist(), ends.tolist()):
-            out_shard.append(s)
-            out_h.append(local[lo:hi].astype("<u8").tobytes())
-            out_c.append(
-                counts[lo:hi].astype("<u8").tobytes() if with_counts else b""
-            )
-        yield pd.DataFrame({"shard": out_shard, "hashes": out_h, "counts": out_c})
-
-    return _fn
 
 
 def load_sharded_qf(shards_df_or_rows) -> ShardedQF:

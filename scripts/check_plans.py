@@ -87,9 +87,18 @@ def main():
     check("partial collect_list map-side", p5, r"partial_collect_list")
     check("no row-python in fat-row stage", p5, r"EvalPython", must_exist=False)
 
+    # 5b. exchange='auto' under the arrow bound plans exactly the arrow
+    # shape: one per-shard Arrow group node, no pandas combiner stage
+    from qfspark.build import build_sharded_qf
+
+    p5b = plan_of(build_sharded_qf(wp, "url", exchange="auto"))
+    check("auto sharded build is the arrow shape", p5b,
+          r"FlatMapGroupsInArrow")
+    check("auto sharded build has no MapInPandas", p5b, r"MapInPandas",
+          must_exist=False)
+
     # 6. shard-table probe: cogroup node present, probe stream salted
     # (parallelism decoupled from shard count), no broadcast of payloads
-    from qfspark.build import build_sharded_qf
     from qfspark.lookup import annotate_via_shard_table
 
     shards_df = build_sharded_qf(wp, "url", shard_bits=2,

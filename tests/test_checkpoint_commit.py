@@ -74,7 +74,7 @@ def test_checkpointed_build_is_one_query(spark, keys_df, tmp_path):
     assert out.count() == 1 << SB
 
 
-@pytest.mark.parametrize("exchange", ["arrow", "storage", "combine"])
+@pytest.mark.parametrize("exchange", ["arrow", "storage"])
 def test_checkpointed_payloads_match_inline_build(spark, keys_df, tmp_path,
                                                   exchange):
     ckpt = str(tmp_path / "ckpt")

@@ -1,11 +1,15 @@
-"""The three sharded-build exchange strategies are interchangeable:
+"""The two sharded-build exchange strategies (and ``'auto'``) are
+interchangeable:
 identical canonical shard payloads, identical lookups — because the
 canonical layout is a pure function of the (hash, count) multiset, the
 data-movement strategy cannot affect the artifact. Plus the sidecar
 payload, checkpoint-overwrite, duplicate-row-resolution, and NULL-key
 contracts added in round 2."""
 
+import json
 import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
@@ -21,7 +25,7 @@ from qfspark.build import (
 from qfspark.lookup import annotate, annotate_via_shard_table
 from qfspark.sizing import QFConfig
 
-EXCHANGES = ["arrow", "storage", "combine"]
+EXCHANGES = ["arrow", "storage"]
 
 
 @pytest.fixture(scope="module")
@@ -35,9 +39,10 @@ def _payloads(df):
     return {int(r.shard): shard_payload_bytes(r) for r in df.collect()}
 
 
-def test_only_the_three_exchanges_and_auto_are_accepted(keys_df):
-    with pytest.raises(ValueError, match="unknown exchange mode"):
-        build_sharded_qf(keys_df, "key", exchange="salted")
+def test_only_the_two_exchanges_and_auto_are_accepted(keys_df):
+    for mode in ("salted", "combine"):
+        with pytest.raises(ValueError, match="unknown exchange mode"):
+            build_sharded_qf(keys_df, "key", exchange=mode)
     with pytest.raises(TypeError):
         build_sharded_qf(keys_df, "key", pre_agg="local")
 
@@ -87,6 +92,38 @@ def test_sidecar_payloads(spark, keys_df, tmp_path):
     # loader follows the sidecar
     sharded = load_sharded_qf(df)
     assert sharded.contains("key-1")
+
+
+def test_uncheckpointed_storage_spill_removed_at_exit():
+    """An uncheckpointed 'storage' build spills to a temp dir the caller
+    never learns; it must be gone once the interpreter exits. Run in a
+    child process so the exit can be observed."""
+    code = (
+        "import glob, json, os, tempfile\n"
+        "from pyspark.sql import SparkSession\n"
+        "from qfspark.build import build_sharded_qf\n"
+        "base = '/dev/shm' if os.path.isdir('/dev/shm') "
+        "else tempfile.gettempdir()\n"
+        "spills = lambda: set(glob.glob(os.path.join(base, 'qf_spill_*')))\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false')\n"
+        "         .config('spark.sql.shuffle.partitions', '2')\n"
+        "         .getOrCreate())\n"
+        "before = spills()\n"
+        "df = spark.range(500).selectExpr(\"concat('k', id) AS key\")\n"
+        "rows = build_sharded_qf(df, 'key', shard_bits=1,\n"
+        "                        exchange='storage').collect()\n"
+        "assert sum(r.entries for r in rows) == 500\n"
+        "print(json.dumps(sorted(spills() - before)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    proc = subprocess.run([sys.executable, "-c", code], env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr
+    made = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert made, "the build made no spill dir"
+    assert [d for d in made if os.path.exists(d)] == []
 
 
 def test_checkpoint_overwrite_no_duplicates(spark, keys_df, tmp_path):
@@ -174,20 +211,29 @@ def test_null_keys_dropped_and_never_members(spark):
     assert sum(r.entries for r in sharded_rows) == 2
 
 
-def test_exchange_auto_picks_by_dup_ratio(spark):
+def test_exchange_auto_runs_no_job_and_equals_arrow(spark, tmp_path):
+    """On a parquet input (footer row estimate) 'auto' decides without a
+    Spark job — the returned build is still lazy — and, far under the
+    arrow bound, builds arrow's bytes whatever the duplication."""
     cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
-    uniq = spark.createDataFrame([(f"u{i}",) for i in range(3000)],
-                                 "key string")
-    heavy = spark.createDataFrame([(f"d{i % 50}",) for i in range(3000)],
-                                  "key string")
-    # both must build correctly whatever strategy auto picks, and the
-    # artifacts must equal the explicit-strategy ones byte-for-byte
-    for df in (uniq, heavy):
-        auto = _payloads(build_sharded_qf(df, "key", shard_bits=2,
-                                          config=cfg, exchange="auto"))
+    sc = spark.sparkContext
+    inputs = {"unique": "concat('u', id)", "heavy": "concat('d', id % 50)"}
+    for name, key in inputs.items():
+        path = str(tmp_path / name)
+        spark.range(3000).selectExpr(f"{key} AS key").write.parquet(path)
+        df = spark.read.parquet(path)
+        group = f"qf-auto-{name}"
+        sc.setJobGroup(group, "exchange='auto' decision")
+        try:
+            shards = build_sharded_qf(df, "key", shard_bits=2, config=cfg,
+                                      exchange="auto")
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == [], f"{name}: 'auto' started jobs {jobs}"
         arrow = _payloads(build_sharded_qf(df, "key", shard_bits=2,
                                            config=cfg, exchange="arrow"))
-        assert auto == arrow  # canonical bytes are strategy-independent
+        assert _payloads(shards) == arrow  # strategy-independent bytes
 
 
 def test_filter_unseen_via_shard_table(spark, keys_df):

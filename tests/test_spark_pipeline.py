@@ -110,10 +110,9 @@ def test_sharded_build_and_lookup(spark, web_pages):
     assert all(r.qf_seen and r.qf_count == 1 for r in got)
 
 
-def test_hot_key_combine_equals_arrow(spark):
-    """The partition-local combiner exchange must produce byte-identical
-    shards to the default arrow exchange, including under heavy
-    single-key skew."""
+def test_hot_key_storage_equals_arrow(spark, tmp_path):
+    """The filesystem exchange must produce byte-identical shards to the
+    default arrow exchange, including under heavy single-key skew."""
     hot = spark.range(0, 5000).select(
         F.when(F.col("id") % 3 == 0, F.lit("HOT-KEY"))
         .otherwise(F.concat(F.lit("k"), F.col("id"))).alias("key")
@@ -122,11 +121,12 @@ def test_hot_key_combine_equals_arrow(spark):
     a = {r.shard: bytes(r.payload) for r in
          build_sharded_qf(hot, "key", shard_bits=2, config=cfg,
                           exchange="arrow").collect()}
-    combined = build_sharded_qf(hot, "key", shard_bits=2, config=cfg,
-                                exchange="combine").collect()
-    b = {r.shard: bytes(r.payload) for r in combined}
+    stored = build_sharded_qf(hot, "key", shard_bits=2, config=cfg,
+                              exchange="storage",
+                              spill_dir=str(tmp_path / "spill")).collect()
+    b = {r.shard: bytes(r.payload) for r in stored}
     assert a == b
-    sharded = load_sharded_qf(combined)
+    sharded = load_sharded_qf(stored)
     assert sharded.lookup("HOT-KEY")[1] == 5000 // 3 + (1 if 5000 % 3 else 0)
 
 
