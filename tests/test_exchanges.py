@@ -227,6 +227,7 @@ def test_exchange_auto_runs_no_job_and_equals_arrow(spark, tmp_path):
         try:
             shards = build_sharded_qf(df, "key", shard_bits=2, config=cfg,
                                       exchange="auto")
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # jobs registered
             jobs = list(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
