@@ -66,10 +66,10 @@ def _q_url_count_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl synthesis ran once under the build and again for the
     probe-side ``.distinct()``."""
     from qfspark.build import build_qf_from_counts
-    from qfspark.dedup import _track_cache
+    from qfspark.dedup import track_cache
 
     crawl = synthesize_crawl(spark, sf_dir)
-    agg = _track_cache(
+    agg = track_cache(
         crawl.groupBy("url").agg(F.count(F.lit(1)).alias("n")).persist())
     qf = build_qf_from_counts(agg, "url", "n", config=QFConfig(**_CFG))
     return annotate(agg.select("url"), "url", qf,
@@ -98,13 +98,13 @@ def _q_shingle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical in the (hash -> count) map); previously the explode ran
     once for the build and again for the probe-side distinct."""
     from qfspark.build import build_qf_from_counts
-    from qfspark.dedup import _track_cache
+    from qfspark.dedup import track_cache
 
     doc = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sh = doc.select(
         F.explode(F.expr(shingle_expr("text", 3))).alias("shingle")
     )
-    agg = _track_cache(
+    agg = track_cache(
         sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("n")).persist())
     qf = build_qf_from_counts(agg, "shingle", "n", config=QFConfig(**_CFG))
     return annotate(agg.select("shingle"), "shingle", qf,

@@ -226,14 +226,12 @@ def set_pair_cache_cap(cap: int) -> int:
     return prev
 
 
-def _track_cache(df: DataFrame) -> DataFrame:
+def track_cache(df: DataFrame) -> DataFrame:
+    """Register a persisted DataFrame in the pair-cache registry and
+    return it. Past the cap the oldest registered cache is unpersisted
+    (FIFO); ``release_pair_caches`` unpersists them all."""
     _PAIR_CACHES.append(df)
-    while len(_PAIR_CACHES) > _PAIR_CACHE_CAP:
-        old = _PAIR_CACHES.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
+    set_pair_cache_cap(_PAIR_CACHE_CAP)  # evicts past the cap
     return df
 
 
@@ -321,7 +319,7 @@ def ngram_jaccard(
         # loops) can call ``release_pair_caches()`` between calls for
         # deterministic release (safe at any point — a cache is a
         # hint, unpersist never invalidates the plan).
-        pairs = _track_cache(
+        pairs = track_cache(
             pairs.select("doc_a", "doc_b").distinct()
             .persist(StorageLevel.MEMORY_AND_DISK))
         members = (
@@ -678,7 +676,7 @@ def simhash_pairs(df: DataFrame, col: str = "text",
     # (release_pair_caches).
     from pyspark import StorageLevel
 
-    sh = _track_cache(
+    sh = track_cache(
         simhash(df, col).persist(StorageLevel.MEMORY_AND_DISK))
     banded = simhash_banded_fingerprints(sh, max_hamming)
     cand_fp = (

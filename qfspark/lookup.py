@@ -210,8 +210,7 @@ def annotate_via_shard_table(
     # k stale rows per shard would otherwise shuffle k x probe_splits
     # copies of every payload blob
     shard_cols = latest_shards(shards_df).select(
-        F.col("shard").alias("_qf_shard"), "payload", "payload_path",
-        "build_ts")
+        F.col("shard").alias("_qf_shard"), "payload", "payload_path")
     replicated = shard_cols.withColumn(
         "_qf_salt",
         F.explode(F.sequence(F.lit(0).cast("long"),
@@ -229,8 +228,7 @@ def annotate_via_shard_table(
             found = np.zeros(len(probes), dtype=bool)
             counts = np.zeros(len(probes), dtype=np.int64)
         else:
-            newest = shard_rows.loc[shard_rows["build_ts"].idxmax()]
-            qf = qf_from_bytes(shard_payload_bytes(newest))
+            qf = qf_from_bytes(shard_payload_bytes(shard_rows.iloc[0]))
             f, c = qf.lookup_hashes(local)
             found, counts = f, c.astype(np.int64)
         # NULL policy: a NULL key is never a member (builds drop NULLs)

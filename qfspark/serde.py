@@ -38,11 +38,6 @@ _GQF_VERSION = 0x0004
 _GQF_PACKED_VECTOR_VERSION = 8
 
 
-def _vector_to_bytes(vec) -> bytes:
-    words = np.ascontiguousarray(vec.words, dtype="<u8")
-    return struct.pack("<Q", len(words)) + words.tobytes()
-
-
 def expected_words(cls, bits: int, size: int) -> int:
     """Word count a (bits, size) vector must serialize to — validated on
     load so truncated/corrupt payloads fail at parse time with a clear

@@ -2069,9 +2069,6 @@ def duckdb_mg_heavy_by_sql(col: str, by, k: int, source: str) -> str:
 # checkpointing (lineage-carrying sketch tables)
 # ===========================================================================
 
-_MANIFEST = "_versions.json"
-
-
 def checkpoint_sketch(df: DataFrame, path: str, kind: str,
                       snapshot: bool = False) -> int:
     """Write a sketch table (registers/counters/bits/sample) as parquet
@@ -2081,50 +2078,46 @@ def checkpoint_sketch(df: DataFrame, path: str, kind: str,
     detectable by build_ts.
 
     ``snapshot=True`` versions the checkpoint instead of overwriting:
-    each call writes ``path/v=<n>`` and appends to an atomically-swapped
-    manifest, giving parquet checkpoints the time-travel-over-build-
-    lineage property an Iceberg deployment gets natively (sources.py) —
-    ``read_sketch(..., version=...)`` reads any retained snapshot.
-    Returns the version written (0 for a plain overwrite)."""
-    import os
+    each call commits the next version of the ``path`` log
+    (``sources.commit_version``), giving parquet checkpoints the
+    time-travel-over-build-lineage property an Iceberg deployment gets
+    natively — ``read_sketch(..., version=...)`` reads any snapshot. Of
+    two concurrent snapshots of one version, the later raises
+    FileExistsError. Returns the version written (0 for a plain
+    overwrite)."""
     import time as _time
 
     from . import __version__
-    from .sources import write_checkpoint
+    from .sources import commit_version, write_checkpoint
 
+    ts = _time.time()
     stamped = (
         df.withColumn("sketch_kind", F.lit(kind))
-        .withColumn("build_ts", F.lit(_time.time()))
+        .withColumn("build_ts", F.lit(ts))
         .withColumn("code_version", F.lit(__version__))
     )
     if not snapshot:
         write_checkpoint(stamped, path)
         return 0
-    import json as _json
-
-    versions = sketch_versions(path)
-    v = (max(e["version"] for e in versions) + 1) if versions else 1
-    stamped.write.mode("overwrite").parquet(os.path.join(path, f"v={v}"))
-    versions.append({"version": v, "kind": kind,
-                     "build_ts": _time.time(),
-                     "code_version": __version__})
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump(versions, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    v = max((e["version"] for e in sketch_versions(path)), default=0) + 1
+    commit_version(stamped, path, v, kind=kind, build_ts=ts,
+                   code_version=__version__)
     return v
 
 
 def sketch_versions(path: str) -> list[dict]:
-    """The snapshot manifest (empty for unversioned checkpoints)."""
+    """The snapshots of a checkpoint, oldest first (empty for
+    unversioned checkpoints): those of a ``_versions.json`` manifest
+    written before the commit log, then the log's entries."""
     import json as _json
     import os
 
-    p = os.path.join(path, _MANIFEST)
-    if not os.path.exists(p):
-        return []
+    from .sources import log_versions
+
+    if not os.path.exists(p := os.path.join(path, "_versions.json")):
+        return log_versions(path)
     with open(p) as f:
-        return _json.load(f)
+        return _json.load(f) + log_versions(path)
 
 
 def read_sketch(spark, path: str, version: int | None = None) -> DataFrame:
@@ -2134,17 +2127,13 @@ def read_sketch(spark, path: str, version: int | None = None) -> DataFrame:
 
     from .sources import read_table
 
-    versions = sketch_versions(path)
-    if versions:
-        v = version if version is not None else \
-            max(e["version"] for e in versions)
-        if v not in {e["version"] for e in versions}:
+    by_v = {e["version"]: e for e in sketch_versions(path)}
+    if by_v or version is not None:
+        v = max(by_v) if version is None else version
+        if v not in by_v:
             raise ValueError(
-                f"no snapshot v={v} at {path}; have "
-                f"{sorted(e['version'] for e in versions)}")
-        path = os.path.join(path, f"v={v}")
-    elif version is not None:
-        raise ValueError(f"{path} is not a snapshot checkpoint")
+                f"no snapshot v={v} at {path}; have {sorted(by_v)}")
+        path = os.path.join(path, by_v[v].get("dir", f"v={v}"))
     return read_table(spark, path).drop(
         "sketch_kind", "build_ts", "code_version")
 

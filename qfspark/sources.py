@@ -5,12 +5,19 @@ Common-Crawl-style web pages; this sandbox has no Iceberg runtime jars,
 so the same code paths run against parquet (identical columnar layout,
 pushdown, and partition-pruning semantics — the plan-audit script
 verifies pruned ReadSchema/PushedFilters either way). All qfspark readers
-and the shard-checkpoint sink go through here, so pointing at a real
-lakehouse is a config change, not a code change.
+and sinks go through here, so pointing at a real lakehouse is a config
+change, not a code change.
+
+Two commit paths, both after Delta Lake (VLDB 2020): ``commit_rows``
+renames one parquet file of lineage rows into a shard checkpoint, which
+stays plain parquet; ``commit_version`` commits versioned state (stream
+state, sketch snapshots) as a data directory plus an exclusively created
+log entry ``_qf_log/<version>.json``, whose readers only read.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -144,6 +151,77 @@ def _remove_entries(path: str, entries) -> None:
             shutil.rmtree(p)
         else:
             os.remove(p)
+
+
+# -- versioned commits: one log entry per version --------------------------
+
+LOG_DIR = "_qf_log"
+_ENTRY = re.compile(r"(\d{20})\.json")
+
+
+def commit_version(df: DataFrame, path: str, version: int, **meta) -> None:
+    """Commit ``df`` as ``version`` of the table at ``path``: Spark
+    writes a fresh directory ``v<version>-<uuid>``, then the entry
+    ``_qf_log/<version>.json`` naming it and carrying ``meta`` is
+    fsynced in a temp file (O_CREAT|O_EXCL) and published by
+    ``os.link``, which fails if the entry exists. The loser of two
+    writers of one version removes its directory and raises
+    FileExistsError; so pick ``version`` before computing ``df``."""
+    data = f"v{version}-{uuid.uuid4().hex}"
+    df.write.parquet(os.path.join(path, data))
+    os.makedirs(os.path.join(path, LOG_DIR), exist_ok=True)
+    tmp = os.path.join(path, LOG_DIR, f".{data}.tmp")
+    with open(tmp, "x") as f:
+        json.dump({"dir": data, **meta}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, os.path.join(path, LOG_DIR, f"{version:020d}.json"))
+    except FileExistsError:
+        shutil.rmtree(os.path.join(path, data), ignore_errors=True)
+        raise FileExistsError(f"{path} version {version} exists") from None
+    finally:
+        os.remove(tmp)
+
+
+def log_versions(path: str) -> list[dict]:
+    """The log entries of the table at ``path``, oldest first, each with
+    its ``version`` and data ``dir``; empty without a log. Reads only."""
+    log = os.path.join(path, LOG_DIR)
+    names = sorted(os.listdir(log)) if os.path.isdir(log) else []
+    out = []
+    for m in filter(None, map(_ENTRY.fullmatch, names)):
+        try:
+            with open(os.path.join(log, m[0])) as f:
+                out.append({"version": int(m[1]), **json.load(f)})
+        except FileNotFoundError:
+            pass  # pruned since the listing
+    return out
+
+
+def read_version(spark: SparkSession, path: str,
+                 version: int | None = None) -> DataFrame:
+    """The rows of the newest (or the given) version at ``path``."""
+    by_v = {e["version"]: e for e in log_versions(path)}
+    v = max(by_v, default=None) if version is None else version
+    if v not in by_v:
+        raise ValueError(f"no version {v} at {path}; have {sorted(by_v)}")
+    return spark.read.parquet(os.path.join(path, by_v[v]["dir"]))
+
+
+def prune_log(path: str) -> None:
+    """Keep the newest two versions at ``path`` (a reader that resolved
+    the log just before the last commit still finds its files): delete
+    older entries, then each data directory no kept entry names. Only a
+    table's single writer may prune; a directory another writer has not
+    logged yet would go too."""
+    entries = log_versions(path)
+    keep = {e["dir"] for e in entries[-2:]}
+    for e in entries[:-2]:
+        os.remove(os.path.join(path, LOG_DIR, f"{e['version']:020d}.json"))
+    for name in os.listdir(path):
+        if re.fullmatch(r"v\d+-[0-9a-f]{32}", name) and name not in keep:
+            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
 def approx_row_count(df: DataFrame, sample_files: int = 64,

@@ -7,14 +7,18 @@ aggregate, so an incremental build is "merge each micro-batch's partial
 into the running state".
 
 ``stream_build_sharded`` wires a streaming DataFrame into foreachBatch:
-every micro-batch runs the same sharded build as the batch path and the
-checkpointed shard table is *merged* shard-by-shard (QF.merge — lossless,
-associative), so the shard table after N micro-batches is byte-identical
-to a batch build over the union of the batches. Exactly-once batch-id
-tracking makes re-delivered micro-batches idempotent.
+every micro-batch runs the same sharded build as the batch path and is
+merged shard-by-shard into the state by ``build.merge_shard_tables``
+(QF.merge — lossless, associative), so the shard table after N
+micro-batches is byte-identical to a batch build over the union of the
+batches. ``stream_sketch`` does the same for the sketch family.
 
-State lives in the shard table, not in executor memory: the stream can
-stop and resume from the checkpoint like any other qfspark build.
+State lives in a versioned table at ``state_path``, not in executor
+memory: each micro-batch's merged table is committed as the next
+version (``sources.commit_version``; the log entry carries the batch
+id) and the writer prunes to the newest two versions. A batch whose id
+is <= the last committed one is a re-delivery and is skipped. Readers
+(``load_stream_state``, ``load_stream_sketch``) only read the log.
 """
 
 from __future__ import annotations
@@ -24,102 +28,53 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from .build import DEFAULT_HASH, build_sharded_qf, hash_column, load_sharded_qf
+from .build import (DEFAULT_HASH, build_sharded_qf, hash_column,
+                    load_sharded_qf, merge_shard_tables)
 from .kernel import QF
 from .serde import qf_from_bytes, qf_to_bytes
 from .sizing import QFConfig
+from .sources import commit_version, log_versions, prune_log
 
 
-def _merge_shard_tables(spark, existing_path: str, new_df: DataFrame,
-                        out_path: str) -> None:
-    """Merge a new shard table into an existing one shard-by-shard
-    (executor-side applyInPandas; both tables are tiny relative to the
-    corpus — one row per shard)."""
-    import pandas as pd
+def _read_state(spark, state_path: str, name: str):
+    """The newest state table (None before the first commit), its
+    version (0 if none) and last batch id (None if unknown). Reads only.
 
-    existing = spark.read.parquet(existing_path)
-    # allowMissingColumns: a state dir written by an older qfspark lacks
-    # later lineage columns (e.g. build_secs, added in 0.3.0) — nulls
-    # fill the gap and the merged row keeps the superset schema
-    both = existing.unionByName(new_df, allowMissingColumns=True)
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .build import shard_payload_bytes
-
-        filters = [qf_from_bytes(shard_payload_bytes(r))
-                   for _, r in pdf.iterrows()]
-        merged = QF.merge_many(filters) if len(filters) > 1 else filters[0]
-        row = pdf.iloc[0].copy()
-        row["payload"] = qf_to_bytes(merged)
-        if "payload_path" in row.index:
-            row["payload_path"] = ""  # merged state is stored inline
-        row["entries"] = len(merged)
-        row["q_bits"] = merged.q_bits
-        row["n_rows"] = int(pdf["n_rows"].sum())
-        if "build_secs" in row.index:
-            # old-state rows contribute null after the permissive union
-            row["build_secs"] = float(pdf["build_secs"].fillna(0.0).sum())
-        return pd.DataFrame([row])
-
-    # the permissive union's (superset) schema, not the old table's
-    merged_df = both.groupBy("shard").applyInPandas(_merge, schema=both.schema)
-    merged_df.write.mode("overwrite").parquet(out_path)
-
-
-# -- shared micro-batch commit protocol -------------------------------------
-#
-# Processed batch ids live INSIDE the committed directory (underscore
-# prefix: ignored by parquet readers, like _SUCCESS) and are written
-# LAST into <name>_next, so the ids file doubles as the completeness
-# marker. The swap is two renames (table -> <name>_old, next -> table);
-# a crash between them leaves no table directory, which `_recover_table`
-# repairs on the next call: a COMPLETE <name>_next (marker present) is
-# the newer state and finishes the swap forward; otherwise <name>_old
-# rolls back. Local-filesystem semantics; a lakehouse deployment gets
-# the same atomicity from Iceberg transactional commits (sources.py).
-
-_IDS = "_batch_ids.json"
-
-
-def _recover_table(state_path: str, name: str) -> None:
-    """Finish (or roll back) an interrupted two-rename swap of
-    ``<state_path>/<name>``; afterwards clean any leftovers."""
-    import shutil
-
+    A state written before the log is a plain table at
+    ``<state_path>/<name>`` whose ``_batch_ids.json`` lists the
+    processed batch ids; a ``<name>_next``/``<name>_old`` left beside it
+    by an interrupted commit raises instead of starting empty."""
+    entries = log_versions(state_path)
+    if entries:
+        e = entries[-1]
+        return (spark.read.parquet(os.path.join(state_path, e["dir"])),
+                e["version"], e["batch_id"])
+    for leftover in (f"{name}_next", f"{name}_old"):
+        if os.path.exists(os.path.join(state_path, leftover)):
+            raise ValueError(
+                f"{leftover} in {state_path} is left by an interrupted "
+                f"commit: rename the complete {name}_next (it has "
+                f"_batch_ids.json), else {name}_old, to {name}")
     table = os.path.join(state_path, name)
-    nxt = os.path.join(state_path, f"{name}_next")
-    old = os.path.join(state_path, f"{name}_old")
     if not os.path.exists(table):
-        if os.path.exists(os.path.join(nxt, _IDS)):
-            os.rename(nxt, table)   # complete newer state: roll forward
-        elif os.path.exists(old):
-            os.rename(old, table)   # incomplete next: roll back
-    shutil.rmtree(old, ignore_errors=True)
+        return None, 0, None
+    ids, last = os.path.join(table, "_batch_ids.json"), None
+    if os.path.exists(ids):
+        with open(ids) as f:
+            last = max(json.load(f), default=None)
+    return spark.read.parquet(table), 0, last
 
 
-def _seen_ids(state_path: str, name: str) -> set:
-    p = os.path.join(state_path, name, _IDS)
-    if os.path.exists(p):
-        with open(p) as f:
-            return set(json.load(f))
-    return set()
-
-
-def _commit_table(state_path: str, name: str, seen: set) -> None:
-    """Record ``seen`` into <name>_next (the completeness marker) and
-    swap it into place."""
-    import shutil
-
-    table = os.path.join(state_path, name)
-    nxt = os.path.join(state_path, f"{name}_next")
-    old = os.path.join(state_path, f"{name}_old")
-    with open(os.path.join(nxt, _IDS), "w") as f:
-        json.dump(sorted(seen), f)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(table):
-        os.rename(table, old)
-    os.rename(nxt, table)
-    shutil.rmtree(old, ignore_errors=True)
+def _commit_batch(spark, state_path: str, name: str, batch_id: int,
+                  merged_with) -> None:
+    """One micro-batch: skip a re-delivered batch, else commit
+    ``merged_with(state)`` as the next version and prune."""
+    state, version, last = _read_state(spark, state_path, name)
+    if last is not None and batch_id <= last:
+        return  # re-delivered micro-batch: already merged
+    commit_version(merged_with(state), state_path, version + 1,
+                   batch_id=batch_id)
+    prune_log(state_path)
 
 
 def stream_build_sharded(
@@ -130,34 +85,32 @@ def stream_build_sharded(
     config: QFConfig | None = None,
     trigger: dict | None = None,
 ):
-    """Start a streaming query that maintains a sharded CQF at
-    ``state_path/shards`` from a streaming source of keys.
+    """Start a streaming query that maintains a sharded CQF in the
+    versioned table at ``state_path`` from a streaming source of keys.
 
-    Returns the StreamingQuery. The shard table is replaced atomically
-    per micro-batch (the shared commit protocol above), and processed
-    batch ids are recorded for idempotent re-delivery."""
+    Returns the StreamingQuery. Each micro-batch's shard build is
+    materialized once, merged into the state by ``merge_shard_tables``
+    and committed as the next version of the ``state_path`` log with its
+    batch id; a re-delivered batch is skipped. Read the state with
+    ``load_stream_state`` (a ShardedQF) or
+    ``sources.read_version(spark, state_path)`` (the shard table)."""
     config = config or QFConfig(hash_name=DEFAULT_HASH, counter_bits=32)
     spark = stream_df.sparkSession
-    shards_path = os.path.join(state_path, "shards")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        _recover_table(state_path, "shards")
-        seen = _seen_ids(state_path, "shards")
-        if batch_id in seen:
-            return  # re-delivered micro-batch: already merged
-        new_shards = build_sharded_qf(
+        # persisted: merge_shard_tables' metadata check and the merge
+        # itself both read the batch's shards, which are built once
+        batch = build_sharded_qf(
             batch_df, col, shard_bits=shard_bits, config=config,
             checkpoint_path=None,
-        )
-        next_path = os.path.join(state_path, "shards_next")
-        shutil.rmtree(next_path, ignore_errors=True)
-        if os.path.exists(shards_path):
-            _merge_shard_tables(spark, shards_path, new_shards, next_path)
-        else:
-            new_shards.write.mode("overwrite").parquet(next_path)
-        _commit_table(state_path, "shards", seen | {batch_id})
+        ).persist()
+        try:
+            _commit_batch(
+                spark, state_path, "shards", batch_id,
+                lambda state: batch if state is None
+                else merge_shard_tables(spark, [state, batch]))
+        finally:
+            batch.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
     writer = writer.option(
@@ -168,11 +121,17 @@ def stream_build_sharded(
     return writer.start()
 
 
+def _committed(spark, state_path: str, name: str) -> DataFrame:
+    state = _read_state(spark, state_path, name)[0]
+    if state is None:
+        raise ValueError(f"no stream state committed at {state_path}")
+    return state
+
+
 def load_stream_state(spark, state_path: str):
-    """Load the current streaming filter state as a ShardedQF
-    (finishing any crash-interrupted commit first)."""
-    _recover_table(state_path, "shards")
-    return load_sharded_qf(spark.read.parquet(os.path.join(state_path, "shards")))
+    """Load the newest committed streaming filter state as a ShardedQF.
+    Reads only; ValueError when nothing is committed yet."""
+    return load_sharded_qf(_committed(spark, state_path, "shards"))
 
 
 def stream_sketch(
@@ -223,11 +182,12 @@ def stream_sketch(
       top-(k+1) of a union is the top-(k+1) of concatenated sketches)
 
     Per micro-batch: build the batch's partial sketch, merge it into the
-    checkpointed table (max/sum/union — each merge == rebuild exactly,
+    newest state version (max/sum/union — each merge == rebuild exactly,
     so after N batches the state is ROW-IDENTICAL to a batch build over
-    the union of the batches; tested), commit by atomic directory rename
-    with recorded batch ids for idempotent re-delivery. State lives in
-    the table, not executor memory; stop/resume is a re-read.
+    the union of the batches; tested) and commit the result as the next
+    version of the ``state_path`` log with its batch id; a re-delivered
+    batch is skipped. State lives in the table, not executor memory;
+    stop/resume is a re-read.
 
     Misra-Gries is the one member whose state is not a pure function of
     the input multiset (like any MG run, it depends on arrival order):
@@ -238,99 +198,48 @@ def stream_sketch(
     Returns the StreamingQuery; read the state with
     ``load_stream_sketch`` and feed it to ``sketches.hll_estimate`` /
     ``countmin_query`` / ``bloom_contains``."""
-    from . import sketches
+    from . import sketches as sk
 
-    scheme = params.get("hash_scheme", "hash60")
+    g = params.get
+    by, k, kb = g("by"), g("k", 256), g("k", 512)  # kb: bottom-k's default
+    vcol, wcol, cm = g("value_col", col), g("weight_col"), (
+        g("depth", 4), g("width", 1024))
+    h = {"hash_scheme": g("hash_scheme", "hash60")}
     builders = {
-        "hll": (
-            lambda df: sketches.hll_registers(
-                df, col, params.get("p", 12), hash_scheme=scheme),
-            sketches.hll_merge,
-        ),
-        "countmin": (
-            lambda df: sketches.countmin_table(
-                df, col, params.get("depth", 4), params.get("width", 1024),
-                hash_scheme=scheme),
-            sketches.countmin_merge,
-        ),
-        "bloom": (
-            lambda df: sketches.bloom_bits(
-                df, col, params.get("m_bits", 1 << 16), params.get("k", 4),
-                hash_scheme=scheme),
-            sketches.bloom_merge,
-        ),
-        "bottomk": (
-            lambda df: sketches.bottomk_sketch(
-                df, col, params.get("value_col", col),
-                params.get("k", 512), hash_scheme=scheme),
-            lambda a, b: sketches.bottomk_merge(
-                a, b, params.get("k", 512)),
-        ),
-        "kmv": (
-            lambda df: sketches.kmv_sketch(
-                df, col, params.get("k", 256), hash_scheme=scheme),
-            lambda a, b: sketches.kmv_merge(
-                a, b, params.get("k", 256)),
-        ),
+        "hll": (lambda df: sk.hll_registers(df, col, g("p", 12), **h),
+                sk.hll_merge),
+        "countmin": (lambda df: sk.countmin_table(df, col, *cm, **h),
+                     sk.countmin_merge),
+        "bloom": (lambda df: sk.bloom_bits(
+            df, col, g("m_bits", 1 << 16), g("k", 4), **h), sk.bloom_merge),
+        "bottomk": (lambda df: sk.bottomk_sketch(df, col, vcol, kb, **h),
+                    lambda a, b: sk.bottomk_merge(a, b, kb)),
+        "kmv": (lambda df: sk.kmv_sketch(df, col, k, **h),
+                lambda a, b: sk.kmv_merge(a, b, k)),
         "hll_by": (
-            lambda df: sketches.hll_registers_by(
-                df, col, params["by"], params.get("p", 12),
-                hash_scheme=scheme),
-            lambda a, b: sketches.hll_merge_by(params["by"], a, b),
-        ),
+            lambda df: sk.hll_registers_by(df, col, by, g("p", 12), **h),
+            lambda a, b: sk.hll_merge_by(by, a, b)),
         "bottomk_by": (
-            lambda df: sketches.bottomk_sketch_by(
-                df, col, params.get("value_col", col), params["by"],
-                params.get("k", 512), hash_scheme=scheme),
-            lambda a, b: sketches.bottomk_merge_by(
-                a, b, params["by"], params.get("k", 512)),
-        ),
-        "mg": (
-            lambda df: sketches.mg_summary(
-                df, col, params.get("k", 256),
-                weight_col=params.get("weight_col")),
-            lambda a, b: sketches.mg_merge(a, b, params.get("k", 256)),
-        ),
+            lambda df: sk.bottomk_sketch_by(df, col, vcol, by, kb, **h),
+            lambda a, b: sk.bottomk_merge_by(a, b, by, kb)),
+        "mg": (lambda df: sk.mg_summary(df, col, k, weight_col=wcol),
+               lambda a, b: sk.mg_merge(a, b, k)),
         "mg_by": (
-            lambda df: sketches.mg_summary_by(
-                df, col, params["by"], params.get("k", 256),
-                weight_col=params.get("weight_col")),
-            lambda a, b: sketches.mg_merge_by(
-                a, b, params["by"], params.get("k", 256)),
-        ),
-        "priority": (
-            lambda df: sketches.priority_sample(
-                df, col, params["weight_col"], params.get("k", 256),
-                hash_scheme=scheme),
-            lambda a, b: sketches.priority_sample_merge(
-                a, b, params.get("k", 256)),
-        ),
+            lambda df: sk.mg_summary_by(df, col, by, k, weight_col=wcol),
+            lambda a, b: sk.mg_merge_by(a, b, by, k)),
+        "priority": (lambda df: sk.priority_sample(df, col, wcol, k, **h),
+                     lambda a, b: sk.priority_sample_merge(a, b, k)),
         "countmin_by": (
-            lambda df: sketches.countmin_table_by(
-                df, col, params["by"], params.get("depth", 4),
-                params.get("width", 1024), hash_scheme=scheme),
-            lambda a, b: sketches.countmin_merge_by(params["by"], a, b),
-        ),
-        "kll": (
-            lambda df: sketches.kll_partials(
-                df, params.get("value_col", col), params.get("k", 256)),
-            lambda a, b: sketches.kll_compact_partials(
-                a.unionByName(b), params.get("k", 256)),
-        ),
-        "kll_by": (
-            lambda df: sketches.kll_partials_by(
-                df, params.get("value_col", col), params["by"],
-                params.get("k", 256)),
-            lambda a, b: sketches.kll_compact_partials_by(
-                a.unionByName(b), params["by"], params.get("k", 256)),
-        ),
+            lambda df: sk.countmin_table_by(df, col, by, *cm, **h),
+            lambda a, b: sk.countmin_merge_by(by, a, b)),
+        "kll": (lambda df: sk.kll_partials(df, vcol, k),
+                lambda a, b: sk.kll_compact_partials(a.unionByName(b), k)),
+        "kll_by": (lambda df: sk.kll_partials_by(df, vcol, by, k),
+                   lambda a, b: sk.kll_compact_partials_by(
+                       a.unionByName(b), by, k)),
         "priority_by": (
-            lambda df: sketches.priority_sample_by(
-                df, col, params["weight_col"], params["by"],
-                params.get("k", 256), hash_scheme=scheme),
-            lambda a, b: sketches.priority_sample_merge_by(
-                a, b, params["by"], params.get("k", 256)),
-        ),
+            lambda df: sk.priority_sample_by(df, col, wcol, by, k, **h),
+            lambda a, b: sk.priority_sample_merge_by(a, b, by, k)),
     }
     if kind not in builders:
         raise ValueError(f"unknown sketch kind {kind!r}; "
@@ -342,24 +251,12 @@ def stream_sketch(
         raise ValueError(f"kind={kind!r} requires params['weight_col']")
     build_fn, merge_fn = builders[kind]
     spark = stream_df.sparkSession
-    table_path = os.path.join(state_path, "sketch")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        _recover_table(state_path, "sketch")
-        seen = _seen_ids(state_path, "sketch")
-        if batch_id in seen:
-            return  # re-delivered micro-batch: already merged
-        partial = build_fn(batch_df)
-        next_path = os.path.join(state_path, "sketch_next")
-        shutil.rmtree(next_path, ignore_errors=True)
-        if os.path.exists(table_path):
-            merged = merge_fn(spark.read.parquet(table_path), partial)
-        else:
-            merged = partial
-        merged.write.mode("overwrite").parquet(next_path)
-        _commit_table(state_path, "sketch", seen | {batch_id})
+        _commit_batch(
+            spark, state_path, "sketch", batch_id,
+            lambda state: build_fn(batch_df) if state is None
+            else merge_fn(state, build_fn(batch_df)))
 
     writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
     writer = writer.option(
@@ -370,10 +267,9 @@ def stream_sketch(
 
 
 def load_stream_sketch(spark, state_path: str) -> DataFrame:
-    """Read the current streaming sketch table (finishing any
-    crash-interrupted commit first)."""
-    _recover_table(state_path, "sketch")
-    return spark.read.parquet(os.path.join(state_path, "sketch"))
+    """Read the newest committed streaming sketch table. Reads only;
+    ValueError when nothing is committed yet."""
+    return _committed(spark, state_path, "sketch")
 
 
 def stateful_streaming_dedup(
@@ -399,9 +295,6 @@ def stateful_streaming_dedup(
     import numpy as np
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from .kernel import QF
-    from .sizing import QFConfig
 
     key_dtype = stream_df.schema[key_col].dataType.simpleString()
     hashed = stream_df.select(
@@ -449,8 +342,6 @@ def stateful_streaming_dedup(
                     )
                 yield pd.DataFrame({"key": pdf["key"].iloc[fresh_rows]})
         state.update((qf_to_bytes(qf),))
-
-    from pyspark.sql.functions import pandas_udf  # noqa: F401  (import check)
 
     return hashed.groupBy("grp").applyInPandasWithState(
         _dedup,

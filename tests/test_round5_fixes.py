@@ -114,7 +114,7 @@ def test_pair_cache_registry_bounded(spark):
 
     cap = dedup._PAIR_CACHE_CAP
     for i in range(cap + 5):
-        dedup._track_cache(FakeDF(i))
+        dedup.track_cache(FakeDF(i))
     # oldest 5 evicted FIFO, registry holds exactly cap entries
     assert unpersisted == [0, 1, 2, 3, 4]
     assert len(dedup._PAIR_CACHES) == cap

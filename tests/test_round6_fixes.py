@@ -363,7 +363,7 @@ def test_set_pair_cache_cap(spark):
     try:
         dfs = [spark.range(10 + i).persist() for i in range(6)]
         for d in dfs:
-            dedup._track_cache(d)
+            dedup.track_cache(d)
         assert len(dedup._PAIR_CACHES) == 4
         # shrinking evicts oldest immediately
         dedup.set_pair_cache_cap(2)

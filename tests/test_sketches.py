@@ -968,6 +968,57 @@ def test_sketch_snapshot_time_travel(spark, tmp_path):
         sketches.read_sketch(spark, path, version=9)
 
 
+def test_sketch_snapshot_two_writers_one_version(spark, tmp_path,
+                                                 monkeypatch):
+    """Two snapshots that both picked version 1: exactly one commits, the
+    other raises and leaves no data behind, and version 1 reads back as
+    the winner's rows."""
+    import os
+    import threading
+
+    from pyspark.sql import DataFrameWriter
+
+    path = str(tmp_path / "snap")
+    regs = {"a": hll_registers(_keys(spark, 1000), "key", 10),
+            "b": hll_registers(_keys(spark, 3000), "key", 10)}
+    both_picked = threading.Barrier(2)
+    one_at_a_time = threading.Lock()
+    write = DataFrameWriter.parquet
+
+    def gated(self, *args, **kwargs):
+        both_picked.wait(timeout=120)  # each writer has chosen its version
+        with one_at_a_time:
+            return write(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", gated)
+    out = {}
+
+    def snapshot(name):
+        try:
+            out[name] = sketches.checkpoint_sketch(
+                regs[name], path, "hll", snapshot=True)
+        except Exception as e:
+            out[name] = e
+
+    threads = [threading.Thread(target=snapshot, args=(n,)) for n in regs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(240)
+        assert not t.is_alive()
+    monkeypatch.undo()
+
+    losers = [n for n, r in out.items() if isinstance(r, Exception)]
+    assert len(losers) == 1, out
+    assert isinstance(out[losers[0]], FileExistsError)
+    (winner,) = set(regs) - set(losers)
+    assert out[winner] == 1
+    assert [e["version"] for e in sketches.sketch_versions(path)] == [1]
+    assert sorted(map(tuple, sketches.read_sketch(spark, path).collect())) \
+        == sorted(map(tuple, regs[winner].collect()))
+    assert len([e for e in os.listdir(path) if not e.startswith("_")]) == 1
+
+
 # ---------------------------------------------------------------------------
 # priority sampling (Duffield-Lund-Thorup)
 # ---------------------------------------------------------------------------

@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 from qfspark.build import build_sharded_qf, load_sharded_qf
 from qfspark.sizing import QFConfig
-from qfspark.streaming import load_stream_state, stream_build_sharded
+from qfspark.streaming import (load_stream_sketch, load_stream_state,
+                               stream_build_sharded, stream_sketch)
 
 from .conftest import SF_DIR
 
@@ -735,44 +736,162 @@ def test_stream_sketch_mg_guarantee_over_union(spark, kind, params):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_recover_table_crash_windows(spark, tmp_path):
-    """Every interruption point of the two-rename commit must recover to
-    a consistent state: complete _next rolls forward, incomplete _next
-    rolls back to _old."""
+def _listing(path):
+    """Every path under ``path``, relative, sorted."""
+    import os
+
+    return sorted(os.path.relpath(os.path.join(d, n), path)
+                  for d, dirs, files in os.walk(path) for n in dirs + files)
+
+
+def _user_halves(spark):
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
+        F.col("user_id").cast("string").alias("user"))
+    return ev, [ev.where("CAST(user AS BIGINT) % 2 = 0"),
+                ev.where("CAST(user AS BIGINT) % 2 = 1")]
+
+
+def _run_stream(spark, start, src, state):
+    stream = (spark.readStream.schema("user string")
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    start(stream, state).awaitTermination(240)
+
+
+_CFG = QFConfig(counter_bits=32, hash_name="xxhash64")
+_STARTS = {
+    "shards": lambda stream, state: stream_build_sharded(
+        stream, "user", state, shard_bits=2, config=_CFG,
+        trigger={"availableNow": True}),
+    "sketch": lambda stream, state: stream_sketch(
+        stream, "user", state, kind="hll", p=10,
+        trigger={"availableNow": True}),
+}
+
+
+def _crash_before_log(spark, tmp_path, monkeypatch, name):
+    """Commit batch 0, then kill batch 1 after its data directory is
+    written and before its log entry is published."""
+    import os
+
+    _, halves = _user_halves(spark)
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    os.makedirs(src)
+    halves[0].toPandas().to_parquet(f"{src}/b0.parquet")
+    _run_stream(spark, _STARTS[name], src, state)
+    halves[1].toPandas().to_parquet(f"{src}/b1.parquet")
+
+    def crash(*args):
+        raise OSError("injected crash before the log entry")
+
+    monkeypatch.setattr(os, "link", crash)
+    with pytest.raises(Exception, match="injected crash"):
+        _run_stream(spark, _STARTS[name], src, state)
+    monkeypatch.undo()
+    return src, state
+
+
+@pytest.mark.parametrize("name", ["shards", "sketch"])
+def test_stream_loaders_only_read(spark, tmp_path, monkeypatch, name):
+    """Loading the state never renames or deletes: not on a state left
+    by an interrupted commit of the pre-log protocol (which now raises
+    naming the leftover), and not on a state whose newest version was
+    written but never logged."""
     import json
     import os
 
-    from qfspark import streaming as st
+    from qfspark.sketches import hll_registers
 
-    base = str(tmp_path / "state")
+    load = load_stream_state if name == "shards" else load_stream_sketch
+    _, halves = _user_halves(spark)
+    table = (build_sharded_qf(halves[0], "user", shard_bits=2, config=_CFG)
+             if name == "shards" else hll_registers(halves[0], "user", 10))
+    # the old two-rename swap, interrupted between its renames
+    legacy = str(tmp_path / "legacy")
+    for suffix, ids in (("_old", [0]), ("_next", [0, 1])):
+        table.write.parquet(f"{legacy}/{name}{suffix}")
+        with open(f"{legacy}/{name}{suffix}/_batch_ids.json", "w") as f:
+            json.dump(ids, f)
+    before = _listing(legacy)
+    try:
+        load(spark, legacy)
+        err = None
+    except ValueError as e:
+        err = e
+    assert _listing(legacy) == before
+    assert err is not None and f"{name}_next" in str(err)
 
-    def fresh(with_next_marker):
-        import shutil
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(f"{base}/sketch_old")
-        open(f"{base}/sketch_old/part-0.parquet", "w").write("old")
-        with open(f"{base}/sketch_old/{st._IDS}", "w") as f:
-            json.dump([0], f)
-        os.makedirs(f"{base}/sketch_next")
-        open(f"{base}/sketch_next/part-0.parquet", "w").write("new")
-        if with_next_marker:
-            with open(f"{base}/sketch_next/{st._IDS}", "w") as f:
-                json.dump([0, 1], f)
+    _, state = _crash_before_log(spark, tmp_path, monkeypatch, name)
+    before = _listing(state)
+    assert len([e for e in os.listdir(state) if e.startswith("v")]) == 2
+    load(spark, state)
+    assert _listing(state) == before
 
-    # crash AFTER table->old, next complete: roll forward to next
-    fresh(with_next_marker=True)
-    st._recover_table(base, "sketch")
-    assert st._seen_ids(base, "sketch") == {0, 1}
-    assert not os.path.exists(f"{base}/sketch_old")
 
-    # crash DURING the write of next (no marker): roll back to old
-    fresh(with_next_marker=False)
-    st._recover_table(base, "sketch")
-    assert st._seen_ids(base, "sketch") == {0}
+def test_stream_crash_before_log_redelivers_cleanly(spark, tmp_path,
+                                                   monkeypatch):
+    """A batch killed between its data write and its log entry is not
+    visible: readers get the previous version, and the re-delivered
+    batch yields the payloads of a clean run, byte for byte."""
+    import os
 
-    # healthy state: recovery is a no-op apart from clearing leftovers
-    st._recover_table(base, "sketch")
-    assert st._seen_ids(base, "sketch") == {0}
+    from qfspark.sources import LOG_DIR
+
+    ev, halves = _user_halves(spark)
+    src, state = _crash_before_log(spark, tmp_path, monkeypatch, "shards")
+    before = load_stream_state(spark, state)
+    first = load_sharded_qf(
+        build_sharded_qf(halves[0], "user", shard_bits=2, config=_CFG))
+    for s, qf in first.shards.items():
+        assert before.shards[s].to_bytes() == qf.to_bytes(), f"shard {s}"
+
+    _run_stream(spark, _STARTS["shards"], src, state)  # re-delivers batch 1
+    got = load_stream_state(spark, state)
+    want = load_sharded_qf(
+        build_sharded_qf(ev, "user", shard_bits=2, config=_CFG))
+    for s, qf in want.shards.items():
+        assert got.shards[s].to_bytes() == qf.to_bytes(), f"shard {s}"
+    # the crashed batch's unlogged directory is pruned with the rest
+    assert len(os.listdir(f"{state}/{LOG_DIR}")) == 2
+    assert len([e for e in os.listdir(state) if e.startswith("v")]) == 2
+
+
+def test_stream_state_stays_bounded(spark, tmp_path):
+    """After 6 micro-batches the state holds at most two log entries and
+    two data directories, the entries do not grow with the stream, and
+    each batch's shard build ran once (the source UDF counted every input
+    row exactly once) while the state matches a batch build."""
+    import os
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
+        F.col("user_id").cast("string").alias("user"))
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    os.makedirs(src)
+    for i in range(6):
+        ev.where(f"CAST(user AS BIGINT) % 6 = {i}").toPandas().to_parquet(
+            f"{src}/b{i}.parquet")
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(u):
+        seen.add(1)
+        return u
+
+    stream = (spark.readStream.schema("user string")
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    counted = stream.select(F.udf(count, "string")("user").alias("user"))
+    stream_build_sharded(counted, "user", state, shard_bits=2, config=_CFG,
+                         trigger={"availableNow": True}).awaitTermination(240)
+
+    assert seen.value == ev.count()
+    got = load_stream_state(spark, state)
+    want = load_sharded_qf(
+        build_sharded_qf(ev, "user", shard_bits=2, config=_CFG))
+    for s, qf in want.shards.items():
+        assert got.shards[s].to_bytes() == qf.to_bytes(), f"shard {s}"
+    log = os.path.join(state, "_qf_log")
+    entries = os.listdir(log) if os.path.isdir(log) else []
+    assert 1 <= len(entries) <= 2, entries
+    assert len({os.path.getsize(f"{log}/{e}") for e in entries}) == 1
+    assert len([e for e in os.listdir(state) if e.startswith("v")]) <= 2
 
 
 def test_stream_build_resumes_from_pre_build_secs_checkpoint(spark, tmp_path):
