@@ -458,6 +458,10 @@ class ShardedQF:
         self.counter_bits = cbits.pop() if cbits else 0
         self.bit_packed = packed.pop() if packed else False
 
+    def __reduce__(self):
+        # the shards carry everything; the config fields are derived
+        return ShardedQF, (self.shard_bits, self.shards)
+
     @property
     def entries(self) -> int:
         return sum(len(qf) for qf in self.shards.values())

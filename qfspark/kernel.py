@@ -45,7 +45,7 @@ import numpy as np
 
 from .hashing import hash_bytes
 from .sizing import MAX_LOADING_FACTOR, MIN_Q_BITS, QFConfig, q_bits_for
-from .vector import UnpackedVector, make_vector
+from .vector import PackedVector, UnpackedVector, make_vector
 
 U64 = np.uint64
 
@@ -138,6 +138,34 @@ class QF:
 
     def __exit__(self, exc_type, exc, tb) -> None:
         self.close()
+
+    # ------------------------------------------------------------------
+    # pickling (what annotate broadcasts)
+    # ------------------------------------------------------------------
+    def __getstate__(self):
+        """What ``qf_to_bytes`` writes: geometry, entries and the word
+        arrays, never derived state such as ``_index``. Under pickle
+        protocol 5 numpy hands the words over as buffers, so a pickled
+        filter loads as one aligned copy with no bytes payload beside
+        it (a memmap's words go out as a plain view, not a copy)."""
+        cfg = self.config
+        return (cfg.hash_name, cfg.counter_bits, cfg.bit_packed,
+                self.q_bits, self.entries, np.asarray(self.filter.words),
+                None if self.storage is None
+                else np.asarray(self.storage.words))
+
+    def __setstate__(self, state) -> None:
+        hash_name, counter_bits, bit_packed, q_bits, entries, fw, sw = state
+        self.config = QFConfig(counter_bits=counter_bits,
+                               bit_packed=bit_packed, hash_name=hash_name,
+                               q_bits=q_bits)
+        self._init_geometry(q_bits)
+        cls = PackedVector if bit_packed else UnpackedVector
+        self.filter = cls(3 + self.r_bits, self.size, fw)
+        self.storage = None if sw is None else cls(counter_bits, self.size,
+                                                   sw)
+        self.entries = entries
+        self._index = None
 
     # ------------------------------------------------------------------
     # bulk build (the primary, vectorized path)

@@ -2,17 +2,18 @@
 
 The relational role of ``Contains`` (reference qf.go:448-459) at DataFrame
 level is a broadcast existence join of the probe column against the key
-set; here it is a broadcast of the serialized filter plus a vectorized
+set; here it is a broadcast of the filter object itself plus a vectorized
 Arrow pandas UDF probe — constant memory per executor, no shuffle of the
 probed table, no join.
 
-The deserialized filter is cached per executor process keyed by a
-content digest (LRU-bounded), so repeated lookups against the same
-filter pay the deserialize cost once. Each Arrow batch then walks the
-filter in place (``QF.lookup_hashes``: the compiled walk, tens of ns
-per key; the numpy walk, ~0.3-2 us per key, without a C compiler or
-for bit-packed filters), so an executor holds only the filter, with no
-decoded index beside it.
+The broadcast pickles the ``QF``/``ShardedQF`` (geometry, entries, word
+arrays; pickle protocol 5), and the probe reads ``bc.value``. pyspark
+keeps one loaded value per broadcast in each Python worker and drops it
+when a task no longer uses the broadcast, so each worker loads a filter
+once per broadcast and holds one copy of it. Each Arrow batch then walks
+the filter in place (``QF.lookup_hashes``: the compiled walk, tens of ns
+per key; the numpy walk, ~0.3-2 us per key, without a C compiler or for
+bit-packed filters), with no decoded index beside it.
 """
 
 from __future__ import annotations
@@ -27,37 +28,29 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .build import (
-    DEFAULT_HASH,
     ShardedQF,
     _dtype_of,
     hash_column,
     shard_payload_bytes,
 )
 from .kernel import QF
-from .serde import qf_from_bytes, qf_to_bytes
+from .serde import qf_from_bytes
 
-# per-executor-process cache: payload digest -> deserialized filter.
-# Keyed by CONTENT (not per-call id) so repeated annotate() calls with the
-# same filter reuse one deserialized copy, and bounded so long-running
-# executors don't accumulate dead filters.
-_FILTER_CACHE: "OrderedDict[str, object]" = OrderedDict()
-_FILTER_CACHE_MAX = 4
-
-# driver-side cache: (applicationId, payload digest) -> Broadcast. Without
-# it every annotate() call re-broadcasts the serialized payload even when
-# the executor-side _FILTER_CACHE would hit — at a ~1 GB filter that is a
-# full re-distribution per query. applicationId in the key keeps entries
-# from a stopped SparkContext from being handed out to a new one.
+# driver-side cache: (applicationId, filter digest) -> Broadcast. Without
+# it every annotate() call re-broadcasts the filter, and every Python
+# worker loads it again — at a ~1 GB filter that is a full
+# re-distribution per query. applicationId in the key keeps entries from
+# a stopped SparkContext from being handed out to a new one.
 _BROADCAST_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _BROADCAST_CACHE_MAX = 4
 
 
-def _broadcast_payload(spark, payload: tuple, digest: str):
+def _broadcast_filter(spark, flt):
     sc = spark.sparkContext
-    key = (sc.applicationId, digest)
+    key = (sc.applicationId, _filter_digest(flt))
     bc = _BROADCAST_CACHE.get(key)
     if bc is None:
-        bc = sc.broadcast(payload)
+        bc = sc.broadcast(flt)
         _BROADCAST_CACHE[key] = bc
         while len(_BROADCAST_CACHE) > _BROADCAST_CACHE_MAX:
             _, old = _BROADCAST_CACHE.popitem(last=False)
@@ -70,37 +63,26 @@ def _broadcast_payload(spark, payload: tuple, digest: str):
     return bc
 
 
-def _payload_digest(payload: tuple) -> str:
-    h = hashlib.sha1()
-    h.update(payload[0].encode())
-    if payload[0] == "qf":
-        h.update(payload[1])
+def _filter_digest(flt) -> str:
+    """Content digest of a ``QF`` or ``ShardedQF``: its geometry and word
+    arrays, read in place (no serialized copy)."""
+    if isinstance(flt, QF):
+        shards = {0: flt}
+        h = hashlib.sha1(b"qf")
+    elif isinstance(flt, ShardedQF):
+        shards = flt.shards
+        h = hashlib.sha1(b"sharded %d" % flt.shard_bits)
     else:
-        h.update(str(payload[1]).encode())
-        for s in sorted(payload[2]):
-            h.update(str(s).encode())
-            h.update(payload[2][s])
+        raise TypeError(f"expected QF or ShardedQF, got {type(flt)!r}")
+    for s in sorted(shards):
+        qf = shards[s]
+        cfg = qf.config
+        h.update(repr((s, cfg.hash_name, cfg.counter_bits, cfg.bit_packed,
+                       qf.q_bits, qf.entries)).encode())
+        for vec in (qf.filter, qf.storage):
+            if vec is not None:
+                h.update(vec.words)
     return h.hexdigest()
-
-
-def _serialize_filter(qf) -> tuple:
-    if isinstance(qf, QF):
-        return ("qf", qf_to_bytes(qf))
-    if isinstance(qf, ShardedQF):
-        return (
-            "sharded",
-            qf.shard_bits,
-            {s: qf_to_bytes(f) for s, f in qf.shards.items()},
-        )
-    raise TypeError(f"expected QF or ShardedQF, got {type(qf)!r}")
-
-
-def _deserialize_filter(payload: tuple):
-    if payload[0] == "qf":
-        return qf_from_bytes(payload[1])
-    _, shard_bits, blobs = payload
-    return ShardedQF(shard_bits,
-                     {s: qf_from_bytes(b) for s, b in blobs.items()})
 
 
 def annotate(
@@ -118,22 +100,12 @@ def annotate(
     members."""
     spark = df.sparkSession
     hash_name = qf.config.hash_name if isinstance(qf, QF) else qf.hash_name
-    payload = _serialize_filter(qf)
-    digest = _payload_digest(payload)
-    bc = _broadcast_payload(spark, payload, digest)
+    bc = _broadcast_filter(spark, qf)
 
     @pandas_udf("struct<seen: boolean, cnt: long>")
     def _probe(h: pd.Series) -> pd.DataFrame:
-        flt = _FILTER_CACHE.get(digest)
-        if flt is None:
-            flt = _deserialize_filter(bc.value)
-            _FILTER_CACHE[digest] = flt
-            while len(_FILTER_CACHE) > _FILTER_CACHE_MAX:
-                _FILTER_CACHE.popitem(last=False)
-        else:
-            _FILTER_CACHE.move_to_end(digest)
         hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-        found, counts = flt.lookup_hashes(hv)
+        found, counts = bc.value.lookup_hashes(hv)
         return pd.DataFrame(
             {"seen": found, "cnt": counts.astype(np.int64)}
         )

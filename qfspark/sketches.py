@@ -2097,7 +2097,7 @@ def checkpoint_sketch(df: DataFrame, path: str, kind: str,
         .withColumn("code_version", F.lit(__version__))
     )
     if not snapshot:
-        write_checkpoint(stamped, path)
+        write_checkpoint(stamped, path, mode="overwrite")
         return 0
     v = max((e["version"] for e in sketch_versions(path)), default=0) + 1
     commit_version(stamped, path, v, kind=kind, build_ts=ts,

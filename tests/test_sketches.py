@@ -556,6 +556,17 @@ def test_sketch_checkpoint_roundtrip(spark, tmp_path):
     assert abs(est.estimate - 2000) / 2000 <= hll_error_bound(10, 4.0)
 
 
+def test_plain_sketch_checkpoint_overwrites(spark, tmp_path):
+    """A re-run plain checkpoint replaces the table: two checkpoints to
+    one path read back the rows once, not twice."""
+    regs = hll_registers(_keys(spark, 500), "key", 10)
+    path = str(tmp_path / "hll_twice")
+    assert sketches.checkpoint_sketch(regs, path, kind="hll") == 0
+    assert sketches.checkpoint_sketch(regs, path, kind="hll") == 0
+    back = sketches.read_sketch(spark, path)
+    assert sorted(back.collect()) == sorted(regs.collect())
+
+
 # ---------------------------------------------------------------------------
 # Misra-Gries frequent items
 # ---------------------------------------------------------------------------
