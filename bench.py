@@ -41,7 +41,7 @@ sort-heavy workers — see BENCH/BASELINE.md):
    post-heavy-JVM noise pass
  - Python workers warmed with a noop mapInPandas before the timed build
 
-The scaling job is the 'arrow'-exchange sharded build (the fastest and
+The scaling job is the sharded build (its one exchange was the fastest and
 best-scaling of the exchange strategies measured head-to-head; see
 BENCH/BASELINE.md): JVM-side hash + route + collect_list fat rows, ONE
 zero-copy Arrow crossing per shard, numpy unique + canonical bulk build +
@@ -155,14 +155,12 @@ def _scaling_keys(spark, sf_dir: str, mult: int, cores: int):
     ).select(F.concat("base", F.lit("#"), F.col("i").cast("string")).alias("key"))
 
 
-def _sharded_build_once(spark, keys, cores: int, exchange: str = "storage",
-                        shard_bits: int = 5) -> float:
+def _sharded_build_once(spark, keys, cores: int, shard_bits: int = 5) -> float:
     """One timed sharded build producing a durable artifact: payload
-    sidecars + (storage mode) the spill exchange, all on RAM-backed
-    storage — on a real cluster every executor writes to node-local or
-    distributed storage whose bandwidth scales with the cluster; a single
-    local disk here would serialize the write stage and understate
-    scaling."""
+    sidecars on RAM-backed storage — on a real cluster every executor
+    writes to node-local or distributed storage whose bandwidth scales
+    with the cluster; a single local disk here would serialize the write
+    stage and understate scaling."""
     import shutil
     import tempfile
 
@@ -180,8 +178,7 @@ def _sharded_build_once(spark, keys, cores: int, exchange: str = "storage",
         t0 = time.time()
         shards = build_sharded_qf(
             keys, "key", shard_bits=shard_bits, config=cfg,
-            exchange=exchange,
-            payload_dir=paydir, spill_dir=os.path.join(tmp, "spill"),
+            payload_dir=paydir,
         )
         shards.agg(F.sum("entries")).collect()
         return time.time() - t0
@@ -189,7 +186,7 @@ def _sharded_build_once(spark, keys, cores: int, exchange: str = "storage",
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def scale_run(cores: int, exchange: str = "storage") -> None:
+def scale_run(cores: int) -> None:
     """ONE trial of the scaling workload in this fresh JVM."""
     import pandas as pd
 
@@ -219,8 +216,7 @@ def scale_run(cores: int, exchange: str = "storage") -> None:
     # the kernel's table allocations (this box shows a ~2-3x cold-start
     # cliff; see BENCH/BASELINE.md) — steady-state throughput is what
     # the north rule's two-cluster-size comparison is about
-    _sharded_build_once(spark, keys, cores, exchange=exchange,
-                        shard_bits=sb)
+    _sharded_build_once(spark, keys, cores, shard_bits=sb)
 
     # MIN of 2 timed builds: external contention only ever ADDS time, so
     # the min over repeated identical builds in one warmed JVM is the
@@ -228,12 +224,11 @@ def scale_run(cores: int, exchange: str = "storage") -> None:
     # box can give (round-5 lesson: single timed builds let one load
     # burst poison a whole scaling window)
     secs = [
-        round(_sharded_build_once(spark, keys, cores, exchange=exchange,
-                                  shard_bits=sb), 3)
+        round(_sharded_build_once(spark, keys, cores, shard_bits=sb), 3)
         for _ in range(2)
     ]
     print(json.dumps({"cores": cores, "rows": n, "sec": min(secs),
-                      "secs": secs, "exchange": exchange}))
+                      "secs": secs}))
     spark.stop()
 
 
@@ -257,10 +252,9 @@ def _hw_control_once(n_procs: int) -> float:
     return n_procs / max(elapsed)
 
 
-def _run_scale_subprocess(cores: int, exchange: str = "storage") -> dict:
+def _run_scale_subprocess(cores: int) -> dict:
     out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--scale-run", str(cores),
-         exchange],
+        [sys.executable, os.path.abspath(__file__), "--scale-run", str(cores)],
         capture_output=True, text=True, timeout=1200,
         env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
     )
@@ -337,7 +331,7 @@ def _scaling_evidence() -> dict:
             w[f"hw_pre_{c}"] = round(_hw_control_once(c), 3)
         time.sleep(CONTROL_SETTLE_S)
         for c in SCALE_LEVELS:
-            r = _run_scale_subprocess(c, exchange="arrow")
+            r = _run_scale_subprocess(c)
             rows = r["rows"]
             w[f"sec_{c}"] = r["sec"]
         for c in SCALE_LEVELS:
@@ -409,7 +403,6 @@ def _scaling_evidence() -> dict:
             "degraded: every window pathological (box contended for "
             "the whole run; statistics below are over all windows — "
             "the normalized ratio is the meaningful one)"),
-        "exchange": "arrow",
         "protocol": "scaling runs FIRST, before the query phase heats "
                     "the box; fresh ActiveProcessorCount-bounded JVM "
                     "per trial, trial sec = min of 2 timed builds "
@@ -546,18 +539,14 @@ def main() -> None:
 
     # headline: sharded durable build at the round-1..3 workload (24M
     # at sf0.1 — QUERY_BUILD_MULT keeps these rows cross-round
-    # comparable), both exchange strategies (the first trial in this
-    # JVM pays JIT + first-touch costs; the median absorbs it)
+    # comparable; the leaf keeps the 'arrow' name of the exchange it
+    # times; the first trial in this JVM pays JIT + first-touch costs;
+    # the median absorbs it)
     keys = _scaling_keys(spark, SF_DIR, QUERY_BUILD_MULT, CPUS).cache()
     rows_built = keys.count()
-    timed(f"cqf_build_sharded_arrow_{rows_built // 1_000_000}m",
-          lambda: _sharded_build_once(spark, keys, CPUS, exchange="arrow"))
-    timed(f"cqf_build_sharded_storage_{rows_built // 1_000_000}m",
-          lambda: _sharded_build_once(spark, keys, CPUS,
-                                      exchange="storage"))
-    build_sec = min(
-        timings[f"cqf_build_sharded_arrow_{rows_built // 1_000_000}m"],
-        timings[f"cqf_build_sharded_storage_{rows_built // 1_000_000}m"])
+    leaf = f"cqf_build_sharded_arrow_{rows_built // 1_000_000}m"
+    timed(leaf, lambda: _sharded_build_once(spark, keys, CPUS))
+    build_sec = timings[leaf]
     spark.stop()
 
     # streaming-state incremental insert (pure kernel, no JVM): median
@@ -636,7 +625,6 @@ def main() -> None:
 
 if __name__ == "__main__":
     if len(sys.argv) >= 3 and sys.argv[1] == "--scale-run":
-        scale_run(int(sys.argv[2]),
-                  sys.argv[3] if len(sys.argv) > 3 else "storage")
+        scale_run(int(sys.argv[2]))
     else:
         main()

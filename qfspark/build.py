@@ -22,43 +22,25 @@ Two build strategies, both shaped for the 10^12-row design point:
     table with lineage metadata, committed from the driver in one atomic
     file rename, and builds resume by skipping shards already present.
 
-    Two exchange strategies (``exchange=``), because the expensive step
-    at scale is *moving the hashes to their shard builder*:
+    One exchange, because the expensive step at scale is *moving the
+    hashes to their shard builder*: hashes stay JVM-side through routing
+    AND grouping. ``groupBy(shard).agg(collect_list(...))`` runs as a
+    codegen partial aggregation, so the shuffle moves a few fat array
+    rows per (task, shard) instead of per-key rows, and the JVM->Python
+    Arrow channel is crossed once per shard, as zero-copy list columns
+    (``applyInArrow``). The per-row Arrow channel is what bounds any
+    design that feeds raw rows to a Python stage; this path never does.
 
-    ``'arrow'`` (default) — hashes stay JVM-side through routing AND
-        grouping: ``groupBy(shard).agg(collect_list(...))`` runs as a
-        codegen partial aggregation, so the shuffle moves a few fat
-        array rows per (task, shard) instead of per-key rows, and the
-        JVM->Python Arrow channel is crossed exactly once, as one fat
-        zero-copy list column per shard. The per-row Arrow channel is
-        what bounds any design that feeds raw rows to a Python stage;
-        this path never does. Scale bound: one shard's pre-unique rows
-        form ONE JVM array row (~8 B x raw occurrences), so size
-        ``shard_bits`` to keep raw rows per shard under ~10^8 (or use
-        'storage', which has no single-row bound).
-
-    ``'storage'`` — the exchange happens through the filesystem instead
-        of the Python channel: a pure-JVM stage writes the routed hash
-        table as parquet partitioned by shard (dictionary off — random
-        hashes never repeat), then one task per shard reads its
-        partition DIRECTLY with pyarrow (multi-threaded columnar read,
-        never touching the JVM<->Python socket), builds, and writes the
-        payload sidecar. On a real cluster the spill dir is the same
-        distributed storage the checkpoint uses. It is the path with no
-        per-row or per-shard size bound, and it is slower than 'arrow'
-        (2.3x at 6M rows on a 4-core box), so use it only past the arrow
-        bound. A ``spill_dir`` passed in stays the caller's to delete;
-        without one the spill goes next to the checkpoint (deleted after
-        the commit) or, uncheckpointed, to a temp dir deleted at
-        interpreter exit (the returned DataFrame reads it lazily).
-
-    ``'auto'`` — 'storage' when the expected raw rows per shard
-        (``approx_row_count`` / 2^shard_bits) exceed
-        ``ARROW_MAX_ROWS_PER_SHARD``, the arrow path's single-fat-row
-        bound, else 'arrow'. It runs no Spark job when the plan has a
-        row estimate (plan statistics, parquet footers); a plan without
-        one (in-memory rows, row-expanding joins/explodes) is counted
-        once.
+    Split rule: a list row is one JVM array (~8 B x raw occurrences),
+    and Spark bounds a row at 2 GB. When the action-free row estimate
+    (``approx_row_count``) puts more than ``ARROW_MAX_ROWS_PER_SHARD``
+    raw rows in a shard, each shard is split into
+    ``sub = ceil(rows per shard / ARROW_MAX_ROWS_PER_SHARD)`` list rows
+    by ``groupBy(shard, sub)`` (``sub`` from the hash's low bits, which
+    vary inside a shard), then regrouped by shard; the builder flattens
+    every list row of its group, so the payloads do not depend on
+    ``sub``. Under the bound, or without an estimate, the plan is the
+    single ``groupBy(shard)`` aggregate with no second exchange.
 
     Payloads can be written as *sidecar files* (``payload_dir``; for a
     checkpointed build the default is ``<checkpoint_path>/_payloads/``):
@@ -79,11 +61,9 @@ disagree with every other engine's byte-hash of an absent value).
 
 from __future__ import annotations
 
-import atexit
 import hashlib
+import math
 import os
-import shutil
-import tempfile
 import time
 from typing import Iterator
 
@@ -102,11 +82,11 @@ DEFAULT_HASH = "xxhash64"
 
 HASH_COL = "qf_hash"
 
-# The 'arrow' exchange materializes each shard's pre-unique hashes as ONE
-# JVM collect_list row (~8 B per raw occurrence), so a shard whose raw
-# rows exceed this bound risks an oversized single row / aggregation
-# buffer. 'auto' falls back to 'storage' (no single-row bound) above it;
-# half the documented ~1e8 ceiling leaves headroom for skewed shards.
+# The sharded build's exchange materializes a shard's pre-unique hashes as
+# JVM collect_list rows (~8 B per raw occurrence each), and Spark bounds a
+# row at 2 GB. Above this many estimated raw rows per shard, each shard is
+# split into several list rows (see build_sharded_qf); half the ~1e8 rows
+# a 2 GB row could hold leaves headroom for skewed shards.
 ARROW_MAX_ROWS_PER_SHARD = 50_000_000
 
 # build_qf inputs estimated (action-free, never under-estimating) at or
@@ -540,14 +520,6 @@ _SHARD_SCHEMA = (
     "build_secs double"
 )
 
-# parquet options for hash spill tables: dictionary encoding is pure
-# overhead on effectively-unique 64-bit hashes, and per-file summary
-# metadata is dead weight at thousands of shard files
-_SPILL_WRITE_OPTS = {
-    "parquet.enable.dictionary": "false",
-    "parquet.summary.metadata.level": "NONE",
-}
-
 
 def shard_payload_bytes(row) -> bytes:
     """The serialized filter for a shard-table row: inline ``payload``
@@ -599,7 +571,7 @@ def _finish_shard(qf: QF, shard: int, n_rows: int, cfg: QFConfig,
 
 def _build_shard(hv: np.ndarray, shard: int, cfg: QFConfig, shard_bits: int,
                  payload_dir: str | None, t0: float) -> dict:
-    """Per-shard tail of both exchanges: build from a shard's raw local
+    """Per-shard tail of the exchange: build from a shard's raw local
     hashes and finish the lineage row. The in-place sort feeds
     from_hashes' diff-based dedup — no index arrays, no np.unique
     inverse/bincount — so less memory traffic, which is what bounds
@@ -611,15 +583,21 @@ def _build_shard(hv: np.ndarray, shard: int, cfg: QFConfig, shard_bits: int,
                          shard_bits, payload_dir, t0=t0)
 
 
-def _routed(hashed: DataFrame, shard_bits: int) -> DataFrame:
+def _routed(hashed: DataFrame, shard_bits: int, sub: int = 1) -> DataFrame:
     """(shard, local_hash) routing columns: shard = top bits, local =
-    hash << shard_bits (lossless; quotients stay uniform per shard)."""
-    return hashed.select(
+    hash << shard_bits (lossless; quotients stay uniform per shard).
+    With ``sub`` > 1 a third column, the hash modulo ``sub``, splits
+    each shard into ``sub`` near-equal parts (the hash's low bits,
+    which ``lh`` keeps, vary inside a shard)."""
+    cols = [
         (F.shiftrightunsigned(F.col(HASH_COL), 64 - shard_bits) if shard_bits
          else F.lit(0)).cast("long").alias("shard"),
         (F.shiftleft(F.col(HASH_COL), shard_bits) if shard_bits
          else F.col(HASH_COL)).alias("lh"),
-    )
+    ]
+    if sub > 1:
+        cols.append(F.pmod(F.col(HASH_COL), F.lit(sub)).alias("sub"))
+    return hashed.select(*cols)
 
 
 def build_sharded_qf(
@@ -629,15 +607,18 @@ def build_sharded_qf(
     config: QFConfig | None = None,
     checkpoint_path: str | None = None,
     resume: bool = True,
-    exchange: str = "arrow",
     payload_dir: str | None = None,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """Build (or resume building) a sharded CQF; returns the shard-table
     DataFrame ``(shard, entries, q_bits, payload, payload_path,
-    lineage...)``. See the module docstring for the two ``exchange``
-    strategies, ``'auto'``, and the sidecar-payload and ``spill_dir``
-    contracts.
+    lineage...)``. See the module docstring for the exchange, its split
+    rule and the sidecar-payload contract.
+
+    The split takes one ``approx_row_count(..., fallback_count=False)``
+    estimate of the hashed input: plan statistics, a ``Range`` or local
+    relation leaf, or parquet footers. None of them runs a Spark job,
+    and an input with no estimate is not split, so an uncheckpointed
+    build starts no job before the returned DataFrame is used.
 
     With ``checkpoint_path`` set, the build runs as ONE Spark query that
     returns the shard lineage rows to the driver (filter bytes never
@@ -655,12 +636,16 @@ def build_sharded_qf(
     only the newest row per shard, so an interrupted overwrite still
     answers from the new rows.
     """
+    from .sources import approx_row_count
+
     config = config or QFConfig(hash_name=DEFAULT_HASH, counter_bits=32)
     spark = df.sparkSession
     sb = shard_bits
 
     hashed = with_hash(_keys_nonnull(df, col), col,
                        config.hash_name).select(HASH_COL)
+    est = approx_row_count(hashed, fallback_count=False)
+    sub = max(1, math.ceil((est or 0) / (1 << sb) / ARROW_MAX_ROWS_PER_SHARD))
 
     default_payloads = bool(checkpoint_path) and not payload_dir
     if default_payloads:
@@ -681,33 +666,13 @@ def build_sharded_qf(
         except AnalysisException:  # no table yet: build every shard
             existing = None
 
-    if exchange == "auto":
-        # action-free when the plan has an estimate; see module docstring
-        from .sources import approx_row_count
-
-        rows_per_shard = approx_row_count(hashed) / (1 << sb)
-        exchange = ("storage" if rows_per_shard > ARROW_MAX_ROWS_PER_SHARD
-                    else "arrow")
-
-    spill_cleanup = None
-    if exchange == "arrow":
-        shards_df = _exchange_arrow(hashed, sb, config, done, payload_dir)
-    elif exchange == "storage":
-        shards_df, spill_cleanup = _exchange_storage(
-            spark, hashed, sb, config, done, payload_dir,
-            spill_dir, checkpoint_path)
-    else:
-        raise ValueError(f"unknown exchange mode {exchange!r}")
-
+    shards_df = _exchange_arrow(hashed, sb, sub, config, done, payload_dir)
     if not checkpoint_path:
         return shards_df
-    out = _commit_shards(
+    return _commit_shards(
         spark, shards_df, checkpoint_path,
         "append" if resume else "overwrite", existing,
         gc_dir=payload_dir if default_payloads and not resume else None)
-    if spill_cleanup:
-        shutil.rmtree(spill_cleanup, ignore_errors=True)
-    return out
 
 
 def _checkpoint_payload_dir(spark, checkpoint_path: str) -> str:
@@ -861,16 +826,17 @@ def merge_shard_tables(
     return out
 
 
-# -- exchange: 'arrow' (fat collect_list rows through the channel) ----------
+# -- the exchange: fat collect_list rows through the Arrow channel ---------
 
-def _exchange_arrow(hashed: DataFrame, sb: int, config: QFConfig,
+def _exchange_arrow(hashed: DataFrame, sb: int, sub: int, config: QFConfig,
                     done: set, payload_dir: str | None) -> DataFrame:
     import pyarrow as pa
 
-    routed = _routed(hashed, sb)
+    routed = _routed(hashed, sb, sub)
     if done:
         routed = routed.filter(~F.col("shard").isin(list(done)))
-    fat = routed.groupBy("shard").agg(F.collect_list("lh").alias("hv"))
+    keys = ["shard", "sub"] if sub > 1 else ["shard"]
+    fat = routed.groupBy(*keys).agg(F.collect_list("lh").alias("hv"))
     cfg = config
     pa_schema = _pa_shard_schema()
 
@@ -901,75 +867,6 @@ def _pa_shard_schema():
         ("n_rows", pa.int64()), ("build_ts", pa.float64()),
         ("code_version", pa.string()), ("build_secs", pa.float64()),
     ])
-
-
-# -- exchange: 'storage' (filesystem exchange, channel-free) ----------------
-
-def _exchange_storage(spark: SparkSession, hashed: DataFrame, sb: int,
-                      config: QFConfig, done: set, payload_dir: str | None,
-                      spill_dir: str | None, checkpoint_path: str | None):
-    """Stage 1 (pure JVM): write routed hashes as parquet partitioned by
-    shard. Stage 2: one task per shard reads its partition directly with
-    pyarrow and builds. Returns (shards_df, spill_path_to_cleanup): the
-    path is set only for the checkpoint-side spill, which the caller
-    deletes after the commit."""
-    cleanup = None
-    if spill_dir is None:
-        if checkpoint_path:
-            spill_dir = checkpoint_path.rstrip("/") + "_spill"
-            cleanup = spill_dir
-        else:
-            base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-            spill_dir = tempfile.mkdtemp(prefix="qf_spill_", dir=base)
-            # no checkpoint => the returned DataFrame is lazy over the
-            # spill, so it can only go when the interpreter does; a
-            # caller-supplied spill_dir stays the caller's to delete
-            atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
-    spill = os.path.join(spill_dir, "hashes")
-
-    routed = _routed(hashed, sb)
-    if done:
-        routed = routed.filter(~F.col("shard").isin(list(done)))
-    # cluster rows by shard BEFORE the dynamic-partition write: a write
-    # task holding many shard values runs the sort-based dynamic
-    # partition writer over its whole input (M tasks x 2^sb open
-    # writers/sorts), which profiled 2.5-5x slower than shuffling first
-    # so each task writes whole shards (guide §6: cluster by partition
-    # key on write). Range partitioning maps the 2^sb distinct shard ids
-    # ~1:1 onto tasks (hash partitioning would leave ~1/e of tasks empty
-    # and others with 2-3 shards — guide §2.5 synthetic-key collisions).
-    routed = routed.repartitionByRange(1 << sb, "shard")
-    writer = routed.write.mode("overwrite")
-    for k, v in _SPILL_WRITE_OPTS.items():
-        writer = writer.option(k, v)
-    writer.partitionBy("shard").parquet(spill, compression="none")
-
-    cfg = config
-    # enumerate shard ids executor-side (spark.range): at shard_bits=26+
-    # a driver-side python list of 2^sb tuples would be GBs of RAM
-    ids_df = spark.range(1 << sb).withColumnRenamed("id", "shard")
-    if done:
-        done_df = spark.createDataFrame([(s,) for s in done], "shard long")
-        ids_df = ids_df.join(done_df, "shard", "left_anti")
-    ids_df = ids_df.repartition(min(1 << sb, 4096))
-
-    def _build_from_spill(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in pdfs:
-            for s in pdf["shard"].tolist():
-                t0 = time.time()
-                d = os.path.join(spill, f"shard={s}")
-                if not os.path.isdir(d):
-                    continue  # empty shard: no row, same as other modes
-                tbl = pq.read_table(d, columns=["lh"], use_threads=False)
-                hv = tbl.column("lh").to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False).view(np.uint64)
-                if len(hv):
-                    yield pd.DataFrame([_build_shard(
-                        hv, int(s), cfg, sb, payload_dir, t0)])
-
-    return ids_df.mapInPandas(_build_from_spill, _SHARD_SCHEMA), cleanup
 
 
 def load_sharded_qf(shards_df_or_rows) -> ShardedQF:

@@ -228,14 +228,19 @@ def approx_row_count(df: DataFrame, sample_files: int = 64,
                      fallback_count: bool = True) -> int | None:
     """Best-effort row-count estimate WITHOUT scanning the data — for
     callers that size a data structure from the corpus size at log2
-    granularity (LSH plane counts, rows-per-shard exchange guards),
+    granularity (LSH plane counts, the sharded build's split rule),
     where a small constant-factor error is equivalent to the exact
     count.
 
     Strategy ladder:
       1. Catalyst optimized-plan statistics (exact under CBO / cached
          relations / local relations).
-      2. Parquet FOOTER metadata of the scan's input files — reads
+      2. The plan's LEAF row counts, when every leaf is a ``Range`` or
+         ``LocalRelation`` (with CBO off, a ``Project`` above
+         ``spark.range(n)`` drops the count from rung 1). Skipped for
+         row-expanding plans, like rung 3; a filter makes it an
+         overestimate, the safe direction.
+      3. Parquet FOOTER metadata of the scan's input files — reads
          ``min(sample_files, |files|)`` footers driver-side (metadata
          pages only, no data IO) and scales by the file count; exact
          when every footer is read. Pre-filter count: an upstream
@@ -244,9 +249,9 @@ def approx_row_count(df: DataFrame, sample_files: int = 64,
          optimized plan contains a row-EXPANDING node (Generate /
          explode, Join): footers count base-file rows, so an 80x
          shingle explode would make this an 80x UNDERESTIMATE — the
-         unsafe direction for callers like the sharded-build exchange
-         guard, whose arrow path has a hard per-shard row bound.
-      3. ``df.count()`` — the explicit fallback for in-memory /
+         unsafe direction for callers like the sharded build's split
+         rule, which keeps each shard's list rows under a hard bound.
+      4. ``df.count()`` — the explicit fallback for in-memory /
          exotic sources and for row-expanding plans; the one
          remaining driver action, on a column-pruned scan. With
          ``fallback_count=False`` this step is skipped and ``None`` is
@@ -260,11 +265,16 @@ def approx_row_count(df: DataFrame, sample_files: int = 64,
             return int(str(rc.get()))
     except Exception:
         pass
+    expands = _plan_expands_rows(df)
+    if not expands:
+        leaf_rows = _leaf_row_count(df)
+        if leaf_rows is not None:
+            return leaf_rows
     try:
         files = df.inputFiles()
     except Exception:
         files = []
-    if files and _plan_expands_rows(df):
+    if files and expands:
         files = []  # footer counts would under-estimate: drop to count()
     if files:
         try:
@@ -282,6 +292,27 @@ def approx_row_count(df: DataFrame, sample_files: int = 64,
         except Exception:
             pass
     return df.count() if fallback_count else None
+
+
+def _leaf_row_count(df: DataFrame) -> int | None:
+    """The summed row counts of the optimized plan's leaves when each is
+    a ``Range`` or ``LocalRelation`` that reports one, else None (also
+    when the plan cannot be read through the JVM)."""
+    from py4j.protocol import Py4JError
+
+    try:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        it, total = leaves.iterator(), 0
+        while it.hasNext():
+            leaf = it.next()
+            rc = leaf.stats().rowCount()
+            if (leaf.nodeName() not in ("Range", "LocalRelation")
+                    or not rc.isDefined()):
+                return None
+            total += int(str(rc.get()))
+        return total
+    except (AttributeError, Py4JError):  # no JVM plan (Spark Connect)
+        return None
 
 
 def _plan_expands_rows(df: DataFrame) -> bool:

@@ -87,15 +87,35 @@ def main():
     check("partial collect_list map-side", p5, r"partial_collect_list")
     check("no row-python in fat-row stage", p5, r"EvalPython", must_exist=False)
 
-    # 5b. exchange='auto' under the arrow bound plans exactly the arrow
-    # shape: one per-shard Arrow group node, no pandas combiner stage
+    # 5b. the default sharded build plans one collect_list aggregate
+    # (one partial + one final, no second exchange) and one per-shard
+    # Arrow group node, no pandas combiner stage; a build whose row
+    # estimate passes ARROW_MAX_ROWS_PER_SHARD plans the (shard, sub)
+    # aggregate instead
+    from qfspark import build
     from qfspark.build import build_sharded_qf
 
-    p5b = plan_of(build_sharded_qf(wp, "url", exchange="auto"))
-    check("auto sharded build is the arrow shape", p5b,
+    p5b = plan_of(build_sharded_qf(wp, "url"))
+    n_aggs = len(re.findall(r"Functions \[1\]: \[partial_collect_list", p5b))
+    ok5b = n_aggs == 1
+    failures.extend([] if ok5b else ["default sharded build: one collect_list"])
+    print(f"{'OK ' if ok5b else 'FAIL'} default sharded build: one "
+          f"collect_list aggregate (found {n_aggs})")
+    check("default sharded build is a per-shard Arrow group", p5b,
           r"FlatMapGroupsInArrow")
-    check("auto sharded build has no MapInPandas", p5b, r"MapInPandas",
+    check("default sharded build has no MapInPandas", p5b, r"MapInPandas",
           must_exist=False)
+    check("default sharded build is not split", p5b, r"sub#",
+          must_exist=False)
+    bound = build.ARROW_MAX_ROWS_PER_SHARD
+    build.ARROW_MAX_ROWS_PER_SHARD = 1  # plan only: forces a split
+    try:
+        p5c = plan_of(build_sharded_qf(docs, "text"))
+    finally:
+        build.ARROW_MAX_ROWS_PER_SHARD = bound
+    check("forced split plans the (shard, sub) aggregate", p5c,
+          r"Keys \[2\]: \[shard#\d+L?, sub#\d+L?\]\s*\n"
+          r"Functions \[1\]: \[partial_collect_list")
 
     # 6. shard-table probe: cogroup node present, probe stream salted
     # (parallelism decoupled from shard count), no broadcast of payloads

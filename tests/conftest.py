@@ -38,3 +38,19 @@ def no_ckernel():
         yield
     finally:
         ck._tried, ck._lib = prev_tried, prev_lib
+
+
+def jobs_started(spark, fn):
+    """Run ``fn`` in a fresh job group; return its result and the ids of
+    the Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"qf-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_started")
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # jobs registered
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

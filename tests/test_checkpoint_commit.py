@@ -62,7 +62,7 @@ def _sql_plans_during(spark, fn):
 def test_checkpointed_build_is_one_query(spark, keys_df, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out, plans = _sql_plans_during(spark, lambda: build_sharded_qf(
-        keys_df, "key", shard_bits=SB, config=CFG, exchange="arrow",
+        keys_df, "key", shard_bits=SB, config=CFG,
         checkpoint_path=ckpt, resume=False))
     assert len(plans) == 1, plans
     assert "FlatMapGroupsInArrow" in plans[0]
@@ -74,22 +74,27 @@ def test_checkpointed_build_is_one_query(spark, keys_df, tmp_path):
     assert out.count() == 1 << SB
 
 
-@pytest.mark.parametrize("exchange", ["arrow", "storage"])
-def test_checkpointed_payloads_match_inline_build(spark, keys_df, tmp_path,
-                                                  exchange):
+@pytest.mark.parametrize("split", [False, True], ids=["unsplit", "split"])
+def test_checkpointed_payloads_match_inline_build(spark, tmp_path,
+                                                  monkeypatch, split):
+    keys = str(tmp_path / "keys")
+    spark.range(2000).selectExpr("concat('key-', id % 700) AS key") \
+        .write.parquet(keys)
+    keys_df = spark.read.parquet(keys)
+    if split:  # 2000 rows / 4 shards over a bound of 100: 5 list rows each
+        from qfspark import build
+
+        monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD", 100)
     ckpt = str(tmp_path / "ckpt")
-    spill = str(tmp_path / "spill")
     out = build_sharded_qf(keys_df, "key", shard_bits=SB, config=CFG,
-                           exchange=exchange, checkpoint_path=ckpt,
-                           resume=False, spill_dir=spill)
+                           checkpoint_path=ckpt, resume=False)
     rows = out.collect()
     # no filter bytes in the table: the payloads are default sidecars
     assert all(r.payload is None for r in rows)
     payload_dir = os.path.join(ckpt, sources.PAYLOADS_DIR)
     assert all(os.path.dirname(r.payload_path) == payload_dir for r in rows)
     inline = _payloads(build_sharded_qf(keys_df, "key", shard_bits=SB,
-                                        config=CFG, exchange=exchange,
-                                        spill_dir=spill + "_inline"))
+                                        config=CFG))
     assert {int(r.shard): shard_payload_bytes(r) for r in rows} == inline
     assert _payloads(spark.read.parquet(ckpt)) == inline
 

@@ -1,21 +1,19 @@
-"""The two sharded-build exchange strategies (and ``'auto'``) are
-interchangeable:
-identical canonical shard payloads, identical lookups — because the
-canonical layout is a pure function of the (hash, count) multiset, the
-data-movement strategy cannot affect the artifact. Plus the sidecar
-payload, checkpoint-overwrite, duplicate-row-resolution, and NULL-key
-contracts added in round 2."""
+"""The sharded build's one exchange, split or not, makes the same
+artifact: identical canonical shard payloads, identical lookups —
+because the canonical layout is a pure function of the (hash, count)
+multiset, how the hashes reach their shard builder cannot affect it.
+Plus the sidecar payload, checkpoint-overwrite, duplicate-row-resolution,
+and NULL-key contracts added in round 2."""
 
-import json
 import os
-import subprocess
-import sys
+import re
 
 import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
+from qfspark import build
 from qfspark.build import (
     build_sharded_qf,
     latest_shards,
@@ -25,7 +23,11 @@ from qfspark.build import (
 from qfspark.lookup import annotate, annotate_via_shard_table
 from qfspark.sizing import QFConfig
 
-EXCHANGES = ["arrow", "storage"]
+from .conftest import jobs_started
+
+# the map-side collect_list keyed by (shard, sub): only a split build has it
+SPLIT_AGG = re.compile(
+    r"keys=\[shard#\d+L?, sub#\d+L?\], functions=\[partial_collect_list")
 
 
 @pytest.fixture(scope="module")
@@ -35,45 +37,69 @@ def keys_df(spark):
     return spark.createDataFrame(rows, "key string").repartition(8).cache()
 
 
+@pytest.fixture(scope="module")
+def keys_parquet(spark, tmp_path_factory):
+    """3000 rows over 700 keys in parquet, so the build has a footer row
+    estimate to split on."""
+    path = str(tmp_path_factory.mktemp("keys") / "keys")
+    spark.range(3000).selectExpr(
+        "concat('key-', id % 700) AS key").write.parquet(path)
+    return spark.read.parquet(path)
+
+
 def _payloads(df):
     return {int(r.shard): shard_payload_bytes(r) for r in df.collect()}
 
 
-def test_only_the_two_exchanges_and_auto_are_accepted(keys_df):
-    for mode in ("salted", "combine"):
-        with pytest.raises(ValueError, match="unknown exchange mode"):
-            build_sharded_qf(keys_df, "key", exchange=mode)
-    with pytest.raises(TypeError):
-        build_sharded_qf(keys_df, "key", pre_agg="local")
+def _split_planned(df):
+    """Whether ``df``'s executed plan (run it first) has the split
+    aggregate."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return SPLIT_AGG.search(plan) is not None
 
 
-def test_exchanges_byte_identical(spark, keys_df, tmp_path):
+def test_removed_exchange_parameters_raise(keys_df):
+    for kwargs in ({"exchange": "arrow"}, {"exchange": "storage"},
+                   {"exchange": "auto"}, {"spill_dir": "/nonexistent"},
+                   {"pre_agg": "local"}):
+        with pytest.raises(TypeError):
+            build_sharded_qf(keys_df, "key", **kwargs)
+
+
+def test_exchanges_byte_identical(keys_parquet, monkeypatch):
+    """A build split into (shard, sub) list rows plans the (shard, sub)
+    aggregate and writes the payloads of the unsplit build."""
     cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
-    ref = None
-    for ex in EXCHANGES:
-        got = _payloads(
-            build_sharded_qf(keys_df, "key", shard_bits=3, config=cfg,
-                             exchange=ex,
-                             spill_dir=str(tmp_path / f"spill_{ex}")))
-        assert got, f"{ex}: no shards"
-        if ref is None:
-            ref = got
-        else:
-            assert got == ref, f"{ex} diverges from arrow"
+    unsplit = build_sharded_qf(keys_parquet, "key", shard_bits=2, config=cfg)
+    ref = _payloads(unsplit)
+    assert len(ref) == 4
+    assert not _split_planned(unsplit)
+    # 3000 rows / 4 shards = 750 rows per shard over a bound of 200
+    monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD", 200)
+    split = build_sharded_qf(keys_parquet, "key", shard_bits=2, config=cfg)
+    assert _payloads(split) == ref
+    assert _split_planned(split)
+    subs = build._routed(build.with_hash(keys_parquet, "key"), 2, 4) \
+        .groupBy("shard").agg(F.countDistinct("sub").alias("n")).collect()
+    assert {r.n for r in subs} == {4}  # every shard really has 4 sub-rows
 
 
-def test_exchange_counts_exact(spark, keys_df):
+def test_exchange_counts_exact(spark, keys_df, keys_parquet, monkeypatch):
     cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
-    for ex in ("arrow", "storage"):
-        sharded = load_sharded_qf(
-            build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
-                             exchange=ex))
-        found, counts = sharded.lookup_keys(
-            [f"key-{i}" for i in range(700)])
-        assert found.all()
-        # 2000 rows over 700 keys: keys 0..599 appear 3x, 600..699 appear 2x
-        want = np.where(np.arange(700) < 600, 3, 2)
-        assert (counts == want).all()
+    sharded = load_sharded_qf(
+        build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg))
+    found, counts = sharded.lookup_keys([f"key-{i}" for i in range(700)])
+    assert found.all()
+    # 2000 rows over 700 keys: keys 0..599 appear 3x, 600..699 appear 2x
+    want = np.where(np.arange(700) < 600, 3, 2)
+    assert (counts == want).all()
+    # split: 3000 rows over 700 keys, keys 0..199 5x and 200..699 4x
+    monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD", 100)
+    sharded = load_sharded_qf(
+        build_sharded_qf(keys_parquet, "key", shard_bits=2, config=cfg))
+    found, counts = sharded.lookup_keys([f"key-{i}" for i in range(700)])
+    assert found.all()
+    assert (counts == np.where(np.arange(700) < 200, 5, 4)).all()
 
 
 def test_sidecar_payloads(spark, keys_df, tmp_path):
@@ -81,49 +107,17 @@ def test_sidecar_payloads(spark, keys_df, tmp_path):
     paydir = str(tmp_path / "payloads")
     os.makedirs(paydir, exist_ok=True)
     df = build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
-                          exchange="arrow", payload_dir=paydir)
+                          payload_dir=paydir)
     rows = df.collect()
     assert all(r.payload is None for r in rows)
     assert all(r.payload_path.startswith(paydir) for r in rows)
     # inline build for comparison
     inline = _payloads(build_sharded_qf(keys_df, "key", shard_bits=2,
-                                        config=cfg, exchange="arrow"))
+                                        config=cfg))
     assert {int(r.shard): shard_payload_bytes(r) for r in rows} == inline
     # loader follows the sidecar
     sharded = load_sharded_qf(df)
     assert sharded.contains("key-1")
-
-
-def test_uncheckpointed_storage_spill_removed_at_exit():
-    """An uncheckpointed 'storage' build spills to a temp dir the caller
-    never learns; it must be gone once the interpreter exits. Run in a
-    child process so the exit can be observed."""
-    code = (
-        "import glob, json, os, tempfile\n"
-        "from pyspark.sql import SparkSession\n"
-        "from qfspark.build import build_sharded_qf\n"
-        "base = '/dev/shm' if os.path.isdir('/dev/shm') "
-        "else tempfile.gettempdir()\n"
-        "spills = lambda: set(glob.glob(os.path.join(base, 'qf_spill_*')))\n"
-        "spark = (SparkSession.builder.master('local[1]')\n"
-        "         .config('spark.ui.enabled', 'false')\n"
-        "         .config('spark.sql.shuffle.partitions', '2')\n"
-        "         .getOrCreate())\n"
-        "before = spills()\n"
-        "df = spark.range(500).selectExpr(\"concat('k', id) AS key\")\n"
-        "rows = build_sharded_qf(df, 'key', shard_bits=1,\n"
-        "                        exchange='storage').collect()\n"
-        "assert sum(r.entries for r in rows) == 500\n"
-        "print(json.dumps(sorted(spills() - before)))\n"
-    )
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=root)
-    proc = subprocess.run([sys.executable, "-c", code], env=env,
-                          capture_output=True, text=True, timeout=300)
-    assert proc.returncode == 0, proc.stderr
-    made = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert made, "the build made no spill dir"
-    assert [d for d in made if os.path.exists(d)] == []
 
 
 def test_checkpoint_overwrite_no_duplicates(spark, keys_df, tmp_path):
@@ -211,30 +205,24 @@ def test_null_keys_dropped_and_never_members(spark):
     assert sum(r.entries for r in sharded_rows) == 2
 
 
-def test_exchange_auto_runs_no_job_and_equals_arrow(spark, tmp_path):
-    """On a parquet input (footer row estimate) 'auto' decides without a
-    Spark job — the returned build is still lazy — and, far under the
-    arrow bound, builds arrow's bytes whatever the duplication."""
+def test_build_starts_no_job_before_use(spark, keys_parquet, monkeypatch):
+    """Building starts no Spark job before the returned DataFrame is
+    used: not on an in-memory list (no row estimate, so no split), nor
+    on parquet (a footer estimate), split or not."""
     cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
-    sc = spark.sparkContext
-    inputs = {"unique": "concat('u', id)", "heavy": "concat('d', id % 50)"}
-    for name, key in inputs.items():
-        path = str(tmp_path / name)
-        spark.range(3000).selectExpr(f"{key} AS key").write.parquet(path)
-        df = spark.read.parquet(path)
-        group = f"qf-auto-{name}"
-        sc.setJobGroup(group, "exchange='auto' decision")
-        try:
-            shards = build_sharded_qf(df, "key", shard_bits=2, config=cfg,
-                                      exchange="auto")
-            sc._jsc.sc().listenerBus().waitUntilEmpty()  # jobs registered
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert jobs == [], f"{name}: 'auto' started jobs {jobs}"
-        arrow = _payloads(build_sharded_qf(df, "key", shard_bits=2,
-                                           config=cfg, exchange="arrow"))
-        assert _payloads(shards) == arrow  # strategy-independent bytes
+    listed = spark.createDataFrame(
+        [(f"key-{i % 700}",) for i in range(3000)], "key string")
+    default = build.ARROW_MAX_ROWS_PER_SHARD
+    for name, df, bound in (("list", listed, 100),
+                            ("parquet", keys_parquet, default),
+                            ("parquet split", keys_parquet, 200)):
+        monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD", bound)
+        shards, jobs = jobs_started(spark, lambda: build_sharded_qf(
+            df, "key", shard_bits=2, config=cfg))
+        assert jobs == [], f"{name}: building started jobs {jobs}"
+        assert sum(r.entries for r in shards.collect()) == 700
+        # the list input has no estimate, so it is built unsplit
+        assert _split_planned(shards) == (name == "parquet split")
 
 
 def test_filter_unseen_via_shard_table(spark, keys_df):

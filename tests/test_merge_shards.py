@@ -34,13 +34,11 @@ def test_merge_equals_direct_build(spark):
     """Byte-identical per shard: merge(A_table, B_table) == build(A+B)."""
     a = _keys(spark, 0, 900)
     b = _keys(spark, 600, 1800)          # overlapping keys: counters add
-    ta = build_sharded_qf(a, "key", shard_bits=SB, config=CFG,
-                          exchange="arrow")
-    tb = build_sharded_qf(b, "key", shard_bits=SB, config=CFG,
-                          exchange="arrow")
+    ta = build_sharded_qf(a, "key", shard_bits=SB, config=CFG)
+    tb = build_sharded_qf(b, "key", shard_bits=SB, config=CFG)
     merged = merge_shard_tables(spark, [ta, tb])
     direct = build_sharded_qf(a.unionAll(b), "key", shard_bits=SB,
-                              config=CFG, exchange="arrow")
+                              config=CFG)
     pm, pd_ = _payloads(merged), _payloads(direct)
     assert pm.keys() == pd_.keys()
     for s in pm:
@@ -52,10 +50,8 @@ def test_merge_lookup_counts_exact(spark):
     false negatives; lineage n_rows sums."""
     a = _keys(spark, 0, 600)
     b = _keys(spark, 0, 600)             # the same corpus twice
-    ta = build_sharded_qf(a, "key", shard_bits=SB, config=CFG,
-                          exchange="arrow")
-    tb = build_sharded_qf(b, "key", shard_bits=SB, config=CFG,
-                          exchange="arrow")
+    ta = build_sharded_qf(a, "key", shard_bits=SB, config=CFG)
+    tb = build_sharded_qf(b, "key", shard_bits=SB, config=CFG)
     merged = merge_shard_tables(spark, [ta, tb])
     sq = load_sharded_qf(merged)
     exact = {r.key: r.cnt for r in
@@ -72,21 +68,20 @@ def test_merge_lookup_counts_exact(spark):
 def test_merge_single_table_roundtrip(spark):
     """Merging one table re-canonicalizes to identical payloads."""
     t = build_sharded_qf(_keys(spark, 0, 400), "key", shard_bits=SB,
-                         config=CFG, exchange="arrow")
+                         config=CFG)
     assert _payloads(merge_shard_tables(spark, [t])) == _payloads(t)
 
 
 def test_merge_rejects_mismatched_lineage(spark):
     ta = build_sharded_qf(_keys(spark, 0, 300), "key", shard_bits=SB,
-                          config=CFG, exchange="arrow")
+                          config=CFG)
     tb = build_sharded_qf(_keys(spark, 0, 300), "key", shard_bits=SB,
                           config=QFConfig(counter_bits=8,
-                                          hash_name="xxhash64"),
-                          exchange="arrow")
+                                          hash_name="xxhash64"))
     with pytest.raises(ValueError, match="counter_bits"):
         merge_shard_tables(spark, [ta, tb]).collect()
     tc = build_sharded_qf(_keys(spark, 0, 300), "key", shard_bits=SB + 1,
-                          config=CFG, exchange="arrow")
+                          config=CFG)
     with pytest.raises(ValueError, match="shard_bits"):
         merge_shard_tables(spark, [ta, tc]).collect()
     with pytest.raises(ValueError, match="at least one"):

@@ -1,5 +1,6 @@
-"""Round-3 surface tests: auto-exchange rows/shard guard, memmap close()
-lifecycle, custom hash registration, and the driver-side broadcast cache."""
+"""Round-3 surface tests: the sharded build's rows/shard split guard,
+memmap close() lifecycle, custom hash registration, and the driver-side
+broadcast cache."""
 
 import os
 
@@ -12,49 +13,40 @@ from qfspark.serde import qf_from_bytes, qf_to_bytes
 
 
 # ---------------------------------------------------------------------------
-# auto exchange: rows/shard guard (build.ARROW_MAX_ROWS_PER_SHARD)
+# split guard: rows/shard bound (build.ARROW_MAX_ROWS_PER_SHARD)
 # ---------------------------------------------------------------------------
 
-def _auto_build_selects(spark, monkeypatch, n_rows, shard_bits,
-                        max_rows_per_shard):
-    """Run build_sharded_qf(exchange='auto') over unique keys and report
-    which exchange implementation it dispatched to."""
+def _split_of(spark, monkeypatch, n_rows, shard_bits, max_rows_per_shard):
+    """Run build_sharded_qf over unique keys and report how many list rows
+    it split each shard into."""
     from qfspark import build
 
-    chosen = []
+    subs = []
+    exchange = build._exchange_arrow
 
-    def _spy(name, fn):
-        def wrapper(*args, **kwargs):
-            chosen.append(name)
-            return fn(*args, **kwargs)
-        return wrapper
+    def _spy(hashed, sb, sub, *args):
+        subs.append(sub)
+        return exchange(hashed, sb, sub, *args)
 
     monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD",
                         max_rows_per_shard)
-    monkeypatch.setattr(build, "_exchange_arrow",
-                        _spy("arrow", build._exchange_arrow))
-    monkeypatch.setattr(
-        build, "_exchange_storage",
-        _spy("storage", build._exchange_storage))
+    monkeypatch.setattr(build, "_exchange_arrow", _spy)
     df = spark.range(n_rows).selectExpr("concat('k', id) AS key")
-    shards = build.build_sharded_qf(df, "key", shard_bits=shard_bits,
-                                    exchange="auto")
-    assert shards.count() >= 1
-    assert len(chosen) == 1
-    return chosen[0]
+    shards = build.build_sharded_qf(df, "key", shard_bits=shard_bits)
+    assert shards.agg({"entries": "sum"}).collect()[0][0] == n_rows
+    assert len(subs) == 1
+    return subs[0]
 
 
-def test_auto_exchange_guard_falls_back_to_storage(spark, monkeypatch):
-    # 2000 unique rows / 2^0 shards = 2000 rows/shard > bound of 100
-    assert _auto_build_selects(spark, monkeypatch, n_rows=2000,
-                               shard_bits=0,
-                               max_rows_per_shard=100) == "storage"
+def test_split_guard_splits_over_bound(spark, monkeypatch):
+    # 2000 unique rows / 2^0 shards = 2000 rows/shard over a bound of 100
+    assert _split_of(spark, monkeypatch, n_rows=2000, shard_bits=0,
+                     max_rows_per_shard=100) == 20
 
 
-def test_auto_exchange_picks_arrow_under_bound(spark, monkeypatch):
-    assert _auto_build_selects(spark, monkeypatch, n_rows=2000,
-                               shard_bits=2,
-                               max_rows_per_shard=10_000) == "arrow"
+def test_split_guard_no_split_under_bound(spark, monkeypatch):
+    assert _split_of(spark, monkeypatch, n_rows=2000, shard_bits=2,
+                     max_rows_per_shard=10_000) == 1
 
 
 # ---------------------------------------------------------------------------
@@ -187,8 +179,7 @@ def test_shard_lineage_carries_build_metrics(spark):
 
     df = spark.range(5000).selectExpr("concat('k', id) AS key")
     shards = build_sharded_qf(df, "key", shard_bits=2,
-                              config=QFConfig(counter_bits=8),
-                              exchange="arrow")
+                              config=QFConfig(counter_bits=8))
     rows = shards.select("shard", "n_rows", "build_secs").collect()
     assert rows and all(r.build_secs > 0 for r in rows), rows
     assert sum(r.n_rows for r in rows) == 5000

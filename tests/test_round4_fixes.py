@@ -301,7 +301,7 @@ def test_resume_append_aligns_to_legacy_checkpoint_schema(spark,
     cfg = QFConfig(counter_bits=8, hash_name="xxhash64")
     keys = spark.range(2000).selectExpr("concat('k', id) AS key")
     build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
-                     exchange="arrow", checkpoint_path=ckpt)
+                     checkpoint_path=ckpt)
     # rewrite the checkpoint WITHOUT build_secs, simulating pre-0.3.0
     # (explicit schema: the sidecar build's all-null payload column
     # would otherwise be inferred from pandas as VOID, not BINARY)
@@ -317,7 +317,7 @@ def test_resume_append_aligns_to_legacy_checkpoint_schema(spark,
     shutil.rmtree(ckpt)
     spark.createDataFrame(done_rows, legacy_df.schema).write.parquet(ckpt)
     out = build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
-                           exchange="arrow", checkpoint_path=ckpt,
+                           checkpoint_path=ckpt,
                            resume=True)
     shards = latest_shards(
         spark.read.option("mergeSchema", "true").parquet(ckpt))

@@ -2,8 +2,8 @@
 
 1. ``approx_row_count`` must not trust parquet-footer counts when the
    plan expands rows (Generate/Join) — the footer estimate counts BASE
-   rows, a potentially unbounded underestimate that could flip the
-   sharded-build auto-exchange guard to the bounded 'arrow' path.
+   rows, a potentially unbounded underestimate that could hold the
+   sharded build's split rule to too few list rows per shard.
 2. The dedup pair-cache registry is bounded: past ``_PAIR_CACHE_CAP``
    the oldest cache is auto-unpersisted, so sessions unaware of
    ``release_pair_caches()`` cannot accumulate blocks without bound.
@@ -76,6 +76,25 @@ def test_approx_row_count_plain_scan_still_scan_free(spark, arr_parquet,
         lambda self: (_ for _ in ()).throw(
             AssertionError("count() called on plain scan")))
     assert approx_row_count(df) == 2_000
+
+
+def test_approx_row_count_range_leaf_runs_no_job(spark):
+    """``spark.range(n)`` behind a projection has no plan-level row
+    count with CBO off; the Range leaf's count answers without a job,
+    and an explode above it still falls back to the exact count."""
+    from qfspark.sources import approx_row_count
+
+    from .conftest import jobs_started
+
+    df = spark.range(3000).selectExpr("concat('k', id) AS key")
+    est, jobs = jobs_started(
+        spark, lambda: approx_row_count(df, fallback_count=False))
+    assert (est, jobs) == (3000, [])
+    assert approx_row_count(df.where("key < 'k5'"),
+                            fallback_count=False) == 3000  # overestimate
+    ex = spark.range(10).select(F.explode(F.array("id", "id")).alias("x"))
+    assert approx_row_count(ex, fallback_count=False) is None
+    assert approx_row_count(ex) == 20
 
 
 def test_exchange_guard_uses_expanded_count(spark, arr_parquet,

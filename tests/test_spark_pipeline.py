@@ -110,20 +110,24 @@ def test_sharded_build_and_lookup(spark, web_pages):
     assert all(r.qf_seen and r.qf_count == 1 for r in got)
 
 
-def test_hot_key_storage_equals_arrow(spark, tmp_path):
-    """The filesystem exchange must produce byte-identical shards to the
-    default arrow exchange, including under heavy single-key skew."""
+def test_hot_key_split_equals_unsplit(spark, monkeypatch):
+    """A build split into several list rows per shard must produce
+    byte-identical shards to the unsplit build, including under heavy
+    single-key skew (the hot key's rows all land in one sub-row)."""
+    from qfspark import build
+
     hot = spark.range(0, 5000).select(
         F.when(F.col("id") % 3 == 0, F.lit("HOT-KEY"))
         .otherwise(F.concat(F.lit("k"), F.col("id"))).alias("key")
     )
     cfg = QFConfig(counter_bits=32, hash_name="xxhash64")
     a = {r.shard: bytes(r.payload) for r in
-         build_sharded_qf(hot, "key", shard_bits=2, config=cfg,
-                          exchange="arrow").collect()}
-    stored = build_sharded_qf(hot, "key", shard_bits=2, config=cfg,
-                              exchange="storage",
-                              spill_dir=str(tmp_path / "spill")).collect()
+         build_sharded_qf(hot, "key", shard_bits=2, config=cfg).collect()}
+    # 5000 rows (the Range leaf's count) / 4 shards over a bound of 300
+    monkeypatch.setattr(build, "ARROW_MAX_ROWS_PER_SHARD", 300)
+    split = build_sharded_qf(hot, "key", shard_bits=2, config=cfg)
+    stored = split.collect()
+    assert "sub#" in split._jdf.queryExecution().executedPlan().toString()
     b = {r.shard: bytes(r.payload) for r in stored}
     assert a == b
     sharded = load_sharded_qf(stored)
