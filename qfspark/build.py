@@ -72,6 +72,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from . import __version__ as _CODE_VERSION
 from .kernel import QF
@@ -513,6 +515,8 @@ class ShardedQF:
         return bool(f[0]), int(c[0])
 
 
+# the shard-row schema, defined once (``_exchange_arrow`` derives its
+# pyarrow twin from it)
 _SHARD_SCHEMA = (
     "shard long, entries long, q_bits int, payload binary, "
     "payload_path string, hash_name string, counter_bits int, "
@@ -838,7 +842,8 @@ def _exchange_arrow(hashed: DataFrame, sb: int, sub: int, config: QFConfig,
     keys = ["shard", "sub"] if sub > 1 else ["shard"]
     fat = routed.groupBy(*keys).agg(F.collect_list("lh").alias("hv"))
     cfg = config
-    pa_schema = _pa_shard_schema()
+    # the Arrow twin of the DDL, derived on the driver
+    pa_schema = to_arrow_schema(StructType.fromDDL(_SHARD_SCHEMA))
 
     def _build_fat(tbl: "pa.Table") -> "pa.Table":
         if tbl.num_rows == 0:
@@ -854,19 +859,6 @@ def _exchange_arrow(hashed: DataFrame, sb: int, sub: int, config: QFConfig,
         return pa.Table.from_pylist([row], schema=pa_schema)
 
     return fat.groupBy("shard").applyInArrow(_build_fat, _SHARD_SCHEMA)
-
-
-def _pa_shard_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("shard", pa.int64()), ("entries", pa.int64()),
-        ("q_bits", pa.int32()), ("payload", pa.binary()),
-        ("payload_path", pa.string()), ("hash_name", pa.string()),
-        ("counter_bits", pa.int32()), ("shard_bits", pa.int32()),
-        ("n_rows", pa.int64()), ("build_ts", pa.float64()),
-        ("code_version", pa.string()), ("build_secs", pa.float64()),
-    ])
 
 
 def load_sharded_qf(shards_df_or_rows) -> ShardedQF:

@@ -3,7 +3,7 @@
 The relational role of ``Contains`` (reference qf.go:448-459) at DataFrame
 level is a broadcast existence join of the probe column against the key
 set; here it is a broadcast of the filter object itself plus a vectorized
-Arrow pandas UDF probe — constant memory per executor, no shuffle of the
+Arrow UDF probe — constant memory per executor, no shuffle of the
 probed table, no join.
 
 The broadcast pickles the ``QF``/``ShardedQF`` (geometry, entries, word
@@ -23,9 +23,12 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
+# module level: pyspark resolves the probe UDF's string annotations
+# (``pa.Array``) against this module's globals
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from .build import (
     ShardedQF,
@@ -102,25 +105,25 @@ def annotate(
     hash_name = qf.config.hash_name if isinstance(qf, QF) else qf.hash_name
     bc = _broadcast_filter(spark, qf)
 
-    @pandas_udf("struct<seen: boolean, cnt: long>")
-    def _probe(h: pd.Series) -> pd.DataFrame:
-        hv = h.to_numpy(dtype=np.int64).view(np.uint64)
-        found, counts = bc.value.lookup_hashes(hv)
-        return pd.DataFrame(
-            {"seen": found, "cnt": counts.astype(np.int64)}
-        )
+    @arrow_udf("long")
+    def _probe(h: pa.Array) -> pa.Array:
+        hv = h.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+        found, counts = bc.value.lookup_hashes(hv.view(np.uint64))
+        # NULL: not in the filter; else the count's int64 bit pattern
+        return pa.array(counts.view(np.int64), mask=~found)
 
-    probe_struct = _probe(hash_column(col, hash_name, _dtype_of(df, col)))
+    probe = _probe(hash_column(col, hash_name, _dtype_of(df, col)))
     # NULL policy: a NULL key is never a member (builds drop NULLs; see
     # build.py module docstring) — mask instead of hashing NULL, which
     # Spark and byte-oriented engines hash differently
     is_null = F.col(col).isNull()
-    return df.withColumn("_qf_probe", probe_struct).select(
+    return df.withColumn("_qf_probe", probe).select(
         *df.columns,
         F.when(is_null, F.lit(False))
-        .otherwise(F.col("_qf_probe.seen")).alias(seen_col),
+        .otherwise(F.col("_qf_probe").isNotNull()).alias(seen_col),
         F.when(is_null, F.lit(0).cast("long"))
-        .otherwise(F.col("_qf_probe.cnt")).alias(count_col),
+        .otherwise(F.coalesce(F.col("_qf_probe"), F.lit(0).cast("long")))
+        .alias(count_col),
     )
 
 

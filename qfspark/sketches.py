@@ -92,6 +92,7 @@ from __future__ import annotations
 import functools
 import math
 import operator
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -1186,7 +1187,7 @@ def tdigest_build(df: DataFrame, value_col: str,
     own associative merge, so every tree shape honours the k-size
     invariant the rank bound rides on (merge-tree independence is
     pinned in tests/test_sketches.py)."""
-    return _tdigest_collect(df, value_col, [], compression, fan).get(
+    return _collect(df, value_col, [], _TDIGEST, compression, fan).get(
         (), TDigest(compression))
 
 
@@ -1324,26 +1325,30 @@ def kll_build(df: DataFrame, value_col: str, k: int = 256,
     the driver collects at most fan * O(k log) rows regardless of
     partition count. Merge-tree independence within the documented
     merged bound is pinned in tests/test_sketches.py."""
-    return _kll_collect(df, value_col, [], k, fan).get((), KLLSketch(k))
+    return _collect(df, value_col, [], _KLL, k, fan).get((), KLLSketch(k))
 
 
 _FAN = 64  # pre-merge fan-in of the grouped quantile paths (``fan``)
 
 
 # ---------------------------------------------------------------------------
-# grouped KLL (per-group quantiles with the O(1/k) guarantee in one pass)
+# grouped quantile pipeline (KLL and t-digest, per-group quantiles in one
+# pass)
 # ---------------------------------------------------------------------------
 #
-# Same compactor contract as kll_build, independently PER GROUP — the
-# quantile analogue of mg_partials_by/hll_registers_by. Scale shape: one
-# mapInPandas pass maintaining a KLLSketch per group present in the
-# partition (state O(groups-in-partition * k * log(n/k))), emitting
-# (by..., level, value) compactor rows — <= O(k log(n_g/k)) rows per
-# group per partition; the per-group merge then runs as applyInPandas
-# over that TINY partial table (one shuffle keyed by the group columns),
-# so the driver never sees a single data value. This gives per-group
-# rank error O(1/k) — vs the ~1/sqrt(k) of quantiles read off a
-# grouped bottom-k sample of k keys.
+# Same sketch contract as kll_build / tdigest_build, independently PER
+# GROUP — the quantile analogue of mg_partials_by/hll_registers_by. Scale
+# shape: one mapInPandas pass keeping one sketch per group present in
+# the partition and emitting its partial rows — KLL (by..., level, value)
+# compactor rows, <= O(k log(n_g/k)) per group per partition; t-digest
+# (by..., mean, weight) centroid rows, <= O(compression) — then, past
+# the ``fan`` pre-merge, a group-keyed applyInPandas over that TINY
+# partial table (one shuffle keyed by the group columns) rebuilds each
+# group's sketch, so the driver never sees a single data value. KLL
+# gives per-group rank error O(1/k) — vs the ~1/sqrt(k) of quantiles
+# read off a grouped bottom-k sample of k keys; t-digest gives k1-scale
+# tail resolution. Each family rides the pipeline through its
+# ``_QuantileCodec``.
 
 
 def _kll_from_level_rows(level_arr, value_arr, k: int) -> KLLSketch:
@@ -1365,23 +1370,175 @@ def _kll_from_level_rows(level_arr, value_arr, k: int) -> KLLSketch:
     return out
 
 
-def _premerge(partials: DataFrame, by: list[str], fan: int, compact,
-              size: int) -> DataFrame:
-    """Bound the final merge of a KLL / t-digest partial table (one
-    partial sketch per group per input partition): with more than
-    ``fan`` partitions, first merge the partials within
+_TD_FLUSH = 1 << 18  # values buffered per group before folding into
+#                      the running digest (256k * 8 B = 2 MB per group)
+
+
+class _TDBuffer:
+    """One group's t-digest ingestion state in the partial pass: values
+    accumulate as numpy chunks and flush into a running digest every
+    ``_TD_FLUSH`` values, so it holds O(compression + _TD_FLUSH)
+    whatever the partition size."""
+
+    __slots__ = ("compression", "digest", "chunks", "size")
+
+    def __init__(self, compression: int):
+        self.compression = compression
+        self.digest: TDigest | None = None
+        self.chunks: list = []
+        self.size = 0
+
+    def extend(self, values) -> None:
+        if not values.size:
+            return
+        self.chunks.append(values)
+        self.size += values.size
+        if self.size >= _TD_FLUSH:
+            self.finish()
+
+    def finish(self) -> TDigest:
+        """Flush the buffered values; the running digest."""
+        import numpy as np
+
+        if self.chunks:
+            d = TDigest.from_values(np.concatenate(self.chunks),
+                                    self.compression)
+            self.digest = d if self.digest is None else self.digest.merge(d)
+            self.chunks, self.size = [], 0
+        return TDigest(self.compression) if self.digest is None \
+            else self.digest
+
+
+class _QuantileCodec(NamedTuple):
+    """How one quantile family maps onto partial rows. ``start(size)``
+    is a group's ingestion state in the partial pass: its ``extend``
+    takes a float64 batch of values and ``finish(state)`` returns the
+    sketch. ``from_rows(col0, col1, size)`` rebuilds a sketch from its
+    partial rows and ``to_rows(sketch)`` gives those two columns back."""
+
+    cols: tuple[str, str]  # partial-row columns
+    ddl: str               # their DDL
+    start: Callable
+    finish: Callable
+    from_rows: Callable
+    to_rows: Callable
+    min_k: int | None = None  # smallest valid size, if checked
+
+
+_KLL = _QuantileCodec(
+    ("level", "value"), "level int, value double", KLLSketch,
+    lambda sk: sk, _kll_from_level_rows,
+    lambda sk: ([h for h, buf in enumerate(sk.levels) for _ in buf],
+                [v for buf in sk.levels for v in buf]),
+    min_k=2)
+_TDIGEST = _QuantileCodec(
+    ("mean", "weight"), "mean double, weight double", _TDBuffer,
+    _TDBuffer.finish, lambda m, w, c: TDigest.from_rows(zip(m, w), c),
+    lambda d: (d.means, d.weights))
+
+
+def _partials_by(df: DataFrame, value_col: str, by: list[str],
+                 codec: _QuantileCodec, size: int) -> DataFrame:
+    """Step 1, the data pass: per-partition partial rows (by...,
+    *codec.cols) of one sketch per group the partition sees. Group
+    columns are cast to string; rows with a NULL group key or NULL
+    value are excluded."""
+    if codec.min_k is not None and size < codec.min_k:
+        raise ValueError(f"k must be >= {codec.min_k}, got {size}")
+
+    import pandas as pd
+
+    c0, c1 = codec.cols
+
+    def _partial(batches):
+        states: dict[tuple, object] = {}
+        for batch in batches:
+            for kt, grp in _pd_groups(batch, by):
+                st = states.get(kt)
+                if st is None:
+                    states[kt] = st = codec.start(size)
+                st.extend(grp["_v"].to_numpy(dtype="float64"))
+        for kt, st in states.items():
+            a, b = codec.to_rows(codec.finish(st))
+            if not a:
+                continue
+            out = pd.DataFrame({c0: a, c1: b})
+            for c, kv in zip(by, kt):
+                out[c] = kv
+            yield out[by + [c0, c1]]
+
+    sel = _str_cols(by)
+    sel.append(F.col(value_col).cast("double").alias("_v"))
+    return df.where(_not_null(value_col, *by)).select(*sel).mapInPandas(
+        _partial, _schema(by, codec.ddl))
+
+
+def _premerge(partials: DataFrame, by: list[str], fan: int,
+              codec: _QuantileCodec, size: int) -> DataFrame:
+    """Step 2: bound the final merge of a partial table (one partial
+    sketch per group per input partition): with more than ``fan``
+    partitions, first merge the partials within
     (by..., spark_partition_id % fan) groups — a shuffle of the TINY
     partial table only — so each group's final merge folds at most
-    ``fan`` partial sketches whatever the partition count. ``compact``
-    is the family's per-group compaction (the sketch's own associative
-    merge), ``kll_compact_partials_by`` or
-    ``tdigest_compact_partials_by``, with sketch size ``size``."""
+    ``fan`` partial sketches whatever the partition count. The merge is
+    the sketch's own associative one (``_regroup``'s compaction)."""
     if partials.rdd.getNumPartitions() <= fan:
         return partials
-    return compact(
+    return _regroup(
         partials.withColumn(
             "_fan", (F.spark_partition_id() % fan).cast("string")),
-        by + ["_fan"], size).drop("_fan")
+        by + ["_fan"], codec, size).drop("_fan")
+
+
+def _regroup(partials: DataFrame, by: list[str], codec: _QuantileCodec,
+             size: int, qs: list[float] | None = None) -> DataFrame:
+    """Step 3: one group-keyed applyInPandas that rebuilds each group's
+    sketch from its partial rows and emits its (by..., q, est)
+    estimates at ``qs`` or, without ``qs``, its compacted partial
+    rows."""
+    import pandas as pd
+
+    c0, c1 = codec.cols
+    if qs is None:
+        tail, ddl = [c0, c1], codec.ddl
+    else:
+        qs = [float(q) for q in qs]
+        tail, ddl = ["q", "est"], "q double, est double"
+
+    def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        sk = codec.from_rows(pdf[c0], pdf[c1], size)
+        cols = (codec.to_rows(sk) if qs is None
+                else (qs, [sk.quantile(q) for q in qs]))
+        out = pd.DataFrame(dict(zip(tail, cols)))
+        for c in by:
+            out[c] = pdf[c].iloc[0]
+        return out[by + tail]
+
+    return partials.groupBy(*by).applyInPandas(_merge, _schema(by, ddl))
+
+
+def _quantiles_by(df: DataFrame, value_col: str, by: list[str],
+                  qs: list[float], codec: _QuantileCodec,
+                  size: int) -> DataFrame:
+    """(by..., q, est) per group: the three steps end to end."""
+    partials = _premerge(_partials_by(df, value_col, by, codec, size),
+                         by, _FAN, codec, size)
+    return _regroup(partials, by, codec, size, qs)
+
+
+def _collect(df: DataFrame, value_col: str, by: list[str],
+             codec: _QuantileCodec, size: int, fan: int) -> dict:
+    """{group-tuple: sketch} on the driver: partials, the ``fan``
+    pre-merge, one collect, one rebuild per group."""
+    partials = _premerge(_partials_by(df, value_col, by, codec, size),
+                         by, fan, codec, size)
+    c0, c1 = codec.cols
+    acc: dict[tuple, tuple[list, list]] = {}
+    for r in partials.collect():
+        a, b = acc.setdefault(tuple(r[c] for c in by), ([], []))
+        a.append(r[c0])
+        b.append(r[c1])
+    return {g: codec.from_rows(a, b, size) for g, (a, b) in acc.items()}
 
 
 def kll_partials_by(df: DataFrame, value_col: str, by,
@@ -1391,53 +1548,7 @@ def kll_partials_by(df: DataFrame, value_col: str, by,
     sees. Group columns are cast to string; rows with a NULL group key
     or NULL value are excluded (same contract as the other grouped
     sketches)."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    by = _norm_by(by)
-
-    import pandas as pd
-
-    kk = k
-
-    def _partial(batches):
-        sks: dict[tuple, KLLSketch] = {}
-        for b in batches:
-            for kt, grp in _pd_groups(b, by):
-                sk = sks.get(kt)
-                if sk is None:
-                    sks[kt] = sk = KLLSketch(kk)
-                sk.extend(grp["_v"].to_numpy(dtype="float64"))
-        for kt, sk in sks.items():
-            rows = [(h, v) for h, buf in enumerate(sk.levels)
-                    for v in buf]
-            if not rows:
-                continue
-            out = pd.DataFrame({"level": [r[0] for r in rows],
-                                "value": [r[1] for r in rows]})
-            for c, kv in zip(by, kt):
-                out[c] = kv
-            yield out[by + ["level", "value"]]
-
-    sel = _str_cols(by)
-    sel.append(F.col(value_col).cast("double").alias("_v"))
-    return df.where(_not_null(value_col, *by)).select(*sel).mapInPandas(
-        _partial, _schema(by, "level int, value double"))
-
-
-def _kll_collect(df: DataFrame, value_col: str, by: list[str], k: int,
-                 fan: int) -> dict[tuple, KLLSketch]:
-    """{group-tuple: KLLSketch} on the driver: partials, the ``fan``
-    pre-merge, one collect, one fold per group."""
-    partials = _premerge(kll_partials_by(df, value_col, by, k), by, fan,
-                         kll_compact_partials_by, k)
-    acc: dict[tuple, tuple[list, list]] = {}
-    for r in partials.collect():
-        g = tuple(r[c] for c in by)
-        lv = acc.setdefault(g, ([], []))
-        lv[0].append(r["level"])
-        lv[1].append(r["value"])
-    return {g: _kll_from_level_rows(ls, vs, k)
-            for g, (ls, vs) in acc.items()}
+    return _partials_by(df, value_col, _norm_by(by), _KLL, k)
 
 
 def kll_build_by(df: DataFrame, value_col: str, by,
@@ -1447,7 +1558,7 @@ def kll_build_by(df: DataFrame, value_col: str, by,
     ranks, serialization). Driver work/memory is O(groups * k * log);
     for the common read-off-the-quantiles path use the fully
     distributed ``kll_quantiles_by``, whose merge runs on executors."""
-    return _kll_collect(df, value_col, _norm_by(by), k, _FAN)
+    return _collect(df, value_col, _norm_by(by), _KLL, k, _FAN)
 
 
 def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
@@ -1456,25 +1567,7 @@ def kll_quantiles_by(df: DataFrame, value_col: str, by, qs: list[float],
     distributed: one data pass for the partials, one group-keyed
     shuffle of the tiny partial table, per-group merge + read-off
     inside applyInPandas. Rank error O(1/k) per group."""
-    by = _norm_by(by)
-    qs_l = [float(q) for q in qs]
-    kk = k
-
-    import pandas as pd
-
-    partials = _premerge(kll_partials_by(df, value_col, by, k), by, _FAN,
-                         kll_compact_partials_by, k)
-
-    def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
-        out = pd.DataFrame({"q": qs_l,
-                            "est": [sk.quantile(q) for q in qs_l]})
-        for c in by:
-            out[c] = pdf[c].iloc[0]
-        return out[by + ["q", "est"]]
-
-    return partials.groupBy(*by).applyInPandas(
-        _merge, _schema(by, "q double, est double"))
+    return _quantiles_by(df, value_col, _norm_by(by), qs, _KLL, k)
 
 
 def kll_merge_partials_by(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1490,39 +1583,7 @@ def kll_compact_partials_by(df: DataFrame, by, k: int = 256) -> DataFrame:
     <= O(k log n_g) rows per group (the grouped twin of
     ``kll_compact_partials``; the streaming ``kll_by`` kind's state
     bound)."""
-    import pandas as pd
-
-    by = _norm_by(by)
-    kk = k
-
-    def _compact(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        sk = _kll_from_level_rows(pdf["level"], pdf["value"], kk)
-        rows = [(h, v) for h, buf in enumerate(sk.levels) for v in buf]
-        out = pd.DataFrame({"level": [r[0] for r in rows],
-                            "value": [r[1] for r in rows]})
-        for c in by:
-            out[c] = pdf[c].iloc[0]
-        return out[by + ["level", "value"]]
-
-    return df.groupBy(*by).applyInPandas(
-        _compact, _schema(by, "level int, value double"))
-
-
-# ---------------------------------------------------------------------------
-# grouped t-digest (per-group quantiles, k1-scale tail resolution)
-# ---------------------------------------------------------------------------
-#
-# The t-digest twin of the grouped-KLL family: same two-stage shape —
-# one mapInPandas data pass emitting (by..., mean, weight) centroid
-# rows (<= O(compression) rows per group per partition), then a
-# group-keyed applyInPandas merge over that TINY partial table. Per
-# partition, each group's values accumulate as numpy chunks and flush
-# into a running digest every _TD_FLUSH values, so partial-state memory
-# is O(groups-in-partition * (compression + _TD_FLUSH)) regardless of
-# partition size. No data value ever reaches the driver.
-
-_TD_FLUSH = 1 << 18  # values buffered per group before folding into
-#                      the running digest (256k * 8 B = 2 MB per group)
+    return _regroup(df, _norm_by(by), _KLL, k)
 
 
 def tdigest_partials_by(df: DataFrame, value_col: str, by,
@@ -1531,68 +1592,7 @@ def tdigest_partials_by(df: DataFrame, value_col: str, by,
     weight). Group columns are cast to string; rows with a NULL group
     key or NULL value are excluded (same contract as the other grouped
     sketches)."""
-    by = _norm_by(by)
-
-    import pandas as pd
-
-    comp = compression
-
-    def _partial(batches):
-        import numpy as np
-
-        digs: dict[tuple, TDigest | None] = {}
-        bufs: dict[tuple, list] = {}
-        sizes: dict[tuple, int] = {}
-
-        def _flush(kt):
-            arrs = bufs.get(kt)
-            if not arrs:
-                return
-            d = TDigest.from_values(np.concatenate(arrs), comp)
-            prev = digs.get(kt)
-            digs[kt] = d if prev is None else prev.merge(d)
-            bufs[kt] = []
-            sizes[kt] = 0
-
-        for b in batches:
-            for kt, grp in _pd_groups(b, by):
-                a = grp["_v"].to_numpy(dtype="float64")
-                if not a.size:
-                    continue
-                bufs.setdefault(kt, []).append(a)
-                sizes[kt] = sizes.get(kt, 0) + a.size
-                digs.setdefault(kt, None)
-                if sizes[kt] >= _TD_FLUSH:
-                    _flush(kt)
-        for kt in list(digs):
-            _flush(kt)
-            d = digs[kt]
-            if d is None or not d.means:
-                continue
-            out = pd.DataFrame({"mean": d.means, "weight": d.weights})
-            for c, kv in zip(by, kt):
-                out[c] = kv
-            yield out[by + ["mean", "weight"]]
-
-    sel = _str_cols(by)
-    sel.append(F.col(value_col).cast("double").alias("_v"))
-    return df.where(_not_null(value_col, *by)).select(*sel).mapInPandas(
-        _partial, _schema(by, "mean double, weight double"))
-
-
-def _tdigest_collect(df: DataFrame, value_col: str, by: list[str],
-                     compression: int, fan: int) -> dict[tuple, TDigest]:
-    """{group-tuple: TDigest} on the driver: partials, the ``fan``
-    pre-merge, one collect, one fold per group."""
-    partials = _premerge(
-        tdigest_partials_by(df, value_col, by, compression), by, fan,
-        tdigest_compact_partials_by, compression)
-    acc: dict[tuple, list] = {}
-    for r in partials.collect():
-        acc.setdefault(tuple(r[c] for c in by), []).append(
-            (r["mean"], r["weight"]))
-    return {g: TDigest.from_rows(pairs, compression)
-            for g, pairs in acc.items()}
+    return _partials_by(df, value_col, _norm_by(by), _TDIGEST, compression)
 
 
 def tdigest_build_by(df: DataFrame, value_col: str, by,
@@ -1602,7 +1602,8 @@ def tdigest_build_by(df: DataFrame, value_col: str, by,
     work/memory is O(groups * compression); for the read-off-the-
     quantiles path use the fully distributed ``tdigest_quantiles_by``,
     whose merge runs on executors."""
-    return _tdigest_collect(df, value_col, _norm_by(by), compression, _FAN)
+    return _collect(df, value_col, _norm_by(by), _TDIGEST, compression,
+                    _FAN)
 
 
 def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
@@ -1612,26 +1613,8 @@ def tdigest_quantiles_by(df: DataFrame, value_col: str, by,
     distributed: one data pass for the centroid partials, one
     group-keyed shuffle of the tiny partial table, per-group merge +
     read-off inside applyInPandas (mirror of ``kll_quantiles_by``)."""
-    by = _norm_by(by)
-    qs_l = [float(q) for q in qs]
-    comp = compression
-
-    import pandas as pd
-
-    partials = _premerge(
-        tdigest_partials_by(df, value_col, by, compression), by, _FAN,
-        tdigest_compact_partials_by, compression)
-
-    def _merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d = TDigest.from_rows(zip(pdf["mean"], pdf["weight"]), comp)
-        out = pd.DataFrame({"q": qs_l,
-                            "est": [d.quantile(q) for q in qs_l]})
-        for c in by:
-            out[c] = pdf[c].iloc[0]
-        return out[by + ["q", "est"]]
-
-    return partials.groupBy(*by).applyInPandas(
-        _merge, _schema(by, "q double, est double"))
+    return _quantiles_by(df, value_col, _norm_by(by), qs, _TDIGEST,
+                         compression)
 
 
 def tdigest_merge_partials_by(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -1647,20 +1630,7 @@ def tdigest_compact_partials_by(df: DataFrame, by,
     """Per-group compaction of a grouped centroid-row table back to
     <= O(compression) rows per group (the grouped twin of the merge
     step; bounds state if partials accumulate across batches)."""
-    import pandas as pd
-
-    by = _norm_by(by)
-    comp = compression
-
-    def _compact(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d = TDigest.from_rows(zip(pdf["mean"], pdf["weight"]), comp)
-        out = pd.DataFrame({"mean": d.means, "weight": d.weights})
-        for c in by:
-            out[c] = pdf[c].iloc[0]
-        return out[by + ["mean", "weight"]]
-
-    return df.groupBy(*by).applyInPandas(
-        _compact, _schema(by, "mean double, weight double"))
+    return _regroup(df, _norm_by(by), _TDIGEST, compression)
 
 
 # ===========================================================================
@@ -1722,16 +1692,16 @@ def quantile_bound_check_by(df: DataFrame, value_col: str, by,
     reaches the driver (``by=[]`` is the global checker)."""
     by = _norm_by(by)
     if kind == "kll":
-        if bound is None:
-            bound = 12.0 / k  # same property-tested constant as the
-            #                   global KLL gate (quantile_bound_check)
-        est = kll_quantiles_by(df, value_col, by, qs, k)
+        # 12/k: same property-tested constant as the global KLL gate
+        # (quantile_bound_check)
+        codec, size, scale = _KLL, k, 12.0
     elif kind == "tdigest":
-        if bound is None:
-            bound = 8.0 / compression
-        est = tdigest_quantiles_by(df, value_col, by, qs, compression)
+        codec, size, scale = _TDIGEST, compression, 8.0
     else:
         raise ValueError(f"unknown sketch kind {kind!r}")
+    if bound is None:
+        bound = scale / size
+    est = _quantiles_by(df, value_col, by, qs, codec, size)
     vals = df.where(_not_null(value_col, *by)).select(
         *_str_cols(by), F.col(value_col).cast("double").alias("_v"))
     # x|qs| row fan-out, map-side
@@ -1868,6 +1838,54 @@ def duckdb_mg_heavy_sql(col: str, k: int, source: str) -> str:
 # scan of the corpus.
 
 
+def _mg_fold(batches, by: list[str], k: int, weighted: bool,
+            counts=None):
+    """The Misra-Gries per-batch fold of ``mg_partials_by`` and
+    ``streaming.windowed_heavy_hitters``: each pandas batch's
+    (by..., item) counts — sums of its ``wt`` column when ``weighted``
+    — add into the running ``counts``, and every group is pruned after
+    EVERY batch, not once at the end: the group's (k+1)-th largest
+    counter is subtracted from all of its counters and the
+    non-positives dropped. The running state stays O(k +
+    batch-distinct) per group — a partition with 10^8 distinct keys
+    never materializes them all — and each prune removes >= (k+1)*t_g
+    of group g's counter mass, the accounting the n/(k+1) bound rides
+    on.
+
+    With no group columns a constant stand-in level ``_mg_all`` keeps
+    the counter index a MultiIndex (group levels..., item). Returns
+    (counts, t_tot): the int64 counters on that index and the total
+    subtracted per group (both None if no batch came); ``counts`` may
+    carry in a previous fold's counters."""
+    keys = by or ["_mg_all"]
+    glev = list(range(len(keys)))  # group levels of the (keys, item) index
+    t_tot = None
+    for b in batches:
+        if not len(b):
+            continue
+        if not by:
+            b = b.assign(_mg_all=0)
+        if weighted:
+            # drop null weights too: a null weight would become NaN in
+            # the groupby sum and fail the int64 cast opaquely
+            sub = b.dropna(subset=["item", "wt"])
+            if (sub["wt"] < 0).any():
+                raise ValueError("Misra-Gries weights must be non-negative")
+            vc = sub.groupby(keys + ["item"])["wt"].sum()
+        else:
+            vc = b.dropna(subset=["item"]).groupby(keys + ["item"]).size()
+        counts = vc if counts is None else counts.add(vc, fill_value=0)
+        counts = counts.astype("int64")
+        s = counts.sort_values(ascending=False)
+        t = s[s.groupby(level=glev).cumcount() == k].droplevel(-1)
+        if len(t):
+            tvals = t.reindex(counts.index.droplevel(-1)).fillna(0)
+            counts = counts - tvals.to_numpy().astype("int64")
+            counts = counts[counts > 0]
+        t_tot = t if t_tot is None else t_tot.add(t, fill_value=0)
+    return counts, t_tot
+
+
 def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
                    weight_col: str | None = None) -> DataFrame:
     """Per-partition grouped Misra-Gries summaries: <= k data rows plus
@@ -1882,51 +1900,10 @@ def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
 
     import pandas as pd
 
-    # with no group columns a constant stand-in level keeps the counter
-    # index a MultiIndex, so droplevel(-1) always has a level to keep
     keys = by or ["_mg_all"]
-    glev = list(range(len(keys)))  # group levels of the (keys, item) index
-
-    def _prune_by(counts: "pd.Series"):
-        """Per group: subtract the (k+1)-th largest count from every
-        counter in that group, drop non-positives. Returns (pruned,
-        t_per_group) — the per-group subtraction amounts the error
-        accounting rides on (each removes >= (k+1)*t_g of that group's
-        counter mass)."""
-        s = counts.sort_values(ascending=False)
-        rank = s.groupby(level=glev).cumcount()
-        t = s[rank == k]
-        if t.empty:
-            return counts, t.droplevel(-1)
-        t = t.droplevel(-1)
-        tvals = t.reindex(counts.index.droplevel(-1)).fillna(0).to_numpy()
-        pruned = counts - tvals.astype("int64")
-        return pruned[pruned > 0], t
 
     def _partial(batches):
-        # prune after EVERY Arrow batch, not once at the end: the
-        # running state stays O(k + batch-distinct) per group — a
-        # partition with 10^8 distinct keys must never materialize them
-        # all (the documented <= k+1 rows-per-group scale shape)
-        counts = None
-        t_tot = None
-        for b in batches:
-            if not by:
-                b = b.assign(_mg_all=0)
-            if weight_col is None:
-                sub = b.dropna(subset=["item"])
-                vc = sub.groupby(keys + ["item"]).size()
-            else:
-                # drop null weights too: a null weight would become NaN
-                # in the groupby sum and fail the int64 cast opaquely
-                sub = b.dropna(subset=["item", "w"])
-                if (sub["w"] < 0).any():
-                    raise ValueError(
-                        "mg_summary weights must be non-negative")
-                vc = sub.groupby(keys + ["item"])["w"].sum()
-            counts = vc if counts is None else counts.add(vc, fill_value=0)
-            counts, t = _prune_by(counts.astype("int64"))
-            t_tot = t if t_tot is None else t_tot.add(t, fill_value=0)
+        counts, t_tot = _mg_fold(batches, by, k, weight_col is not None)
         if counts is None:
             return
         out = counts.reset_index()
@@ -1948,7 +1925,7 @@ def mg_partials_by(df: DataFrame, col: str, by, k: int = 256,
     sel = _str_cols(by)
     sel.append(F.col(col).cast("string").alias("item"))
     if weight_col is not None:
-        sel.append(F.col(weight_col).cast("long").alias("w"))
+        sel.append(F.col(weight_col).cast("long").alias("wt"))
     return df.where(_not_null(col, *by)).select(*sel).mapInPandas(
         _partial, _schema(by, "item string, est long, err long"))
 

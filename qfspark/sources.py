@@ -72,7 +72,9 @@ def read_table(spark: SparkSession, location: str, fmt: str = "auto",
 
 
 def _is_catalog_table(spark: SparkSession, location: str) -> bool:
-    return iceberg_available(spark) and "/" not in location
+    # the string test first: the probe is a JVM Class.forName that
+    # raises (and pyspark converts) for every path
+    return "/" not in location and iceberg_available(spark)
 
 
 def write_checkpoint(df: DataFrame, location: str, fmt: str = "auto",

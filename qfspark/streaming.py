@@ -33,6 +33,7 @@ from .build import (DEFAULT_HASH, build_sharded_qf, hash_column,
 from .kernel import QF
 from .serde import qf_from_bytes, qf_to_bytes
 from .sizing import QFConfig
+from .sketches import _mg_fold
 from .sources import commit_version, log_versions, prune_log
 
 
@@ -532,9 +533,10 @@ def windowed_heavy_hitters(
 
     Scale shape: the shuffle moving rows to their (window, shard) group
     carries two/three columns (window struct, item[, weight]); per-batch
-    per-group work is one vectorized ``value_counts`` + an O(k log k)
-    prune (classic streaming MG: prune after every batch, so the
-    in-flight dict holds <= k + batch-distinct entries); <= k rows leave
+    per-group work is one vectorized count + an O(k log k) prune — the
+    batch fold of ``sketches.mg_partials_by`` (classic streaming MG:
+    prune after every batch, so the in-flight counters hold
+    <= k + batch-distinct entries); <= k rows leave
     each group only when its window closes. Like any Misra-Gries run the
     surviving counter set depends on arrival order, so closed-window
     rows are gated on the bound above vs a batch count over the
@@ -598,40 +600,22 @@ def windowed_heavy_hitters(
                         "err": [err] * len(items),
                     })
             return
+        running, err = None, 0
         if state.exists:
             items, counts, err = state.get
-            running = pd.Series(list(counts),
-                                index=list(items), dtype="int64")
-            err = int(err)
-        else:
-            running, err = None, 0
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            if weight_col is None:
-                vc = pdf["item"].value_counts()
-            else:
-                sub = pdf.dropna(subset=["wt"])
-                if (sub["wt"] < 0).any():
-                    raise ValueError(
-                        "windowed_heavy_hitters weights must be "
-                        "non-negative")
-                vc = sub.groupby("item")["wt"].sum()
-            running = vc if running is None \
-                else running.add(vc, fill_value=0)
-            running = running.astype("int64")
-            if len(running) > k:
-                # subtract the (k+1)-th largest from every counter and
-                # drop the non-positives — removes >= (k+1)*t of
-                # counter mass, the accounting the n/(k+1) bound
-                # rides on
-                t = int(running.sort_values(ascending=False).iloc[k])
-                running = running - t
-                running = running[running > 0]
-                err += t
+            # the fold's (stand-in group level, item) counter index
+            running = pd.Series(
+                list(counts), dtype="int64",
+                index=pd.MultiIndex.from_arrays(
+                    [[0] * len(items), list(items)],
+                    names=["_mg_all", "item"]))
+        running, t_tot = _mg_fold(pdf_iter, [], k, weight_col is not None,
+                                  running)
         if running is not None:
-            state.update((list(map(str, running.index)),
-                          [int(c) for c in running.to_numpy()], err))
+            err = int(err) + (0 if t_tot is None else int(t_tot.sum()))
+            state.update((
+                list(map(str, running.index.get_level_values("item"))),
+                [int(c) for c in running.to_numpy()], err))
             # evict when the watermark passes the window end (strictly
             # later than the current watermark: every row reaching this
             # group has ts >= watermark and ts < window_end)

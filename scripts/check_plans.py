@@ -248,6 +248,20 @@ def main():
           r"BroadcastHashJoin|BroadcastExchange")
     check("grouped KLL bound check has no sort of the corpus", p11g,
           r"\bSortMergeJoin\b", must_exist=False)
+    # 11h. grouped t-digest: the same pipeline as 11f/11g, so the same
+    # nodes — a change to the shared path cannot alter one family only
+    p11h = plan_of(sketches.tdigest_quantiles_by(
+        docs, "n_chars", ["lang"], [0.5], 16))
+    check("grouped t-digest partials are Arrow-eval", p11h,
+          r"MapInPandas|ArrowEvalPython|FlatMapGroupsInPandas")
+    check("grouped t-digest has no row-python", p11h, r"BatchEvalPython",
+          must_exist=False)
+    p11h2 = plan_of(sketches.quantile_bound_check_by(
+        docs, "n_chars", ["lang"], [0.5], kind="tdigest", compression=16))
+    check("grouped t-digest bound check broadcasts estimates", p11h2,
+          r"BroadcastHashJoin|BroadcastExchange")
+    check("grouped t-digest bound check has no sort of the corpus", p11h2,
+          r"\bSortMergeJoin\b", must_exist=False)
     # KMV sketch executes as TakeOrdered (never a full sort)
     p11c = plan_of(sketches.kmv_sketch(wp, "url", 256))
     check("KMV bottom-k is TakeOrdered", p11c,

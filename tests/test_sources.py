@@ -3,6 +3,7 @@ the Iceberg path when the runtime is absent."""
 
 import pytest
 
+from qfspark import sources
 from qfspark.sources import iceberg_available, read_table
 
 from .conftest import SF_DIR
@@ -29,3 +30,26 @@ def test_iceberg_errors_informatively_when_missing(spark):
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError):
         read_table(spark, "x.parquet", fmt="orc2")
+
+
+def test_paths_never_probe_for_iceberg(spark, tmp_path, monkeypatch):
+    """A path is never a catalog table, so ``table_dir`` and an auto
+    ``write_checkpoint`` decide without the JVM class probe (which
+    raises, and pyspark converts, on every call); an identifier still
+    probes."""
+    probes = []
+
+    def _probe(_spark):
+        probes.append(1)
+        raise AssertionError("iceberg probe for a path")
+
+    monkeypatch.setattr(sources, "iceberg_available", _probe)
+    path = str(tmp_path / "ckpt")
+    assert sources.table_dir(spark, path) == path
+    sources.write_checkpoint(spark.range(3), path, fmt="auto")
+    assert spark.read.parquet(path).count() == 3
+    assert not probes
+    monkeypatch.setattr(sources, "iceberg_available",
+                        lambda _spark: probes.append(1) or False)
+    assert sources.table_dir(spark, "db.shards") == "db.shards"
+    assert probes == [1]
