@@ -18,9 +18,11 @@ Two build strategies, both shaped for the 10^12-row design point:
     ``shard_bits`` of the hash so each shard owns a contiguous,
     uniformly-loaded hash range. Each shard stores ``hash << shard_bits``
     (the shard id carries the top bits — lossless, and quotients stay
-    uniform within each shard's table). Shards checkpoint to a parquet
-    table with lineage metadata, committed from the driver in one atomic
-    file rename, and builds resume by skipping shards already present.
+    uniform within each shard's table). Shards checkpoint to a versioned
+    table of lineage rows: each version is the whole shard table,
+    committed from the driver as the next entry of the table's log
+    (``sources.commit_version``), and builds resume by skipping the
+    shards the newest version holds.
 
     One exchange, because the expensive step at scale is *moving the
     hashes to their shard builder*: hashes stay JVM-side through routing
@@ -75,7 +77,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from . import __version__ as _CODE_VERSION
+from . import __version__ as _CODE_VERSION, sources
 from .kernel import QF
 from .serde import qf_from_bytes, qf_to_bytes
 from .sizing import QFConfig
@@ -246,11 +248,7 @@ def build_qf(
 def _small_enough_to_collect(hashed: DataFrame) -> bool:
     """True when an action-free row estimate bounds ``hashed`` at
     ``SMALL_BUILD_COLLECT_ROWS``; an unknown estimate is not small."""
-    if not hasattr(hashed, "toArrow"):  # pragma: no cover - pyspark < 4
-        return False
-    from .sources import approx_row_count
-
-    est = approx_row_count(hashed, fallback_count=False)
+    est = sources.approx_row_count(hashed, fallback_count=False)
     return est is not None and est <= SMALL_BUILD_COLLECT_ROWS
 
 
@@ -266,13 +264,9 @@ def _build_from_partials(hashed: DataFrame, config: QFConfig,
         partials_df = tree_merge(partials_df, config, fanout=tree_fanout,
                                  n_partials=n_parts,
                                  stop_at=driver_merge_limit)
-    blobs = partials_df.select("hashes", "counts")
-    if hasattr(blobs, "toArrow"):
-        tbl = blobs.toArrow()
-        rows = list(zip(tbl.column("hashes").to_pylist(),
-                        tbl.column("counts").to_pylist()))
-    else:  # pragma: no cover - pyspark < 4
-        rows = [(bytes(r.hashes), bytes(r.counts)) for r in blobs.collect()]
+    tbl = partials_df.select("hashes", "counts").toArrow()
+    rows = list(zip(tbl.column("hashes").to_pylist(),
+                    tbl.column("counts").to_pylist()))
     if not rows:
         return QF(config)
     hv, counts = _merge_hash_blobs(rows, config.counter_bits)
@@ -304,16 +298,13 @@ def build_qf_from_counts(
     hashed = with_hash(keys, col, config.hash_name).select(
         HASH_COL, F.col(count_col).cast("long").alias("_qf_n"))
     tbl = None
-    if hasattr(hashed, "toArrow"):
-        from .sources import approx_row_count
-
-        est = approx_row_count(hashed, fallback_count=False)
-        if est is None:
-            tbl = hashed.limit(SMALL_BUILD_COLLECT_ROWS + 1).toArrow()
-            if tbl.num_rows > SMALL_BUILD_COLLECT_ROWS:
-                tbl = None
-        elif est <= SMALL_BUILD_COLLECT_ROWS:
-            tbl = hashed.toArrow()
+    est = sources.approx_row_count(hashed, fallback_count=False)
+    if est is None:
+        tbl = hashed.limit(SMALL_BUILD_COLLECT_ROWS + 1).toArrow()
+        if tbl.num_rows > SMALL_BUILD_COLLECT_ROWS:
+            tbl = None
+    elif est <= SMALL_BUILD_COLLECT_ROWS:
+        tbl = hashed.toArrow()
     if tbl is None:
         return _build_from_partials(hashed, config, count_col="_qf_n")
     hv = np.asarray(
@@ -431,14 +422,12 @@ class ShardedQF:
             raise ValueError("shard_bits must be in [0, 32]")
         self.shard_bits = shard_bits
         self.shards = shards
-        names = {qf.config.hash_name for qf in shards.values()}
-        cbits = {qf.config.counter_bits for qf in shards.values()}
-        packed = {qf.config.bit_packed for qf in shards.values()}
-        if len(names) > 1 or len(cbits) > 1 or len(packed) > 1:
+        cfgs = {(qf.config.hash_name, qf.config.counter_bits,
+                 qf.config.bit_packed) for qf in shards.values()}
+        if len(cfgs) > 1:
             raise ValueError("inconsistent shard configs")
-        self.hash_name = names.pop() if names else DEFAULT_HASH
-        self.counter_bits = cbits.pop() if cbits else 0
-        self.bit_packed = packed.pop() if packed else False
+        self.hash_name, self.counter_bits, self.bit_packed = (
+            cfgs.pop() if cfgs else (DEFAULT_HASH, 0, False))
 
     def __reduce__(self):
         # the shards carry everything; the config fields are derived
@@ -486,10 +475,10 @@ class ShardedQF:
         """Collapse all shards into one monolithic QF (reconstructing the
         original hashes: shard id supplies the top bits). For export /
         interop at cardinalities that fit one machine."""
+        cfg = QFConfig(counter_bits=self.counter_bits,
+                       bit_packed=self.bit_packed, hash_name=self.hash_name)
         if not self.shards:
-            return QF(QFConfig(counter_bits=self.counter_bits,
-                               bit_packed=self.bit_packed,
-                               hash_name=self.hash_name))
+            return QF(cfg)
         sb = np.uint64(self.shard_bits)
         hvs, cnts = [], []
         for s in sorted(self.shards):
@@ -502,8 +491,6 @@ class ShardedQF:
         hv = np.concatenate(hvs)
         counts = np.concatenate(cnts) if cnts else None
         # shards own disjoint ascending hash ranges -> hv is sorted unique
-        cfg = QFConfig(counter_bits=self.counter_bits,
-                       bit_packed=self.bit_packed, hash_name=self.hash_name)
         return QF.from_hashes(hv, counts, cfg, assume_unique=True)
 
     def contains(self, key) -> bool:
@@ -528,11 +515,9 @@ _SHARD_SCHEMA = (
 def shard_payload_bytes(row) -> bytes:
     """The serialized filter for a shard-table row: inline ``payload``
     bytes, or the ``payload_path`` sidecar file written executor-side."""
-    payload = row["payload"] if not hasattr(row, "payload") else row.payload
+    payload, path = row["payload"], row["payload_path"]
     if payload is not None and len(payload) > 0:
         return bytes(payload)
-    path = (row["payload_path"] if not hasattr(row, "payload_path")
-            else row.payload_path)
     if not path:
         raise ValueError("shard row has neither payload nor payload_path")
     with open(path, "rb") as f:
@@ -628,132 +613,130 @@ def build_sharded_qf(
     returns the shard lineage rows to the driver (filter bytes never
     do: without ``payload_dir`` the payloads are written as sidecars
     under ``<checkpoint_path>/_payloads/``, which table readers skip).
-    The driver commits those rows (``sources.commit_rows``): for a path,
-    one parquet file renamed into place, so readers never see an empty
-    or half-written table; for a catalog identifier (which needs
-    ``payload_dir``), ``writeTo``. ``resume=True`` skips shards already
-    present, appends only the missing ones, and returns
-    ``latest_shards`` over the existing rows plus the new ones;
-    ``resume=False`` overwrites the checkpoint (deleting the previous
-    data files and unreferenced ``_payloads/`` sidecars after the
-    rename) and returns the new rows as a local DataFrame. Readers keep
-    only the newest row per shard, so an interrupted overwrite still
-    answers from the new rows.
+    For a path, the driver commits the rows as the next version of the
+    checkpoint's log (``sources.commit_version``): ``resume=True`` skips
+    the shards the newest version holds and commits its rows plus the
+    new ones, ``resume=False`` commits the new rows alone, and the
+    writer keeps the newest two versions and the sidecars they name. A
+    catalog identifier (which needs ``payload_dir``) commits through
+    ``writeTo``. Returns the committed table as a local DataFrame;
+    ``read_shards`` reads a checkpoint back.
     """
-    from .sources import approx_row_count
-
     config = config or QFConfig(hash_name=DEFAULT_HASH, counter_bits=32)
     spark = df.sparkSession
     sb = shard_bits
 
     hashed = with_hash(_keys_nonnull(df, col), col,
                        config.hash_name).select(HASH_COL)
-    est = approx_row_count(hashed, fallback_count=False)
+    est = sources.approx_row_count(hashed, fallback_count=False)
     sub = max(1, math.ceil((est or 0) / (1 << sb) / ARROW_MAX_ROWS_PER_SHARD))
 
-    default_payloads = bool(checkpoint_path) and not payload_dir
-    if default_payloads:
-        payload_dir = _checkpoint_payload_dir(spark, checkpoint_path)
-    done: set[int] = set()
-    existing = None
-    if checkpoint_path and resume:
-        from pyspark.errors import AnalysisException
-
-        from .sources import read_table
-
-        try:
-            # merge_schema: a resumed directory may mix files written by
-            # different library versions (see _align_resume_schema)
-            existing = read_table(spark, checkpoint_path, merge_schema=True)
-            done = {int(r.shard) for r in
-                    existing.select("shard").distinct().collect()}
-        except AnalysisException:  # no table yet: build every shard
-            existing = None
-
-    shards_df = _exchange_arrow(hashed, sb, sub, config, done, payload_dir)
     if not checkpoint_path:
-        return shards_df
+        return _exchange_arrow(hashed, sb, sub, config, set(), payload_dir)
+    payload_dir = payload_dir or _checkpoint_payload_dir(spark,
+                                                         checkpoint_path)
     return _commit_shards(
-        spark, shards_df, checkpoint_path,
-        "append" if resume else "overwrite", existing,
-        gc_dir=payload_dir if default_payloads and not resume else None)
+        spark, checkpoint_path, resume, lambda done: _exchange_arrow(
+            hashed, sb, sub, config, done, payload_dir))
 
 
 def _checkpoint_payload_dir(spark, checkpoint_path: str) -> str:
     """``<checkpoint_path>/_payloads``: where a checkpointed build
     without ``payload_dir`` writes its sidecars, so that committing the
     lineage rows never moves filter bytes through the driver."""
-    from .sources import PAYLOADS_DIR, table_dir
-
-    path = table_dir(spark, checkpoint_path)
+    path = sources.table_dir(spark, checkpoint_path)
     if path is None:
         raise ValueError(
             "a catalog-table checkpoint has no directory for payload "
             "sidecars; pass payload_dir")
-    payload_dir = os.path.join(path, PAYLOADS_DIR)
+    payload_dir = os.path.join(path, sources.PAYLOADS_DIR)
     os.makedirs(payload_dir, exist_ok=True)
     return payload_dir
 
 
-def _commit_shards(spark, shards_df: DataFrame, checkpoint_path: str,
-                   mode: str, existing: DataFrame | None = None,
-                   gc_dir: str | None = None) -> DataFrame:
-    """Run the shard build as one query, commit its lineage rows to the
-    checkpoint (``mode`` 'append' or 'overwrite') and return the shard
-    table: the new rows, or ``latest_shards`` over ``existing`` (the
-    table read before a resumed build) plus the new rows. After an
-    overwrite, sidecars in ``gc_dir`` that no new row references (the
-    previous table's payloads) are deleted."""
-    from .sources import commit_rows
+def _commit_shards(spark, location: str, resume: bool,
+                   build) -> DataFrame:
+    """Run ``build(done)``, the shard table without the shards ``done``,
+    as one query, commit its lineage rows at ``location`` and return the
+    committed table as a local DataFrame.
 
-    rows = shards_df.toArrow()
-    if existing is not None:
-        rows = _align_resume_schema(rows, existing.schema)
-    if existing is None or rows.num_rows:
-        commit_rows(spark, rows, checkpoint_path, mode=mode)
-    if gc_dir:
-        keep = {os.path.basename(p)
-                for p in rows.column("payload_path").to_pylist() if p}
-        for name in os.listdir(gc_dir):
-            if name not in keep:
-                os.remove(os.path.join(gc_dir, name))
-    new = spark.createDataFrame(rows)
-    if existing is None:
-        return new
-    return latest_shards(existing.unionByName(new, allowMissingColumns=True))
-
-
-def _align_resume_schema(rows, existing_schema):
-    """Align a resumed build's Arrow lineage rows to the existing
-    checkpoint's (Spark) schema before appending. A checkpoint written by
-    an older library version lacks newer lineage columns (pre-0.3.0 has
-    no ``build_secs``) and may carry columns this version dropped. Readers
-    without mergeSchema pick one footer's schema, and an Iceberg append
-    fails on a mismatch, so legacy-only columns are null-filled on the
-    new rows, in the existing order; new-only columns are kept at the
-    end."""
+    A path commits the next version of its log, whose entry lists the
+    shard ids. A resume skips the newest entry's shards and commits
+    that version's rows (read on the driver with pyarrow: no Spark job)
+    plus the new ones, joined by a schema-promoting Arrow concat; or
+    nothing, when no shard was missing. A catalog identifier has no
+    log: a resume reads its shard ids and appends through ``writeTo``."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    import pyarrow.parquet as pq
 
-    names = existing_schema.names
-    for f in existing_schema.fields:
-        if f.name not in rows.column_names:
-            rows = rows.append_column(
-                f.name, pa.nulls(rows.num_rows, to_arrow_type(f.dataType)))
-    return rows.select(
-        names + [c for c in rows.column_names if c not in names])
+    path = sources.table_dir(spark, location)
+    if path is None:  # a catalog identifier: the catalog's atomic commit
+        done = ({int(r.shard) for r in read_shards(spark, location)
+                 .select("shard").collect()}
+                if resume and spark.catalog.tableExists(location) else set())
+        rows = build(done).toArrow()
+        sources.write_checkpoint(spark.createDataFrame(rows), location,
+                                 mode="append" if done else "overwrite")
+        return (read_shards(spark, location) if done
+                else spark.createDataFrame(rows))
+    head, base = sources._read_entry(path, pq.read_table)
+    resume = resume and head is not None
+    rows = build(set(head["shards"]) if resume else set()).toArrow()
+    if resume:
+        if not rows.num_rows:  # every shard was committed already
+            return spark.createDataFrame(base)
+        rows = pa.concat_tables([base, rows], promote_options="default")
+    sources.commit_version(rows, path, (head["version"] if head else 0) + 1,
+                           shards=rows.column("shard").to_pylist())
+    sources.prune_log(path)
+    return spark.createDataFrame(rows)
 
 
-def latest_shards(shards_df: DataFrame) -> DataFrame:
-    """Keep only the newest row per shard (max build_ts): a resumed or
-    re-run build may have appended a shard twice; probing a stale row
-    would silently violate the zero-false-negative contract."""
+def read_shards(spark: SparkSession, location: str) -> DataFrame:
+    """The shard table committed at ``location``: the newest version of
+    a checkpoint path's log. A catalog identifier, or a directory a
+    build wrote before the log (its parquet files at the top level), is
+    read whole and keeps the newest ``build_ts`` row per shard, since
+    those commits could leave a shard's row twice."""
     from pyspark.sql import Window
 
+    path = sources.table_dir(spark, location)
+    if path is not None:
+        entry, df = sources._read_entry(path, spark.read.parquet)
+        if entry is not None:
+            return df
+        # top-level files only: an unlogged version is not a table
+        location = os.path.join(location, "*.parquet")
     w = Window.partitionBy("shard").orderBy(
         F.col("build_ts").desc(), F.col("entries").desc())
-    return (shards_df.withColumn("_rn", F.row_number().over(w))
+    return (sources.read_table(spark, location)
+            .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1).drop("_rn"))
+
+
+_GEOMETRY = ("shard_bits", "hash_name", "counter_bits")
+
+
+def _shard_summary(shards_df: DataFrame) -> DataFrame:
+    """One ``(shard_bits, hash_name, counter_bits, rows, shards)`` row
+    per geometry of a shard table, for ``_check_shard_rows``."""
+    return shards_df.groupBy(*_GEOMETRY).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.countDistinct("shard").alias("shards"))
+
+
+def _check_shard_rows(summary) -> None:
+    """Raise ValueError unless the tables ``summary`` describes (a
+    ``_shard_summary`` each) share one geometry and hold one row per
+    shard: a misrouted probe, or a stale row, gives false negatives."""
+    for i, fld in enumerate(_GEOMETRY):
+        vals = {m[i] for m in summary}
+        if len(vals) > 1:
+            raise ValueError(f"shard rows disagree on {fld}: "
+                             f"{sorted(map(str, vals))}")
+    if any(m[3] != m[4] for m in summary):
+        raise ValueError("a shard table holds a shard's row twice; read "
+                         "checkpoints with read_shards")
 
 
 def merge_shard_tables(
@@ -780,36 +763,28 @@ def merge_shard_tables(
     directory must be shared storage on a real cluster (it is on this
     single box).
 
-    Inputs must agree on (shard_bits, hash_name, counter_bits) —
-    validated on the tiny lineage projection before any payload moves;
-    per-shard q_bits may differ (a snapshot that saw more keys in a
-    shard simply merged at a larger q). Stale duplicate rows per shard
-    are resolved by ``latest_shards`` per input first.
+    Inputs must agree on (shard_bits, hash_name, counter_bits) and hold
+    one row per shard each (``read_shards`` reads a checkpoint so),
+    else ValueError — validated on the tiny lineage projection before
+    any payload moves; per-shard q_bits may differ (a snapshot that saw
+    more keys in a shard simply merged at a larger q).
 
     With ``checkpoint_path`` set, the merge commits like a
     ``resume=False`` build: one query returns the lineage rows, the
-    driver commits them as an overwrite (``sources.commit_rows``), and
-    the new rows come back as a local DataFrame. Without
-    ``payload_dir`` the merged payloads go to sidecars under
-    ``<checkpoint_path>/_payloads/``.
+    driver commits them as the checkpoint's next version, and the new
+    rows come back as a local DataFrame. Without ``payload_dir`` the
+    merged payloads go to sidecars under ``<checkpoint_path>/_payloads/``.
     """
     if not tables:
         raise ValueError("merge_shard_tables needs at least one table")
-    default_payloads = bool(checkpoint_path) and not payload_dir
-    if default_payloads:
-        payload_dir = _checkpoint_payload_dir(spark, checkpoint_path)
-    allr = latest_shards(tables[0])
+    if checkpoint_path:
+        payload_dir = payload_dir or _checkpoint_payload_dir(spark,
+                                                             checkpoint_path)
+    allr, summary = tables[0], _shard_summary(tables[0])
     for t in tables[1:]:
-        allr = allr.unionByName(latest_shards(t),
-                                allowMissingColumns=True)
-    meta = (allr.select("shard_bits", "hash_name", "counter_bits")
-            .distinct().collect())
-    for fld in ("shard_bits", "hash_name", "counter_bits"):
-        vals = {getattr(m, fld) for m in meta}
-        if len(vals) > 1:
-            raise ValueError(
-                f"cannot merge shard tables with differing {fld}: "
-                f"{sorted(map(str, vals))}")
+        allr = allr.unionByName(t, allowMissingColumns=True)
+        summary = summary.union(_shard_summary(t))
+    _check_shard_rows(summary.collect())
 
     def _merge_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
         t0 = time.time()
@@ -824,9 +799,7 @@ def merge_shard_tables(
 
     out = allr.groupBy("shard").applyInPandas(_merge_group, _SHARD_SCHEMA)
     if checkpoint_path:
-        return _commit_shards(
-            spark, out, checkpoint_path, "overwrite",
-            gc_dir=payload_dir if default_payloads else None)
+        return _commit_shards(spark, checkpoint_path, False, lambda _: out)
     return out
 
 
@@ -841,7 +814,6 @@ def _exchange_arrow(hashed: DataFrame, sb: int, sub: int, config: QFConfig,
         routed = routed.filter(~F.col("shard").isin(list(done)))
     keys = ["shard", "sub"] if sub > 1 else ["shard"]
     fat = routed.groupBy(*keys).agg(F.collect_list("lh").alias("hv"))
-    cfg = config
     # the Arrow twin of the DDL, derived on the driver
     pa_schema = to_arrow_schema(StructType.fromDDL(_SHARD_SCHEMA))
 
@@ -855,30 +827,25 @@ def _exchange_arrow(hashed: DataFrame, sb: int, sub: int, config: QFConfig,
                 for c in tbl.column("hv").chunks]
         hv = (np.concatenate(arrs) if len(arrs) > 1 else arrs[0]).astype(
             np.int64, copy=False).view(np.uint64)
-        row = _build_shard(hv, int(shard), cfg, sb, payload_dir, t0)
+        row = _build_shard(hv, int(shard), config, sb, payload_dir, t0)
         return pa.Table.from_pylist([row], schema=pa_schema)
 
     return fat.groupBy("shard").applyInArrow(_build_fat, _SHARD_SCHEMA)
 
 
 def load_sharded_qf(shards_df_or_rows) -> ShardedQF:
-    """Materialize a ShardedQF from the shard table (DataFrame or
-    collected rows). Duplicate shard rows (from appended re-builds) are
-    resolved to the newest build_ts. Probes walk each shard's filter in
-    place (``QF.lookup_hashes``); no index is built."""
+    """Materialize a ShardedQF from a shard table (DataFrame or collected
+    rows; ``read_shards`` reads a checkpoint), which must hold one row
+    per shard, all of one geometry, else ValueError. Probes walk each
+    shard's filter in place (``QF.lookup_hashes``); no index is built."""
     rows = (
         shards_df_or_rows.collect()
         if isinstance(shards_df_or_rows, DataFrame)
         else list(shards_df_or_rows)
     )
-    best: dict[int, object] = {}
-    for r in rows:
-        s = int(r.shard)
-        if s not in best or float(r.build_ts) > float(best[s].build_ts):
-            best[s] = r
-    shards: dict[int, QF] = {}
-    shard_bits = 0
-    for s, r in best.items():
-        shards[s] = qf_from_bytes(shard_payload_bytes(r))
-        shard_bits = int(r.shard_bits)
-    return ShardedQF(shard_bits, shards)
+    ids = [int(r.shard) for r in rows]
+    geoms = {tuple(r[f] for f in _GEOMETRY) for r in rows}
+    _check_shard_rows([(*g, len(ids), len(set(ids))) for g in geoms])
+    shards = {s: qf_from_bytes(shard_payload_bytes(r))
+              for s, r in zip(ids, rows)}
+    return ShardedQF(int(rows[0].shard_bits) if rows else 0, shards)

@@ -29,10 +29,14 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from .build import (
+    DEFAULT_HASH,
     ShardedQF,
+    _check_shard_rows,
     _dtype_of,
+    _shard_summary,
     hash_column,
     shard_payload_bytes,
 )
@@ -151,14 +155,19 @@ def annotate_via_shard_table(
     shard row is replicated once per salt, so a 16-shard table can still
     drive hundreds of probe tasks at 10^12-probe volume. Defaults to
     ceil(defaultParallelism / shard_count), so total probe tasks ~= the
-    cluster's parallelism. Duplicate shard rows (appended re-builds) are
-    resolved to the newest ``build_ts``.
+    cluster's parallelism. The table must hold one row per shard, all of
+    one geometry (``read_shards`` reads a checkpoint so), else
+    ValueError.
 
     All input columns pass through (same contract as ``annotate``), and
     NULL keys report unseen (the build-side NULL policy's probe half).
     """
-    first = shards_df.select("shard_bits", "hash_name").limit(1).collect()[0]
-    sb, hash_name = int(first.shard_bits), first.hash_name
+    # one job on the lineage columns: rows that disagree on geometry
+    # would misroute probes, and a duplicated shard might probe a stale row
+    meta = _shard_summary(shards_df).limit(2).collect()
+    _check_shard_rows(meta)
+    sb, hash_name = ((int(meta[0].shard_bits), meta[0].hash_name) if meta
+                     else (0, DEFAULT_HASH))  # empty: every probe unseen
     spark = df.sparkSession
     if probe_splits is None:
         par = spark.sparkContext.defaultParallelism
@@ -179,12 +188,7 @@ def annotate_via_shard_table(
         "_qf_salt", F.pmod(F.col("_qf_h"), F.lit(probe_splits)).cast("long"),
     )
 
-    from .build import latest_shards
-
-    # one row per shard BEFORE replication: a polluted checkpoint with
-    # k stale rows per shard would otherwise shuffle k x probe_splits
-    # copies of every payload blob
-    shard_cols = latest_shards(shards_df).select(
+    shard_cols = shards_df.select(
         F.col("shard").alias("_qf_shard"), "payload", "payload_path")
     replicated = shard_cols.withColumn(
         "_qf_salt",
@@ -193,28 +197,18 @@ def annotate_via_shard_table(
     )
     def _probe_group(probes: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
         out = probes[passthrough].copy()
-        if len(probes) == 0:
-            out[seen_col] = pd.Series([], dtype=bool)
-            out[count_col] = pd.Series([], dtype="int64")
-            return out
         hv = probes["_qf_h"].to_numpy(dtype=np.int64).view(np.uint64)
         local = hv << np.uint64(sb)
-        if len(shard_rows) == 0:
-            found = np.zeros(len(probes), dtype=bool)
-            counts = np.zeros(len(probes), dtype=np.int64)
-        else:
+        found = np.zeros(len(probes), dtype=bool)
+        counts = np.zeros(len(probes), dtype=np.uint64)
+        if len(probes) and len(shard_rows):
             qf = qf_from_bytes(shard_payload_bytes(shard_rows.iloc[0]))
-            f, c = qf.lookup_hashes(local)
-            found, counts = f, c.astype(np.int64)
+            found, counts = qf.lookup_hashes(local)
         # NULL policy: a NULL key is never a member (builds drop NULLs)
         isnull = probes[col].isna().to_numpy()
-        found = np.where(isnull, False, found)
-        counts = np.where(isnull, 0, counts)
-        out[seen_col] = found
-        out[count_col] = counts
+        out[seen_col] = found & ~isnull
+        out[count_col] = np.where(isnull, 0, counts.astype(np.int64))
         return out
-
-    from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
     out_schema = StructType(
         [df.schema[c] for c in passthrough]

@@ -8,11 +8,11 @@ verifies pruned ReadSchema/PushedFilters either way). All qfspark readers
 and sinks go through here, so pointing at a real lakehouse is a config
 change, not a code change.
 
-Two commit paths, both after Delta Lake (VLDB 2020): ``commit_rows``
-renames one parquet file of lineage rows into a shard checkpoint, which
-stays plain parquet; ``commit_version`` commits versioned state (stream
-state, sketch snapshots) as a data directory plus an exclusively created
-log entry ``_qf_log/<version>.json``, whose readers only read.
+One commit protocol for path-addressed tables, after Delta Lake (VLDB
+2020): ``commit_version`` commits shard checkpoints, stream state and
+sketch snapshots as a fresh data directory plus an exclusively created
+log entry ``_qf_log/<version>.json``; readers only read the log.
+Catalog identifiers commit through the catalog (``write_checkpoint``).
 """
 
 from __future__ import annotations
@@ -39,22 +39,18 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, location: str, fmt: str = "auto",
-               merge_schema: bool = False) -> DataFrame:
+def read_table(spark: SparkSession, location: str,
+               fmt: str = "auto") -> DataFrame:
     """Read a table by path or catalog identifier.
 
     fmt='iceberg'  — catalog identifier (e.g. ``warehouse.db.web_pages``)
     fmt='parquet'  — filesystem path
     fmt='auto'     — iceberg when the runtime is present and the location
                      looks like an identifier, else parquet
-
-    ``merge_schema=True`` unions the footer schemas of a parquet
-    directory whose files were written by different library versions
-    (resumed checkpoints; Iceberg handles evolution natively).
     """
     if fmt == "auto":
-        looks_ident = "/" not in location and not location.endswith(".parquet")
-        fmt = "iceberg" if (looks_ident and iceberg_available(spark)) else "parquet"
+        fmt = ("iceberg" if not location.endswith(".parquet")
+               and _is_catalog_table(spark, location) else "parquet")
     if fmt == "iceberg":
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -64,10 +60,7 @@ def read_table(spark: SparkSession, location: str, fmt: str = "auto",
             )
         return spark.read.format("iceberg").load(location)
     if fmt == "parquet":
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(location)
+        return spark.read.parquet(location)
     raise ValueError(f"unknown format {fmt!r}")
 
 
@@ -81,7 +74,8 @@ def write_checkpoint(df: DataFrame, location: str, fmt: str = "auto",
                      mode: str = "append") -> None:
     """Write a checkpoint table through Spark: an Iceberg catalog
     identifier (atomic commits, snapshot isolation, time travel) or a
-    parquet path. Shard tables commit through ``commit_rows`` instead."""
+    parquet path. Path-addressed shard tables and versioned state commit
+    through ``commit_version`` instead."""
     spark = df.sparkSession
     if fmt == "auto":
         fmt = "iceberg" if _is_catalog_table(spark, location) else "parquet"
@@ -109,78 +103,44 @@ def table_dir(spark: SparkSession, location: str) -> str | None:
     return location
 
 
-def commit_rows(spark: SparkSession, rows, location: str,
-                mode: str = "append") -> None:
-    """Commit a small Arrow table of rows (a shard table's lineage rows)
-    to the table at ``location``; ``mode`` is 'append' or 'overwrite'.
-
-    A path gets ONE parquet file, written under a hidden temp name and
-    renamed into place, so readers see all of the new rows or none of
-    them (the commit style of Delta Lake, VLDB 2020, without the log).
-    An append adds that file; an overwrite then deletes what the
-    directory held before, except the ``_payloads/`` sidecars. A crash
-    between the rename and the delete leaves old and new rows side by
-    side, never an empty table: shard-table readers keep the newest row
-    per shard (``build.latest_shards``). A catalog identifier commits
-    through ``writeTo``, the catalog's own atomic commit."""
-    path = table_dir(spark, location)
-    if path is None:
-        df = spark.createDataFrame(rows)
-        if mode == "overwrite":
-            df.writeTo(location).createOrReplace()
-        else:
-            df.writeTo(location).append()
-        return
-    import pyarrow.parquet as pq
-
-    os.makedirs(path, exist_ok=True)
-    previous = ([e for e in os.listdir(path) if e != PAYLOADS_DIR]
-                if mode == "overwrite" else [])
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
-    with open(tmp, "wb") as f:
-        pq.write_table(rows, f)
-        f.flush()
-        os.fsync(f.fileno())  # durable before the rename publishes it
-    os.replace(tmp, os.path.join(path, name))
-    _remove_entries(path, previous)
-
-
-def _remove_entries(path: str, entries) -> None:
-    for entry in entries:
-        p = os.path.join(path, entry)
-        if os.path.isdir(p) and not os.path.islink(p):
-            shutil.rmtree(p)
-        else:
-            os.remove(p)
-
-
 # -- versioned commits: one log entry per version --------------------------
 
 LOG_DIR = "_qf_log"
 _ENTRY = re.compile(r"(\d{20})\.json")
 
 
-def commit_version(df: DataFrame, path: str, version: int, **meta) -> None:
-    """Commit ``df`` as ``version`` of the table at ``path``: Spark
-    writes a fresh directory ``v<version>-<uuid>``, then the entry
-    ``_qf_log/<version>.json`` naming it and carrying ``meta`` is
-    fsynced in a temp file (O_CREAT|O_EXCL) and published by
+def commit_version(data, path: str, version: int, **meta) -> None:
+    """Commit ``data`` as ``version`` of the table at ``path``: a fresh
+    directory ``v<version>-<uuid>`` gets the rows (Spark writes a
+    DataFrame; a pyarrow Table the driver holds, like a shard table's
+    lineage rows, is one fsynced parquet file, with no Spark job), then
+    the entry ``_qf_log/<version>.json`` naming it and carrying ``meta``
+    is fsynced in a temp file (O_CREAT|O_EXCL) and published by
     ``os.link``, which fails if the entry exists. The loser of two
     writers of one version removes its directory and raises
-    FileExistsError; so pick ``version`` before computing ``df``."""
-    data = f"v{version}-{uuid.uuid4().hex}"
-    df.write.parquet(os.path.join(path, data))
+    FileExistsError; so pick ``version`` before computing ``data``."""
+    name = f"v{version}-{uuid.uuid4().hex}"
+    dest = os.path.join(path, name)
+    if isinstance(data, DataFrame):
+        data.write.parquet(dest)
+    else:
+        import pyarrow.parquet as pq
+
+        os.makedirs(dest)
+        with open(os.path.join(dest, "part-0.parquet"), "xb") as f:
+            pq.write_table(data, f)
+            f.flush()
+            os.fsync(f.fileno())
     os.makedirs(os.path.join(path, LOG_DIR), exist_ok=True)
-    tmp = os.path.join(path, LOG_DIR, f".{data}.tmp")
+    tmp = os.path.join(path, LOG_DIR, f".{name}.tmp")
     with open(tmp, "x") as f:
-        json.dump({"dir": data, **meta}, f)
+        json.dump({"dir": name, **meta}, f)
         f.flush()
         os.fsync(f.fileno())
     try:
         os.link(tmp, os.path.join(path, LOG_DIR, f"{version:020d}.json"))
     except FileExistsError:
-        shutil.rmtree(os.path.join(path, data), ignore_errors=True)
+        shutil.rmtree(dest, ignore_errors=True)
         raise FileExistsError(f"{path} version {version} exists") from None
     finally:
         os.remove(tmp)
@@ -201,29 +161,57 @@ def log_versions(path: str) -> list[dict]:
     return out
 
 
-def read_version(spark: SparkSession, path: str,
-                 version: int | None = None) -> DataFrame:
-    """The rows of the newest (or the given) version at ``path``."""
+def _read_entry(path: str, read, version: int | None = None):
+    """The newest (or the given) log entry at ``path`` and ``read``
+    (``spark.read.parquet``, ``pyarrow.parquet.read_table``) of its data
+    directory; ``(None, None)`` when there is no such version."""
     by_v = {e["version"]: e for e in log_versions(path)}
     v = max(by_v, default=None) if version is None else version
     if v not in by_v:
-        raise ValueError(f"no version {v} at {path}; have {sorted(by_v)}")
-    return spark.read.parquet(os.path.join(path, by_v[v]["dir"]))
+        return None, None
+    return by_v[v], read(os.path.join(path, by_v[v]["dir"]))
+
+
+def read_version(spark: SparkSession, path: str,
+                 version: int | None = None) -> DataFrame:
+    """The rows of the newest (or the given) version at ``path``."""
+    entry, df = _read_entry(path, spark.read.parquet, version)
+    if entry is None:
+        have = [e["version"] for e in log_versions(path)]
+        raise ValueError(f"no version {version} at {path}; have {have}")
+    return df
 
 
 def prune_log(path: str) -> None:
     """Keep the newest two versions at ``path`` (a reader that resolved
     the log just before the last commit still finds its files): delete
-    older entries, then each data directory no kept entry names. Only a
-    table's single writer may prune; a directory another writer has not
-    logged yet would go too."""
+    older entries, then each data directory no kept entry names, up to
+    the newest version (older versions, and the data of a commit that
+    failed before its log entry); a newer directory is a commit in
+    flight. Sidecars in ``_payloads/`` that no kept version's
+    ``payload_path`` names go too. Only a table's single writer may
+    prune: another writer's sidecars, not logged yet, would go too."""
     entries = log_versions(path)
-    keep = {e["dir"] for e in entries[-2:]}
+    if not entries:
+        return
+    keep = entries[-2:]
     for e in entries[:-2]:
         os.remove(os.path.join(path, LOG_DIR, f"{e['version']:020d}.json"))
+    dirs = {e["dir"] for e in keep}
     for name in os.listdir(path):
-        if re.fullmatch(r"v\d+-[0-9a-f]{32}", name) and name not in keep:
+        m = re.fullmatch(r"v(\d+)-[0-9a-f]{32}", name)
+        if m and name not in dirs and int(m[1]) <= keep[-1]["version"]:
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+    payloads = os.path.join(path, PAYLOADS_DIR)
+    if os.path.isdir(payloads):
+        import pyarrow.parquet as pq
+
+        used = {os.path.basename(p) for e in keep
+                for p in pq.read_table(os.path.join(path, e["dir"]),
+                                       columns=["payload_path"])
+                .column(0).to_pylist() if p}
+        for name in set(os.listdir(payloads)) - used:
+            os.remove(os.path.join(payloads, name))
 
 
 def approx_row_count(df: DataFrame, sample_files: int = 64,

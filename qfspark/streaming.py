@@ -34,7 +34,7 @@ from .kernel import QF
 from .serde import qf_from_bytes, qf_to_bytes
 from .sizing import QFConfig
 from .sketches import _mg_fold
-from .sources import commit_version, log_versions, prune_log
+from .sources import _read_entry, commit_version, prune_log
 
 
 def _read_state(spark, state_path: str, name: str):
@@ -45,11 +45,9 @@ def _read_state(spark, state_path: str, name: str):
     ``<state_path>/<name>`` whose ``_batch_ids.json`` lists the
     processed batch ids; a ``<name>_next``/``<name>_old`` left beside it
     by an interrupted commit raises instead of starting empty."""
-    entries = log_versions(state_path)
-    if entries:
-        e = entries[-1]
-        return (spark.read.parquet(os.path.join(state_path, e["dir"])),
-                e["version"], e["batch_id"])
+    entry, state = _read_entry(state_path, spark.read.parquet)
+    if entry is not None:
+        return state, entry["version"], entry["batch_id"]
     for leftover in (f"{name}_next", f"{name}_old"):
         if os.path.exists(os.path.join(state_path, leftover)):
             raise ValueError(

@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from qfspark import build
 from qfspark.build import (
     build_sharded_qf,
-    latest_shards,
     load_sharded_qf,
+    read_shards,
     shard_payload_bytes,
 )
 from qfspark.lookup import annotate, annotate_via_shard_table
@@ -125,48 +125,53 @@ def test_checkpoint_overwrite_no_duplicates(spark, keys_df, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     df1 = build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
                            checkpoint_path=ckpt, resume=False)
-    n1 = spark.read.parquet(ckpt).count()
+    n1 = read_shards(spark, ckpt).count()
     # re-run with resume=False must OVERWRITE, not append duplicates
     df2 = build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
                            checkpoint_path=ckpt, resume=False)
-    n2 = spark.read.parquet(ckpt).count()
+    n2 = read_shards(spark, ckpt).count()
     assert n1 == n2 == df2.count()
     assert load_sharded_qf(df2).contains("key-1")
 
 
 def test_duplicate_shard_rows_resolved_by_build_ts(spark, keys_df, tmp_path):
-    """Even if a checkpoint ends up with duplicate shard rows (partial
-    append before a crash), every reader keeps only the newest row."""
+    """A shard table written before the versioned log (plain parquet
+    files, appended to) may hold a shard twice; its reader keeps only
+    the newest row, and every consumer refuses the raw rows."""
     cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
-    ckpt = str(tmp_path / "ckpt_dup")
-    build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
-                     checkpoint_path=ckpt, resume=False)
-    good = spark.read.parquet(ckpt)
+    good = build_sharded_qf(keys_df, "key", shard_bits=2, config=cfg,
+                            checkpoint_path=str(tmp_path / "ckpt"),
+                            resume=False)
     # forge a STALE row per shard: older build_ts, empty-filter payload
     from qfspark.kernel import QF
     from qfspark.serde import qf_to_bytes
 
+    legacy = str(tmp_path / "legacy")
+    good.write.parquet(legacy)
     empty = qf_to_bytes(QF(cfg))
     stale = good.withColumn("build_ts", F.col("build_ts") - F.lit(1000.0)) \
                 .withColumn("payload", F.lit(empty)) \
                 .withColumn("entries", F.lit(0).cast("long"))
-    stale.write.mode("append").parquet(ckpt)
-    polluted = spark.read.parquet(ckpt)
+    stale.write.mode("append").parquet(legacy)
+    polluted = spark.read.parquet(legacy)
     assert polluted.count() == 2 * good.count()
 
-    # loader picks the newest rows -> zero false negatives preserved
-    sharded = load_sharded_qf(polluted)
+    # the reader of a table without a log keeps the newest row per shard
+    shards = read_shards(spark, legacy)
+    assert shards.count() == good.count()
+    sharded = load_sharded_qf(shards)
     found, _ = sharded.lookup_keys([f"key-{i}" for i in range(700)])
-    assert found.all()
-
-    # latest_shards view has one row per shard
-    assert latest_shards(polluted).count() == good.count()
-
-    # the no-broadcast probe path also resolves to the newest row
+    assert found.all()  # zero false negatives preserved
     probes = spark.createDataFrame(
         [(f"key-{i}",) for i in range(50)], "key string")
-    out = annotate_via_shard_table(probes, "key", polluted)
+    out = annotate_via_shard_table(probes, "key", shards)
     assert out.where(~F.col("qf_seen")).count() == 0
+
+    # the raw rows are refused, not quietly resolved
+    with pytest.raises(ValueError, match="row twice"):
+        load_sharded_qf(polluted)
+    with pytest.raises(ValueError, match="row twice"):
+        annotate_via_shard_table(probes, "key", polluted)
 
 
 def test_probe_splits_exceed_shard_count(spark, keys_df):
@@ -250,3 +255,14 @@ def test_annotate_via_shard_table_passthrough_and_nulls(spark, keys_df):
     assert rows[10].qf_seen and rows[10].qf_count == 3
     assert not rows[20].qf_seen and rows[20].qf_count == 0  # NULL never member
     assert not rows[30].qf_seen
+
+
+def test_annotate_via_empty_shard_table(spark, keys_df):
+    """An empty input builds an empty shard table: every probe is
+    unseen."""
+    cfg = QFConfig(counter_bits=16, hash_name="xxhash64")
+    shards_df = build_sharded_qf(keys_df.where("key IS NULL"), "key",
+                                 shard_bits=2, config=cfg)
+    probes = spark.createDataFrame([("key-1",), (None,)], "key string")
+    rows = annotate_via_shard_table(probes, "key", shards_df).collect()
+    assert [(r.qf_seen, r.qf_count) for r in rows] == [(False, 0)] * 2

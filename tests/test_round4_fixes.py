@@ -289,42 +289,40 @@ def test_connected_components_still_converges(spark):
 
 
 # ---------------------------------------------------------------------------
-# resume schema alignment (pre-0.3.0 checkpoints lack build_secs)
+# resume over a checkpoint written before the log (pre-0.3.0: no build_secs)
 # ---------------------------------------------------------------------------
 
-def test_resume_append_aligns_to_legacy_checkpoint_schema(spark,
-                                                          tmp_path):
-    from qfspark.build import build_sharded_qf, latest_shards
+def test_resume_over_legacy_checkpoint_rebuilds_every_shard(spark,
+                                                            tmp_path):
+    """A directory without a log still reads (newest row per shard), and
+    a resume over it rebuilds every shard once, as version 1 of a log,
+    in this version's schema."""
+    from qfspark.build import (build_sharded_qf, read_shards,
+                               shard_payload_bytes)
     from qfspark.sizing import QFConfig
+    from qfspark.sources import log_versions
 
     ckpt = str(tmp_path / "shards_ckpt")
     cfg = QFConfig(counter_bits=8, hash_name="xxhash64")
     keys = spark.range(2000).selectExpr("concat('k', id) AS key")
-    build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
-                     checkpoint_path=ckpt)
-    # rewrite the checkpoint WITHOUT build_secs, simulating pre-0.3.0
-    # (explicit schema: the sidecar build's all-null payload column
-    # would otherwise be inferred from pandas as VOID, not BINARY)
-    legacy_df = spark.read.parquet(ckpt).drop("build_secs")
-    legacy = legacy_df.toPandas()
-    import shutil
+    full = build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
+                            payload_dir=str(tmp_path))
+    # two of the four shards as plain parquet WITHOUT build_secs,
+    # simulating a pre-0.3.0 checkpoint left half-built
+    full.where("shard < 2").drop("build_secs").write.parquet(ckpt)
+    legacy = read_shards(spark, ckpt)
+    assert sorted(r.shard for r in legacy.collect()) == [0, 1]
+    assert "build_secs" not in legacy.columns
 
-    shutil.rmtree(ckpt)
-    spark.createDataFrame(legacy, legacy_df.schema).write.parquet(ckpt)
-    # resume: two shards "missing" -> appended by a 0.3.0+ build
-    spark.read.parquet(ckpt).count()
-    done_rows = legacy[legacy["shard"] < 2]
-    shutil.rmtree(ckpt)
-    spark.createDataFrame(done_rows, legacy_df.schema).write.parquet(ckpt)
     out = build_sharded_qf(keys, "key", shard_bits=2, config=cfg,
-                           checkpoint_path=ckpt,
-                           resume=True)
-    shards = latest_shards(
-        spark.read.option("mergeSchema", "true").parquet(ckpt))
-    assert shards.count() == 4
-    assert "build_secs" in shards.columns
-    # the returned table must expose all four shards too
-    assert out.count() == 4
+                           checkpoint_path=ckpt, resume=True)
+    assert [e["version"] for e in log_versions(ckpt)] == [1]
+    expected = {r.shard: shard_payload_bytes(r) for r in full.collect()}
+    for table in (out, read_shards(spark, ckpt)):
+        rows = table.collect()
+        assert "build_secs" in table.columns
+        assert sorted(r.shard for r in rows) == [0, 1, 2, 3]
+        assert {r.shard: shard_payload_bytes(r) for r in rows} == expected
 
 
 # ---------------------------------------------------------------------------
